@@ -7,7 +7,7 @@ wall into plan-construction (queries()[name](spark, d) returning a
 DataFrame) vs execution (collect), and dumps per-job durations from
 the status tracker so the cold seconds can be attributed (guide §1).
 
-    python scripts/headline_cold_profile.py [--reps 1]
+    python scripts/headline_cold_profile.py [--names q1,q2,...]
 """
 
 from __future__ import annotations
@@ -39,7 +39,11 @@ NAMES = [
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--names", default=None)
+    ap.add_argument(
+        "--names", default=None,
+        help="comma-separated query names (default: the ten headline "
+        "queries in bench order)",
+    )
     args = ap.parse_args()
     names = args.names.split(",") if args.names else NAMES
 

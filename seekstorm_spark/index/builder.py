@@ -10,15 +10,18 @@ Spark-first re-expression of the reference's write path
    global ``row_number`` window (which would serialize at 10^12 docs).
    The reference's round-robin ``docid % shards`` (`index.rs:5284`)
    becomes this bucket layout.
-2. **tokenize** — one `mapInPandas` pass emitting per-(doc, term)
-   rows with tf + positions + the doc's quantized length carried
-   along (the reference's `unique_terms` map, `tokenizer.rs:653-671`).
-   Carrying dl on every term row denormalizes ~1 byte/posting but
-   removes the N-row doc-length join at both build and query time —
-   the reference makes the same trade with its in-RAM per-shard
-   doc-length array (`index.rs:5840-5850`).
-3. **posting blocks** — ``groupBy(term, block_id).applyInPandas``:
-   each task handles ≤65,536 docids (`ROARING_BLOCK_SIZE`,
+2. **tokenize** — one `mapInArrow` pass that aggregates each map
+   batch down to posting segments: one row per (term, field, block)
+   carrying that batch's posting bytes in final encoded form, tf,
+   positions and the docs' quantized lengths included (the
+   reference's `unique_terms` map, `tokenizer.rs:653-671`). Carrying
+   dl on every posting denormalizes ~1 byte/posting but removes the
+   N-row doc-length join at both build and query time — the reference
+   makes the same trade with its in-RAM per-shard doc-length array
+   (`index.rs:5840-5850`).
+3. **posting blocks** — ``groupBy(tbucket, block_id).applyInPandas``
+   splices the segments of each (term, field, block) in docid order:
+   each group covers ≤65,536 docids (`ROARING_BLOCK_SIZE`,
    `index.rs:114-115`), so even a stopword's posting list splits into
    bounded tasks — the block structure *is* the skew salt.
 4. **stats + block-max metadata** — df per term, SmallFloat-quantized
@@ -46,35 +49,22 @@ from seekstorm_spark.codecs import ROARING_BLOCK_SIZE
 from seekstorm_spark.index.store import IndexStore
 from seekstorm_spark.quantization import decode_lengths
 
-# One shuffled row per (doc, field, term) PAIR — not per token
-# position (guide §2.3 "aggregate before you shuffle" / §8 "move
-# heavy bytes once"): positions are delta+varint-encoded map-side into
-# ``pos_vb`` (byte-identical chunks of the final posting stream —
-# varints are per-value independent), and the five small int columns
-# ride two packed longs, since an UnsafeRow charges a fixed 8-byte
-# slot per field. At 250k synthetic docs this cut the build shuffle
-# from 66.8M rows × 8 slots to 40M rows × 4 slots.
-#   meta  = field << 40 | dl_byte << 32 | tf        (tf ≤ 65,536)
-#   grams = tf1 << 42 | tf2 << 21 | tf3             (each ≤ 65,536)
-TERM_ROW_SCHEMA = (
-    "docid long, term string, meta long, grams long, pos_vb binary"
-)
-
-
-# Segment-row shuffle (the bulk-load fast path): when the BUILDER
-# assigned the docids (``id_col=None``), every map task covers a
-# contiguous, disjoint, ascending docid range, so the map side can
-# aggregate its (doc, term) pairs all the way down to ONE row per
-# (term, field, block, map-batch) — the segment's posting bytes
-# already in final encoded form. The reduce concatenates segments in
-# docid order, re-encoding ONLY each boundary docid varint (a
-# segment's first docid is encoded absolute; in the joined stream it
-# must be the delta-1 from the previous segment's last docid — varints
-# are per-value independent, so the spliced stream is byte-identical
-# to encoding the whole run at once). This cuts the build shuffle from
-# ~40M pair rows to ~1M segment rows at the 250k-doc bench corpus;
-# the dominant cost was not bytes but per-row shuffle serialization +
-# the Arrow→pandas object materialization in the reduce.
+# Segment-row shuffle, the one build format: every map task covers
+# ascending docids, and tasks cover disjoint docid ranges
+# (``assign_docids`` guarantees both — builder-assigned ids are
+# numbered per partition, ``id_col`` ids are range-partitioned and
+# sorted), so the map side aggregates its (doc, term) pairs all the
+# way down to ONE row per (term, field, block, map-batch) — the
+# segment's posting bytes already in final encoded form. The reduce
+# concatenates segments in docid order, re-encoding ONLY each boundary
+# docid varint (a segment's first docid is encoded absolute; in the
+# joined stream it must be the delta-1 from the previous segment's
+# last docid — varints are per-value independent, so the spliced
+# stream is byte-identical to encoding the whole run at once). At the
+# 250k-doc bench corpus this shuffles ~1M segment rows where one row
+# per (doc, term) pair would be ~40M; the dominant cost was not bytes
+# but per-row shuffle serialization + the Arrow→pandas object
+# materialization in the reduce.
 TERM_SEG_SCHEMA = (
     "term string, field int, block_id int, seg_first long, "
     "seg_last long, n_pairs int, max_tf int, min_dl_byte int, "
@@ -83,15 +73,6 @@ TERM_SEG_SCHEMA = (
     "tfs1_vb binary, tfs2_vb binary, tfs3_vb binary"
 )
 
-
-def term_row_field(col):
-    """int32 field id from a packed term-row ``meta``."""
-    return F.shiftright(col, 40).cast("int")
-
-
-def term_row_dl_byte(col):
-    """int32 dl_byte from a packed term-row ``meta``."""
-    return (F.shiftright(col, 32) % 256).cast("int")
 
 # Multi-field postings: one row per (term, field, block) with the
 # field's tf/positions/dl bytes — the reference's default data model
@@ -172,7 +153,9 @@ def assign_docids(
     """Add a contiguous ``docid`` column without a global sort barrier.
 
     Three strategies, all cluster-scalable:
-    * ``id_col`` — trust an existing unique 0-based long id.
+    * ``id_col`` — trust an existing unique 0-based long id; range-
+      partition and sort on it so every task holds ascending docids and
+      tasks hold disjoint ranges (the segment emission contract).
     * ``order_col`` — deterministic independent of input partitioning:
       hash-partition on the key (deterministic across jobs, unlike
       range partitioning whose boundaries are re-sampled per
@@ -187,7 +170,11 @@ def assign_docids(
       deterministic for a fixed input layout.
     """
     if id_col is not None:
-        return docs.withColumn("docid", F.col(id_col).cast("long"))
+        return (
+            docs.withColumn("docid", F.col(id_col).cast("long"))
+            .repartitionByRange("docid")
+            .sortWithinPartitions("docid")
+        )
 
     if order_col is not None:
         docs = docs.repartition(
@@ -228,11 +215,32 @@ def assign_docids(
 NGRAM_SEP = "\x1e"  # joins partial terms inside an n-gram key
 
 
+def _require_ascending(prev, cur) -> None:
+    """Raise unless every docid in ``cur`` exceeds its ``prev``. With
+    range-sorted input a non-ascending docid can only be a duplicate,
+    so the error names it."""
+    bad = np.flatnonzero(cur <= prev)
+    if bad.size:
+        p, c = int(prev[bad[0]]), int(cur[bad[0]])
+        if p == c:
+            raise ValueError(f"duplicate docid {c}: docids must be unique")
+        raise ValueError(
+            f"docids must be ascending per task: docid {c} follows {p}"
+        )
+
+
 def _binary_column(pa, buf, offsets, validity=None):
     """Arrow binary array from a contiguous (buffer, offsets) pair —
     zero-copy, no per-row Python bytes objects. ``validity`` (bool
     array) marks non-null rows; null rows must be zero-width."""
     n = len(offsets) - 1
+    if int(offsets[-1]) > np.iinfo(np.int32).max:
+        # Arrow ``binary`` offsets are int32: a larger cast would wrap
+        raise OverflowError(
+            f"binary column of {int(offsets[-1])} bytes exceeds the "
+            "int32 Arrow offset limit; lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
     vbuf = (
         None
         if validity is None
@@ -331,11 +339,10 @@ def _segment_record_batch(
     codes into ``uniq``; ``pos_off`` slices ``pos_buf`` per pair in
     the incoming order.
 
-    The per-run byte streams are exactly the slices the v1 reduce
-    kernel would produce for these pairs: docid deltas reset at run
-    starts (absolute first value), tf-1 varints per pair, raw dl
-    bytes, per-pair position chunks, and gram tf varints on n-gram
-    runs only.
+    The per-run byte streams are exactly the slices of the final
+    posting stream for these pairs: docid deltas reset at run starts
+    (absolute first value), tf-1 varints per pair, raw dl bytes,
+    per-pair position chunks, and gram tf varints on n-gram runs only.
     """
     from seekstorm_spark.codecs import vb_encode_chunk_offsets
 
@@ -362,12 +369,8 @@ def _segment_record_batch(
     new_run = np.empty(n, dtype=bool)
     new_run[0] = True
     new_run[1:] = (t[1:] != t[:-1]) | (blk[1:] != blk[:-1])
-    if n > 1 and not bool(np.all(new_run[1:] | (d[1:] > d[:-1]))):
-        raise ValueError(
-            "emit='segments' requires ascending docids per task "
-            "(builder-assigned ids); use the pair shuffle for id_col "
-            "batches"
-        )
+    # pairs are unique per (doc, term) and the batch's docids strictly
+    # ascend (checked in the tokenize pass), so every run ascends too
     starts = np.flatnonzero(new_run)
     ends = np.append(starts[1:], n)
     lens = ends - starts
@@ -458,29 +461,31 @@ def tokenize_to_term_rows(
     frequent_terms: frozenset[str] | None = None,
     synonym_map: dict[str, list[str]] | None = None,
     ngram_patterns: tuple[str, ...] | list[str] | None = None,
-    emit: str = "pairs",
+    emit: str = "segments",
     block_size: int = ROARING_BLOCK_SIZE,
 ) -> DataFrame:
-    """docs(docid, <fields…>) → flat (docid, field, term, pos, dl_byte)
-    rows; one sentinel row per (doc, field) (term='', pos=-1) carries
-    that field's quantized length so empty fields stay counted.
+    """docs(docid, <fields…>) → TERM_SEG_SCHEMA posting segments, one
+    row per (term, field, block) of each map batch (see the schema
+    comment). REQUIRES strictly ascending docids within every task and
+    disjoint docid ranges across tasks — what ``assign_docids``
+    produces; a repeated or descending docid raises ``ValueError``.
+    ``emit`` accepts only ``"segments"``.
 
-    ``emit="segments"`` (bulk-load fast path, REQUIRES per-task
-    ascending docids — the builder-assigned id paths) aggregates all
-    the way to TERM_SEG_SCHEMA rows map-side; see the schema comment.
-    ``block_size`` is only used by segment emission.
+    Sentinel segments (term='') hold every doc of the batch once, with
+    tf=1 and the field's quantized length, so empty fields stay counted
+    and doc_meta decodes from them (:func:`_decode_doc_meta`).
 
     ``fields`` defaults to ``[text_col]`` (single-field, field id 0);
     multi-field indexes list their field columns in build order — the
     list index IS the field id (reference indexed_field_id_vec,
     index.rs:5332-5407).
 
-    Flat position-level rows keep the Python side to one regex call
-    per field plus numpy array assembly — the per-(term,doc)
-    aggregation happens vectorized inside the posting-block kernel,
-    not here. Position semantics match ``tokenizer.tokenize_doc``
-    (stopwords dropped without advancing positions; 65,536-token field
-    cap, reference tokenizer.rs:584-894).
+    The Python side is one regex call per field plus numpy array
+    assembly: occurrences aggregate into (doc, term) pairs and then
+    into segments with vectorized sorts and run-length passes.
+    Position semantics match ``tokenizer.tokenize_doc`` (stopwords
+    dropped without advancing positions; 65,536-token field cap,
+    reference tokenizer.rs:584-894).
     """
     tokenizer_name = tokenizer
     # stop_words: one global set, or per-field sets {field_col: set}
@@ -498,15 +503,13 @@ def tokenize_to_term_rows(
     bi_patterns = frozenset(p for p in patterns if len(p) == 2)
     tri_patterns = frozenset(p for p in patterns if len(p) == 3)
     field_cols = list(fields) if fields else [text_col]
-    if emit not in ("pairs", "segments"):
-        raise ValueError(f"unknown emit mode {emit!r}")
-    emit_segments = emit == "segments"
+    if emit != "segments":
+        raise ValueError(f"unknown emit mode {emit!r}; only 'segments'")
 
     def _tok(batches):
-        # mapInArrow, not mapInPandas: the output is hundreds of
-        # thousands of pair rows per batch, and building them as a
-        # pandas DataFrame costs ~17x more than building the Arrow
-        # arrays directly (measured — pandas object-column
+        # mapInArrow, not mapInPandas: Arrow arrays built straight
+        # from numpy buffers measured ~17x cheaper than a pandas
+        # DataFrame of the same rows (pandas object-column
         # consolidation, all thrown away at the Arrow boundary anyway)
         import pyarrow as pa
 
@@ -514,7 +517,7 @@ def tokenize_to_term_rows(
         from seekstorm_spark.quantization import int_to_byte4
         from seekstorm_spark.tokenizer import TOKEN_PER_FIELD_MAX, tokenize_line
 
-        def _pairs(doc_idx, codes, positions, term_major=False):
+        def _pairs(doc_idx, codes, positions):
             """Aggregate occurrence-level (doc index, term code, pos)
             triples into (doc, term) pairs: returns (index of each
             pair's first-by-position occurrence, tf per pair, and the
@@ -526,23 +529,14 @@ def tokenize_to_term_rows(
             the final posting stream (varint values are encoded
             independently and deltas reset at every pair change).
 
-            ``term_major`` orders pairs by (term, doc) instead of
-            (doc, term) — per-pair chunks are unchanged (deltas reset
-            at every pair either way). NOTE: measured SLOWER for
-            segment emission despite saving the second sort — the
-            doc-major key is nearly sorted (occurrences arrive in doc
-            order, stable mergesort exploits the runs) while the
-            term-major key is a full shuffle of the occurrence array,
-            and re-sorting the ~6x smaller PAIR array afterwards is
-            cheaper. Kept for the record."""
-            if term_major:
-                key = codes.astype(np.int64) * np.int64(
-                    int(doc_idx.max()) + 1 if len(doc_idx) else 1
-                ) + doc_idx
-            else:
-                key = doc_idx.astype(np.int64) * np.int64(
-                    int(codes.max()) + 1 if len(codes) else 1
-                ) + codes
+            The key is doc-major: occurrences arrive in doc order, so
+            the stable sort exploits the runs, and re-sorting the ~6x
+            smaller pair array term-major afterwards
+            (:func:`_segment_record_batch`) measured cheaper than a
+            term-major occurrence sort."""
+            key = doc_idx.astype(np.int64) * np.int64(
+                int(codes.max()) + 1 if len(codes) else 1
+            ) + codes
             order = np.lexsort((positions, key))
             sk = key[order]
             first = np.empty(len(sk), dtype=bool)
@@ -560,9 +554,12 @@ def tokenize_to_term_rows(
             return order[starts], tf, vb_encode_chunk_offsets(deltas, tf)
 
         for rb in batches:
+            if not rb.num_rows:
+                continue
             docid_in = rb.column(rb.schema.get_field_index("docid")).to_numpy(
                 zero_copy_only=False
             )
+            _require_ascending(docid_in[:-1], docid_in[1:])
             text_in = {
                 fcol: rb.column(rb.schema.get_field_index(fcol)).to_pylist()
                 for fcol in field_cols
@@ -720,7 +717,6 @@ def tokenize_to_term_rows(
                 # length produced. Gram payload (tf1-3) is taken from
                 # the pair's first-by-position occurrence — the old
                 # kernel's pair_starts semantics.
-                fid_hi = np.int64(fid) << np.int64(40)
                 n_ng, n_sy = len(ng_doc), len(sy_doc)
                 occ_doc = np.concatenate([
                     np.repeat(docs_a, counts_a),
@@ -753,112 +749,35 @@ def tokenize_to_term_rows(
                 occ_g3 = np.concatenate(
                     [zeros_reg, np.asarray(ng_tf3, np.int64), zeros_sy]
                 )
-                # sentinel pairs: term='', tf=1, one position 0
-                # (the clipped pos=-1 of the former sentinel rows) —
-                # byte-identical posting stream for the '' term.
-                # pos_vb assembles ZERO-COPY as (buffer, offsets):
-                # materializing one Python bytes object per pair just
-                # to re-pack them into an Arrow binary array was the
-                # single hottest line of the whole tokenize pass.
-                n_sent = len(docs_a)
-                if emit_segments:
-                    if n_sent == 0:
-                        continue
-                    if n_sent > 1 and not bool(
-                        np.all(docs_a[1:] > docs_a[:-1])
-                    ):
-                        raise ValueError(
-                            "emit='segments' requires ascending docids "
-                            "per task (builder-assigned ids); use the "
-                            "pair shuffle for id_col batches"
-                        )
-                    yield _sentinel_segment_batch(
-                        pa, docs_a, dlb_a, fid, block_size
-                    )
-                    if len(occ_doc):
-                        dcodes = pd.factorize(occ_doc)[0].astype(
-                            np.int64
-                        )
-                        ocodes, ouniq = pd.factorize(occ_term)
-                        ocodes = ocodes.astype(np.int64)
-                        sel, ptf, (pbuf, poff) = _pairs(
-                            dcodes, ocodes, occ_pos
-                        )
-                        yield _segment_record_batch(
-                            pa,
-                            occ_doc[sel],
-                            ocodes[sel],
-                            np.asarray(ouniq, dtype=object),
-                            ptf,
-                            occ_dlb[sel],
-                            occ_g1[sel],
-                            occ_g2[sel],
-                            occ_g3[sel],
-                            pbuf,
-                            poff,
-                            fid,
-                            block_size,
-                        )
-                    continue
+                # sentinel segments: term='', one pair per doc with
+                # tf=1 and one position 0 — they carry each doc's dl
+                # byte to doc_meta
+                yield _sentinel_segment_batch(
+                    pa, docs_a, dlb_a, fid, block_size
+                )
                 if len(occ_doc):
                     dcodes = pd.factorize(occ_doc)[0].astype(np.int64)
-                    ocodes = pd.factorize(occ_term)[0].astype(np.int64)
-                    sel, ptf, (pbuf, poff) = _pairs(
-                        dcodes, ocodes, occ_pos
+                    ocodes, ouniq = pd.factorize(occ_term)
+                    ocodes = ocodes.astype(np.int64)
+                    sel, ptf, (pbuf, poff) = _pairs(dcodes, ocodes, occ_pos)
+                    yield _segment_record_batch(
+                        pa,
+                        occ_doc[sel],
+                        ocodes[sel],
+                        np.asarray(ouniq, dtype=object),
+                        ptf,
+                        occ_dlb[sel],
+                        occ_g1[sel],
+                        occ_g2[sel],
+                        occ_g3[sel],
+                        pbuf,
+                        poff,
+                        fid,
+                        block_size,
                     )
-                else:
-                    sel = np.empty(0, dtype=np.int64)
-                    ptf = np.empty(0, dtype=np.int64)
-                    pbuf, poff = b"", np.zeros(1, dtype=np.int64)
-                out_docid = [docs_a, occ_doc[sel]]
-                out_terms: list = [""] * n_sent
-                out_terms.extend(occ_term[sel].tolist())
-                out_meta = [
-                    fid_hi
-                    | (dlb_a.astype(np.int64) << np.int64(32))
-                    | np.int64(1),
-                    fid_hi | (occ_dlb[sel] << np.int64(32)) | ptf,
-                ]
-                out_grams = [
-                    np.zeros(n_sent, np.int64),
-                    (occ_g1[sel] << np.int64(42))
-                    | (occ_g2[sel] << np.int64(21))
-                    | occ_g3[sel],
-                ]
-                n_rows = n_sent + (len(poff) - 1)
-                # sentinel chunks are 1 byte each (b"\x00"), then the
-                # pair chunks shifted past them
-                offsets32 = np.empty(n_rows + 1, dtype=np.int32)
-                offsets32[: n_sent + 1] = np.arange(
-                    n_sent + 1, dtype=np.int32
-                )
-                offsets32[n_sent:] = (poff + n_sent).astype(np.int32)
-                data = b"\x00" * n_sent + pbuf
-                posvb_arr = pa.Array.from_buffers(
-                    pa.binary(),
-                    n_rows,
-                    [None, pa.py_buffer(offsets32), pa.py_buffer(data)],
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            np.concatenate(out_docid), type=pa.int64()
-                        ),
-                        pa.array(out_terms, type=pa.string()),
-                        pa.array(
-                            np.concatenate(out_meta), type=pa.int64()
-                        ),
-                        pa.array(
-                            np.concatenate(out_grams), type=pa.int64()
-                        ),
-                        posvb_arr,
-                    ],
-                    names=["docid", "term", "meta", "grams", "pos_vb"],
-                )
 
     return docs.select("docid", *field_cols).mapInArrow(
-        _tok,
-        schema=TERM_SEG_SCHEMA if emit_segments else TERM_ROW_SCHEMA,
+        _tok, schema=TERM_SEG_SCHEMA
     )
 
 
@@ -903,201 +822,34 @@ def build_posting_blocks(
     only_buckets: list[int] | None = None,
     block_size: int = ROARING_BLOCK_SIZE,
 ) -> DataFrame:
-    """(term-bucket, block) groups → compressed posting rows.
+    """(term-bucket, block) groups of TERM_SEG_SCHEMA segments →
+    compressed posting rows.
 
     Grouping by (tbucket, block_id) — not (term, block_id) — gives a
-    small number of *large* Arrow batches, each vectorized with one
-    ``lexsort`` + run-length pass over all its terms, instead of
-    millions of tiny per-term UDF invocations. Group size stays
-    bounded: ≤65,536 docids/block (`index.rs:114-115`) × the bucket's
-    share of the vocabulary — the Spark analog of the reference's 2048
-    term-hash segments committed per block (`index.rs:988-995`,
+    small number of *large* batches, each spliced with one ``lexsort``
+    + run-length pass over all its terms, instead of millions of tiny
+    per-term UDF invocations. Group size stays bounded: ≤65,536
+    docids/block (`index.rs:114-115`) × the bucket's share of the
+    vocabulary — the Spark analog of the reference's 2048 term-hash
+    segments committed per block (`index.rs:988-995`,
     `commit.rs:467-682`). Raise ``n_buckets`` to shrink groups at
     scale; skew from hot terms is already capped by the block bound.
 
-    Sentinel rows (term='', one per doc, carrying the doc's dl byte)
+    Sentinel segments (term='', one pair per doc carrying its dl byte)
     flow through the same shuffle and become the term-'' posting rows
     from which doc_meta is derived — the document-length table rides
     the one tokenize pass instead of needing its own.
     """
 
-    def _build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # applyInPandas for the IO (an A/B on this box measured
-        # PySpark 4.1's applyInArrow JVM path ~2.3x slower even with a
-        # trivial UDF — the "unstable, for developers" grouped-Arrow
-        # runner), but every per-posting value below is computed with
-        # reduceat / chunked-VB array ops; the only Python loops slice
-        # bytes.
-        from seekstorm_spark.codecs import vb_encode_chunks
-
-        tbucket, block_id = int(key[0]), int(key[1])
-        term_codes, uniq_terms = pd.factorize(pdf["term"], sort=True)
-        term_codes = term_codes.astype(np.int64)
-        uniq_terms = np.asarray(uniq_terms, dtype=object)
-        # input rows ARE (doc, field, term) pairs: unpack the two
-        # packed longs (see TERM_ROW_SCHEMA) — positions arrive as
-        # per-pair VB byte chunks the map side already encoded
-        meta = pdf["meta"].values.astype(np.int64)
-        fld = meta >> np.int64(40)
-        dlb_all = ((meta >> np.int64(32)) & np.int64(0xFF)).astype(
-            np.uint8
-        )
-        tf_all = meta & np.int64(0xFFFFFFFF)
-        d = pdf["docid"].values.astype(np.int64)
-        g = pdf["grams"].values.astype(np.int64)
-        posvb = pdf["pos_vb"].values
-        order = np.lexsort((d, fld, term_codes))
-        td_term = term_codes[order]
-        td_field = fld[order]
-        td_doc = d[order]
-        td_dlb = dlb_all[order]
-        tfs_all = tf_all[order]
-        g = g[order]
-        td_tf1 = g >> np.int64(42)
-        td_tf2 = (g >> np.int64(21)) & np.int64(0x1FFFFF)
-        td_tf3 = g & np.int64(0x1FFFFF)
-        posvb = posvb[order]
-        n_pairs = len(td_term)
-
-        # per-(term, field) runs over the pair-level arrays — one
-        # output posting row per run
-        new_tf = np.empty(n_pairs, dtype=bool)
-        new_tf[0] = True
-        new_tf[1:] = (td_term[1:] != td_term[:-1]) | (
-            td_field[1:] != td_field[:-1]
-        )
-        tf_starts = np.flatnonzero(new_tf)
-        tf_ends = np.append(tf_starts[1:], n_pairs)
-        run_lens = tf_ends - tf_starts
-        n_runs = len(tf_starts)
-        run_term = td_term[tf_starts]
-
-        # per-term distinct-doc count (union df_block across fields),
-        # vectorized: unique (term, doc) keys, then run-length per term
-        new_term = np.empty(n_pairs, dtype=bool)
-        new_term[0] = True
-        new_term[1:] = td_term[1:] != td_term[:-1]
-        term_starts = np.flatnonzero(new_term)
-        # block-local docids fit 16 bits, so (term_code << 17) | local
-        # never collides at any corpus scale
-        local_for_key = td_doc - np.int64(block_id) * np.int64(block_size)
-        td_key = td_term * np.int64(1 << 17) + local_for_key
-        uk = np.unique(td_key)
-        uk_term, uk_counts = np.unique(
-            uk >> np.int64(17), return_counts=True
-        )
-        df_by_code = np.zeros(len(uniq_terms), dtype=np.int64)
-        df_by_code[uk_term] = uk_counts
-        # df_block only on the term's FIRST field run, so summing over
-        # rows never double counts (0 on the others)
-        run_is_first = np.isin(tf_starts, term_starts, assume_unique=True)
-        out_dfb = np.where(run_is_first, df_by_code[run_term], 0)
-
-        # docids: pair-level deltas resetting at run starts → one VB
-        # encode sliced per run
-        local_all = (td_doc - block_id * block_size).astype(np.int64)
-        dd = np.empty_like(local_all)
-        dd[0] = local_all[0]
-        dd[1:] = local_all[1:] - local_all[:-1] - 1
-        dd[tf_starts] = local_all[tf_starts]
-        out_docids = vb_encode_chunks(dd, run_lens)
-
-        # tfs: VB of tf-1 per pair, sliced per run
-        out_tfs = vb_encode_chunks(tfs_all - 1, run_lens)
-
-        # positions: concatenate the map-side per-pair VB chunks per
-        # run — byte-identical to encoding the run's delta stream in
-        # one go (varints are per-value independent, deltas reset at
-        # every pair start)
-        out_pos = [
-            b"".join(posvb[s:e]) for s, e in zip(tf_starts, tf_ends)
-        ]
-
-        # dl bytes: raw u8 per pair, sliced per run
-        dls_all = td_dlb.tobytes()
-        dls_view = memoryview(dls_all)
-        out_dls = [
-            bytes(dls_view[s:e]) for s, e in zip(tf_starts, tf_ends)
-        ]
-
-        out_maxtf = np.maximum.reduceat(tfs_all, tf_starts).astype(np.int32)
-        out_mindl = np.minimum.reduceat(td_dlb, tf_starts).astype(np.int32)
-
-        # n-gram runs carry the partial terms' full per-doc tfs
-        # (reference NGRAM_SEARCH.md); non-gram runs get NULL columns
-        n_seps = np.array(
-            [s.count(NGRAM_SEP) for s in uniq_terms], dtype=np.int64
-        )
-        run_seps = n_seps[run_term]
-        gram_run = run_seps > 0
-        tri_run = run_seps == 2
-        gram_pairs = np.repeat(gram_run, run_lens)
-        tri_pairs = np.repeat(tri_run, run_lens)
-        gsel = np.flatnonzero(gram_run)
-        tsel = np.flatnonzero(tri_run)
-        out_tfs1: list = [None] * n_runs
-        out_tfs2: list = [None] * n_runs
-        out_tfs3: list = [None] * n_runs
-        for idx, b1, b2 in zip(
-            gsel,
-            vb_encode_chunks(td_tf1[gram_pairs] - 1, run_lens[gsel]),
-            vb_encode_chunks(td_tf2[gram_pairs] - 1, run_lens[gsel]),
-        ):
-            out_tfs1[idx] = b1
-            out_tfs2[idx] = b2
-        for idx, b3 in zip(
-            tsel, vb_encode_chunks(td_tf3[tri_pairs] - 1, run_lens[tsel])
-        ):
-            out_tfs3[idx] = b3
-        mt1 = np.maximum.reduceat(td_tf1, tf_starts)
-        mt2 = np.maximum.reduceat(td_tf2, tf_starts)
-        mt3 = np.maximum.reduceat(td_tf3, tf_starts)
-        out_maxtf1 = np.where(gram_run, mt1, 0).astype(np.int32)
-        out_maxtf2 = np.where(gram_run, mt2, 0).astype(np.int32)
-        out_maxtf3 = np.where(tri_run, mt3, 0).astype(np.int32)
-
-        return pd.DataFrame(
-            {
-                "term": uniq_terms[run_term],
-                "field": pd.Series(
-                    td_field[tf_starts].astype(np.int32), dtype="int32"
-                ),
-                "block_id": pd.Series(
-                    np.full(n_runs, block_id, dtype=np.int32),
-                    dtype="int32",
-                ),
-                "posting_count": pd.Series(
-                    run_lens.astype(np.int32), dtype="int32"
-                ),
-                "df_block": pd.Series(
-                    out_dfb.astype(np.int32), dtype="int32"
-                ),
-                "max_tf": pd.Series(out_maxtf, dtype="int32"),
-                "min_dl_byte": pd.Series(out_mindl, dtype="int32"),
-                "docids_vb": out_docids,
-                "tfs_vb": out_tfs,
-                "dls": out_dls,
-                "positions_vb": out_pos,
-                "tfs1_vb": out_tfs1,
-                "tfs2_vb": out_tfs2,
-                "tfs3_vb": out_tfs3,
-                "max_tf1": pd.Series(out_maxtf1, dtype="int32"),
-                "max_tf2": pd.Series(out_maxtf2, dtype="int32"),
-                "max_tf3": pd.Series(out_maxtf3, dtype="int32"),
-                "tbucket": pd.Series(
-                    np.full(n_runs, tbucket, dtype=np.int32),
-                    dtype="int32",
-                ),
-            }
-        )
-
     def _build_seg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        """Segment-row reduce (TERM_SEG_SCHEMA input): concatenate the
-        map-encoded posting byte streams per (term, field) in docid
-        order, re-encoding only each segment-boundary docid varint —
-        byte-identical to :func:`_build` over the same pairs (varints
-        are per-value independent; the boundary value is the delta-1
-        the whole-run encode would have produced)."""
+        """Concatenate the map-encoded posting byte streams per
+        (term, field) in docid order, re-encoding only each
+        segment-boundary docid varint — byte-identical to encoding the
+        whole run at once (varints are per-value independent; the
+        boundary value is the delta-1 the whole-run encode would have
+        produced). applyInPandas for the IO: an A/B measured PySpark
+        4.1's applyInArrow JVM path ~2.3x slower even with a trivial
+        UDF."""
         from seekstorm_spark.codecs import (
             vb_byte_lengths,
             vb_decode,
@@ -1140,14 +892,10 @@ def build_posting_blocks(
         run_term = t[starts]
 
         # segments of one run must be disjoint ascending docid ranges
-        # (the emit='segments' contract — builder-assigned ids)
-        if n_seg > 1 and not bool(
-            np.all(new_run[1:] | (first[1:] > last[:-1]))
-        ):
-            raise ValueError(
-                "overlapping docid segments — emit='segments' used "
-                "with non-ascending per-task docids"
-            )
+        # (the tokenize contract); a repeated docid that straddles two
+        # map batches of one task surfaces here
+        joins = ~new_run[1:]
+        _require_ascending(last[:-1][joins], first[1:][joins])
 
         base = np.int64(block_id) * np.int64(block_size)
         local_first = first - base
@@ -1206,8 +954,7 @@ def build_posting_blocks(
         # the term's first run. Single-field terms (the common case):
         # segments are disjoint, every pair a distinct doc, so df =
         # posting_count. Terms spanning >1 field decode their docid
-        # streams and count the union (same value the pair kernel's
-        # unique-(term, doc) pass produced).
+        # streams and count the union.
         new_term = np.empty(n_runs, dtype=bool)
         new_term[0] = True
         new_term[1:] = run_term[1:] != run_term[:-1]
@@ -1261,13 +1008,7 @@ def build_posting_blocks(
             }
         )
 
-    is_segments = "seg_first" in term_rows.columns
-    blocks = term_rows
-    if not is_segments:
-        blocks = blocks.withColumn(
-            "block_id", (F.col("docid") / F.lit(block_size)).cast("int")
-        )
-    blocks = blocks.withColumn(
+    blocks = term_rows.withColumn(
         "tbucket",
         F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int"),
     )
@@ -1277,8 +1018,7 @@ def build_posting_blocks(
             F.col("tbucket").isin([int(b) for b in only_buckets])
         )
     return blocks.groupBy("tbucket", "block_id").applyInPandas(
-        _build_seg if is_segments else _build,
-        schema=POSTING_SCHEMA + ", tbucket int",
+        _build_seg, schema=POSTING_SCHEMA + ", tbucket int"
     )
 
 
@@ -1627,11 +1367,13 @@ def build_facet_blocks(
 def _decode_doc_meta(
     sentinel_postings: DataFrame, block_size: int
 ) -> DataFrame:
-    """term-'' posting rows → (docid, dl_byte) rows.
+    """term-'' posting (or segment) rows → (docid, field, dl_byte).
 
     Each sentinel posting block holds every docid of that block with
     its SmallFloat dl byte — decoding them reconstructs the doc-length
-    table without a second tokenize pass over the corpus.
+    table without a second tokenize pass over the corpus. Segments use
+    the same block-local encoding, so staged appends decode their
+    cached tokenize output the same way.
     """
     from seekstorm_spark.codecs import decode_docids
 
@@ -1817,7 +1559,7 @@ class IndexBuilder:
         ]
 
         # --- ONE tokenize pass → posting blocks, bucketed by term hash.
-        # Sentinel rows (term='', dl per doc) ride the same shuffle and
+        # Sentinel segments (term='', dl per doc) ride the same shuffle and
         # become the term-'' postings that doc_meta derives from; format
         # v2 bounds need no avgdl at build time, so no stats pre-pass.
         term_rows = tokenize_to_term_rows(
@@ -1825,11 +1567,6 @@ class IndexBuilder:
             stemmer=self.stemmer, frequent_terms=self.frequent_terms,
             synonym_map=self.synonym_map or None,
             ngram_patterns=self.ngram_patterns,
-            # builder-assigned ids ascend within every task (both the
-            # order_col and partition-offset paths), so the bulk load
-            # takes the segment shuffle; id_col docids are caller-
-            # controlled and keep the pair shuffle
-            emit="pairs" if id_col is not None else "segments",
             block_size=self.block_size,
         )
         posting_blocks = build_posting_blocks(

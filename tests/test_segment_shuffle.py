@@ -1,11 +1,16 @@
-"""The segment-row build shuffle (emit='segments' + _build_seg) must
-produce EXACTLY the posting rows of the pair shuffle (emit='pairs' +
-_build) for the same corpus — same bytes, same counts, same block-max
-metadata — including multi-segment runs whose boundary docid varint
-the reduce re-encodes, n-gram payloads, synonyms, stopwords,
-multi-field df unions and non-zero base docids."""
+"""The segment-row build shuffle (tokenize emit + the ``_build_seg``
+reduce) must produce EXACTLY the posting rows the former pair-row
+kernel produced for the same corpus — same bytes, same counts, same
+block-max metadata — including multi-segment runs whose boundary docid
+varint the reduce re-encodes, n-gram payloads, synonyms, stopwords,
+multi-field df unions and non-zero base docids.
+
+The pair kernel is gone; its output for each config is frozen here as
+a digest of the sorted posting rows (``FROZEN``)."""
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -22,42 +27,33 @@ class _FakeSel:
 
 
 class _FakeGrouped:
-    def __init__(self, sink, tag):
-        self.sink, self.tag = sink, tag
+    def __init__(self, sink):
+        self.sink = sink
 
     def applyInPandas(self, fn, schema):
-        self.sink[self.tag] = fn
+        self.sink.append(fn)
         return None
 
 
 class _FakeDF:
-    def __init__(self, sink, cols, tag):
-        self.sink, self.columns, self.tag = sink, cols, tag
+    def __init__(self, sink):
+        self.sink = sink
 
     def withColumn(self, *a, **k):
         return self
 
     def groupBy(self, *a):
-        return _FakeGrouped(self.sink, self.tag)
+        return _FakeGrouped(self.sink)
 
 
-def _capture_kernels(block_size):
-    """Both reduce kernels, closure-bound to ``block_size`` (needs an
+def _capture_kernel(block_size):
+    """The reduce kernel, closure-bound to ``block_size`` (needs an
     active SparkContext for the plan expressions in the wrapper)."""
     import seekstorm_spark.index.builder as B
 
-    sink: dict = {}
-    B.build_posting_blocks(
-        _FakeDF(sink, ["docid", "term", "meta", "grams", "pos_vb"], "v1"),
-        n_buckets=8,
-        block_size=block_size,
-    )
-    B.build_posting_blocks(
-        _FakeDF(sink, ["term", "seg_first"], "v2"),
-        n_buckets=8,
-        block_size=block_size,
-    )
-    return sink["v1"], sink["v2"]
+    sink: list = []
+    B.build_posting_blocks(_FakeDF(sink), n_buckets=8, block_size=block_size)
+    return sink[0]
 
 
 def _make_batches(n_docs, n_batches, vocab, seed, base_docid=0, fields=1):
@@ -116,46 +112,60 @@ CONFIGS = {
     "base_offset": (dict(text_col="text"), 1 << 16, dict(n_docs=200, n_batches=2, vocab=60, seed=6, base_docid=65000)),
 }
 
+# (row count, sha256 of the sorted posting rows) the pair-row kernel
+# produced for each config
+FROZEN = {
+    "base_offset": (
+        61, "4bffc9718445b4f1a1aa6abdfd26b670a4ec1b3ebb29cd0efccd6f80afa3083a"
+    ),
+    "multifield": (
+        122, "789054c7cf7805fbc92029de1695ac744e22f0fac2a950a973b0de5d1ba6a283"
+    ),
+    "ngrams_all": (
+        2998, "7ceeba7b3d2ec0a16dcb20931563995bfb1e3ffad3e74af811120279d9df0d22"
+    ),
+    "smallblocks": (
+        405, "f06317bc3fa5ce6e1b88b40712367c047713f07863171327e24d1c3e94be7213"
+    ),
+    "syn_stop": (
+        197, "cdefae0a135b3be80c15d3550f44f134b21d8a625352e407ddcd05d0660c8b39"
+    ),
+}
 
-@pytest.mark.parametrize("name", sorted(CONFIGS))
-def test_segment_shuffle_bit_identical(spark, name):
+
+def _rows_digest(df: pd.DataFrame) -> str:
+    """Order-independent digest of posting rows: sort by key, then hash
+    every column's values (bytes, ints, None) in schema order."""
+    df = df.sort_values(
+        ["tbucket", "block_id", "term", "field"], kind="mergesort"
+    ).reset_index(drop=True)
+    h = hashlib.sha256()
+    for col in df.columns:
+        h.update(repr((col, df[col].tolist())).encode())
+    return h.hexdigest()
+
+
+def _segment_postings(name):
     import seekstorm_spark.index.builder as B
     from seekstorm_spark.hashing import term_bucket
 
     tok_kwargs, block_size, mk = CONFIGS[name]
     batches = _make_batches(**mk)
-    build_v1, build_v2 = _capture_kernels(block_size)
-    fn_pairs = B.tokenize_to_term_rows(_FakeSel(), **tok_kwargs, emit="pairs")
-    fn_segs = B.tokenize_to_term_rows(
-        _FakeSel(), **tok_kwargs, emit="segments", block_size=block_size
+    build = _capture_kernel(block_size)
+    tok = B.tokenize_to_term_rows(
+        _FakeSel(), **tok_kwargs, block_size=block_size
     )
+    # two map tasks, each covering a contiguous ascending docid range
     half = max(1, len(batches) // 2)
-    tasks = [batches[:half], batches[half:]]
-
-    pair_tabs: list = []
     seg_tabs: list = []
-    for tb in tasks:
+    for tb in (batches[:half], batches[half:]):
         if tb:
-            pair_tabs += list(fn_pairs(iter(tb)))
-            seg_tabs += list(fn_segs(iter(tb)))
-    pt = pa.Table.from_batches(pair_tabs).to_pandas()
-    pt["block_id"] = (pt["docid"] // block_size).astype("int64")
-    pt["tbucket"] = pt["term"].map(lambda s: term_bucket(s, 8))
-    v1 = pd.concat(
-        [
-            build_v1(
-                (int(k[0]), int(k[1])),
-                g.drop(columns=["block_id", "tbucket"]).reset_index(drop=True),
-            )
-            for k, g in pt.groupby(["tbucket", "block_id"], sort=True)
-        ],
-        ignore_index=True,
-    )
+            seg_tabs += list(tok(iter(tb)))
     st = pa.Table.from_batches(seg_tabs).to_pandas()
     st["tbucket"] = st["term"].map(lambda s: term_bucket(s, 8))
-    v2 = pd.concat(
+    out = pd.concat(
         [
-            build_v2(
+            build(
                 (int(k[0]), int(k[1])),
                 g.drop(columns=["tbucket"]).reset_index(drop=True),
             )
@@ -163,33 +173,53 @@ def test_segment_shuffle_bit_identical(spark, name):
         ],
         ignore_index=True,
     )
-    for df in (v1, v2):
-        df.sort_values(
-            ["tbucket", "block_id", "term", "field"],
-            inplace=True,
-            kind="mergesort",
-        )
-        df.reset_index(drop=True, inplace=True)
-    assert v1.shape == v2.shape
-    for col in v1.columns:
-        assert v1[col].tolist() == v2[col].tolist(), col
+    return st, out
+
+
+@pytest.mark.parametrize("name", sorted(CONFIGS))
+def test_segment_shuffle_bit_identical(spark, name):
+    st, out = _segment_postings(name)
+    assert (len(out), _rows_digest(out)) == FROZEN[name]
     # splice coverage: at least one run actually joined >1 segment
     if name == "smallblocks":
         assert (st.groupby(["term", "field", "block_id"]).size() > 1).any()
 
 
-def test_segment_emit_rejects_unsorted_docids():
+def _tokenize_one(ids):
     import seekstorm_spark.index.builder as B
 
     fn = B.tokenize_to_term_rows(
-        _FakeSel(), text_col="text", emit="segments", block_size=1 << 16
+        _FakeSel(), text_col="text", block_size=1 << 16
     )
     rb = pa.RecordBatch.from_arrays(
         [
-            pa.array([5, 3], pa.int64()),
-            pa.array(["a b", "c d"], pa.string()),
+            pa.array(ids, pa.int64()),
+            pa.array(["a b"] * len(ids), pa.string()),
         ],
         names=["docid", "text"],
     )
+    return list(fn(iter([rb])))
+
+
+def test_segment_emit_rejects_unsorted_docids():
     with pytest.raises(ValueError, match="ascending"):
-        list(fn(iter([rb])))
+        _tokenize_one([5, 3])
+
+
+def test_segment_emit_names_duplicate_docid():
+    with pytest.raises(ValueError, match="duplicate docid 7"):
+        _tokenize_one([3, 7, 7, 9])
+
+
+def test_emit_accepts_only_segments():
+    import seekstorm_spark.index.builder as B
+
+    with pytest.raises(ValueError, match="emit"):
+        B.tokenize_to_term_rows(_FakeSel(), text_col="text", emit="pairs")
+
+
+def test_binary_column_rejects_int32_offset_overflow():
+    import seekstorm_spark.index.builder as B
+
+    with pytest.raises(OverflowError, match="int32"):
+        B._binary_column(pa, b"", np.array([0, 2**31], dtype=np.int64))
