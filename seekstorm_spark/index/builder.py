@@ -149,6 +149,7 @@ def assign_docids(
     order_col: str | None,
     n_buckets: int = 64,
     id_col: str | None = None,
+    width: int | None = None,
 ) -> DataFrame:
     """Add a contiguous ``docid`` column without a global sort barrier.
 
@@ -168,7 +169,23 @@ def assign_docids(
       partition (map-side, near-zero shuffle), broadcast prefix sums,
       number rows in place. NO data shuffle — the bulk-load fast path;
       deterministic for a fixed input layout.
+
+    ``width`` (with ``id_col`` or ``order_col``) returns the docs
+    range-partitioned on docid into that many tasks and sorted within
+    each: tokenizer-ready input at the caller's width, instead of
+    ``spark.sql.shuffle.partitions`` ranges (``id_col``) or
+    ``n_buckets`` hash buckets (``order_col``). The docids do not
+    change (see :func:`_rank_in_buckets`).
     """
+    if width is not None and (id_col is not None or order_col is not None):
+        docs = (
+            docs.withColumn("docid", F.col(id_col).cast("long"))
+            if id_col is not None
+            else _rank_in_buckets(docs, order_col, n_buckets)
+        )
+        return docs.repartitionByRange(width, "docid").sortWithinPartitions(
+            "docid"
+        )
     if id_col is not None:
         return (
             docs.withColumn("docid", F.col(id_col).cast("long"))
@@ -210,6 +227,35 @@ def assign_docids(
     return with_pid.withColumn(
         "docid", (base + local).cast("long")
     ).drop("_pid")
+
+
+def _rank_in_buckets(
+    docs: DataFrame, order_col: str, n_buckets: int
+) -> DataFrame:
+    """The docids of ``assign_docids``' ``order_col`` path without its
+    ``n_buckets``-task stages: ``repartition(n_buckets, key)`` puts a
+    row in bucket ``pmod(murmur3(key), n_buckets)`` (what ``F.hash``
+    computes), the bucket is sorted by key (stable, so equal keys keep
+    their arrival order) and numbered after all lower buckets. Here
+    one window per bucket ranks by key, and a count collect gives the
+    bucket offsets."""
+    from pyspark.sql import Window
+
+    from seekstorm_spark.sqlexpr import long_array
+
+    keyed = docs.withColumn(
+        "_b", F.pmod(F.hash(F.col(order_col)), F.lit(n_buckets))
+    )
+    counts = {
+        int(r["_b"]): int(r["cnt"])
+        for r in keyed.groupBy("_b").agg(F.count("*").alias("cnt")).collect()
+    }
+    sizes = [counts.get(b, 0) for b in range(n_buckets)]
+    base = F.element_at(
+        long_array(np.cumsum([0, *sizes[:-1]])), F.col("_b") + 1
+    )
+    rank = F.row_number().over(Window.partitionBy("_b").orderBy(order_col))
+    return keyed.withColumn("docid", (base + rank - 1).cast("long")).drop("_b")
 
 
 NGRAM_SEP = "\x1e"  # joins partial terms inside an n-gram key
@@ -821,9 +867,18 @@ def build_posting_blocks(
     n_buckets: int,
     only_buckets: list[int] | None = None,
     block_size: int = ROARING_BLOCK_SIZE,
+    width: int | None = None,
 ) -> DataFrame:
     """(term-bucket, block) groups of TERM_SEG_SCHEMA segments →
     compressed posting rows.
+
+    ``width`` hash-partitions the segments on ``tbucket`` into that
+    many tasks before grouping. That partitioning already clusters
+    every (tbucket, block_id) group, so the splice adds no second
+    shuffle, and the output can be written ``partitionBy("tbucket")``
+    as is, one file per bucket. Without it the groups spread over
+    ``spark.sql.shuffle.partitions`` (the bulk build, which then
+    repartitions by bucket for its write).
 
     Grouping by (tbucket, block_id) — not (term, block_id) — gives a
     small number of *large* batches, each spliced with one ``lexsort``
@@ -1017,6 +1072,8 @@ def build_posting_blocks(
         blocks = blocks.filter(
             F.col("tbucket").isin([int(b) for b in only_buckets])
         )
+    if width is not None:
+        blocks = blocks.repartition(width, "tbucket")
     return blocks.groupBy("tbucket", "block_id").applyInPandas(
         _build_seg, schema=POSTING_SCHEMA + ", tbucket int"
     )

@@ -72,7 +72,7 @@ from seekstorm_spark.index.builder import (
     facet_missing_code,
     facet_values,
 )
-from seekstorm_spark.index.store import IndexStore
+from seekstorm_spark.index.store import POSTINGS_DDL, IndexStore
 from seekstorm_spark.quantization import _DECODE_NP
 from seekstorm_spark.scoring import B, K, idf_f32
 from seekstorm_spark.sqlexpr import double_array, double_array_sql
@@ -3387,7 +3387,11 @@ def _annotated_postings(
         cols.append("positions_vb")
     postings = _cached_postings(spark, store)
     for sb in staged or []:
-        postings = postings.unionByName(spark.read.parquet(sb.postings_path))
+        # explicit schema: no inference job per query, and a batch
+        # that staged no postings reads as empty
+        postings = postings.unionByName(
+            spark.read.schema(POSTINGS_DDL).parquet(sb.postings_path)
+        )
     postings = postings.filter(
         F.col("tbucket").isin(buckets) & F.col("term").isin(terms)
     ).select(*cols)

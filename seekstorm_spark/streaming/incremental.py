@@ -17,6 +17,12 @@ Spark analog — a two-phase append with a searchable staging area:
   under deterministic per-batch names and writes meta last.
 * ``append_batch`` = stage + commit (the foreachBatch path).
 
+Staging is sized for micro-batches: every stage runs at most
+``P = min(n_buckets, defaultParallelism)`` tasks (aggregations at most
+the shuffle width), because a 1,000-doc batch costs its per-task
+overhead, not its per-doc work — about 50 ms per Python task on a
+4-vCPU host.
+
 **Append cost is O(batch), not O(index)**: the term-stats table is
 log-structured — each commit appends the batch's own (tbucket, term)
 partial aggregates as new files in the touched ``tbucket=`` partitions
@@ -55,7 +61,7 @@ from seekstorm_spark.index.builder import (
     term_stats_aggregate,
     tokenize_to_term_rows,
 )
-from seekstorm_spark.index.store import IndexStore
+from seekstorm_spark.index.store import DOC_META_DDL, IndexStore
 from seekstorm_spark.quantization import decode_lengths
 
 
@@ -235,6 +241,18 @@ def stage_batch(
     segment rows → ``build_posting_blocks``, with doc_meta decoded
     from the batch's term='' segments. The staged postings hold no
     term='' rows.
+
+    Width: tokenize, splice and both ``tbucket``-partitioned writes run
+    in ``P = min(n_buckets, defaultParallelism)`` tasks, whatever the
+    index's bucket count. A micro-batch costs per-task overhead (about
+    50 ms per Python task on a 4-vCPU host), so stages sized by
+    ``n_buckets`` (64 write tasks per table on a 64-bucket index) cost
+    seconds for a 1,000-doc batch. Tokenize reads one
+    ``repartitionByRange(P, "docid")``; the splice is hash-partitioned
+    on ``tbucket`` into P tasks and written straight out (each bucket
+    lands in one task, so each staged ``tbucket=`` dir holds one
+    file); the term-stats delta aggregates the cached posting rows
+    instead of listing the staged postings back.
     """
     meta = dict(store.meta)
     if batch_id is not None and batch_id in (meta.get("applied_batches") or []):
@@ -243,6 +261,8 @@ def stage_batch(
     # min_next_docid lets a caller chain MULTIPLE uncommitted staged
     # batches (each next batch starts after the previous staged one)
     nd = max(int(meta.get("next_docid", 0)), int(min_next_docid or 0))
+    n_buckets = int(meta.get("n_buckets", 32))
+    width = min(n_buckets, spark.sparkContext.defaultParallelism)
 
     from seekstorm_spark.index.builder import _decode_doc_meta, assign_docids
 
@@ -259,16 +279,17 @@ def stage_batch(
             F.min(F.col(id_col).cast("long")).alias("lo"),
             F.max(F.col(id_col).cast("long")).alias("hi"),
         ).collect()[0]
-        docs = assign_docids(batch_docs, None, id_col=id_col)
+        docs = assign_docids(batch_docs, None, id_col=id_col, width=width)
         base_docid = int(ids["lo"]) if ids["lo"] is not None else nd
         next_docid = max(nd, (int(ids["hi"]) + 1) if ids["hi"] is not None else nd)
     else:
         base_docid = ((nd + bs - 1) // bs * bs) if nd % bs else nd
         # order_col sorting happens per hash bucket on one task — fine
         # for micro-batches; bulk loads should pass id_col or use the
-        # builder's partition-offset path (see assign_docids docstring)
+        # builder's partition-offset path (see assign_docids docstring).
+        # The 16 buckets fix the docids, the width only the tasks
         docs = assign_docids(
-            batch_docs, order_col=text_col, n_buckets=16
+            batch_docs, order_col=text_col, n_buckets=16, width=width
         ).withColumn("docid", F.col("docid") + F.lit(base_docid))
         next_docid = None  # set after batch_n is known
 
@@ -295,22 +316,18 @@ def stage_batch(
         ngram_patterns=meta.get("ngram_patterns"),
         block_size=bs,
     ).cache()
-
-    n_buckets = int(meta.get("n_buckets", 32))
-    # postings first: this job fills the segment-row cache
-    blocks = build_posting_blocks(
-        term_rows.filter(F.col("term") != ""), n_buckets, block_size=bs
-    )
-    (
-        blocks.repartition(n_buckets, "tbucket")
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(os.path.join(stage, "postings"))
+    postings = build_posting_blocks(
+        term_rows.filter(F.col("term") != ""), n_buckets, block_size=bs,
+        width=width,
+    ).cache()
+    # postings first: this job fills both caches
+    postings.write.mode("overwrite").partitionBy("tbucket").parquet(
+        os.path.join(stage, "postings")
     )
     # then doc_meta from the cached term='' segments on ONE task (for
-    # a 1,000-doc batch on a 4-vCPU host: ~0.5 s, against ~1.9 s when
-    # decoded across the 16 tokenize partitions). Coalescing before
-    # the cache is filled would serialize the tokenize instead.
+    # a 1,000-doc batch on a 4-vCPU host: ~0.4 s, against ~0.5 s when
+    # decoded across the 4 tokenize partitions). Coalescing before the
+    # cache is filled would serialize the tokenize instead.
     sentinels = term_rows.filter(F.col("term") == "").select(
         "block_id", "field", "docids_vb", "dls"
     )
@@ -319,7 +336,9 @@ def stage_batch(
     ).parquet(os.path.join(stage, "doc_meta"))
     term_rows.unpersist()
 
-    doc_meta = spark.read.parquet(os.path.join(stage, "doc_meta"))
+    doc_meta = spark.read.schema(DOC_META_DDL).parquet(
+        os.path.join(stage, "doc_meta")
+    )
     hist = {
         (int(r["field"]), int(r["dl_byte"])): int(r["cnt"])
         for r in doc_meta.groupBy("field", "dl_byte")
@@ -336,17 +355,17 @@ def stage_batch(
     if next_docid is None:
         next_docid = base_docid + batch_n
 
-    # per-batch term-stats DELTA from the staged postings only — the
+    # per-batch term-stats DELTA from the cached posting rows only — the
     # O(batch) replacement for re-aggregating the whole index; readers
     # sum df per term across these log-structured partials
-    staged_postings = spark.read.parquet(os.path.join(stage, "postings"))
-    delta = term_stats_aggregate(staged_postings)
     (
-        delta.repartition(n_buckets, "tbucket")
+        term_stats_aggregate(postings)
+        .repartition(width, "tbucket")
         .write.mode("overwrite")
         .partitionBy("tbucket")
         .parquet(os.path.join(stage, "term_stats"))
     )
+    postings.unpersist()
 
     if meta.get("facets"):
         _stage_facet_blocks(spark, store, docs, stage)
