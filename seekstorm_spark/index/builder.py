@@ -224,28 +224,56 @@ def assign_docids(
         F.col("_pid").cast("long"), 33
     )
     base = F.element_at(long_array(offs), F.col("_pid") + 1)
+    # the numbering job re-reads the input: a source that changed
+    # since the count job (a table appended to mid-build, a
+    # nondeterministic partitioning key) would repeat docids, so a
+    # row past its partition's counted size fails the job instead
+    size = F.get(
+        long_array([counts.get(pid, 0) for pid in range(max_pid + 1)]),
+        F.col("_pid"),
+    )
+    overflow = (F.col("_pid") > F.lit(max_pid)) | (local >= size)
     return with_pid.withColumn(
-        "docid", (base + local).cast("long")
+        "docid",
+        F.when(
+            overflow,
+            F.raise_error(
+                F.format_string(
+                    "assign_docids: partition %d holds more rows than the "
+                    "count job saw; the input changed between jobs",
+                    F.col("_pid"),
+                )
+            ),
+        ).otherwise((base + local).cast("long")),
     ).drop("_pid")
+
+
+def _bucket_rank(docs: DataFrame, order_col: str, n_buckets: int):
+    """(``docs`` plus ``_b``, the bucket ``repartition(n_buckets, key)``
+    puts a row in: ``pmod(murmur3(key), n_buckets)``, what ``F.hash``
+    computes; a window column with the row's 1-based rank by key in
+    its bucket, the order the bucket's ``sortWithinPartitions`` gives
+    it — stable, so equal keys keep their arrival order)."""
+    from pyspark.sql import Window
+
+    keyed = docs.withColumn(
+        "_b", F.pmod(F.hash(F.col(order_col)), F.lit(n_buckets))
+    )
+    return keyed, F.row_number().over(
+        Window.partitionBy("_b").orderBy(order_col)
+    )
 
 
 def _rank_in_buckets(
     docs: DataFrame, order_col: str, n_buckets: int
 ) -> DataFrame:
     """The docids of ``assign_docids``' ``order_col`` path without its
-    ``n_buckets``-task stages: ``repartition(n_buckets, key)`` puts a
-    row in bucket ``pmod(murmur3(key), n_buckets)`` (what ``F.hash``
-    computes), the bucket is sorted by key (stable, so equal keys keep
-    their arrival order) and numbered after all lower buckets. Here
-    one window per bucket ranks by key, and a count collect gives the
-    bucket offsets."""
-    from pyspark.sql import Window
-
+    ``n_buckets``-task stages: a row's docid is its rank in its bucket
+    (:func:`_bucket_rank`, one window) after all rows of lower
+    buckets, whose sizes a count collect gives."""
     from seekstorm_spark.sqlexpr import long_array
 
-    keyed = docs.withColumn(
-        "_b", F.pmod(F.hash(F.col(order_col)), F.lit(n_buckets))
-    )
+    keyed, rank = _bucket_rank(docs, order_col, n_buckets)
     counts = {
         int(r["_b"]): int(r["cnt"])
         for r in keyed.groupBy("_b").agg(F.count("*").alias("cnt")).collect()
@@ -254,7 +282,6 @@ def _rank_in_buckets(
     base = F.element_at(
         long_array(np.cumsum([0, *sizes[:-1]])), F.col("_b") + 1
     )
-    rank = F.row_number().over(Window.partitionBy("_b").orderBy(order_col))
     return keyed.withColumn("docid", (base + rank - 1).cast("long")).drop("_b")
 
 
@@ -526,6 +553,35 @@ def tokenize_to_term_rows(
     list index IS the field id (reference indexed_field_id_vec,
     index.rs:5332-5407).
 
+    The kernel is :func:`segment_kernel`; a driver-resident batch runs
+    it in-process (``stage_batch``).
+    """
+    if emit != "segments":
+        raise ValueError(f"unknown emit mode {emit!r}; only 'segments'")
+    field_cols = list(fields) if fields else [text_col]
+    _tok = segment_kernel(
+        field_cols, tokenizer, stop_words, stemmer, frequent_terms,
+        synonym_map, ngram_patterns, block_size,
+    )
+    return docs.select("docid", *field_cols).mapInArrow(
+        _tok, schema=TERM_SEG_SCHEMA
+    )
+
+
+def segment_kernel(
+    field_cols: list[str],
+    tokenizer: str = "unicode_alphanumeric",
+    stop_words: frozenset[str] | None = None,
+    stemmer: str | None = None,
+    frequent_terms: frozenset[str] | None = None,
+    synonym_map: dict[str, list[str]] | None = None,
+    ngram_patterns: tuple[str, ...] | list[str] | None = None,
+    block_size: int = ROARING_BLOCK_SIZE,
+):
+    """The tokenize kernel of :func:`tokenize_to_term_rows`: an
+    iterator of Arrow record batches (``docid`` + ``field_cols``,
+    docids strictly ascending) → TERM_SEG_SCHEMA record batches.
+
     The Python side is one regex call per field plus numpy array
     assembly: occurrences aggregate into (doc, term) pairs and then
     into segments with vectorized sorts and run-length passes.
@@ -548,9 +604,6 @@ def tokenize_to_term_rows(
     )
     bi_patterns = frozenset(p for p in patterns if len(p) == 2)
     tri_patterns = frozenset(p for p in patterns if len(p) == 3)
-    field_cols = list(fields) if fields else [text_col]
-    if emit != "segments":
-        raise ValueError(f"unknown emit mode {emit!r}; only 'segments'")
 
     def _tok(batches):
         # mapInArrow, not mapInPandas: Arrow arrays built straight
@@ -822,9 +875,7 @@ def tokenize_to_term_rows(
                         block_size,
                     )
 
-    return docs.select("docid", *field_cols).mapInArrow(
-        _tok, schema=TERM_SEG_SCHEMA
-    )
+    return _tok
 
 
 def tokenize_to_doc_lengths(
@@ -895,6 +946,26 @@ def build_posting_blocks(
     from which doc_meta is derived — the document-length table rides
     the one tokenize pass instead of needing its own.
     """
+    blocks = term_rows.withColumn(
+        "tbucket",
+        F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int"),
+    )
+    if only_buckets is not None:
+        # resume: skip committed buckets before the shuffle, not after
+        blocks = blocks.filter(
+            F.col("tbucket").isin([int(b) for b in only_buckets])
+        )
+    if width is not None:
+        blocks = blocks.repartition(width, "tbucket")
+    return blocks.groupBy("tbucket", "block_id").applyInPandas(
+        splice_kernel(block_size), schema=POSTING_SCHEMA + ", tbucket int"
+    )
+
+
+def splice_kernel(block_size: int = ROARING_BLOCK_SIZE):
+    """The group kernel of :func:`build_posting_blocks`:
+    ``((tbucket, block_id), segment rows as pandas)`` → posting rows
+    (POSTING_SCHEMA + ``tbucket``)."""
 
     def _build_seg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         """Concatenate the map-encoded posting byte streams per
@@ -1063,20 +1134,7 @@ def build_posting_blocks(
             }
         )
 
-    blocks = term_rows.withColumn(
-        "tbucket",
-        F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int"),
-    )
-    if only_buckets is not None:
-        # resume: skip committed buckets before the shuffle, not after
-        blocks = blocks.filter(
-            F.col("tbucket").isin([int(b) for b in only_buckets])
-        )
-    if width is not None:
-        blocks = blocks.repartition(width, "tbucket")
-    return blocks.groupBy("tbucket", "block_id").applyInPandas(
-        _build_seg, schema=POSTING_SCHEMA + ", tbucket int"
-    )
+    return _build_seg
 
 
 FACET_MISSING = 255  # u8 string-facet code for null/unknown
@@ -1281,6 +1339,26 @@ def encode_facet_blocks(
     block-level zone bounds that let range/geo queries skip whole
     blocks before decoding (the reference skips via its per-segment
     facet stats); NaN bounds mean "no value in this block"."""
+    return (
+        docs_with_ids.select("docid", *facet_meta)
+        .withColumn(
+            "block_id", (F.col("docid") / F.lit(block_size)).cast("int")
+        )
+        .groupBy("block_id")
+        .applyInPandas(
+            facet_kernel(facet_meta, block_size),
+            schema="facet string, block_id int, fvalues binary, "
+            "vmin double, vmax double",
+        )
+    )
+
+
+def facet_kernel(
+    facet_meta: dict[str, dict], block_size: int = ROARING_BLOCK_SIZE
+):
+    """The group kernel of :func:`encode_facet_blocks`:
+    ``((block_id,), docid + facet columns as pandas)`` → one row per
+    facet of that block."""
     facet_cols = list(facet_meta)
     mappings = {
         fc: {v: i for i, v in enumerate(facet_values(spec) or [])}
@@ -1393,18 +1471,7 @@ def encode_facet_blocks(
             }
         )
 
-    return (
-        docs_with_ids.select("docid", *facet_cols)
-        .withColumn(
-            "block_id", (F.col("docid") / F.lit(block_size)).cast("int")
-        )
-        .groupBy("block_id")
-        .applyInPandas(
-            _enc,
-            schema="facet string, block_id int, fvalues binary, "
-            "vmin double, vmax double",
-        )
-    )
+    return _enc
 
 
 def build_facet_blocks(
@@ -1432,6 +1499,14 @@ def _decode_doc_meta(
     the same block-local encoding, so staged appends decode their
     cached tokenize output the same way.
     """
+    return sentinel_postings.mapInPandas(
+        doc_meta_kernel(block_size), schema="docid long, field int, dl_byte int"
+    )
+
+
+def doc_meta_kernel(block_size: int = ROARING_BLOCK_SIZE):
+    """The map kernel of :func:`_decode_doc_meta`: pandas batches of
+    (block_id, field, docids_vb, dls) → (docid, field, dl_byte)."""
     from seekstorm_spark.codecs import decode_docids
 
     def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1459,9 +1534,7 @@ def _decode_doc_meta(
                 }
             )
 
-    return sentinel_postings.mapInPandas(
-        _dec, schema="docid long, field int, dl_byte int"
-    )
+    return _dec
 
 
 def term_stats_aggregate(postings: DataFrame) -> DataFrame:

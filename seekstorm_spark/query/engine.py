@@ -48,6 +48,7 @@ is exactly ONE Spark job:
 from __future__ import annotations
 
 import math
+import os
 from collections.abc import Iterator
 from dataclasses import dataclass, field as dc_field
 
@@ -3387,11 +3388,23 @@ def _annotated_postings(
         cols.append("positions_vb")
     postings = _cached_postings(spark, store)
     for sb in staged or []:
-        # explicit schema: no inference job per query, and a batch
-        # that staged no postings reads as empty
-        postings = postings.unionByName(
-            spark.read.schema(POSTINGS_DDL).parquet(sb.postings_path)
-        )
+        # only the query's bucket dirs: listing all of a 64-bucket
+        # batch (> 32 leaf dirs) is a 64-task Spark job per query. A
+        # batch with none of them staged adds no rows; the explicit
+        # schema avoids an inference job
+        dirs = [
+            d
+            for d in (
+                os.path.join(sb.postings_path, f"tbucket={b}") for b in buckets
+            )
+            if os.path.isdir(d)
+        ]
+        if dirs:
+            postings = postings.unionByName(
+                spark.read.schema(POSTINGS_DDL)
+                .option("basePath", sb.postings_path)
+                .parquet(*dirs)
+            )
     postings = postings.filter(
         F.col("tbucket").isin(buckets) & F.col("term").isin(terms)
     ).select(*cols)

@@ -47,7 +47,13 @@ index/update endpoints, api_endpoints.rs:60-1470):
 * ``POST /indices/{name}/docs`` — body ``{"documents": [{...}]}``
   stages a batch through :class:`RealtimeIndexer`; the docs are
   searchable IMMEDIATELY (level-0: query/count union the staged
-  batches), committed on the indexer's 64k/interval triggers.
+  batches), committed on the indexer's 64k/interval triggers. The
+  batch goes to ``stage_batch`` as a driver-side Arrow table, so it is
+  tokenized and written in the server process (no Python worker, no
+  Spark write job); the kernels hold the GIL under the index's write
+  lock (tokenize alone about 0.35 ms per document), so load large
+  corpora with ``IndexBuilder`` or ``append_batch`` on a DataFrame
+  instead.
 * ``POST /indices/{name}/commit`` — force-commit staged batches.
 * ``POST /indices/{name}/delete`` — ``{"docids": [...]}`` or
   ``{"query": "...", "default_type"?}`` (delete-by-query).
@@ -79,6 +85,15 @@ from pyspark.sql import SparkSession
 from seekstorm_spark.index.store import IndexStore
 from seekstorm_spark.query.docstore import DocStore
 from seekstorm_spark.query.engine import count_matches, search
+
+
+def _docs_table(docs: list[dict]):
+    """A ``/docs`` body as a driver-side Arrow table, typed through the
+    same pandas frame ``spark.createDataFrame`` would read."""
+    import pandas as pd
+    import pyarrow as pa
+
+    return pa.Table.from_pandas(pd.DataFrame(docs), preserve_index=False)
 
 
 class AuthError(Exception):
@@ -617,10 +632,8 @@ class IndexService:
         if not isinstance(docs, list) or not docs:
             raise ValueError("body must contain a non-empty 'documents' list")
         idx = self._indexer(name)
-        import pandas as pd
-
         with self._write_locks[name]:
-            idx.add_documents(self.spark.createDataFrame(pd.DataFrame(docs)))
+            idx.add_documents(_docs_table(docs))
             return {
                 "staged": len(docs),
                 "pending_batches": len(idx.staged),
@@ -642,10 +655,8 @@ class IndexService:
         idx = self._indexer(name)
         from seekstorm_spark.query.engine import delete_documents
 
-        import pandas as pd
-
         with self._write_locks[name]:
-            idx.add_documents(self.spark.createDataFrame(pd.DataFrame(docs)))
+            idx.add_documents(_docs_table(docs))
             delete_documents(
                 self.spark, self.stores[name], [int(d) for d in old]
             )
@@ -720,12 +731,8 @@ class IndexService:
         if doc is None:
             raise ValueError("can't extract text from PDF")
         idx = self._indexer(name)
-        import pandas as pd
-
-        text_col = idx.text_col
-        row = {text_col: doc["body"]}
         with self._write_locks[name]:
-            idx.add_documents(self.spark.createDataFrame(pd.DataFrame([row])))
+            idx.add_documents(_docs_table([{idx.text_col: doc["body"]}]))
             if idx.staged:
                 docid = idx.staged[-1].next_docid - 1
             else:  # the add crossed the auto-commit boundary

@@ -17,11 +17,20 @@ Spark analog — a two-phase append with a searchable staging area:
   under deterministic per-batch names and writes meta last.
 * ``append_batch`` = stage + commit (the foreachBatch path).
 
-Staging is sized for micro-batches: every stage runs at most
-``P = min(n_buckets, defaultParallelism)`` tasks (aggregations at most
-the shuffle width), because a 1,000-doc batch costs its per-task
-overhead, not its per-doc work — about 50 ms per Python task on a
-4-vCPU host.
+A batch stages in one of two forms, with the same kernels and the
+same staged rows (``stage_batch``):
+
+* a Spark DataFrame runs a distributed plan sized for micro-batches:
+  every stage runs at most ``P = min(n_buckets, defaultParallelism)``
+  tasks (aggregations at most the shuffle width), because a 1,000-doc
+  batch costs its per-task overhead, not its per-doc work — about
+  50 ms per Python task on a 4-vCPU host. Streaming batches and bulk
+  appends of any size take this form.
+* a ``pyarrow.Table`` already held by the driver (the REST server's
+  ``/docs``) runs the kernels in-process and writes with pyarrow: no
+  Python worker, no Spark write job, and the boundary costs that are
+  most of a small batch's Spark plan are gone. It is single-threaded,
+  so it suits micro-batches only.
 
 **Append cost is O(batch), not O(index)**: the term-stats table is
 log-structured — each commit appends the batch's own (tbucket, term)
@@ -52,16 +61,38 @@ from dataclasses import dataclass
 from typing import Any
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from seekstorm_spark.codecs import ROARING_BLOCK_SIZE
+from seekstorm_spark.hashing import term_bucket
 from seekstorm_spark.index.builder import (
+    TERM_SEG_SCHEMA,
+    _bucket_rank,
+    _decode_doc_meta,
+    assign_docids,
     build_posting_blocks,
+    doc_meta_kernel,
+    encode_facet_blocks,
+    facet_kernel,
+    facet_kind,
+    facet_values,
+    segment_kernel,
+    splice_kernel,
+    synonym_map_from_groups,
     term_stats_aggregate,
     tokenize_to_term_rows,
 )
-from seekstorm_spark.index.store import DOC_META_DDL, IndexStore
+from seekstorm_spark.index.store import (
+    DOC_META_DDL,
+    FACETS_DDL,
+    POSTINGS_DDL,
+    TERM_STATS_DDL,
+    IndexStore,
+)
 from seekstorm_spark.quantization import decode_lengths
 
 
@@ -143,62 +174,53 @@ def _promote_partitioned(stage_root: str, dest_root: str, tag: str, prefix: str)
         )
 
 
-def _stage_facet_blocks(
-    spark: SparkSession,
-    store: IndexStore,
-    docs: DataFrame,
-    stage: str,
-) -> None:
-    """Facet byte arrays for the batch's block range, encoded against
-    the index's EXISTING facet dictionaries (the sorted-dictionary ⇒
-    byte-order invariant forbids extending a dictionary in place, so a
-    batch value outside the dictionary is rejected before anything is
-    promoted). Fixes the silent-exclusion / result-sort crash on
-    faceted appends."""
-    from seekstorm_spark.index.builder import encode_facet_blocks
-
-    facet_meta = store.meta.get("facets") or {}
-    if not facet_meta:
-        return
-    missing = [c for c in facet_meta if c not in docs.columns]
+def _check_facets(spark: SparkSession, facet_meta: dict, batch) -> None:
+    """Reject a batch that lacks an indexed facet column or carries a
+    string value outside the index's EXISTING facet dictionary, before
+    anything is staged (the sorted-dictionary ⇒ byte-order invariant
+    forbids extending a dictionary in place)."""
+    columns = batch.columns if isinstance(batch, DataFrame) else batch.column_names
+    missing = [c for c in facet_meta if c not in columns]
     if missing:
         raise ValueError(
             f"batch is missing facet columns {missing}; appends into a "
             "faceted index must carry every indexed facet column"
         )
-    # validate string-facet values against the frozen dictionaries
-    from seekstorm_spark.index.builder import facet_kind, facet_values
-
     for fc, spec in facet_meta.items():
         values = facet_values(spec)
         if values is None:  # numeric facet: any value encodes
             continue
-        col = (
-            docs.select(F.explode(F.col(fc)).alias(fc))
-            if facet_kind(spec) == "string_set"
-            else docs.select(fc)
-        )
-        # executor-side anti-join against the broadcast dictionary —
-        # only OFFENDING values reach the driver (a pathological batch
-        # must fail the gate, not OOM the driver collecting its
-        # distincts first)
-        spark = docs.sparkSession
-        dict_df = spark.createDataFrame(
-            [(str(v),) for v in values], "__known string"
-        )
-        new = [
-            r[0]
-            for r in col.filter(F.col(fc).isNotNull())
-            .select(F.col(fc).cast("string").alias(fc))
-            .distinct()
-            .join(
-                F.broadcast(dict_df),
-                F.col(fc) == F.col("__known"),
-                "left_anti",
+        is_set = facet_kind(spec) == "string_set"
+        if isinstance(batch, DataFrame):
+            col = (
+                batch.select(F.explode(F.col(fc)).alias(fc))
+                if is_set
+                else batch.select(fc)
             )
-            .limit(5)
-            .collect()
-        ]
+            # executor-side anti-join against the broadcast dictionary —
+            # only OFFENDING values reach the driver (a pathological
+            # batch must fail the gate, not OOM the driver collecting
+            # its distincts first)
+            dict_df = spark.createDataFrame(
+                [(str(v),) for v in values], "__known string"
+            )
+            new = [
+                r[0]
+                for r in col.filter(F.col(fc).isNotNull())
+                .select(F.col(fc).cast("string").alias(fc))
+                .distinct()
+                .join(
+                    F.broadcast(dict_df),
+                    F.col(fc) == F.col("__known"),
+                    "left_anti",
+                )
+                .limit(5)
+                .collect()
+            ]
+        else:
+            col = pc.list_flatten(batch[fc]) if is_set else batch[fc]
+            seen = {str(v) for v in pc.unique(col).to_pylist() if v is not None}
+            new = sorted(seen - set(values))[:5]
         if new:
             raise ValueError(
                 f"facet {fc!r}: batch carries values {sorted(map(str, new))} "
@@ -206,118 +228,111 @@ def _stage_facet_blocks(
                 "dictionary (byte order == value order forbids in-place "
                 "dictionary growth)"
             )
-    fb = encode_facet_blocks(
-        docs, facet_meta, int(store.meta.get("block_size", ROARING_BLOCK_SIZE))
-    )
-    (
-        fb.repartition(1, "facet")
-        .write.mode("overwrite")
-        .partitionBy("facet")
-        .parquet(os.path.join(stage, "facets"))
-    )
 
 
-def stage_batch(
-    spark: SparkSession,
-    store: IndexStore,
-    batch_docs: DataFrame,
-    text_col: str = "text",
-    batch_id: int | None = None,
-    id_col: str | None = None,
-    min_next_docid: int | None = None,
-) -> StagedBatch | None:
-    """Tokenize + write one micro-batch to the staging area (realtime
-    level-0). Returns None when ``batch_id`` was already applied.
-
-    Docids start at the next block boundary after the current doc
-    count (so the batch's (term, block) rows never collide with
-    committed blocks) unless ``id_col`` provides caller-managed ids —
-    then blocks may be shared with committed ones and the query side
-    merges rows per block (both are sound; block-sharing is what the
-    realtime oracle row uses to keep docids == doc_id). Repeated
-    ``id_col`` values raise ``ValueError``.
-
-    Same path as :meth:`IndexBuilder.build`: ``assign_docids`` →
-    segment rows → ``build_posting_blocks``, with doc_meta decoded
-    from the batch's term='' segments. The staged postings hold no
-    term='' rows.
-
-    Width: tokenize, splice and both ``tbucket``-partitioned writes run
-    in ``P = min(n_buckets, defaultParallelism)`` tasks, whatever the
-    index's bucket count. A micro-batch costs per-task overhead (about
-    50 ms per Python task on a 4-vCPU host), so stages sized by
-    ``n_buckets`` (64 write tasks per table on a 64-bucket index) cost
-    seconds for a 1,000-doc batch. Tokenize reads one
-    ``repartitionByRange(P, "docid")``; the splice is hash-partitioned
-    on ``tbucket`` into P tasks and written straight out (each bucket
-    lands in one task, so each staged ``tbucket=`` dir holds one
-    file); the term-stats delta aggregates the cached posting rows
-    instead of listing the staged postings back.
-    """
-    meta = dict(store.meta)
-    if batch_id is not None and batch_id in (meta.get("applied_batches") or []):
-        return None
-    bs = int(meta.get("block_size", ROARING_BLOCK_SIZE))
-    # min_next_docid lets a caller chain MULTIPLE uncommitted staged
-    # batches (each next batch starts after the previous staged one)
-    nd = max(int(meta.get("next_docid", 0)), int(min_next_docid or 0))
-    n_buckets = int(meta.get("n_buckets", 32))
-    width = min(n_buckets, spark.sparkContext.defaultParallelism)
-
-    from seekstorm_spark.index.builder import _decode_doc_meta, assign_docids
-
-    if id_col is None and "docid" in batch_docs.columns:
-        raise ValueError(
-            "batch already carries a 'docid' column; pass id_col='docid' "
-            "to use it as the index docid, or drop/rename it so the "
-            "engine can assign block-aligned ids"
-        )
-    if id_col is not None:
-        # min/max on the input, not the range-partitioned docs: no
-        # sampling job or shuffle just for two numbers
-        ids = batch_docs.agg(
-            F.min(F.col(id_col).cast("long")).alias("lo"),
-            F.max(F.col(id_col).cast("long")).alias("hi"),
-        ).collect()[0]
-        docs = assign_docids(batch_docs, None, id_col=id_col, width=width)
-        base_docid = int(ids["lo"]) if ids["lo"] is not None else nd
-        next_docid = max(nd, (int(ids["hi"]) + 1) if ids["hi"] is not None else nd)
-    else:
-        base_docid = ((nd + bs - 1) // bs * bs) if nd % bs else nd
-        # order_col sorting happens per hash bucket on one task — fine
-        # for micro-batches; bulk loads should pass id_col or use the
-        # builder's partition-offset path (see assign_docids docstring).
-        # The 16 buckets fix the docids, the width only the tasks
-        docs = assign_docids(
-            batch_docs, order_col=text_col, n_buckets=16, width=width
-        ).withColumn("docid", F.col("docid") + F.lit(base_docid))
-        next_docid = None  # set after batch_n is known
-
-    tag = str(batch_id) if batch_id is not None else f"d{base_docid}"
-    stage = os.path.join(store.path, "_staging", f"batch_{tag}")
-    shutil.rmtree(stage, ignore_errors=True)
-
-    from seekstorm_spark.index.builder import synonym_map_from_groups
-
+def _tokenizer_settings(meta: dict) -> dict[str, Any]:
+    """The index's tokenize options, as keywords of
+    :func:`tokenize_to_term_rows` and :func:`segment_kernel`."""
     by_field = meta.get("stop_words_by_field")
-    stops = (
-        {f: frozenset(v) for f, v in by_field.items()}
-        if by_field
-        else (frozenset(meta.get("stop_words") or []) or None)
-    )
-    term_rows = tokenize_to_term_rows(
-        docs, text_col, meta.get("tokenizer", "unicode_alphanumeric"),
-        stops,
-        fields=meta.get("fields"),
-        stemmer=meta.get("stemmer"),
-        frequent_terms=frozenset(meta.get("frequent_terms") or []) or None,
-        synonym_map=synonym_map_from_groups(meta.get("synonyms") or [])
+    return {
+        "tokenizer": meta.get("tokenizer", "unicode_alphanumeric"),
+        "stop_words": (
+            {f: frozenset(v) for f, v in by_field.items()}
+            if by_field
+            else (frozenset(meta.get("stop_words") or []) or None)
+        ),
+        "stemmer": meta.get("stemmer"),
+        "frequent_terms": frozenset(meta.get("frequent_terms") or []) or None,
+        "synonym_map": synonym_map_from_groups(meta.get("synonyms") or [])
         or None,
-        ngram_patterns=meta.get("ngram_patterns"),
-        block_size=bs,
+        "ngram_patterns": meta.get("ngram_patterns"),
+        "block_size": int(meta.get("block_size", ROARING_BLOCK_SIZE)),
+    }
+
+
+def _frame_docs(
+    batch: DataFrame,
+    text_col: str,
+    id_col: str | None,
+    base_docid: int,
+    width: int,
+) -> DataFrame:
+    """Number a DataFrame batch: range-partitioned on docid into
+    ``width`` tasks and sorted, ready for the tokenizer."""
+    if id_col is not None:
+        return assign_docids(batch, None, id_col=id_col, width=width)
+    # order_col sorting happens per hash bucket on one task — fine
+    # for micro-batches; bulk loads should pass id_col or use the
+    # builder's partition-offset path (see assign_docids docstring).
+    # The 16 buckets fix the docids, the width only the tasks
+    return assign_docids(
+        batch, order_col=text_col, n_buckets=16, width=width
+    ).withColumn("docid", F.col("docid") + F.lit(base_docid))
+
+
+def _table_docs(
+    spark: SparkSession,
+    batch: pa.Table,
+    text_col: str,
+    id_col: str | None,
+    base_docid: int,
+) -> pa.Table:
+    """Number a driver-resident batch with the docids
+    :func:`_frame_docs` gives, and sort it by docid. Builder ids rank
+    the text column alone with ``_rank_in_buckets``' window, in one
+    JVM-only job (two under AQE); the bucket sizes are counted here."""
+    if id_col is not None:
+        ids = pc.cast(batch[id_col], pa.int64())
+        if ids.null_count:
+            raise ValueError(f"id_col {id_col!r} holds null ids")
+        docid = ids.to_numpy()
+    else:
+        docid = np.empty(batch.num_rows, dtype=np.int64)
+        if batch.num_rows:
+            keyed = spark.createDataFrame(
+                pa.table(
+                    {
+                        "_row": np.arange(batch.num_rows, dtype=np.int64),
+                        # a /docs body whose texts are all null has a
+                        # null-typed column
+                        text_col: batch[text_col].cast(pa.string()),
+                    }
+                )
+            )
+            keyed, rank = _bucket_rank(keyed, text_col, 16)
+            got = keyed.select("_row", "_b", rank.alias("_rank")).toArrow()
+            b = got["_b"].to_numpy()
+            sizes = np.bincount(b, minlength=16)
+            offsets = np.cumsum(sizes) - sizes
+            docid[got["_row"].to_numpy()] = (
+                base_docid + offsets[b] + got["_rank"].to_numpy() - 1
+            )
+    if "docid" in batch.column_names:  # id_col="docid", now cast to long
+        batch = batch.drop_columns(["docid"])
+    return batch.append_column("docid", pa.array(docid)).take(
+        np.argsort(docid, kind="stable")
+    )
+
+
+def _write_frame(
+    spark: SparkSession,
+    meta: dict,
+    docs: DataFrame,
+    stage: str,
+    text_col: str,
+    width: int,
+) -> dict[tuple[int, int], int]:
+    """Stage a numbered DataFrame batch with Spark jobs; returns the
+    doc_meta (field, dl_byte) histogram."""
+    settings = _tokenizer_settings(meta)
+    bs = settings["block_size"]
+    term_rows = tokenize_to_term_rows(
+        docs, text_col, fields=meta.get("fields"), **settings
     ).cache()
     postings = build_posting_blocks(
-        term_rows.filter(F.col("term") != ""), n_buckets, block_size=bs,
+        term_rows.filter(F.col("term") != ""),
+        int(meta.get("n_buckets", 32)),
+        block_size=bs,
         width=width,
     ).cache()
     # postings first: this job fills both caches
@@ -345,16 +360,6 @@ def stage_batch(
         .agg(F.count("*").alias("cnt"))
         .collect()
     }
-    batch_n = int(sum(c for (fid, _b), c in hist.items() if fid == 0))
-    batch_pos_sum = int(
-        sum(
-            int(decode_lengths(np.array([b]))[0]) * c
-            for (_f, b), c in hist.items()
-        )
-    )
-    if next_docid is None:
-        next_docid = base_docid + batch_n
-
     # per-batch term-stats DELTA from the cached posting rows only — the
     # O(batch) replacement for re-aggregating the whole index; readers
     # sum df per term across these log-structured partials
@@ -368,8 +373,284 @@ def stage_batch(
     postings.unpersist()
 
     if meta.get("facets"):
-        _stage_facet_blocks(spark, store, docs, stage)
+        (
+            encode_facet_blocks(docs, meta["facets"], bs)
+            .repartition(1, "facet")
+            .write.mode("overwrite")
+            .partitionBy("facet")
+            .parquet(os.path.join(stage, "facets"))
+        )
+    return hist
 
+
+def _write_table(
+    spark: SparkSession,
+    meta: dict,
+    docs: pa.Table,
+    stage: str,
+    text_col: str,
+) -> dict[tuple[int, int], int]:
+    """Stage a numbered, docid-sorted Table in this process: the
+    kernels of :func:`_write_frame`'s plan, then pyarrow writes in the
+    same layout (one file per ``tbucket=`` / ``facet=`` dir). Returns
+    the doc_meta (field, dl_byte) histogram."""
+    settings = _tokenizer_settings(meta)
+    bs = settings["block_size"]
+    n_buckets = int(meta.get("n_buckets", 32))
+    field_cols = list(meta.get("fields") or [text_col])
+    tokenize = segment_kernel(field_cols, **settings)
+    max_rows = int(
+        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    segs = pa.Table.from_batches(
+        list(tokenize(docs.select(["docid", *field_cols]).to_batches(max_rows))),
+        schema=_arrow_schema(TERM_SEG_SCHEMA),
+    ).to_pandas()
+    is_sentinel = segs["term"].values == ""
+
+    # splice per (tbucket, block_id), the groups of build_posting_blocks
+    post = segs[~is_sentinel]
+    codes, terms = pd.factorize(post["term"])
+    tbucket = np.array(
+        [term_bucket(t, n_buckets) for t in terms], dtype=np.int32
+    )[codes]
+    splice = splice_kernel(bs)
+    blocks = [
+        splice(key, group.reset_index(drop=True))
+        for key, group in post.groupby([tbucket, post["block_id"].values])
+    ]
+    postings = pd.concat(blocks, ignore_index=True) if blocks else None
+    _write_parts(
+        postings, "tbucket", _arrow_schema(POSTINGS_DDL, "tbucket"),
+        os.path.join(stage, "postings"),
+    )
+
+    dec = doc_meta_kernel(bs)
+    sentinels = segs[is_sentinel][["block_id", "field", "docids_vb", "dls"]]
+    parts = list(dec([sentinels]))
+    doc_meta = pd.concat(parts) if parts else None
+    _write_parts(
+        doc_meta, None, _arrow_schema(DOC_META_DDL),
+        os.path.join(stage, "doc_meta"),
+    )
+    hist = (
+        {}
+        if doc_meta is None
+        else {
+            (int(f), int(b)): int(c)
+            for (f, b), c in doc_meta.groupby(["field", "dl_byte"]).size().items()
+        }
+    )
+
+    # the aggregates of term_stats_aggregate
+    term_stats = None
+    if postings is not None:
+        nbytes = sum(
+            postings[c].map(len)
+            for c in ("docids_vb", "tfs_vb", "dls", "positions_vb")
+        )
+        term_stats = (
+            postings.assign(nbytes=nbytes)
+            .groupby(["tbucket", "term"])
+            .agg(
+                df=("df_block", "sum"),
+                cf_fields=("posting_count", "sum"),
+                n_blocks=("block_id", "size"),
+                max_tf=("max_tf", "max"),
+                min_dl_byte=("min_dl_byte", "min"),
+                bytes=("nbytes", "sum"),
+            )
+            .reset_index()
+        )
+    _write_parts(
+        term_stats, "tbucket",
+        # Spark's count(*) is non-nullable
+        _arrow_schema(TERM_STATS_DDL, "tbucket", not_null=("n_blocks",)),
+        os.path.join(stage, "term_stats"),
+    )
+
+    facet_meta = meta.get("facets")
+    if facet_meta:
+        encode = facet_kernel(facet_meta, bs)
+        fdocs = docs.select(["docid", *facet_meta]).to_pandas()
+        fdocs["block_id"] = (fdocs["docid"] // bs).astype(np.int32)
+        rows = [
+            encode((block_id,), group.reset_index(drop=True))
+            for block_id, group in fdocs.groupby("block_id")
+        ]
+        _write_parts(
+            pd.concat(rows) if rows else None,
+            "facet", _arrow_schema(FACETS_DDL, "facet"),
+            os.path.join(stage, "facets"),
+        )
+    return hist
+
+
+def _arrow_schema(ddl: str, drop: str | None = None, not_null=()) -> pa.Schema:
+    """Arrow schema of a flat Spark DDL string, without the ``drop``
+    (partition) column."""
+    types = {
+        "string": pa.string(),
+        "int": pa.int32(),
+        "long": pa.int64(),
+        "double": pa.float64(),
+        "binary": pa.binary(),
+    }
+    return pa.schema(
+        pa.field(name, types[typ], nullable=name not in not_null)
+        for name, typ in (spec.split() for spec in ddl.split(","))
+        if name != drop
+    )
+
+
+# Spark's partition-dir escaping (ExternalCatalogUtils.escapePathName)
+_HIVE_ESCAPE = frozenset('"#%\'*/:=?\\\x7f{[]^')
+
+
+def _write_parts(
+    pdf: pd.DataFrame | None, key: str | None, schema: pa.Schema, root: str
+) -> None:
+    """One parquet file per ``key=value`` dir under ``root`` (all rows
+    in one file when ``key`` is None). The dir exists even without
+    rows, as after an empty Spark write."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(root, exist_ok=True)
+    if pdf is None or not len(pdf):
+        return
+    table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
+    if key is None:
+        pq.write_table(table, os.path.join(root, "part-00000.parquet"))
+        return
+    # one conversion, then a slice per key: converting per part costs
+    # more than the writes
+    keys = pdf[key].to_numpy()
+    order = np.argsort(keys, kind="stable")
+    table, keys = table.take(order), keys[order]
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    for start, end in zip(starts, np.r_[starts[1:], len(keys)]):
+        escaped = "".join(
+            f"%{ord(c):02X}" if c in _HIVE_ESCAPE or ord(c) < 0x20 else c
+            for c in str(keys[start])
+        )
+        path = os.path.join(root, f"{key}={escaped}")
+        os.makedirs(path)
+        pq.write_table(
+            table.slice(start, end - start),
+            os.path.join(path, "part-00000.parquet"),
+        )
+
+
+def stage_batch(
+    spark: SparkSession,
+    store: IndexStore,
+    batch_docs: DataFrame | pa.Table,
+    text_col: str = "text",
+    batch_id: int | None = None,
+    id_col: str | None = None,
+    min_next_docid: int | None = None,
+) -> StagedBatch | None:
+    """Tokenize + write one micro-batch to the staging area (realtime
+    level-0). Returns None when ``batch_id`` was already applied.
+
+    Docids start at the next block boundary after the current doc
+    count (so the batch's (term, block) rows never collide with
+    committed blocks) unless ``id_col`` provides caller-managed ids —
+    then blocks may be shared with committed ones and the query side
+    merges rows per block (both are sound; block-sharing is what the
+    realtime oracle row uses to keep docids == doc_id). Repeated
+    ``id_col`` values raise ``ValueError``.
+
+    Same kernels as :meth:`IndexBuilder.build`: docids as in
+    ``assign_docids`` → segment rows (:func:`segment_kernel`) → the
+    splice per (tbucket, block) (:func:`splice_kernel`), with doc_meta
+    decoded from the batch's term='' segments. The staged postings
+    hold no term='' rows. The input type picks where they run:
+
+    * a Spark ``DataFrame`` runs them as a distributed plan — any
+      batch size, tokenized in parallel (streaming ``foreachBatch``,
+      ``append_batch``, ``update_documents``). Tokenize, splice and
+      both ``tbucket``-partitioned writes run in
+      ``P = min(n_buckets, defaultParallelism)`` tasks, whatever the
+      index's bucket count: a micro-batch costs per-task overhead
+      (about 50 ms per Python task on a 4-vCPU host), so stages sized
+      by ``n_buckets`` cost seconds for a 1,000-doc batch. Tokenize
+      reads one ``repartitionByRange(P, "docid")``; the splice is
+      hash-partitioned on ``tbucket`` into P tasks and written
+      straight out; the term-stats delta aggregates the cached
+      posting rows.
+    * a ``pyarrow.Table`` already on the driver (the REST server's
+      ``/docs``) runs them in this process and writes with pyarrow:
+      no Python worker and no Spark write job, only the JVM-only job
+      that ranks builder docids (two under AQE; none with ``id_col``).
+      For a micro-batch the Spark plan's boundary costs — Python
+      workers, per-group pandas frames, per-file writer and commit
+      costs — are most of its time. The kernels run single-threaded
+      while holding the GIL, so bulk loads should pass a DataFrame.
+
+    Both forms stage the same rows in the same layout (one file per
+    staged ``tbucket=`` dir).
+    """
+    meta = dict(store.meta)
+    if batch_id is not None and batch_id in (meta.get("applied_batches") or []):
+        return None
+    bs = int(meta.get("block_size", ROARING_BLOCK_SIZE))
+    # min_next_docid lets a caller chain MULTIPLE uncommitted staged
+    # batches (each next batch starts after the previous staged one)
+    nd = max(int(meta.get("next_docid", 0)), int(min_next_docid or 0))
+    frame = isinstance(batch_docs, DataFrame)
+    columns = batch_docs.columns if frame else batch_docs.column_names
+    if id_col is None and "docid" in columns:
+        raise ValueError(
+            "batch already carries a 'docid' column; pass id_col='docid' "
+            "to use it as the index docid, or drop/rename it so the "
+            "engine can assign block-aligned ids"
+        )
+    _check_facets(spark, meta.get("facets") or {}, batch_docs)
+
+    if id_col is not None:
+        # min/max on the input, not the range-partitioned docs: no
+        # sampling job or shuffle just for two numbers
+        if frame:
+            ids = batch_docs.agg(
+                F.min(F.col(id_col).cast("long")).alias("lo"),
+                F.max(F.col(id_col).cast("long")).alias("hi"),
+            ).collect()[0]
+            lo, hi = ids["lo"], ids["hi"]
+        else:
+            ids = pc.min_max(pc.cast(batch_docs[id_col], pa.int64()))
+            lo, hi = ids["min"].as_py(), ids["max"].as_py()
+        base_docid = int(lo) if lo is not None else nd
+        next_docid = max(nd, (int(hi) + 1) if hi is not None else nd)
+    else:
+        base_docid = -(-nd // bs) * bs  # the next block boundary
+        next_docid = None  # set after batch_n is known
+
+    if frame:
+        width = min(
+            int(meta.get("n_buckets", 32)), spark.sparkContext.defaultParallelism
+        )
+        docs = _frame_docs(batch_docs, text_col, id_col, base_docid, width)
+    else:
+        docs = _table_docs(spark, batch_docs, text_col, id_col, base_docid)
+
+    tag = str(batch_id) if batch_id is not None else f"d{base_docid}"
+    stage = os.path.join(store.path, "_staging", f"batch_{tag}")
+    shutil.rmtree(stage, ignore_errors=True)
+    if frame:
+        hist = _write_frame(spark, meta, docs, stage, text_col, width)
+    else:
+        hist = _write_table(spark, meta, docs, stage, text_col)
+
+    batch_n = int(sum(c for (fid, _b), c in hist.items() if fid == 0))
+    batch_pos_sum = int(
+        sum(
+            int(decode_lengths(np.array([b]))[0]) * c
+            for (_f, b), c in hist.items()
+        )
+    )
+    if next_docid is None:
+        next_docid = base_docid + batch_n
     staged = StagedBatch(
         stage_path=stage,
         tag=tag,
@@ -507,7 +788,9 @@ class RealtimeIndexer:
         applied = store.meta.get("applied_batches") or []
         self._next_batch_id = (max(applied) + 1) if applied else 0
 
-    def add_documents(self, batch_docs: DataFrame) -> None:
+    def add_documents(self, batch_docs: DataFrame | pa.Table) -> None:
+        """Stage a batch (a Spark DataFrame, or a driver-side Arrow
+        table that stages in-process — see :func:`stage_batch`)."""
         staged = stage_batch(
             self.spark,
             self.store,

@@ -951,3 +951,76 @@ def test_pdf_file_read_only_rejected(served):
     with pytest.raises(urllib.error.HTTPError) as ei:
         _post_pdf(base + "/indices/main/file", build_pdf(["x y"]))
     assert ei.value.code == 403
+
+
+def _sorted_rows(path: str, keys: list[str]) -> list[dict]:
+    import os
+
+    import pyarrow.dataset as pads
+
+    if not os.path.exists(path):
+        return []
+    table = pads.dataset(path, partitioning="hive").to_table()
+    return table.sort_by([(k, "ascending") for k in keys]).to_pylist()
+
+
+def test_post_docs_stages_like_a_dataframe_batch(spark, tmp_path):
+    """POST /docs stages its body as a driver-side Arrow table: a
+    faceted, multi-field batch stages the same rows as ``stage_batch``
+    of the same documents as a Spark DataFrame."""
+    import shutil
+
+    import pandas as pd
+
+    from seekstorm_spark.index.store import IndexStore
+    from seekstorm_spark.streaming.incremental import StagedBatch, stage_batch
+
+    seed = spark.createDataFrame(
+        [
+            (0, "alpha beta", "first title", "en", ["x", "y"], 1.5),
+            (1, "beta gamma beta", "second", "de", ["y"], 3.0),
+            (2, "gamma delta", None, "en", [], None),
+        ],
+        "doc_id long, text string, title string, lang string, "
+        "tags array<string>, stars double",
+    )
+    served_path, frame_path = str(tmp_path / "served"), str(tmp_path / "frame")
+    IndexBuilder(
+        spark, served_path, n_buckets=4, block_size=256,
+        fields=["text", "title"], facet_cols=["lang", "tags", "stars"],
+    ).build(seed, text_col="text", id_col="doc_id")
+    shutil.copytree(served_path, frame_path)
+    docs = [
+        {"text": "beta epsilon", "title": "new one", "lang": "de",
+         "tags": ["x"], "stars": 2},
+        {"text": "zeta alpha alpha", "title": None, "lang": None,
+         "tags": ["y", "x"], "stars": 4.5},
+        {"text": "", "title": "only title gamma", "lang": "en",
+         "tags": [], "stars": None},
+    ]
+    srv, _t = serve_in_thread(
+        spark, {"f": served_path}, port=0, writable=True
+    )
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        status, resp = _post(base + "/indices/f/docs", {"documents": docs})
+    finally:
+        srv.shutdown()
+    assert status == 200 and resp["staged"] == 3
+    served = StagedBatch.load(f"{served_path}/_staging/batch_0")
+    frame = stage_batch(
+        spark, IndexStore.open(frame_path),
+        spark.createDataFrame(pd.DataFrame(docs)), batch_id=0,
+    )
+    manifest = ("batch_n", "batch_pos_sum", "next_docid")
+    assert [getattr(served, k) for k in manifest] == [
+        getattr(frame, k) for k in manifest
+    ]
+    for table, keys in (
+        ("postings", ["tbucket", "block_id", "term", "field"]),
+        ("term_stats", ["tbucket", "term"]),
+        ("doc_meta", ["docid", "field"]),
+        ("facets", ["facet", "block_id"]),
+    ):
+        got = _sorted_rows(f"{served.stage_path}/{table}", keys)
+        assert got and got == _sorted_rows(f"{frame.stage_path}/{table}", keys), table

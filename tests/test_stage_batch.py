@@ -15,12 +15,20 @@ keeps its staged artifacts unchanged.
   paid one after another on a small host).
 * A batch with no postings (every text empty or null) stages, stays
   invisible to queries and commits its documents.
+* The same batches passed as driver-resident Arrow tables stage the
+  same artifacts in-process: at most two Spark jobs, none of which
+  runs Python, and the DataFrame form's errors, raised before anything
+  is staged.
+* A realtime query reads only its own buckets of a staged batch, and
+  ``assign_docids`` fails instead of repeating docids when its input
+  changes between the count job and the numbering job.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -93,25 +101,40 @@ def _webtext(spark, n, seed, *cols):
     )
 
 
-def _builder_ids_64(spark, root):
+def _as_frame(df):
+    return df
+
+
+def _as_table(df):
+    return df.toArrow()
+
+
+def _builder_ids_64(spark, root, batch=_as_frame):
     store = IndexBuilder(spark, os.path.join(root, "idx"), n_buckets=64).build(
         _webtext(spark, 400, 71, "text").drop("doc_id"), text_col="text"
     )
-    sb = stage_batch(spark, store, _webtext(spark, 200, 72, "text").drop("doc_id"))
+    sb = stage_batch(
+        spark, store, batch(_webtext(spark, 200, 72, "text").drop("doc_id"))
+    )
     return {"staged": _staged_summary(sb)}
 
 
-def _idcol_interleaved(spark, root):
+def _idcol_interleaved(spark, root, batch=_as_frame):
     docs = _webtext(spark, 500, 73, "text")
     store = IndexBuilder(
         spark, os.path.join(root, "idx"), n_buckets=8, block_size=256
     ).build(docs.filter(F.col("doc_id") < 300), text_col="text", id_col="doc_id")
-    batch = docs.filter(F.col("doc_id") >= 300).repartition(4, F.rand(7))
-    sb = stage_batch(spark, store, batch, batch_id=3, id_col="doc_id")
+    sb = stage_batch(
+        spark,
+        store,
+        batch(docs.filter(F.col("doc_id") >= 300).repartition(4, F.rand(7))),
+        batch_id=3,
+        id_col="doc_id",
+    )
     return {"staged": _staged_summary(sb)}
 
 
-def _fields_facet_syn_stop(spark, root):
+def _fields_facet_syn_stop(spark, root, batch=_as_frame):
     store = IndexBuilder(
         spark,
         os.path.join(root, "idx"),
@@ -126,20 +149,22 @@ def _fields_facet_syn_stop(spark, root):
         ],
     ).build(_webtext(spark, 300, 74, "text", "lang").drop("doc_id"), text_col="text")
     sb = stage_batch(
-        spark, store, _webtext(spark, 260, 75, "text", "lang").drop("doc_id")
+        spark, store, batch(_webtext(spark, 260, 75, "text", "lang").drop("doc_id"))
     )
     return {"staged": _staged_summary(sb)}
 
 
-def _chained_commit(spark, root):
+def _chained_commit(spark, root, batch=_as_frame):
     store = IndexBuilder(
         spark, os.path.join(root, "idx"), n_buckets=8, block_size=256
     ).build(_webtext(spark, 300, 76, "text").drop("doc_id"), text_col="text")
-    b1 = stage_batch(spark, store, _webtext(spark, 150, 77, "text").drop("doc_id"))
+    b1 = stage_batch(
+        spark, store, batch(_webtext(spark, 150, 77, "text").drop("doc_id"))
+    )
     b2 = stage_batch(
         spark,
         store,
-        _webtext(spark, 150, 78, "text").drop("doc_id"),
+        batch(_webtext(spark, 150, 78, "text").drop("doc_id")),
         min_next_docid=b1.next_docid,
     )
     out = {"staged1": _staged_summary(b1), "staged2": _staged_summary(b2)}
@@ -234,6 +259,14 @@ def test_staged_artifacts_match_frozen(spark, tmp_path, name):
     assert got == FROZEN[name]
 
 
+@pytest.mark.parametrize("name", sorted(CONFIGS))
+def test_table_batch_matches_frozen(spark, tmp_path, name):
+    """The same batches passed as driver-resident Arrow tables stage
+    and commit the same rows and files."""
+    got = CONFIGS[name](spark, str(tmp_path), batch=_as_table)
+    assert got == FROZEN[name]
+
+
 def _launched_stage_widths(sc, group: str) -> list[int]:
     """Task counts of the stages that ran in ``group``'s jobs (a stage
     whose shuffle output was reused is listed by its job but runs no
@@ -310,16 +343,186 @@ def _hit_ids(df):
 def test_batch_without_postings_stages_and_commits(spark, tmp_path):
     """Every text empty or null: the batch stages no postings, adds no
     hits to a realtime query, and its commit still counts the docs."""
+    _check_batch_without_postings(spark, tmp_path, _as_frame)
+
+
+def test_table_batch_without_postings_stages_and_commits(spark, tmp_path):
+    _check_batch_without_postings(spark, tmp_path, _as_table)
+
+
+def _check_batch_without_postings(spark, tmp_path, batch):
     store = IndexBuilder(spark, str(tmp_path / "idx"), n_buckets=8).build(
         spark.createDataFrame([("a b",), ("b c",), ("c d",)], "text string"),
         text_col="text",
     )
     before = _hit_ids(search(spark, store, "b c", top_k=10))
     sb = stage_batch(
-        spark, store, spark.createDataFrame([("",), (None,)], "text string")
+        spark,
+        store,
+        batch(spark.createDataFrame([("",), (None,)], "text string")),
     )
     assert sb.batch_n == 2
     assert _hit_ids(search(spark, store, "b c", top_k=10, staged=[sb])) == before
     commit_batch(spark, store, sb)
     assert store.meta["n_docs"] == 5
     assert _hit_ids(search(spark, store, "b c", top_k=10)) == before
+
+
+def _staged_files(store) -> list[str]:
+    root = os.path.join(store.path, "_staging")
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, files in os.walk(root)
+        for f in files
+        if f.endswith((".parquet", ".json"))
+    )
+
+
+@pytest.fixture(scope="module")
+def faceted_store(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("faceted")
+    return IndexBuilder(
+        spark, str(root / "idx"), n_buckets=4, facet_cols=["lang"]
+    ).build(
+        spark.createDataFrame(
+            [(0, "a b", "en"), (1, "b c", "de"), (2, "c d", "en")],
+            "doc_id long, text string, lang string",
+        ),
+        text_col="text",
+        id_col="doc_id",
+    )
+
+
+_BAD_BATCHES = {
+    # (rows, stage_batch keywords, error)
+    "docid_column": (
+        [(7, "x y", "en")], {}, "already carries a 'docid' column",
+    ),
+    "repeated_id": (
+        [(5, "x y", "en"), (6, "y z", "de"), (6, "z w", "en")],
+        {"id_col": "docid"},
+        "duplicate docid 6",
+    ),
+    "facet_value": (
+        [(5, "x y", "fr")], {"id_col": "docid"}, r"values \['fr'\] not in",
+    ),
+}
+
+
+@pytest.mark.parametrize("form", ["frame", "table"])
+@pytest.mark.parametrize("case", sorted(_BAD_BATCHES))
+def test_bad_batch_errors_match_and_stage_nothing(
+    spark, faceted_store, case, form
+):
+    """Both input forms reject a bad batch with the same message (the
+    Table form as a plain ``ValueError``; Spark wraps the tokenizer's
+    in a Python worker error) and leave no staged file behind."""
+    rows, kwargs, message = _BAD_BATCHES[case]
+    df = spark.createDataFrame(rows, "docid long, text string, lang string")
+    batch = df if form == "frame" else df.toArrow()
+    error = Exception if form == "frame" else ValueError
+    with pytest.raises(error, match=message):
+        stage_batch(spark, faceted_store, batch, batch_id=9, **kwargs)
+    assert _staged_files(faceted_store) == []
+
+
+_PYTHON_PLAN_NODES = re.compile(r"InArrow|InPandas|EvalPython|PythonUDF")
+
+
+def _python_plan_nodes(spark, job_ids: list[int]) -> list[str]:
+    """Python operators in the physical plans of the SQL executions
+    that ran ``job_ids`` (read from the session's SQL status store)."""
+    found = []
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if any(e.jobs().contains(j) for j in job_ids):
+            found += _PYTHON_PLAN_NODES.findall(e.physicalPlanDescription())
+    return found
+
+
+@pytest.mark.parametrize("id_col", [None, "doc_id"])
+def test_table_batch_runs_no_python_stage(spark, tmp_path, id_col):
+    """A Table batch tokenizes, splices and writes in the driver: at
+    most the two JVM-only jobs that rank builder docids, and none with
+    caller ids."""
+    sc = spark.sparkContext
+    docs = _webtext(spark, 300, 84, "text")
+    store = IndexBuilder(spark, str(tmp_path / "idx"), n_buckets=64).build(
+        docs.filter(F.col("doc_id") < 200), text_col="text", id_col="doc_id"
+    )
+    batch = docs.filter(F.col("doc_id") >= 200)
+    if id_col is None:
+        batch = batch.drop("doc_id")
+    batch = batch.toArrow()
+    group = f"test-table-stage-{id_col}"
+    sc.setJobGroup(group, group)
+    try:
+        sb = stage_batch(spark, store, batch, id_col=id_col)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) <= (2 if id_col is None else 0), jobs
+    assert _python_plan_nodes(spark, jobs) == []
+    assert sb.batch_n == 100
+    for table in ("postings", "term_stats"):
+        files = _files_per_dir(os.path.join(sb.stage_path, table), "tbucket")
+        assert len(files) == 64 and set(files.values()) == {1}, table
+
+
+def test_staged_query_lists_only_its_buckets(spark, tmp_path):
+    """A realtime query reads the staged batch's ``tbucket=`` dirs of
+    its own terms only: on a 64-bucket batch (more leaf dirs than
+    Spark lists in-process) no stage is wider than the shuffle
+    partitions, and the hits equal the committed index's."""
+    sc = spark.sparkContext
+    store = IndexBuilder(spark, str(tmp_path / "idx"), n_buckets=64).build(
+        _webtext(spark, 300, 85, "text").drop("doc_id"), text_col="text"
+    )
+    sb = stage_batch(spark, store, _webtext(spark, 200, 86, "text").drop("doc_id"))
+    query = "term00001 term00004 term00017"
+    search(spark, store, query, top_k=10).collect()  # warm the committed reader
+    group = "test-staged-query-width"
+    sc.setJobGroup(group, group)
+    try:
+        staged = search(spark, store, query, top_k=10, staged=[sb]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    widths = _launched_stage_widths(sc, group)
+    bound = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert widths and max(widths) <= bound, sorted(widths)
+    commit_batch(spark, store, sb)
+    committed = search(spark, store, query, top_k=10).collect()
+    assert [(r["docid"], r["score"]) for r in staged] == [
+        (r["docid"], r["score"]) for r in committed
+    ]
+
+
+def test_assign_docids_fails_when_input_changes_between_jobs(spark, tmp_path):
+    """A partitioning key that is constant during the count job and
+    ``id`` afterwards models a source that changes between the two
+    jobs: every row counted in the last of four partitions, then
+    spread over all four. The numbering must fail, not hand out the
+    same few docids once per partition."""
+    from pyspark.sql.types import LongType
+
+    marker = str(tmp_path / "first_stage")
+
+    def key(i):
+        from pyspark import TaskContext
+
+        sid = TaskContext.get().stageId()
+        try:  # the first stage to get here is the count job's
+            fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.write(fd, str(sid).encode())
+            os.close(fd)
+        except FileExistsError:
+            pass
+        with open(marker) as f:
+            first = int(f.read() or sid)
+        return 3 if sid == first else int(i)  # pmod(hash(3L), 4) == 3
+
+    udf = F.udf(key, LongType()).asNondeterministic()
+    docs = spark.range(16).repartition(4, udf("id"))
+    with pytest.raises(Exception, match="more rows than the count job saw"):
+        assign_docids(docs, None).select("docid").collect()
