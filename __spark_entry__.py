@@ -566,7 +566,9 @@ def _match_count_df(
         # (lazily — the first consumer's job does it)
         rows = rows.localCheckpoint(eager=False)
     # ≤1 row per (docid, term) from query_term_rows: counting the
-    # non-null whens ≡ countDistinct, without the distinct rewrite
+    # non-null whens ≡ countDistinct, without the distinct rewrite.
+    # Valid only while `doc_id` is unique per document: a repeated id
+    # would add a second row per (docid, term) and merge two docs
     aggs = [
         F.count(
             F.when(F.col("term").isin(terms), F.col("term"))

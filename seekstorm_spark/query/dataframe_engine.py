@@ -295,6 +295,12 @@ def bm25_scored(
     df broadcast subtrees re-read it instead of re-running the Python
     tokenize (guide §2.4/§5: the heavy pass runs once, the light
     consumers share it).
+
+    ``docid_col`` must hold one distinct value per row: the per-doc
+    aggregation counts matched terms with ``count(term)`` where it
+    means ``countDistinct(term)``, which is exact only because each
+    docid's matched-term rows come from one document. A repeated
+    docid would merge two documents' tfs and terms into one candidate.
     """
     not_terms = not_terms or []
     q = [t for t in dict.fromkeys(query_terms)]  # dedup, keep order
@@ -510,7 +516,13 @@ def bm25_phrase_topk(
     read it — the adjacency predicate is a JVM-side ``exists`` over
     the per-term position arrays (no second scan, no self-join). The
     pass is ``localCheckpoint``-materialized so the stats/df broadcast
-    subtrees share it instead of re-tokenizing (guide §2.4/§5)."""
+    subtrees share it instead of re-tokenizing (guide §2.4/§5).
+
+    ``docid_col`` must hold one distinct value per row: the per-doc
+    aggregation counts matched terms with ``count(term)`` where it
+    means ``countDistinct(term)``, which is exact only because each
+    docid's matched-term rows come from one document. A repeated
+    docid would merge two documents' tfs and terms into one candidate."""
     q = list(dict.fromkeys(phrase_terms))
     rows = query_term_rows(
         docs, q, docid_col, text_col, with_positions=True
@@ -586,7 +598,8 @@ def bm25_topk(
     text_col: str = "text",
 ) -> DataFrame:
     """Top-k with deterministic ordering: rounded score desc, docid asc
-    (rounding first so the SQL oracle's f64 ties break identically)."""
+    (rounding first so the SQL oracle's f64 ties break identically).
+    ``docid_col`` must be unique per row, as for :func:`bm25_scored`."""
     scored = bm25_scored(
         spark, docs, query_terms, qtype, not_terms, docid_col, text_col
     ).withColumn("score_r", F.round(F.col("score"), 4))

@@ -577,6 +577,46 @@ def _normalize_geo(gf: dict | None) -> tuple[dict | None, str]:
     return gf, unit
 
 
+def _geo_cols(gf: dict) -> set[str]:
+    """Facet columns a geo filter reads: one Point/Morton column or a
+    numeric lat/lon pair."""
+    return {gf["point"]} if "point" in gf else {gf["lat"], gf["lon"]}
+
+
+def _block_bounds(
+    geo_filter: dict | None, filters_k: dict
+) -> dict[str, list[tuple[float, float]]] | None:
+    """Zone intervals for :func:`_join_facet_blocks`' block skip: the
+    geo radius' conservative lat/lon boxes (clamped and split at the
+    antimeridian, so the skip is lossless) and every numeric range
+    filter's [lo, hi]; None when nothing can skip."""
+    block_bounds = None
+    if geo_filter:
+        from seekstorm_spark.functions.geo import geo_boxes_for_radius
+
+        boxes = geo_boxes_for_radius(
+            float(geo_filter["at"][0]), float(geo_filter["at"][1]),
+            float(geo_filter["radius_km"]),
+        )
+        if "point" in geo_filter:
+            # a Point facet's zone bounds carry latitude min/max
+            block_bounds = {
+                geo_filter["point"]: [(b[0], b[1]) for b in boxes],
+            }
+        else:
+            block_bounds = {
+                geo_filter["lat"]: [(b[0], b[1]) for b in boxes],
+                geo_filter["lon"]: [(b[2], b[3]) for b in boxes],
+            }
+    for name, spec in filters_k.items():
+        if spec[0] == "numeric":
+            block_bounds = block_bounds or {}
+            block_bounds.setdefault(name, []).append(
+                (float(spec[1]), float(spec[2]))
+            )
+    return block_bounds
+
+
 def _empty_result(
     spark: SparkSession,
     emit_facets: list[str],
@@ -787,42 +827,10 @@ def search(
             )
 
     boosts, allowed = _resolve_fields(store, fields, field_filter)
-    need_facets = sorted(set(filters_k) | set(emit_facets))
-    block_bounds = None
-    if geo_filter:
-        geo_cols = (
-            {geo_filter["point"]}
-            if "point" in geo_filter
-            else {geo_filter["lat"], geo_filter["lon"]}
-        )
-        need_facets = sorted(set(need_facets) | geo_cols)
-        # block-level zone skipping: blocks whose stored lat/lon
-        # min/max fall outside the radius' conservative boxes drop
-        # before any posting decode (clamped + antimeridian-split, so
-        # the skip is lossless)
-        from seekstorm_spark.functions.geo import geo_boxes_for_radius
-
-        boxes = geo_boxes_for_radius(
-            float(geo_filter["at"][0]), float(geo_filter["at"][1]),
-            float(geo_filter["radius_km"]),
-        )
-        if "point" in geo_filter:
-            # a Point facet's zone bounds carry latitude min/max
-            block_bounds = {
-                geo_filter["point"]: [(b[0], b[1]) for b in boxes],
-            }
-        else:
-            block_bounds = {
-                geo_filter["lat"]: [(b[0], b[1]) for b in boxes],
-                geo_filter["lon"]: [(b[2], b[3]) for b in boxes],
-            }
-    # numeric range facet filters get the same zone-map skip
-    for name, spec in (filters_k or {}).items():
-        if spec[0] == "numeric":
-            block_bounds = block_bounds or {}
-            block_bounds.setdefault(name, []).append(
-                (float(spec[1]), float(spec[2]))
-            )
+    need_facets = sorted(
+        set(filters_k) | set(emit_facets)
+        | (_geo_cols(geo_filter) if geo_filter else set())
+    )
     n_docs, avgdl = _effective_stats(store, staged)
     need_k = top_k + offset
     emit_all = bool(result_sort)
@@ -859,32 +867,10 @@ def search(
         sort_prune = (result_sort[0][0], result_sort[0][1], need_k)
     rows = _annotated_postings(
         spark, store, plan, boosts, allowed, facet_cols=need_facets,
-        staged=staged, avgdl=avgdl, block_bounds=block_bounds,
+        staged=staged, avgdl=avgdl,
+        block_bounds=_block_bounds(geo_filter, filters_k),
         keep_bounds=[sort_prune[0]] if sort_prune else None,
     )
-
-    kernel = _make_kernel(
-        plan, need_k, prune and not emit_all, avgdl,
-        block_size=int(store.meta.get('block_size', ROARING_BLOCK_SIZE)),
-        deletes=_load_delete_set(spark, store),
-        facet_filters_k=filters_k,
-        emit_facets=emit_facets,
-        facet_kinds=kinds,
-        facet_sizes={
-            n: len(v) for n, v in dicts.items() if v is not None
-        },
-        emit_all=emit_all,
-        geo=geo_filter,
-        emit_dist=want_dist,
-        sort_prune=sort_prune,
-    )
-    schema = RESULT_SCHEMA
-    for fc in emit_facets:
-        schema += f", fb_{fc} " + (
-            "double" if kinds[fc] == "numeric" else "long"
-        )
-    if want_dist:
-        schema += ", geo_dist double"
     # rows are already hash-partitioned by block_id (the block-bound
     # window's exchange) — no extra repartition needed. Key-sorted
     # queries schedule blocks by their zone bound (best key first) so
@@ -899,6 +885,7 @@ def search(
         if sort_prune
         else None
     )
+    order_cols = None  # best block bound first
     if sort_prune is not None and zb_col in rows.columns:
         zb = (
             F.col(zb_col).asc_nulls_first()
@@ -906,14 +893,16 @@ def search(
             else F.col(zb_col).desc_nulls_first()
         )
         order_cols = [zb, F.col("block_id"), F.col("term"), F.col("field")]
-    else:
-        order_cols = [
-            F.col("block_bound").desc(), F.col("block_id"),
-            F.col("term"), F.col("field"),
-        ]
-    candidates = rows.sortWithinPartitions(*order_cols).mapInPandas(
-        kernel, schema=schema
-    )
+    candidates = _run_kernel(
+        spark, store, rows, order_cols, [(0, plan)], need_k,
+        prune and not emit_all, avgdl, boosts,
+        facet_filters_by_q={0: filters_k},
+        geo_by_q={0: geo_filter} if geo_filter else None,
+        dist_sort_by_q={} if want_dist else None,
+        emit_all=emit_all,
+        emit_facets=emit_facets,
+        sort_prune=sort_prune,
+    ).drop("query_id")
     if want_dist and geo_unit == "mi":
         # kernel distances are km; the requested unit only rescales
         # the emitted column (sort order is unit-invariant)
@@ -966,28 +955,17 @@ def search(
         out_cols.append(F.col("score"))
         order = []
         for key, direction in result_sort:
+            # docs without the key sort LAST either direction, numeric
+            # and string keys alike — required for the zone-bound
+            # block skip to be admissible (a missing-key doc can never
+            # outrank need_k docs with keys), the ordering a user
+            # expects from "sort by price", and DuckDB's default
             col = F.col(key)
-            if kinds.get(key) == "numeric":
-                # docs without the key sort LAST either direction —
-                # required for the zone-bound block skip to be
-                # admissible (a missing-key doc can never outrank
-                # need_k docs with keys), and the ordering a user
-                # expects from "sort by price"
-                order.append(
-                    col.desc_nulls_last()
-                    if direction == "desc"
-                    else col.asc_nulls_last()
-                )
-            else:
-                # string keys: the same nulls-last contract as numeric
-                # (required for the code-zone block skip to be
-                # admissible — a missing-key doc never outranks need_k
-                # keyed docs — and it matches DuckDB's default order)
-                order.append(
-                    col.desc_nulls_last()
-                    if direction == "desc"
-                    else col.asc_nulls_last()
-                )
+            order.append(
+                col.desc_nulls_last()
+                if direction == "desc"
+                else col.asc_nulls_last()
+            )
         order.append(F.col("docid").asc())
         out = candidates.select(*out_cols).orderBy(*order)
     else:
@@ -1140,18 +1118,12 @@ def search_many(
     n_docs, avgdl = _effective_stats(store, staged)
     filters_by_q: dict[int, dict] = {}
     geo_by_q: dict[int, dict] = {}
-    fsizes: dict[str, int] = {}
     if facet_filters is not None:
-        specs: dict = store.meta.get("facets") or {}
         for i, ff in enumerate(facet_filters):
             if not ff:
                 continue
             fk, _emit, _dicts_i, _kinds = _resolve_facets(store, ff, None)
             filters_by_q[i] = fk
-            for name in ff:
-                vals = facet_values(specs[name])
-                if vals is not None:
-                    fsizes[name] = len(vals)
     if geo_filters is not None:
         for i, gf in enumerate(geo_filters):
             if not gf:
@@ -1210,7 +1182,6 @@ def search_many(
             spark, store, fused, top_k, prune, boosts, allowed, avgdl,
             facet_filters_by_q=filters_by_q or None,
             geo_by_q=geo_by_q or None,
-            facet_sizes=fsizes or None,
             dist_sort_by_q=dist_sort_by_q if with_dist else None,
         )
         score_w = Window.partitionBy("query_id").orderBy(
@@ -1497,14 +1468,11 @@ def facet_counts_many(
     empty = spark.createDataFrame(
         [], "query_id int, facet string, value string, n long"
     )
-    fsizes: dict[str, int] = {}
     all_facets: set[str] = set()
     for _qstr, fcs in requests:
         for fc in fcs:
-            vals = facet_values(specs[fc]) if fc in specs else None
-            if fc not in specs or vals is None:
+            if fc not in specs or facet_values(specs[fc]) is None:
                 raise ValueError(f"{fc!r} is not an indexed string facet")
-            fsizes[fc] = len(vals)
             all_facets.add(fc)
     if staged:
         outs = [
@@ -1539,7 +1507,6 @@ def facet_counts_many(
             spark, store, fused, 0, False, boosts, allowed, avgdl,
             count_only=True,
             count_facets_by_q=count_facets_by_q,
-            facet_sizes=fsizes,
         )
         .groupBy("query_id", "facet", "code")
         .agg(F.sum("matches").cast("long").alias("n"))
@@ -1620,7 +1587,6 @@ def facet_range_counts_many(
             spark, store, fused, 0, False, boosts, allowed, avgdl,
             count_only=True,
             count_facets_by_q=count_facets_by_q,
-            facet_sizes={},
         )
         .groupBy("query_id", "facet", "code")
         .agg(F.sum("matches").cast("long").alias("n"))
@@ -1649,9 +1615,9 @@ def facet_range_counts_many(
     return out
 
 
-def _fused_scan_terms(plan: QueryPlan) -> set[str]:
-    """Posting terms one query's evaluation touches — mirrors the
-    term set _annotated_postings scans for a single query."""
+def _scan_terms(plan: QueryPlan) -> set[str]:
+    """Posting terms one query's evaluation touches — what both plan
+    builders scan for it."""
     return (
         set(plan.required_posting_terms())
         | (set(plan.pos_terms) if plan.units is None else set())
@@ -1672,7 +1638,6 @@ def _search_many_fused(
     count_facets_by_q: dict[int, dict] | None = None,
     facet_filters_by_q: dict[int, dict] | None = None,
     geo_by_q: dict[int, dict] | None = None,
-    facet_sizes: dict[str, int] | None = None,
     dist_sort_by_q: dict[int, str] | None = None,
 ) -> DataFrame:
     """One scan + one exchange + one kernel for N queries (union /
@@ -1684,7 +1649,7 @@ def _search_many_fused(
     switches the kernel to per-query facet tallies (query_id, facet,
     code, matches), joining the blocks' facet arrays into the same
     single action."""
-    terms = sorted({t for _i, p in idx_plans for t in _fused_scan_terms(p)})
+    terms = sorted({t for _i, p in idx_plans for t in _scan_terms(p)})
     has_gram = any(NGRAM_SEP in t for t in terms)
     need_pos = any(p.qtype == "phrase" for _i, p in idx_plans)
     n_buckets = store.n_buckets
@@ -1712,9 +1677,7 @@ def _search_many_fused(
         )
     geo_cols = set()
     for gf in (geo_by_q or {}).values():
-        geo_cols |= (
-            {gf["point"]} if "point" in gf else {gf["lat"], gf["lon"]}
-        )
+        geo_cols |= _geo_cols(gf)
     count_cols: set[str] = set()
     for spec in (count_facets_by_q or {}).values():
         for fc, (kind, b) in spec.items():
@@ -1777,33 +1740,16 @@ def _search_many_fused(
             rows, _extra = _join_facet_blocks(
                 spark, store, rows, facet_cols
             )
-    rows = rows.sortWithinPartitions("shard", "block_id", "term", "field")
-    kernel = _make_multi_kernel(
+    return _run_kernel(
+        spark, store, rows, ["shard", "block_id", "term", "field"],
         idx_plans, top_k, prune and not count_only, avgdl, boosts,
-        block_size=int(store.meta.get("block_size", ROARING_BLOCK_SIZE)),
-        deletes=_load_delete_set(spark, store),
-        has_gram=has_gram,
         count_only=count_only,
         count_facets_by_q=count_facets_by_q,
         facet_filters_by_q=facet_filters_by_q,
         geo_by_q=geo_by_q,
-        facet_kinds={
-            name: facet_kind(spec)
-            for name, spec in (store.meta.get("facets") or {}).items()
-        },
-        facet_sizes=facet_sizes,
         dist_sort_by_q=dist_sort_by_q,
         n_shards=n_shards,
     )
-    if count_facets_by_q:
-        schema = "query_id int, " + FACET_COUNT_SCHEMA
-    elif count_only:
-        schema = "query_id int, matches long"
-    else:
-        schema = "query_id int, " + RESULT_SCHEMA + (
-            ", geo_dist double" if dist_sort_by_q is not None else ""
-        )
-    return rows.mapInPandas(kernel, schema=schema)
 
 
 def _overlay_bufs(buflist, kind: str, n_values: int):
@@ -1878,7 +1824,60 @@ def _sset_gather(buf, cand: np.ndarray):
     return owner, codes[flat]
 
 
-def _make_multi_kernel(
+def _run_kernel(
+    spark: SparkSession,
+    store: IndexStore,
+    rows: DataFrame,
+    order_cols: list | None,
+    idx_plans: list[tuple[int, QueryPlan]],
+    top_k: int,
+    prune: bool,
+    avgdl: float,
+    boosts: dict[int, float],
+    **opts,
+) -> DataFrame:
+    """Sort ``rows`` within their partitions (``order_cols``; default
+    best block bound first) and run one :func:`_make_kernel` over them
+    → the kernel's per-partition output, which always leads with
+    ``query_id``. ``opts`` pass through to the kernel; the index's
+    block size, delete set and facet kinds/sizes are filled in here."""
+    specs: dict = store.meta.get("facets") or {}
+    kinds = {name: facet_kind(spec) for name, spec in specs.items()}
+    sizes = {
+        name: len(vals)
+        for name, spec in specs.items()
+        if (vals := facet_values(spec)) is not None
+    }
+    kernel = _make_kernel(
+        idx_plans, top_k, prune, avgdl, boosts,
+        block_size=int(store.meta.get("block_size", ROARING_BLOCK_SIZE)),
+        deletes=_load_delete_set(spark, store),
+        facet_kinds=kinds,
+        facet_sizes=sizes,
+        **opts,
+    )
+    if opts.get("count_facets_by_q"):
+        schema = "query_id int, " + FACET_COUNT_SCHEMA
+    elif opts.get("count_only"):
+        schema = "query_id int, matches long"
+    else:
+        schema = "query_id int, " + RESULT_SCHEMA
+        if opts.get("dist_sort_by_q") is not None:
+            schema += ", geo_dist double"
+        for fc in opts.get("emit_facets") or ():
+            schema += f", fb_{fc} " + (
+                "double" if kinds[fc] == "numeric" else "long"
+            )
+    if order_cols is None:
+        order_cols = [
+            F.col("block_bound").desc(), "block_id", "term", "field",
+        ]
+    return rows.sortWithinPartitions(*order_cols).mapInPandas(
+        kernel, schema=schema
+    )
+
+
+def _make_kernel(
     idx_plans: list[tuple[int, QueryPlan]],
     top_k: int,
     prune: bool,
@@ -1886,7 +1885,6 @@ def _make_multi_kernel(
     boosts: dict[int, float],
     block_size: int = ROARING_BLOCK_SIZE,
     deletes: np.ndarray | None = None,
-    has_gram: bool = False,
     count_only: bool = False,
     count_facets_by_q: dict[int, dict] | None = None,
     facet_filters_by_q: dict[int, dict] | None = None,
@@ -1895,25 +1893,51 @@ def _make_multi_kernel(
     facet_sizes: dict[str, int] | None = None,
     dist_sort_by_q: dict[int, str] | None = None,
     n_shards: int = 1,
+    emit_all: bool = False,
+    emit_facets: list[str] | None = None,
+    sort_prune: tuple[str, str, int] | None = None,
 ):
-    """Batched kernel: decode each posting row ONCE, score every
-    query against the shared decode. Per-query state (top-k heap,
+    """The posting-scoring kernel for one or many queries (``idx_plans``
+    = [(query_id, plan)]): decode each posting row ONCE, score every
+    query against the shared decode with per-query state (top-k heap,
     WAND threshold, candidate algebra, gram source map, phrase
-    alignment) mirrors ``_make_kernel`` op-for-op so each query's
-    results are bit-identical to its single-query run. ``count_only``
-    tallies matches per query instead of scoring;
-    ``count_facets_by_q`` additionally tallies facet-value counts per
-    query from the blocks' facet arrays (one shared buffer decode per
-    block, N queries' tallies against it). ``dist_sort_by_q`` marks
-    queries whose per-partition top-k is kept by haversine distance
-    (asc/desc, docid tiebreak) instead of score — score pruning is off
-    for those (a non-score primary key invalidates the WAND
-    threshold, as in the single-query emit-all path); when the dict is
-    not None the output carries a ``geo_dist`` column (NaN for
-    score-sorted queries)."""
+    alignment). Input rows carry ``shard``, ``block_id``, ``term``,
+    ``field``, the block-max columns (``max_tf``, ``min_dl_byte``,
+    ``max_tf1..3`` for grams) and the encoded postings; each
+    (shard, block_id)'s rows must arrive together, and a block may
+    carry several rows per (term, field) — staged level-0 slices.
+
+    Output modes:
+
+    * default — per-query top-``top_k`` (query_id, docid, score);
+    * ``count_only`` — per-query match tallies (query_id, matches);
+      ``count_facets_by_q`` maps query_id → {facet: (kind, bounds)}
+      and tallies facet values instead (query_id, facet, code,
+      matches) from the blocks' facet arrays (one shared buffer decode
+      per block); kind "geo" buckets haversine distances, bounds =
+      (bounds_km, mode, (col, lon_col|None), lat0, lon0);
+    * ``emit_all`` — every candidate with its score, ``fb_<facet>``
+      values for ``emit_facets`` and (when ``dist_sort_by_q`` is not
+      None) ``geo_dist``: the input of a multi-key result sort.
+
+    ``dist_sort_by_q`` marks queries whose per-partition top-k is kept
+    by haversine distance (asc/desc, docid tiebreak) instead of score
+    — score pruning is off for those (a non-score primary key
+    invalidates the WAND threshold); when the dict is not None the
+    output carries a ``geo_dist`` column (NaN where a query has no geo
+    filter). ``sort_prune`` = (facet, "asc"|"desc", need_k) keeps each
+    query's best need_k KEY values and skips a block whose zone bound
+    (``zb_min_<facet>`` asc / ``zb_max_<facet>`` desc, from
+    ``_annotated_postings(keep_bounds=…)``) cannot beat the worst kept
+    key; missing keys never enter the heap, so the skip is admissible
+    only under the nulls-last order ``search`` applies."""
     delete_set = deletes if deletes is not None else np.empty(0, dtype=np.int64)
+    has_gram = any(
+        NGRAM_SEP in t for _qi, p in idx_plans for t in _scan_terms(p)
+    )
     dist_sort = dist_sort_by_q or {}
     emit_dist_col = dist_sort_by_q is not None
+    kinds = facet_kinds or {}
     cfacets_by_q = {
         qi: dict(spec) for qi, spec in (count_facets_by_q or {}).items()
     }
@@ -1922,7 +1946,10 @@ def _make_multi_kernel(
         for qi, spec in (facet_filters_by_q or {}).items()
     }
     sizes = facet_sizes or {}
-    # every facet buffer any query counts or filters on:
+    emit_cols = [
+        (f"fb_{name}", kinds.get(name, "string")) for name in emit_facets or []
+    ]
+    # every facet buffer any query counts, filters on or emits:
     # col → (kind, n_values)
     facet_buf_kinds: dict[str, tuple[str, int]] = {}
     for spec in cfacets_by_q.values():
@@ -1940,11 +1967,18 @@ def _make_multi_kernel(
     for fspec in ffilters_by_q.values():
         for name, fs in fspec:
             facet_buf_kinds[f"fb_{name}"] = (fs[0], sizes.get(name, 0))
-    # per-query geo configs: (mode, col, lon_col, lat0, lon0, radius)
+    for name in emit_facets or []:
+        facet_buf_kinds[f"fb_{name}"] = (
+            kinds.get(name, "string"), sizes.get(name, 0)
+        )
+    # per-query geo configs: (mode, col, lon_col, lat0, lon0, radius);
+    # three storage modes: separate lat/lon f64 facets ("pair"), ONE
+    # interleaved [lat, lon] f64 buffer ("point"), or ONE packed u64
+    # Morton code per doc ("morton" — half the bytes)
     geo_cfg_by_q: dict[int, tuple] = {}
     for qi, gf in (geo_by_q or {}).items():
         if "point" in gf:
-            mode = (facet_kinds or {}).get(gf["point"], "point")
+            mode = kinds.get(gf["point"], "point")
             cols = (f"fb_{gf['point']}", None)
         else:
             mode = "pair"
@@ -1959,8 +1993,19 @@ def _make_multi_kernel(
         )
         if cols[1] is not None:
             facet_buf_kinds[cols[1]] = ("numeric", 0)
+    if sort_prune is not None:
+        sp_key, sp_dir, sp_need = sort_prune
+        sp_col = f"fb_{sp_key}"
+        sp_zb = f"zb_{'min' if sp_dir == 'asc' else 'max'}_{sp_key}"
+        # string keys compare dictionary CODES; the missing sentinel
+        # (dtype max) stays out of the heap — nulls last
+        sp_missing = facet_missing_code(sizes.get(sp_key, 0))
 
     def _source_map(p: QueryPlan) -> dict[str, tuple[str, int | None]]:
+        # scoring sources: each ORIGINAL positive term is scored from
+        # exactly one posting term — its own posting, or one gram's
+        # partial-tf column (full per-doc tf rides the gram posting,
+        # so scores are bit-identical to the single-term path)
         sm: dict[str, tuple[str, int | None]] = {}
         if p.units is not None:
             for u, _off in p.units:
@@ -1977,6 +2022,10 @@ def _make_multi_kernel(
         return sm
 
     def _align(p: QueryPlan) -> list[tuple[str, int]]:
+        # positional alignment runs over UNITS when the phrase was
+        # gram-rewritten (gram postings carry the gram-start
+        # positions), else over the raw phrase terms; a single
+        # covering unit ("ngram") needs no alignment at all
         if p.qtype == "phrase" and p.units is not None:
             return list(p.units)
         if p.qtype == "phrase":
@@ -1993,7 +2042,7 @@ def _make_multi_kernel(
             _source_map(p),
             _align(p),
             dict(p.unit_parts or {}),
-            sorted(_fused_scan_terms(p) - set(p.not_terms)),
+            sorted(_scan_terms(p) - set(p.not_terms)),
         )
         for qi, p in idx_plans
     ]
@@ -2023,6 +2072,9 @@ def _make_multi_kernel(
         best_d = {qi: np.empty(0, dtype=np.int64) for qi, *_ in qinfo}
         best_s = {qi: np.empty(0, dtype=np.float32) for qi, *_ in qinfo}
         best_g = {qi: np.empty(0, dtype=np.float64) for qi, *_ in qinfo}
+        # emit-all output parts per query: column → list of arrays
+        emitted = {qi: {} for qi, *_ in qinfo}
+        key_heap = {qi: np.empty(0, dtype=np.float64) for qi, *_ in qinfo}
         match_counts = dict.fromkeys((qi for qi, *_ in qinfo), 0)
         facet_tallies: dict[int, dict[str, np.ndarray]] = {
             qi: {
@@ -2066,8 +2118,8 @@ def _make_multi_kernel(
         def process_block(rows: pd.DataFrame, qlist: list) -> None:
             block_id = int(rows["block_id"].iloc[0])
             base = block_id * block_size
-            # one shared facet-buffer decode per block; every counting
-            # query's tally reads the same arrays
+            # one shared facet-buffer decode per block; every query's
+            # filters, tallies and emitted values read the same arrays
             fbufs = (
                 {
                     col: _overlay_bufs(rows[col].iloc[0], kind, nv)
@@ -2076,8 +2128,17 @@ def _make_multi_kernel(
                 if facet_buf_kinds
                 else {}
             )
+            # the block's sort-key zone bound (None = unknown: pre-v5
+            # facet files, or no slice has a value — never skipped)
+            zb = None
+            if sort_prune is not None and sp_zb in rows.columns:
+                zb = rows[sp_zb].iloc[0]
+                if zb is not None and np.isnan(zb):
+                    zb = None
 
             def fbuf_at(col: str, idx: np.ndarray):
+                """Facet values at local docids, padded with missing
+                when a buffer is shorter than the block's docid range."""
                 fv = fbufs[col]
                 if fv is None:
                     return None
@@ -2098,8 +2159,7 @@ def _make_multi_kernel(
             def latlon_of(gmode, c1, c2, c):
                 """(lat, lon) at local docids ``c`` from pair /
                 Point / packed-Morton storage; (None, None) when the
-                block carries no buffer — same decode the single-query
-                kernel uses."""
+                block carries no buffer."""
                 if gmode == "point":
                     buf = fbufs[c1]
                     if buf is None:
@@ -2112,6 +2172,8 @@ def _make_multi_kernel(
                     lo[ok] = buf[2 * c[ok] + 1]
                     return la, lo
                 if gmode == "morton":
+                    # code 0 = missing; distances run on the DECODED
+                    # (i32×10^7-quantized) coordinates
                     from seekstorm_spark.functions.geo import (
                         morton_decode,
                     )
@@ -2220,6 +2282,12 @@ def _make_multi_kernel(
             present = set(row_ub)
             for (qi, qtype, pos_terms, required_terms, not_set,
                  source_map, align, unit_parts_q, bound_terms) in qlist:
+                if zb is not None and key_heap[qi].size >= sp_need:
+                    worst = float(key_heap[qi][-1])
+                    if (sp_dir == "asc" and float(zb) > worst) or (
+                        sp_dir == "desc" and float(zb) < worst
+                    ):
+                        continue
                 if qtype in ("intersection", "phrase", "ngram"):
                     if any(t not in present for t in required_terms):
                         continue
@@ -2244,6 +2312,12 @@ def _make_multi_kernel(
                                 bound += boost * g
                             elif t in pos_terms:
                                 bound += boost * (pos_terms[t] * comp_ub)
+                    # skip only on STRICT bound < threshold, with a
+                    # small relative margin: the bound is float64 while
+                    # scores accumulate in f32 and can round up past it
+                    # by a few ulps; equal-bound blocks must run so the
+                    # docid-asc tiebreak on exact ties matches the
+                    # unpruned path
                     thr = threshold(qi)
                     eps = 1e-6 + 1e-5 * abs(thr) if np.isfinite(thr) else 0.0
                     if bound < thr - eps:
@@ -2266,6 +2340,7 @@ def _make_multi_kernel(
                             np.concatenate([union_docs(t) for t in q_present])
                         )
                     )
+                # NOT anti-probe (a match in ANY field excludes)
                 for t in not_set:
                     if t in present:
                         cand = cand[
@@ -2273,6 +2348,7 @@ def _make_multi_kernel(
                         ]
                 if cand.size == 0:
                     continue
+                # deleted-doc filter (reference add_result.rs:3000-3002)
                 if delete_set.size:
                     cand = cand[
                         ~np.isin(base + cand, delete_set, assume_unique=True)
@@ -2280,8 +2356,9 @@ def _make_multi_kernel(
                     if cand.size == 0:
                         continue
                 # per-query facet filters over the SHARED buffer decode
-                # (candidate-subset filtering keeps the block bound
-                # admissible, as in the single-query kernel)
+                # (reference search.rs:2543-2726); filtering candidates
+                # keeps the block bound admissible (bound ≥ any
+                # subset's max score)
                 for fname, fspec in ffilters_by_q.get(qi, ()):
                     if fspec[0] == "string_set":
                         buf = fbufs[f"fb_{fname}"]
@@ -2307,57 +2384,20 @@ def _make_multi_kernel(
                         break
                 if cand.size == 0:
                     continue
-                # per-query geo radius over the shared buffers (same
-                # haversine op order as the single-query kernel)
+                # per-query haversine radius over the shared buffers
+                # (reference geo Point facets, search.rs:2712-2724)
+                dists = None
                 gcfg = geo_cfg_by_q.get(qi)
                 if gcfg is not None:
-                    gmode = gcfg[0]
-                    if gmode == "point":
-                        buf = fbufs[gcfg[1]]
-                        if buf is None:
-                            continue
-                        n_pts = len(buf) // 2
-                        lat = np.full(cand.size, np.nan)
-                        lon = np.full(cand.size, np.nan)
-                        ok = cand < n_pts
-                        lat[ok] = buf[2 * cand[ok]]
-                        lon[ok] = buf[2 * cand[ok] + 1]
-                    elif gmode == "morton":
-                        from seekstorm_spark.functions.geo import (
-                            morton_decode,
-                        )
-
-                        buf = fbufs[gcfg[1]]
-                        if buf is None:
-                            continue
-                        codes = np.zeros(cand.size, dtype=np.uint64)
-                        ok = cand < len(buf)
-                        codes[ok] = buf[cand[ok]]
-                        lat = np.full(cand.size, np.nan)
-                        lon = np.full(cand.size, np.nan)
-                        has = codes != 0
-                        if has.any():
-                            lat[has], lon[has] = morton_decode(codes[has])
-                    else:
-                        lat = fbuf_at(gcfg[1], cand)
-                        lon = fbuf_at(gcfg[2], cand)
-                        if lat is None or lon is None:
-                            continue
-                    lat0, lon0, radius = gcfg[3], gcfg[4], gcfg[5]
-                    a = (
-                        np.sin(np.radians(lat0 - lat) / 2.0) ** 2
-                        + np.cos(np.radians(lat))
-                        * math.cos(math.radians(lat0))
-                        * np.sin(np.radians(lon0 - lon) / 2.0) ** 2
-                    )
-                    d_km = 2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
-                    gkeep = ~np.isnan(d_km) & (d_km <= radius)
+                    lat, lon = latlon_of(gcfg[0], gcfg[1], gcfg[2], cand)
+                    if lat is None or lon is None:
+                        continue
+                    d_km = hav_km(lat, lon, gcfg[3], gcfg[4])
+                    gkeep = ~np.isnan(d_km) & (d_km <= gcfg[5])
                     cand = cand[gkeep]
-                    dists = d_km[gkeep] if qi in dist_sort else None
+                    dists = d_km[gkeep]
                     if cand.size == 0:
                         continue
-                else:
-                    dists = None
                 if align and len(align) > 1:
                     keep = _phrase_filter(lazy_recs, cand, align)
                     cand = cand[keep]
@@ -2397,6 +2437,8 @@ def _make_multi_kernel(
                             buf = fbufs[f"fb_{fc}"]
                             if buf is None:
                                 continue
+                            # codes are per-doc DEDUPED at encode: one
+                            # count per (doc, distinct value)
                             _owner, codes = _sset_gather(buf, cand)
                             facet_tallies[qi][fc] += np.bincount(
                                 codes.astype(np.int64), minlength=nv
@@ -2406,7 +2448,7 @@ def _make_multi_kernel(
                         if fv is None:
                             continue
                         if kind == "string":
-                            valid = fv < nv
+                            valid = fv < nv  # missing sentinel excluded
                             facet_tallies[qi][fc] += np.bincount(
                                 fv[valid].astype(np.int64), minlength=nv
                             )[:nv]
@@ -2421,8 +2463,8 @@ def _make_multi_kernel(
                             )
                     continue
                 # f32 accumulation in (term asc, field asc) order over
-                # ORIGINAL terms — identical to _make_kernel's entries
-                # loop (gram partials score their source terms)
+                # ORIGINAL terms — the oracle SQL's order (gram
+                # partials score their source terms)
                 entries = []
                 for orig in pos_terms:
                     pterm, pidx = source_map.get(orig, (orig, None))
@@ -2446,7 +2488,41 @@ def _make_multi_kernel(
                     scores[valid] += np.float32(boost) * term_scores(
                         pos_terms[t], tf[ii], dl[ii]
                     )
-                if qi in dist_sort and dists is not None:
+                if sort_prune is not None:
+                    kv = fbuf_at(sp_col, cand)
+                    if kv is not None:
+                        if kv.dtype.kind in "ui":
+                            vals = kv[kv != sp_missing].astype(np.float64)
+                        else:
+                            vals = kv[~np.isnan(kv)].astype(np.float64)
+                        if vals.size:
+                            merged = np.concatenate([key_heap[qi], vals])
+                            merged.sort()
+                            if sp_dir == "desc":
+                                merged = merged[::-1]
+                            key_heap[qi] = merged[:sp_need]
+                if emit_all:
+                    em = emitted[qi]
+                    em.setdefault("docid", []).append(base + cand)
+                    em.setdefault("score", []).append(scores)
+                    if emit_dist_col:
+                        em.setdefault("geo_dist", []).append(
+                            dists
+                            if dists is not None
+                            else np.full(cand.size, np.nan)
+                        )
+                    for colname, kind in emit_cols:
+                        vals = fbuf_at(colname, cand)
+                        if kind == "numeric":
+                            if vals is None:
+                                vals = np.full(cand.size, np.nan)
+                        elif vals is None:
+                            vals = np.full(
+                                cand.size,
+                                facet_missing_code(facet_buf_kinds[colname][1]),
+                            )
+                        em.setdefault(colname, []).append(vals)
+                elif qi in dist_sort:
                     merge_topk_dist(qi, base + cand, scores, dists)
                 else:
                     merge_topk(qi, base + cand, scores)
@@ -2505,39 +2581,37 @@ def _make_multi_kernel(
             )
             return
 
-        qids = []
-        ds = []
-        ss = []
-        gs = []
-        for qi, *_ in qinfo:
-            qids.append(np.full(best_d[qi].size, qi, dtype=np.int32))
-            ds.append(best_d[qi])
-            ss.append(best_s[qi])
-            gs.append(
-                best_g[qi]
-                if qi in dist_sort
-                else np.full(best_d[qi].size, np.nan)
-            )
-        out = {
-            "query_id": pd.Series(
-                np.concatenate(qids) if qids else np.empty(0, np.int32),
-                dtype="int32",
-            ),
-            "docid": pd.Series(
-                np.concatenate(ds) if ds else np.empty(0, np.int64),
-                dtype="int64",
-            ),
-            "score": pd.Series(
-                np.concatenate(ss) if ss else np.empty(0, np.float32),
-                dtype="float32",
-            ),
-        }
+        dtypes = {"query_id": "int32", "docid": "int64", "score": "float32"}
         if emit_dist_col:
-            out["geo_dist"] = pd.Series(
-                np.concatenate(gs) if gs else np.empty(0, np.float64),
-                dtype="float64",
-            )
-        yield pd.DataFrame(out)
+            dtypes["geo_dist"] = "float64"
+        for colname, kind in emit_cols:
+            dtypes[colname] = "float64" if kind == "numeric" else "int64"
+        parts: dict[str, list[np.ndarray]] = {c: [] for c in dtypes}
+        for qi, *_ in qinfo:
+            if emit_all:
+                got = emitted[qi]
+            else:
+                got = {"docid": [best_d[qi]], "score": [best_s[qi]]}
+                if emit_dist_col:
+                    got["geo_dist"] = [
+                        best_g[qi]
+                        if qi in dist_sort
+                        else np.full(best_d[qi].size, np.nan)
+                    ]
+            n = sum(a.size for a in got.get("docid", ()))
+            parts["query_id"].append(np.full(n, qi, dtype=np.int32))
+            for c in dtypes:
+                if c != "query_id":
+                    parts[c].extend(got.get(c, ()))
+        yield pd.DataFrame(
+            {
+                c: pd.Series(
+                    np.concatenate(p) if p else np.empty(0),
+                    dtype=dtypes[c],
+                )
+                for c, p in parts.items()
+            }
+        )
 
     return kernel
 
@@ -2563,7 +2637,7 @@ def count_matches(
     """
     staged = list(staged) if staged else None
     geo_filter, _unit = _normalize_geo(geo_filter)
-    filters_k, _emit, dicts, kinds = _resolve_facets(
+    filters_k, _emit, _dicts, _kinds = _resolve_facets(
         store, facet_filters, None, geo_filter
     )
     plan = _plan(spark, store, query, default_type, staged)
@@ -2595,55 +2669,21 @@ def count_matches(
 
     boosts, allowed = _resolve_fields(store, None, field_filter)
     _n, avgdl = _effective_stats(store, staged)
-    need_facets = sorted(set(filters_k))
-    block_bounds = None
-    if geo_filter:
-        geo_cols = (
-            {geo_filter["point"]}
-            if "point" in geo_filter
-            else {geo_filter["lat"], geo_filter["lon"]}
-        )
-        need_facets = sorted(set(need_facets) | geo_cols)
-        from seekstorm_spark.functions.geo import geo_boxes_for_radius
-
-        boxes = geo_boxes_for_radius(
-            float(geo_filter["at"][0]), float(geo_filter["at"][1]),
-            float(geo_filter["radius_km"]),
-        )
-        if "point" in geo_filter:
-            block_bounds = {
-                geo_filter["point"]: [(b[0], b[1]) for b in boxes],
-            }
-        else:
-            block_bounds = {
-                geo_filter["lat"]: [(b[0], b[1]) for b in boxes],
-                geo_filter["lon"]: [(b[2], b[3]) for b in boxes],
-            }
-    for fname, spec in (filters_k or {}).items():
-        if spec[0] == "numeric":
-            block_bounds = block_bounds or {}
-            block_bounds.setdefault(fname, []).append(
-                (float(spec[1]), float(spec[2]))
-            )
+    need_facets = sorted(
+        set(filters_k) | (_geo_cols(geo_filter) if geo_filter else set())
+    )
     rows = _annotated_postings(
         spark, store, plan, boosts, allowed,
         facet_cols=need_facets or None, staged=staged, avgdl=avgdl,
-        block_bounds=block_bounds,
-    )
-    kernel = _make_kernel(
-        plan, 0, False, avgdl, count_only=True,
-        block_size=int(store.meta.get('block_size', ROARING_BLOCK_SIZE)),
-        deletes=_load_delete_set(spark, store),
-        facet_filters_k=filters_k,
-        facet_kinds=kinds,
-        facet_sizes={n: len(v) for n, v in dicts.items() if v is not None},
-        geo=geo_filter,
+        block_bounds=_block_bounds(geo_filter, filters_k),
     )
     out = (
-        rows.sortWithinPartitions(
-            F.col("block_bound").desc(), "block_id", "term", "field"
+        _run_kernel(
+            spark, store, rows, None, [(0, plan)], 0, False, avgdl, boosts,
+            count_only=True,
+            facet_filters_by_q={0: filters_k},
+            geo_by_q={0: geo_filter} if geo_filter else None,
         )
-        .mapInPandas(kernel, schema=COUNT_SCHEMA)
         .agg(F.sum("matches"))
         .collect()[0][0]
     )
@@ -2894,7 +2934,6 @@ def geo_range_counts_many(
             spark, store, fused, 0, False, boosts, allowed, avgdl,
             count_only=True,
             count_facets_by_q=count_facets_by_q,
-            facet_sizes={},
         )
         .groupBy("query_id", "facet", "code")
         .agg(F.sum("matches").cast("long").alias("n"))
@@ -2923,37 +2962,35 @@ def _facet_count_run(
 ) -> DataFrame:
     staged = list(staged) if staged else None
     specs: dict = store.meta.get("facets") or {}
+    # facet → the kernel's count spec (kind, bounds); bucket_lo decode
+    # bounds for numeric and geo buckets
     count_spec: dict = {}
-    fsizes: dict[str, int] = {}
+    out_bounds: dict[str, np.ndarray] = {}
     for fc in string_facets or []:
-        vals = facet_values(specs[fc]) if fc in specs else None
-        if fc not in specs or vals is None:
+        if fc not in specs or facet_values(specs[fc]) is None:
             raise ValueError(f"{fc!r} is not an indexed string facet")
         count_spec[fc] = (facet_kind(specs[fc]), None)
-        fsizes[fc] = len(vals)
     for fc, bounds in (range_facets or {}).items():
         if fc not in specs or facet_kind(specs[fc]) != "numeric":
             raise ValueError(f"{fc!r} is not an indexed numeric facet")
         count_spec[fc] = ("numeric", np.asarray(sorted(bounds), dtype=np.float64))
+        out_bounds[fc] = count_spec[fc][1]
+    join_cols = sorted(count_spec)
     # geo distance buckets: label -> (mode, cols, lat0, lon0,
-    # bounds_km, out_bounds) — bucketed in km inside the kernel,
-    # decoded to the CALLER's unit bounds
-    kernel_geo: dict = {}
-    geo_out_bounds: dict[str, np.ndarray] = {}
-    geo_join_cols: list[str] = []
-    for label, (mode, cols, lat0, lon0, bounds_km, out_bounds) in (
+    # bounds_km, caller-unit bounds) — bucketed in km inside the
+    # kernel, decoded to the CALLER's unit bounds
+    for label, (mode, cols, lat0, lon0, bounds_km, obounds) in (
         geo_facets or {}
     ).items():
-        kernel_geo[label] = (
+        count_spec[label] = ("geo", (
             np.asarray(bounds_km, dtype=np.float64),
             mode,
-            f"fb_{cols[0]}",
-            f"fb_{cols[1]}" if len(cols) > 1 else None,
+            (cols[0], cols[1] if len(cols) > 1 else None),
             float(lat0),
             float(lon0),
-        )
-        geo_out_bounds[label] = np.asarray(out_bounds, dtype=np.float64)
-        geo_join_cols.extend(c for c in cols if c not in geo_join_cols)
+        ))
+        out_bounds[label] = np.asarray(obounds, dtype=np.float64)
+        join_cols.extend(c for c in cols if c not in join_cols)
 
     plan = _plan(spark, store, query, default_type, staged)
     if string_facets:
@@ -2966,23 +3003,14 @@ def _facet_count_run(
     boosts, allowed = _resolve_fields(store, None, None)
     _n, avgdl = _effective_stats(store, staged)
     rows = _annotated_postings(
-        spark, store, plan, boosts, allowed,
-        facet_cols=sorted(count_spec) + geo_join_cols,
+        spark, store, plan, boosts, allowed, facet_cols=join_cols,
         staged=staged, avgdl=avgdl,
     )
-    kernel = _make_kernel(
-        plan, 0, False, avgdl, count_only=True,
-        block_size=int(store.meta.get('block_size', ROARING_BLOCK_SIZE)),
-        deletes=_load_delete_set(spark, store),
-        count_facets=count_spec,
-        count_geo=kernel_geo or None,
-        facet_sizes=fsizes,
-    )
     agg = (
-        rows.sortWithinPartitions(
-            F.col("block_bound").desc(), "block_id", "term", "field"
+        _run_kernel(
+            spark, store, rows, None, [(0, plan)], 0, False, avgdl, boosts,
+            count_only=True, count_facets_by_q={0: count_spec},
         )
-        .mapInPandas(kernel, schema=FACET_COUNT_SCHEMA)
         .groupBy("facet", "code")
         .agg(F.sum("matches").cast("long").alias("n"))
     )
@@ -2994,11 +3022,7 @@ def _facet_count_run(
         )
         return decoded.select("facet", "value", "n")
     bounds_arr = None
-    decode_bounds = {
-        fc: bounds for fc, (_k, bounds) in count_spec.items()
-    }
-    decode_bounds.update(geo_out_bounds)
-    for fc, bounds in decode_bounds.items():
+    for fc, bounds in out_bounds.items():
         arr = double_array(bounds)
         expr = F.element_at(arr, F.col("code").cast("int") + 1)
         bounds_arr = (
@@ -3197,18 +3221,10 @@ def match_docids(
     rows = _annotated_postings(
         spark, store, plan, boosts, allowed, staged=staged, avgdl=avgdl
     )
-    kernel = _make_kernel(
-        plan, 0, False, avgdl, emit_all=True,
-        block_size=int(store.meta.get("block_size", ROARING_BLOCK_SIZE)),
-        deletes=_load_delete_set(spark, store),
-    )
-    return (
-        rows.sortWithinPartitions(
-            F.col("block_bound").desc(), "block_id", "term", "field"
-        )
-        .mapInPandas(kernel, schema=RESULT_SCHEMA)
-        .select("docid")
-    )
+    return _run_kernel(
+        spark, store, rows, None, [(0, plan)], 0, False, avgdl, boosts,
+        emit_all=True,
+    ).select("docid")
 
 
 def delete_by_query(
@@ -3359,13 +3375,16 @@ def _annotated_postings(
     block_bounds: dict[str, list[tuple[float, float]]] | None = None,
     keep_bounds: list[str] | None = None,
 ) -> DataFrame:
+    """The single-query plan for :func:`_make_kernel`: the query's
+    posting rows (plus any ``staged`` batches' rows for the same
+    buckets), hash-partitioned by block_id, with the block-max columns
+    the kernel bounds blocks from, ``shard`` = 0, the optional facet
+    arrays (``_join_facet_blocks``) and ``block_bound`` — the block's
+    score bound, used to drop intersection blocks missing a required
+    term and as the best-first block schedule."""
     if avgdl is None:
         avgdl = store.avgdl
-    terms = sorted(
-        set(plan.required_posting_terms())
-        | (set() if plan.units is not None else set(plan.pos_terms))
-        | set(plan.not_terms)
-    )
+    terms = sorted(_scan_terms(plan))
     has_gram = any(NGRAM_SEP in t for t in terms)
     n_buckets = store.n_buckets
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
@@ -3447,6 +3466,7 @@ def _annotated_postings(
             else F.lit(False)
         ).alias("is_not"),
         F.element_at(boost_arr, F.col("field") + 1).alias("boost"),
+        F.lit(0).alias("shard"),
     )
     # format v3+: the block-max bound is computed HERE, at query time,
     # from the current avgdl — comp(max_tf, min_dl) bounds every doc in
@@ -3490,11 +3510,13 @@ def _annotated_postings(
         len(allowed_fields) if allowed_fields is not None else n_index_fields
     )
     base_cols = [
-        "term", "field", "boost", "block_id", "idf", "is_not",
+        "shard", "term", "field", "block_id", "max_tf", "min_dl_byte",
         "docids_vb", "tfs_vb", "dls", "pos_vb", "block_bound",
     ]
     if has_gram:
-        base_cols += ["tfs1_vb", "tfs2_vb", "tfs3_vb"]
+        base_cols += [
+            "tfs1_vb", "tfs2_vb", "tfs3_vb", "max_tf1", "max_tf2", "max_tf3",
+        ]
     if len(terms) == 1 and eff_fields == 1 and not staged:
         # single posting row per block: its contribution IS the block
         # bound — skip the per-block window (one whole exchange).
@@ -3531,570 +3553,6 @@ def _annotated_postings(
         )
         return rows.select(*base_cols, *extra)
     return rows.select(*base_cols)
-
-
-def _make_kernel(
-    plan: QueryPlan,
-    top_k: int,
-    prune: bool,
-    avgdl: float,
-    count_only: bool = False,
-    block_size: int = ROARING_BLOCK_SIZE,
-    deletes: np.ndarray | None = None,
-    facet_filters_k: dict | None = None,
-    emit_facets: list[str] | None = None,
-    facet_kinds: dict[str, str] | None = None,
-    facet_sizes: dict[str, int] | None = None,
-    emit_all: bool = False,
-    count_facets: dict | None = None,
-    count_geo: dict | None = None,
-    geo: dict | None = None,
-    emit_dist: bool = False,
-    sort_prune: tuple[str, str, int] | None = None,
-):
-    qtype = plan.qtype
-    pos_terms = dict(plan.pos_terms)
-    not_set = set(plan.not_terms)
-    units = list(plan.units) if plan.units is not None else None
-    unit_parts = dict(plan.unit_parts or {})
-    # positional alignment runs over UNITS when the phrase was gram-
-    # rewritten (gram postings carry the gram-start positions), else
-    # over the raw phrase terms; a single covering unit ("ngram")
-    # needs no alignment at all — adjacency is the gram's definition
-    if qtype == "phrase" and units is not None:
-        align = units
-    elif qtype == "phrase":
-        align = list(plan.phrase)
-    else:
-        align = []
-    # scoring sources: each ORIGINAL positive term is scored from
-    # exactly one posting term — its own posting, or one gram's
-    # partial-tf column (full per-doc tf rides the gram posting, so
-    # scores are bit-identical to the single-term path)
-    source_map: dict[str, tuple[str, int | None]] = {}
-    if units is not None:
-        for u, _off in units:
-            parts = unit_parts.get(u)
-            if parts is None:
-                source_map.setdefault(u, (u, None))
-            else:
-                for k, part in enumerate(parts):
-                    source_map.setdefault(part, (u, k))
-        for t in pos_terms:
-            source_map.setdefault(t, (t, None))
-    else:
-        source_map = {t: (t, None) for t in pos_terms}
-    required_terms = plan.required_posting_terms()
-    delete_set = deletes if deletes is not None else np.empty(0, dtype=np.int64)
-    facet_filters = list((facet_filters_k or {}).items())
-    kinds = facet_kinds or {}
-    emit_cols = [(f"fb_{name}", kinds.get(name, "string")) for name in (emit_facets or [])]
-    cfacets = dict(count_facets or {})
-    # geo distance-bucket counting (reference QueryFacet::Point /
-    # Ranges::Point): label -> (bounds_km, mode, col1, col2, lat0,
-    # lon0); tallied like a numeric range facet over the haversine
-    # distance
-    cgeo = dict(count_geo or {})
-    geo_cfg = None
-    if geo:
-        # three storage modes: separate lat/lon f64 facets ("pair"),
-        # ONE interleaved [lat, lon] f64 buffer ("point"), or ONE
-        # packed u64 Morton code per doc ("morton" — half the bytes)
-        if "point" in geo:
-            mode = (facet_kinds or {}).get(geo["point"], "point")
-            cols = (f"fb_{geo['point']}", None)
-        else:
-            mode = "pair"
-            cols = (f"fb_{geo['lat']}", f"fb_{geo['lon']}")
-        geo_cfg = (
-            mode,
-            cols[0],
-            cols[1],
-            float(geo["at"][0]),
-            float(geo["at"][1]),
-            float(geo["radius_km"]),
-        )
-    sizes = facet_sizes or {}
-    # every facet buffer the kernel touches: col → (kind, n_values)
-    facet_buf_kinds: dict[str, tuple[str, int]] = {}
-    for name, spec in (facet_filters_k or {}).items():
-        facet_buf_kinds[f"fb_{name}"] = (spec[0], sizes.get(name, 0))
-    for name in emit_facets or []:
-        facet_buf_kinds[f"fb_{name}"] = (
-            kinds.get(name, "string"),
-            sizes.get(name, 0),
-        )
-    for name, (kind, _b) in cfacets.items():
-        facet_buf_kinds[f"fb_{name}"] = (kind, sizes.get(name, 0))
-    for _label, (_b, gmode, c1, c2, _la, _lo) in cgeo.items():
-        facet_buf_kinds[c1] = (
-            "numeric" if gmode == "pair" else gmode, 0
-        )
-        if c2 is not None:
-            facet_buf_kinds[c2] = ("numeric", 0)
-    if geo_cfg is not None:
-        facet_buf_kinds[geo_cfg[1]] = (
-            "numeric" if geo_cfg[0] == "pair" else geo_cfg[0], 0
-        )
-        if geo_cfg[2] is not None:
-            facet_buf_kinds[geo_cfg[2]] = ("numeric", 0)
-
-    overlay_bufs = _overlay_bufs
-    sset_gather = _sset_gather
-
-    decode_tab = _DECODE_NP.astype(np.float32)
-    avgdl32 = np.float32(avgdl)
-
-    def term_scores(idf: float, tfs: np.ndarray, dl_bytes: np.ndarray) -> np.ndarray:
-        tf32 = tfs.astype(np.float32)
-        dlq = decode_tab[dl_bytes.astype(np.int64)]
-        comp = tf32 * np.float32(K + 1.0) / (
-            tf32
-            + np.float32(K)
-            * (np.float32(1.0) - np.float32(B) + np.float32(B) * dlq / avgdl32)
-        )
-        return np.float32(idf) * comp
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-partition state
-        best_docids = np.empty(0, dtype=np.int64)
-        best_scores = np.empty(0, dtype=np.float32)
-        best_dists: np.ndarray = np.empty(0, dtype=np.float64)
-        all_docids: list[np.ndarray] = []
-        all_scores: list[np.ndarray] = []
-        all_dists: list[np.ndarray] = []
-        all_facets: dict[str, list[np.ndarray]] = {c: [] for c, _k in emit_cols}
-        # numeric sort-key block skip (v5 zone bounds): top-k by a
-        # numeric facet keeps the best need_k KEY values seen in this
-        # partition; a block whose zone min (asc) / max (desc) cannot
-        # beat the worst kept key is skipped before any decode. Only
-        # admissible with nulls-last key ordering (docs with a missing
-        # key never outrank need_k docs with keys).
-        key_heap = np.empty(0, dtype=np.float64)
-        total_matches = 0
-        facet_tallies: dict[str, np.ndarray] = {
-            fc: np.zeros(
-                sizes.get(fc, 0)
-                if kind in ("string", "string_set")
-                else len(bounds) + 1,
-                dtype=np.int64,
-            )
-            for fc, (kind, bounds) in cfacets.items()
-        }
-        facet_tallies.update(
-            {
-                label: np.zeros(len(spec[0]) + 1, dtype=np.int64)
-                for label, spec in cgeo.items()
-            }
-        )
-        pending: list[pd.DataFrame] = []
-        pending_block = None
-
-        def threshold() -> float:
-            if not prune or len(best_scores) < top_k:
-                return -np.inf
-            return float(best_scores.min())
-
-        def merge_topk(docids: np.ndarray, scores: np.ndarray) -> None:
-            nonlocal best_docids, best_scores
-            d = np.concatenate([best_docids, docids])
-            s = np.concatenate([best_scores, scores])
-            order = np.lexsort((d, -s.astype(np.float64)))[:top_k]
-            best_docids, best_scores = d[order], s[order]
-
-        def process_block(rows: pd.DataFrame) -> None:
-            nonlocal total_matches, key_heap
-            block_id = int(rows["block_id"].iloc[0])
-            if sort_prune is not None and key_heap.size >= sort_prune[2]:
-                sk, sdir, _need = sort_prune
-                zb_col = f"zb_{'min' if sdir == 'asc' else 'max'}_{sk}"
-                zb = (
-                    rows[zb_col].iloc[0] if zb_col in rows.columns else None
-                )
-                if zb is not None and not np.isnan(zb):
-                    worst = float(key_heap[-1])
-                    if (sdir == "asc" and float(zb) > worst) or (
-                        sdir == "desc" and float(zb) < worst
-                    ):
-                        return
-            if not count_only and prune:
-                # skip only on STRICT bound < threshold, with a small
-                # relative margin: the bound is computed in float64 while
-                # scores accumulate in f32, which can round up past the
-                # bound by a few ulps; equal-bound blocks must be
-                # processed so the docid-asc tiebreak on exact-tie scores
-                # matches the unpruned path.
-                thr = threshold()
-                eps = 1e-6 + 1e-5 * abs(thr) if np.isfinite(thr) else 0.0
-                if float(rows["block_bound"].iloc[0]) < thr - eps:
-                    return
-            base = block_id * block_size
-            fbufs = {
-                col: overlay_bufs(rows[col].iloc[0], kind, nv)
-                for col, (kind, nv) in facet_buf_kinds.items()
-            }
-
-            def fbuf_at(col: str, idx: np.ndarray):
-                """Facet values at local docids, padded with missing
-                when a buffer is shorter than the block's docid range."""
-                fv = fbufs[col]
-                if fv is None:
-                    return None
-                kind, nv = facet_buf_kinds[col]
-                if idx.size and int(idx.max()) >= len(fv):
-                    if kind == "string":
-                        pad = np.full(
-                            int(idx.max()) + 1,
-                            facet_missing_code(nv),
-                            dtype=facet_code_dtype(nv),
-                        )
-                    else:
-                        pad = np.full(int(idx.max()) + 1, np.nan)
-                    pad[: len(fv)] = fv
-                    fv = pad
-                return fv[idx]
-
-            # rows grouped by posting term: realtime staged batches can
-            # add a second row per (term, field, block) covering a
-            # disjoint docid slice — every structure below handles
-            # multiple rows per key
-            recs: dict[str, list[dict]] = {}
-            has_gram_rows = bool(unit_parts)
-            for _, r in rows.iterrows():
-                rec = {
-                    "field": int(r["field"]),
-                    "boost": float(r["boost"]),
-                    "d": decode_docids(r["docids_vb"]),
-                    "tf": decode_tfs(r["tfs_vb"]),
-                    "dl": np.frombuffer(r["dls"], dtype=np.uint8),
-                    "pos_vb": r["pos_vb"],
-                }
-                if has_gram_rows and NGRAM_SEP in r["term"]:
-                    parts_n = r["term"].count(NGRAM_SEP) + 1
-                    rec["partials"] = [
-                        decode_tfs(r[f"tfs{k + 1}_vb"]) for k in range(parts_n)
-                    ]
-                recs.setdefault(r["term"], []).append(rec)
-
-            def union_docs(term: str) -> np.ndarray:
-                ds = [rec["d"] for rec in recs[term]]
-                if len(ds) == 1:
-                    return ds[0]
-                return np.unique(np.concatenate(ds))
-
-            if qtype in ("intersection", "phrase", "ngram"):
-                if any(t not in recs for t in required_terms):
-                    return
-                common = union_docs(required_terms[0])
-                for t in required_terms[1:]:
-                    common = np.intersect1d(
-                        common, union_docs(t), assume_unique=True
-                    )
-                    if common.size == 0:
-                        return
-                cand = common
-            else:
-                present = [t for t in required_terms if t in recs]
-                if not present:
-                    return
-                cand = np.unique(
-                    np.concatenate([union_docs(t) for t in present])
-                )
-
-            # NOT anti-probe (match in ANY field excludes)
-            for t in not_set:
-                if t in recs:
-                    cand = cand[
-                        ~np.isin(cand, union_docs(t), assume_unique=True)
-                    ]
-            if cand.size == 0:
-                return
-
-            # deleted-doc filter (reference add_result.rs:3000-3002)
-            if delete_set.size:
-                cand = cand[~np.isin(base + cand, delete_set, assume_unique=True)]
-                if cand.size == 0:
-                    return
-
-            # facet filters via the block's facet arrays (reference
-            # pushes facet predicates into the pruned scan the same
-            # way, search.rs:2543-2726); filtering candidates keeps the
-            # block bound admissible (bound ≥ any subset's max score)
-            for colname, spec in facet_filters:
-                if spec[0] == "string_set":
-                    buf = fbufs[f"fb_{colname}"]
-                    if buf is None:
-                        return
-                    owner, codes = sset_gather(buf, cand)
-                    hit = np.isin(codes, spec[1])
-                    keep = np.zeros(cand.size, dtype=bool)
-                    keep[owner[hit]] = True
-                    cand = cand[keep]
-                else:
-                    vals = fbuf_at(f"fb_{colname}", cand)
-                    if vals is None:
-                        return
-                    if spec[0] == "numeric":
-                        cand = cand[(vals >= spec[1]) & (vals <= spec[2])]
-                    else:
-                        cand = cand[np.isin(vals, spec[1])]
-                if cand.size == 0:
-                    return
-
-            def latlon_of(mode, c1, c2, c):
-                """(lat, lon) arrays at local docids ``c`` from one of
-                the three geo storage modes; (None, None) when the
-                block carries no buffer."""
-                if mode == "point":
-                    # Point facet: interleaved pair gather
-                    buf = fbufs[c1]
-                    if buf is None:
-                        return None, None
-                    n_pts = len(buf) // 2
-                    la = np.full(c.size, np.nan)
-                    lo = np.full(c.size, np.nan)
-                    ok = c < n_pts
-                    la[ok] = buf[2 * c[ok]]
-                    lo[ok] = buf[2 * c[ok] + 1]
-                    return la, lo
-                if mode == "morton":
-                    # packed u64 gather (one 8-byte read per doc),
-                    # code 0 = missing; distances run on the DECODED
-                    # (i32×10^7-quantized) coordinates
-                    from seekstorm_spark.functions.geo import (
-                        morton_decode,
-                    )
-
-                    buf = fbufs[c1]
-                    if buf is None:
-                        return None, None
-                    codes = np.zeros(c.size, dtype=np.uint64)
-                    ok = c < len(buf)
-                    codes[ok] = buf[c[ok]]
-                    la = np.full(c.size, np.nan)
-                    lo = np.full(c.size, np.nan)
-                    has = codes != 0
-                    if has.any():
-                        la[has], lo[has] = morton_decode(codes[has])
-                    return la, lo
-                return fbuf_at(c1, c), fbuf_at(c2, c)
-
-            def hav_km(la, lo, lat0, lon0):
-                a = (
-                    np.sin(np.radians(lat0 - la) / 2.0) ** 2
-                    + np.cos(np.radians(la))
-                    * math.cos(math.radians(lat0))
-                    * np.sin(np.radians(lon0 - lo) / 2.0) ** 2
-                )
-                return 2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
-
-            # geo radius filter over numeric lat/lon facet arrays
-            # (reference stores Point facets and filters/sorts by
-            # haversine distance, search.rs:2712-2724)
-            dists = None
-            if geo_cfg is not None:
-                lat, lon = latlon_of(
-                    geo_cfg[0], geo_cfg[1], geo_cfg[2], cand
-                )
-                if lat is None or lon is None:
-                    return
-                lat0, lon0, radius = geo_cfg[3], geo_cfg[4], geo_cfg[5]
-                d_km = hav_km(lat, lon, lat0, lon0)
-                keep = ~np.isnan(d_km) & (d_km <= radius)
-                cand = cand[keep]
-                dists = d_km[keep]
-                if cand.size == 0:
-                    return
-
-            # phrase position alignment (within a single field): units
-            # align on gram-start positions, raw phrases on every term
-            if align and len(align) > 1:
-                keep = _phrase_filter(recs, cand, align)
-                cand = cand[keep]
-                if dists is not None:
-                    dists = dists[keep]
-                if cand.size == 0:
-                    return
-
-            total_matches += int(cand.size)
-            for fc, (kind, bounds) in cfacets.items():
-                nv = sizes.get(fc, 0)
-                if kind == "string_set":
-                    buf = fbufs[f"fb_{fc}"]
-                    if buf is None:
-                        continue
-                    # codes are per-doc DEDUPED at encode, so this is
-                    # one count per (doc, distinct value)
-                    _owner, codes = sset_gather(buf, cand)
-                    facet_tallies[fc] += np.bincount(
-                        codes.astype(np.int64), minlength=nv
-                    )[:nv]
-                    continue
-                fv = fbuf_at(f"fb_{fc}", cand)
-                if fv is None:
-                    continue
-                if kind == "string":
-                    valid = fv < nv  # missing sentinel excluded
-                    facet_tallies[fc] += np.bincount(
-                        fv[valid].astype(np.int64), minlength=nv
-                    )[:nv]
-                else:
-                    ok = ~np.isnan(fv) & (fv >= bounds[0])
-                    bins = np.searchsorted(bounds, fv[ok], side="right") - 1
-                    facet_tallies[fc] += np.bincount(
-                        bins, minlength=len(bounds) + 1
-                    )
-            for label, (gb, gmode, c1, c2, glat, glon) in cgeo.items():
-                la, lo = latlon_of(gmode, c1, c2, cand)
-                if la is None or lo is None:
-                    continue
-                gd = hav_km(la, lo, glat, glon)
-                ok = ~np.isnan(gd) & (gd >= gb[0])
-                bins = np.searchsorted(gb, gd[ok], side="right") - 1
-                facet_tallies[label] += np.bincount(
-                    bins, minlength=len(gb) + 1
-                )
-            if count_only:
-                return
-
-            # score in (term asc, field asc) order — the f32
-            # accumulation order of the oracle SQL
-            entries: list[tuple] = []
-            for orig in pos_terms:
-                pterm, pidx = source_map.get(orig, (orig, None))
-                for rec in recs.get(pterm, []):
-                    tfs = rec["tf"] if pidx is None else rec["partials"][pidx]
-                    entries.append(
-                        (orig, rec["field"], rec["boost"], rec["d"], tfs, rec["dl"])
-                    )
-            entries.sort(key=lambda e: (e[0], e[1]))
-            scores = np.zeros(cand.size, dtype=np.float32)
-            for term, _field, boost, d, tf, dl in entries:
-                idx = np.searchsorted(d, cand)
-                valid = (idx < d.size) & (d[np.minimum(idx, d.size - 1)] == cand)
-                ii = idx[valid]
-                contrib = np.float32(boost) * term_scores(
-                    pos_terms[term], tf[ii], dl[ii]
-                )
-                scores[valid] += contrib
-            if sort_prune is not None:
-                kv = fbuf_at(f"fb_{sort_prune[0]}", cand)
-                if kv is not None:
-                    if kv.dtype.kind in "ui":
-                        # string dictionary codes: drop the missing
-                        # sentinel (dtype max) — nulls-last semantics
-                        skind, snv = facet_buf_kinds[f"fb_{sort_prune[0]}"]
-                        vals = kv[
-                            kv != facet_missing_code(snv)
-                        ].astype(np.float64)
-                    else:
-                        vals = kv[~np.isnan(kv)].astype(np.float64)
-                    if vals.size:
-                        merged = np.concatenate([key_heap, vals])
-                        merged.sort()
-                        if sort_prune[1] == "desc":
-                            merged = merged[::-1]
-                        key_heap = merged[: sort_prune[2]]
-            if emit_all:
-                all_docids.append(base + cand)
-                all_scores.append(scores)
-                if emit_dist:
-                    all_dists.append(
-                        dists
-                        if dists is not None
-                        else np.full(cand.size, np.nan)
-                    )
-                for colname, kind in emit_cols:
-                    vals = fbuf_at(colname, cand)
-                    if kind == "numeric":
-                        if vals is None:
-                            vals = np.full(cand.size, np.nan)
-                        all_facets[colname].append(vals.astype(np.float64))
-                    else:
-                        if vals is None:
-                            nv = facet_buf_kinds[colname][1]
-                            vals = np.full(
-                                cand.size, facet_missing_code(nv)
-                            )
-                        all_facets[colname].append(vals.astype(np.int64))
-            else:
-                merge_topk(base + cand, scores)
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for block_id, grp in pdf.groupby("block_id", sort=False):
-                if pending_block is not None and block_id != pending_block:
-                    process_block(pd.concat(pending))
-                    pending = []
-                pending_block = block_id
-                pending.append(grp)
-        if pending:
-            process_block(pd.concat(pending))
-
-        if cfacets or cgeo:
-            out_f, out_c, out_n = [], [], []
-            for fc, tally in facet_tallies.items():
-                for code in np.flatnonzero(tally):
-                    out_f.append(fc)
-                    out_c.append(int(code))
-                    out_n.append(int(tally[code]))
-            yield pd.DataFrame(
-                {
-                    "facet": out_f,
-                    "code": pd.Series(out_c, dtype="int64"),
-                    "matches": pd.Series(out_n, dtype="int64"),
-                }
-            )
-        elif count_only:
-            yield pd.DataFrame({"matches": pd.Series([total_matches], dtype="int64")})
-        elif emit_all:
-            out = {
-                "docid": pd.Series(
-                    np.concatenate(all_docids)
-                    if all_docids
-                    else np.empty(0, np.int64),
-                    dtype="int64",
-                ),
-                "score": pd.Series(
-                    np.concatenate(all_scores)
-                    if all_scores
-                    else np.empty(0, np.float32),
-                    dtype="float32",
-                ),
-            }
-            for colname, kind in emit_cols:
-                if kind == "numeric":
-                    out[colname] = pd.Series(
-                        np.concatenate(all_facets[colname])
-                        if all_facets[colname]
-                        else np.empty(0, np.float64),
-                        dtype="float64",
-                    )
-                else:
-                    out[colname] = pd.Series(
-                        np.concatenate(all_facets[colname])
-                        if all_facets[colname]
-                        else np.empty(0, np.int64),
-                        dtype="int64",
-                    )
-            if emit_dist:
-                out["geo_dist"] = pd.Series(
-                    np.concatenate(all_dists)
-                    if all_dists
-                    else np.empty(0, np.float64),
-                    dtype="float64",
-                )
-            yield pd.DataFrame(out)
-        else:
-            yield pd.DataFrame(
-                {
-                    "docid": pd.Series(best_docids, dtype="int64"),
-                    "score": pd.Series(best_scores, dtype="float32"),
-                }
-            )
-
-    return kernel
 
 
 def _phrase_filter(

@@ -285,3 +285,87 @@ def test_update_documents_and_delete_by_query(spark, tmp_path):
     delete_by_query(spark, store, "alpha")
     assert search(spark, store, "alpha").count() == 0
     assert {r["docid"] for r in search(spark, store, "zeta").collect()} == {2}
+
+
+def test_staged_counts_facets_and_sorts_match_committed(spark, tmp_path):
+    """Every single-query caller of the scoring kernel returns over a
+    staged batch exactly what it returns once the batch is committed:
+    filtered counts, string / numeric-range / geo-distance facet
+    counts, all matching docids, and a string-facet result sort. The
+    staged ids interleave with the committed ones, so every block
+    carries a committed and a staged row per (term, field)."""
+    from seekstorm_spark.index.builder import assign_docids
+    from seekstorm_spark.query.engine import (
+        facet_counts,
+        facet_range_counts,
+        geo_range_counts,
+        match_docids,
+    )
+
+    docs = assign_docids(
+        synth_webtext(spark, 400, seed=19), order_col="url"
+    ).select(
+        "docid",
+        "text",
+        F.element_at(
+            F.array(F.lit("de"), F.lit("en"), F.lit("fr")),
+            (F.col("docid") % 3 + 1).cast("int"),
+        ).alias("lang"),
+        F.length("text").cast("double").alias("nlen"),
+        (F.lit(48.0) + (F.col("docid") % 50) / 10.0).alias("lat"),
+        (F.lit(2.0) + (F.col("docid") % 40) / 10.0).alias("lon"),
+    ).cache()
+    store = IndexBuilder(
+        spark, str(tmp_path / "idx"), n_buckets=4, block_size=64,
+        facet_cols=["lang", "nlen", "lat", "lon"],
+    ).build(
+        docs.filter(F.col("docid") % 4 != 3), text_col="text", id_col="docid"
+    )
+    staged = stage_batch(
+        spark, store, docs.filter(F.col("docid") % 4 == 3),
+        text_col="text", batch_id=1, id_col="docid",
+    )
+    assert staged is not None
+
+    q = "term00000 term00001"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def run(st, batches):
+        return {
+            "count": count_matches(
+                spark, st, q, facet_filters={"lang": ["en", "fr"]},
+                staged=batches,
+            ),
+            "facets": rows(facet_counts(spark, st, q, ["lang"], staged=batches)),
+            "ranges": rows(
+                facet_range_counts(
+                    spark, st, q, {"nlen": [0.0, 400.0, 800.0]},
+                    staged=batches,
+                )
+            ),
+            "geo": rows(
+                geo_range_counts(
+                    spark, st, q, (48.5, 2.5), [0.0, 50.0, 200.0],
+                    lat="lat", lon="lon", staged=batches,
+                )
+            ),
+            "match": rows(match_docids(spark, st, q, staged=batches)),
+            "sorted": [
+                tuple(r)
+                for r in search(
+                    spark, st, q, top_k=40, result_sort=[("lang", "asc")],
+                    staged=batches,
+                ).collect()
+            ],
+        }
+
+    before = run(store, [staged])
+    after = run(commit_batch(spark, store, staged), None)
+    assert before == after
+    assert any(d % 4 == 3 for (d,) in before["match"])
+    assert before["count"] > 0 and before["facets"] and before["geo"]
+    assert len(before["sorted"]) == 40
+    assert any(r[0] % 4 == 3 for r in before["sorted"])
+    docs.unpersist()

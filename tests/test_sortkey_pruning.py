@@ -44,7 +44,7 @@ def _kernel_rows(spark, store, query="term00000"):
         avgdl=avgdl, keep_bounds=["price"],
     ).toPandas()
     assert {"zb_min_price", "zb_max_price"} <= set(rows.columns)
-    return plan, avgdl, rows
+    return plan, avgdl, boosts, rows
 
 
 def test_kernel_skips_blocks_past_key_threshold(spark, priced_store):
@@ -53,7 +53,7 @@ def test_kernel_skips_blocks_past_key_threshold(spark, priced_store):
     their docids absent from the emitted candidates; without
     sort_prune every match is emitted."""
     store = priced_store
-    plan, avgdl, rows = _kernel_rows(spark, store)
+    plan, avgdl, boosts, rows = _kernel_rows(spark, store)
     rows = rows.sort_values(["zb_min_price", "block_id"]).reset_index(
         drop=True
     )
@@ -62,9 +62,10 @@ def test_kernel_skips_blocks_past_key_threshold(spark, priced_store):
 
     def run(sort_prune, block_rows=None):
         kernel = _make_kernel(
-            plan, 5, False, avgdl, block_size=64, emit_all=True,
-            emit_facets=["price"], facet_kinds={"price": "numeric"},
-            facet_sizes={}, sort_prune=sort_prune,
+            [(0, plan)], 5, False, avgdl, boosts, block_size=64,
+            emit_all=True, emit_facets=["price"],
+            facet_kinds={"price": "numeric"}, facet_sizes={},
+            sort_prune=sort_prune,
         )
         feed = rows if block_rows is None else block_rows
         return pd.concat(list(kernel(iter([feed]))))
@@ -182,8 +183,9 @@ def test_string_kernel_skips_blocks(spark, labeled_store):
 
     def run(sort_prune):
         kernel = _make_kernel(
-            plan, 5, False, avgdl, block_size=64, emit_all=True,
-            emit_facets=["category"], facet_kinds={"category": "string"},
+            [(0, plan)], 5, False, avgdl, boosts, block_size=64,
+            emit_all=True, emit_facets=["category"],
+            facet_kinds={"category": "string"},
             facet_sizes={"category": n_values}, sort_prune=sort_prune,
         )
         return pd.concat(list(kernel(iter([rows]))))
