@@ -26,7 +26,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
@@ -94,8 +94,10 @@ def jaccard_pairs(
     over the sorted posting list (JVM higher-order functions) instead
     of the former self-join on shingle: the same pairs, minus two
     exchanges and a duplicate pass over the shingle table (guide
-    §2.4). Per-row pair memory is bounded by the skew guard
-    (``max_docs_per_shingle``² structs worst case)."""
+    §2.4). The skew guard filters shingles on a window count before
+    any doc list is collected, so per-row memory is bounded by
+    ``max_docs_per_shingle`` docids (``max_docs_per_shingle``² pair
+    structs worst case)."""
     sh = shingles(df, id_col, text_col, n).cache()
     sizes = sh.groupBy("docid").agg(F.count("*").alias("n_sh"))
     ds = F.col("ds")
@@ -113,16 +115,17 @@ def jaccard_pairs(
         )
     )
     inter = (
-        sh.groupBy("shingle")
-        .agg(
-            F.sort_array(F.collect_list("docid")).alias("ds"),
-            F.count("*").alias("df"),
-        )
-        # drop shingles too frequent to be discriminative (skew
-        # guard); singleton shingles contribute no pairs
+        sh.withColumn("df", F.count("*").over(Window.partitionBy("shingle")))
+        # drop shingles too frequent to be discriminative (skew guard)
+        # BEFORE collecting their doc lists, so a boilerplate shingle
+        # never builds an unbounded array; singleton shingles
+        # contribute no pairs. The window's exchange on shingle also
+        # serves the groupBy below — still one exchange.
         .filter(
             (F.col("df") <= max_docs_per_shingle) & (F.col("df") >= 2)
         )
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_list("docid")).alias("ds"))
         .select(F.explode(pair_structs).alias("p"))
         .select("p.docid_a", "p.docid_b")
         .groupBy("docid_a", "docid_b")

@@ -18,7 +18,7 @@ is exactly ONE Spark job:
   SearchRewrite / SearchSuggest, `search.rs:1200-1411`);
 * partition-pruned postings scan — only the query terms' ``tbucket``
   parquet partitions are read, with pushed-down term (and field)
-  filters; term idf/flags are literal expressions, not a join;
+  filters; term idfs ride the kernel closure, not a join;
   ``staged=[StagedBatch…]`` unions an uncommitted micro-batch's
   postings/stats into the same scan — the reference's realtime
   level-0 (`realtime_search.rs:921-2095`): a doc is searchable the
@@ -27,10 +27,10 @@ is exactly ONE Spark job:
   score bounds computed at query time from (max_tf, min_dl) and the
   live avgdl (block-max WAND, reference `intersection.rs:2224-2233`,
   `single.rs:372-386`, metadata `compress_postinglist.rs:530-676`) —
-  a ``mapInPandas`` kernel with a per-partition threshold heap, blocks
-  visited in bound-descending order; facet filters (string-dictionary
-  bytes AND numeric-range float64 arrays) and geo radius filters apply
-  inside the kernel from per-block facet arrays (`search.rs:2543-2726`,
+  a ``mapInPandas`` kernel with a per-partition threshold heap; facet
+  filters (string-dictionary bytes AND numeric-range float64 arrays)
+  and geo radius filters apply inside the kernel from per-block facet
+  arrays (`search.rs:2543-2726`,
   geo `min_heap.rs` Point comparator); facet COUNTING over all matches
   also runs inside the scan (`add_result.rs:487-646`,
   `search.rs:3598-3764`);
@@ -76,12 +76,8 @@ from seekstorm_spark.index.builder import (
 from seekstorm_spark.index.store import POSTINGS_DDL, IndexStore
 from seekstorm_spark.quantization import _DECODE_NP
 from seekstorm_spark.scoring import B, K, idf_f32
-from seekstorm_spark.sqlexpr import double_array, double_array_sql
+from seekstorm_spark.sqlexpr import double_array
 from seekstorm_spark.tokenizer import ParsedQuery, parse_query
-
-# static 256-entry SmallFloat decode table as a literal-array SQL
-# string, built once at import (see _annotated_postings)
-_DLQ_ARRAY_SQL = double_array_sql(_DECODE_NP.tolist())
 
 RESULT_SCHEMA = "docid long, score float"
 COUNT_SCHEMA = "matches long"
@@ -827,10 +823,6 @@ def search(
             )
 
     boosts, allowed = _resolve_fields(store, fields, field_filter)
-    need_facets = sorted(
-        set(filters_k) | set(emit_facets)
-        | (_geo_cols(geo_filter) if geo_filter else set())
-    )
     n_docs, avgdl = _effective_stats(store, staged)
     need_k = top_k + offset
     emit_all = bool(result_sort)
@@ -865,37 +857,10 @@ def search(
         )
     ):
         sort_prune = (result_sort[0][0], result_sort[0][1], need_k)
-    rows = _annotated_postings(
-        spark, store, plan, boosts, allowed, facet_cols=need_facets,
-        staged=staged, avgdl=avgdl,
-        block_bounds=_block_bounds(geo_filter, filters_k),
-        keep_bounds=[sort_prune[0]] if sort_prune else None,
-    )
-    # rows are already hash-partitioned by block_id (the block-bound
-    # window's exchange) — no extra repartition needed. Key-sorted
-    # queries schedule blocks by their zone bound (best key first) so
-    # the kernel's key-threshold tightens as early as possible;
-    # unknown-bound blocks go first (they can never be skipped).
-    # Pre-v5 facet files carry no vmin/vmax, so the zb columns may be
-    # absent — fall back to the default schedule then (the kernel's
-    # skip guard already tolerates the missing columns).
-    zb_col = (
-        f"zb_{'min' if sort_prune and sort_prune[1] == 'asc' else 'max'}"
-        f"_{sort_prune[0]}"
-        if sort_prune
-        else None
-    )
-    order_cols = None  # best block bound first
-    if sort_prune is not None and zb_col in rows.columns:
-        zb = (
-            F.col(zb_col).asc_nulls_first()
-            if sort_prune[1] == "asc"
-            else F.col(zb_col).desc_nulls_first()
-        )
-        order_cols = [zb, F.col("block_id"), F.col("term"), F.col("field")]
     candidates = _run_kernel(
-        spark, store, rows, order_cols, [(0, plan)], need_k,
-        prune and not emit_all, avgdl, boosts,
+        spark, store, [(0, plan)], need_k, prune and not emit_all, avgdl,
+        boosts, allowed, staged=staged,
+        block_bounds=_block_bounds(geo_filter, filters_k),
         facet_filters_by_q={0: filters_k},
         geo_by_q={0: geo_filter} if geo_filter else None,
         dist_sort_by_q={} if want_dist else None,
@@ -1052,8 +1017,7 @@ def search_many(
     decodes each posting row once and scores every query against it
     (per-query top-k heaps + block-max thresholds, gram source maps,
     and phrase alignment, so pruning and rewrites stay per query).
-    Only staged level-0 queries fall back to their exact single-query
-    plans as extra union branches in the SAME action. Per-query
+    ``staged`` level-0 batches join the same scan. Per-query
     results are bit-identical to :func:`search` — same f32
     accumulation order, same tiebreaks. The reference serves
     concurrent queries the same way — shared index, per-query
@@ -1142,7 +1106,6 @@ def search_many(
     use_cache = not staged and fields is None and field_filter is None
     cached_by_q: dict[int, list] = {}
     fused: list[tuple[int, QueryPlan]] = []
-    fallback: list[int] = []
     for i, plan in enumerate(plans):
         if plan.missing_required or not plan.pos_terms:
             continue  # no results by construction
@@ -1162,12 +1125,7 @@ def search_many(
             if hit is not None:
                 cached_by_q[i] = hit[:top_k]
                 continue
-        if not staged:
-            fused.append((i, plan))
-        else:
-            # staged level-0 unions per-query staged readers — run the
-            # exact single-query plan as a branch in the same action
-            fallback.append(i)
+        fused.append((i, plan))
 
     with_dist = result_sorts is not None
     out_schema = "query_id int, " + RESULT_SCHEMA + (
@@ -1178,8 +1136,9 @@ def search_many(
     )
     outs: list[DataFrame] = []
     if fused:
-        partials = _search_many_fused(
-            spark, store, fused, top_k, prune, boosts, allowed, avgdl,
+        partials = _run_kernel(
+            spark, store, fused, top_k, prune, avgdl, boosts, allowed,
+            staged=staged,
             facet_filters_by_q=filters_by_q or None,
             geo_by_q=geo_by_q or None,
             dist_sort_by_q=dist_sort_by_q if with_dist else None,
@@ -1236,45 +1195,19 @@ def search_many(
                 "geo_dist", F.lit(float("nan")).cast("double")
             )
         outs.append(cdf)
-    for i in fallback:
-        rs = (
-            [("geo_dist", dist_sort_by_q[i])] if i in dist_sort_by_q else None
-        )
-        out = search(
-            spark, store, queries[i], top_k=top_k,
-            default_type=default_type, prune=prune, fields=fields,
-            field_filter=field_filter, staged=staged,
-            facet_filters=facet_filters[i] if facet_filters else None,
-            geo_filter=geo_filters[i] if geo_filters else None,
-            result_sort=rs, similarity=similarity,
-        )
-        sel = [
-            F.lit(int(i)).alias("query_id"),
-            F.col("docid"),
-            F.col("score"),
-        ]
-        if with_dist:
-            sel.append(
-                F.col("geo_dist")
-                if "geo_dist" in out.columns
-                else F.lit(float("nan")).cast("double").alias("geo_dist")
-            )
-        outs.append(out.select(*sel))
     if not outs:
         return spark.createDataFrame([], out_schema)
     result = reduce(lambda a, b: a.unionByName(b), outs)
-    # kernel distances are km; a FUSED query whose filter was given in
-    # miles gets its emitted column rescaled (order is unit-invariant,
-    # so the distance sort already happened correctly). Staged
-    # fallbacks went through search(), which rescales itself.
-    mi_rescale = sorted(set(mi_qs) - set(fallback))
-    if with_dist and mi_rescale:
+    # kernel distances are km; a query whose filter was given in miles
+    # gets its emitted column rescaled (order is unit-invariant, so the
+    # distance sort already happened correctly)
+    if with_dist and mi_qs:
         from seekstorm_spark.functions.geo import KM_PER_MILE
 
         result = result.withColumn(
             "geo_dist",
             F.when(
-                F.col("query_id").isin([int(i) for i in mi_rescale]),
+                F.col("query_id").isin([int(i) for i in mi_qs]),
                 F.col("geo_dist") / F.lit(KM_PER_MILE),
             ).otherwise(F.col("geo_dist")),
         )
@@ -1387,8 +1320,8 @@ def count_matches_many(
     Per-query df shortcuts answer driver-side (single terms and
     covering grams read their stored df from the pyarrow stat probe,
     as in :func:`count_matches`); everything else shares one fused
-    scan + kernel in count mode. ``staged`` level-0 falls back to
-    per-query :func:`count_matches` calls."""
+    scan + kernel in count mode; ``staged`` level-0 batches join both
+    (the df probe sums their partials, the scan reads their rows)."""
     staged = list(staged) if staged else None
     plans = [
         _plan(spark, store, qstr, default_type, staged) for qstr in queries
@@ -1403,12 +1336,6 @@ def count_matches_many(
     for i, plan in enumerate(plans):
         if plan.missing_required or not plan.pos_terms:
             continue
-        if staged:
-            counts[i] = count_matches(
-                spark, store, queries[i], default_type, field_filter,
-                staged,
-            )
-            continue
         if (
             len(plan.pos_terms) == 1
             and not plan.not_terms
@@ -1417,18 +1344,22 @@ def count_matches_many(
             and not has_deletes
         ):
             term = next(iter(plan.pos_terms))
-            counts[i] = int(_probe_term_stats(store, [term]).get(term, 0))
+            counts[i] = int(
+                _probe_term_stats(store, [term], staged).get(term, 0)
+            )
             continue
         if plan.qtype == "ngram" and field_filter is None and not has_deletes:
             gram = plan.units[0][0]
-            counts[i] = int(_probe_term_stats(store, [gram]).get(gram, 0))
+            counts[i] = int(
+                _probe_term_stats(store, [gram], staged).get(gram, 0)
+            )
             continue
         kernel_plans.append((i, plan))
     if kernel_plans:
         out = (
-            _search_many_fused(
-                spark, store, kernel_plans, 0, False, boosts, allowed,
-                avgdl, count_only=True,
+            _run_kernel(
+                spark, store, kernel_plans, 0, False, avgdl, boosts,
+                allowed, staged=staged, count_only=True,
             )
             .groupBy("query_id")
             .agg(F.sum("matches").alias("m"))
@@ -1458,11 +1389,9 @@ def facet_counts_many(
     results identical to :func:`facet_counts` (the reference counts
     facets during result collection, add_result.rs:487-646; its server
     amortizes concurrent queries against the same in-RAM facet columns
-    the same way). Numeric range facets stay on the single-query
-    :func:`facet_range_counts` path. ``staged`` level-0 falls back to
-    per-query :func:`facet_counts` calls unioned in one action."""
-    from functools import reduce
-
+    the same way). Numeric range facets have their own batched twin,
+    :func:`facet_range_counts_many`. ``staged`` level-0 batches join
+    the same scan."""
     staged = list(staged) if staged else None
     specs: dict = store.meta.get("facets") or {}
     empty = spark.createDataFrame(
@@ -1474,23 +1403,12 @@ def facet_counts_many(
             if fc not in specs or facet_values(specs[fc]) is None:
                 raise ValueError(f"{fc!r} is not an indexed string facet")
             all_facets.add(fc)
-    if staged:
-        outs = [
-            facet_counts(
-                spark, store, qstr, fcs, default_type, staged
-            ).select(
-                F.lit(int(i)).alias("query_id"), "facet", "value", "n"
-            )
-            for i, (qstr, fcs) in enumerate(requests)
-        ]
-        return reduce(lambda a, b: a.unionByName(b), outs) if outs else empty
-
     plans = [
-        _plan(spark, store, qstr, default_type, None)
+        _plan(spark, store, qstr, default_type, staged)
         for qstr, _fcs in requests
     ]
     boosts, allowed = _resolve_fields(store, None, None)
-    _n, avgdl = _effective_stats(store, None)
+    _n, avgdl = _effective_stats(store, staged)
     fused: list[tuple[int, QueryPlan]] = []
     count_facets_by_q: dict[int, dict] = {}
     for i, plan in enumerate(plans):
@@ -1503,8 +1421,9 @@ def facet_counts_many(
     if not fused:
         return empty
     agg = (
-        _search_many_fused(
-            spark, store, fused, 0, False, boosts, allowed, avgdl,
+        _run_kernel(
+            spark, store, fused, 0, False, avgdl, boosts, allowed,
+            staged=staged,
             count_only=True,
             count_facets_by_q=count_facets_by_q,
         )
@@ -1533,9 +1452,8 @@ def facet_range_counts_many(
     bounds}); bucket sets may differ between queries for the same
     facet. Same fused scan + shared per-block buffer decode as
     :func:`facet_counts_many`; per-query semantics identical to
-    :func:`facet_range_counts`. ``staged`` falls back per query."""
-    from functools import reduce
-
+    :func:`facet_range_counts`; ``staged`` level-0 batches join the
+    same scan."""
     staged = list(staged) if staged else None
     specs: dict = store.meta.get("facets") or {}
     base_cols = "query_id int, facet string, bucket_lo double, n long"
@@ -1549,24 +1467,12 @@ def facet_range_counts_many(
                 raise ValueError(
                     f"{fc!r} is not an indexed numeric facet"
                 )
-    if staged:
-        outs = [
-            facet_range_counts(
-                spark, store, qstr, ranges, default_type, staged,
-                cumulative=cumulative,
-            ).select(
-                F.lit(int(i)).alias("query_id"), "*"
-            )
-            for i, (qstr, ranges) in enumerate(requests)
-        ]
-        return reduce(lambda a, b: a.unionByName(b), outs) if outs else empty
-
     plans = [
-        _plan(spark, store, qstr, default_type, None)
+        _plan(spark, store, qstr, default_type, staged)
         for qstr, _r in requests
     ]
     boosts, allowed = _resolve_fields(store, None, None)
-    _n, avgdl = _effective_stats(store, None)
+    _n, avgdl = _effective_stats(store, staged)
     fused: list[tuple[int, QueryPlan]] = []
     count_facets_by_q: dict[int, dict] = {}
     bounds_by_qf: dict[tuple[int, str], list[float]] = {}
@@ -1583,8 +1489,9 @@ def facet_range_counts_many(
     if not fused:
         return empty
     agg = (
-        _search_many_fused(
-            spark, store, fused, 0, False, boosts, allowed, avgdl,
+        _run_kernel(
+            spark, store, fused, 0, False, avgdl, boosts, allowed,
+            staged=staged,
             count_only=True,
             count_facets_by_q=count_facets_by_q,
         )
@@ -1616,8 +1523,8 @@ def facet_range_counts_many(
 
 
 def _scan_terms(plan: QueryPlan) -> set[str]:
-    """Posting terms one query's evaluation touches — what both plan
-    builders scan for it."""
+    """Posting terms one query's evaluation touches — what
+    :func:`_posting_rows` scans for it."""
     return (
         set(plan.required_posting_terms())
         | (set(plan.pos_terms) if plan.units is None else set())
@@ -1625,30 +1532,29 @@ def _scan_terms(plan: QueryPlan) -> set[str]:
     )
 
 
-def _search_many_fused(
+def _posting_rows(
     spark: SparkSession,
     store: IndexStore,
     idx_plans: list[tuple[int, QueryPlan]],
-    top_k: int,
-    prune: bool,
-    boosts: dict[int, float],
     allowed: list[int] | None,
-    avgdl: float,
-    count_only: bool = False,
-    count_facets_by_q: dict[int, dict] | None = None,
-    facet_filters_by_q: dict[int, dict] | None = None,
-    geo_by_q: dict[int, dict] | None = None,
-    dist_sort_by_q: dict[int, str] | None = None,
-) -> DataFrame:
-    """One scan + one exchange + one kernel for N queries (union /
-    intersection / NOT / phrase / n-gram) → per-partition top-k
-    candidates (query_id, docid, score); the caller takes the global
-    per-query top-k. ``count_only`` emits per-partition (query_id,
-    matches) tallies instead (pruning off — counts are exact).
-    ``count_facets_by_q`` maps query_id → {facet: (kind, bounds)} and
-    switches the kernel to per-query facet tallies (query_id, facet,
-    code, matches), joining the blocks' facet arrays into the same
-    single action."""
+    facet_cols: list[str] | None = None,
+    staged: list | None = None,
+    block_bounds: dict[str, list[tuple[float, float]]] | None = None,
+    keep_bounds: list[str] | None = None,
+) -> tuple[DataFrame, int]:
+    """The posting rows every :func:`_make_kernel` run reads, for one
+    query or a batch (``idx_plans`` = [(query_id, plan)]) →
+    (rows, n_shards).
+
+    One scan over the union of the queries' (tbucket, term) postings
+    plus any ``staged`` batches' rows in the same buckets, with the
+    block-max columns the kernel bounds blocks from, a ``shard``
+    column, and the per-block facet arrays of ``facet_cols``
+    (:func:`_join_facet_blocks`, which also applies ``block_bounds``
+    and keeps ``keep_bounds``' zone bounds). Rows are hash-partitioned
+    by block_id — or by (block_id, shard) when the batch is sharded —
+    except with one scan term in one effective field and nothing
+    staged, where the scan's own partitioning serves."""
     terms = sorted({t for _i, p in idx_plans for t in _scan_terms(p)})
     has_gram = any(NGRAM_SEP in t for t in terms)
     need_pos = any(p.qtype == "phrase" for _i, p in idx_plans)
@@ -1664,7 +1570,26 @@ def _search_many_fused(
         ]
     if need_pos:
         cols.append("positions_vb")
-    postings = _cached_postings(spark, store).filter(
+    postings = _cached_postings(spark, store)
+    for sb in staged or []:
+        # only the queries' bucket dirs: listing all of a 64-bucket
+        # batch (> 32 leaf dirs) is a 64-task Spark job per query. A
+        # batch with none of them staged adds no rows; the explicit
+        # schema avoids an inference job
+        dirs = [
+            d
+            for d in (
+                os.path.join(sb.postings_path, f"tbucket={b}") for b in buckets
+            )
+            if os.path.isdir(d)
+        ]
+        if dirs:
+            postings = postings.unionByName(
+                spark.read.schema(POSTINGS_DDL)
+                .option("basePath", sb.postings_path)
+                .parquet(*dirs)
+            )
+    postings = postings.filter(
         F.col("tbucket").isin(buckets) & F.col("term").isin(terms)
     ).select(*cols)
     if need_pos:
@@ -1672,28 +1597,10 @@ def _search_many_fused(
     else:
         postings = postings.withColumn("pos_vb", F.lit(None).cast("binary"))
     if allowed is not None:
+        # field filter pushes to the scan (reference search.rs:2483-2495)
         postings = postings.filter(
             F.col("field").isin([int(i) for i in allowed])
         )
-    geo_cols = set()
-    for gf in (geo_by_q or {}).values():
-        geo_cols |= _geo_cols(gf)
-    count_cols: set[str] = set()
-    for spec in (count_facets_by_q or {}).values():
-        for fc, (kind, b) in spec.items():
-            if kind == "geo":  # label, not a column: join its cols
-                count_cols.update(c for c in b[2] if c is not None)
-            else:
-                count_cols.add(fc)
-    facet_cols = sorted(
-        count_cols
-        | {
-            fc
-            for spec in (facet_filters_by_q or {}).values()
-            for fc in spec
-        }
-        | geo_cols
-    )
     # Query sharding: the per-(block, query) kernel work is Python
     # compute, and with few blocks the partition count caps the
     # parallelism (a 4-block index uses 4 of 32 cores for a 100-query
@@ -1732,24 +1639,25 @@ def _search_many_fused(
             "block_id",
             "shard",
         )
-    else:
-        rows = postings.withColumn("shard", F.lit(0)).repartition(
-            "block_id"
-        )
-        if facet_cols:
-            rows, _extra = _join_facet_blocks(
-                spark, store, rows, facet_cols
-            )
-    return _run_kernel(
-        spark, store, rows, ["shard", "block_id", "term", "field"],
-        idx_plans, top_k, prune and not count_only, avgdl, boosts,
-        count_only=count_only,
-        count_facets_by_q=count_facets_by_q,
-        facet_filters_by_q=facet_filters_by_q,
-        geo_by_q=geo_by_q,
-        dist_sort_by_q=dist_sort_by_q,
-        n_shards=n_shards,
+        return rows, n_shards
+    rows = postings.withColumn("shard", F.lit(0))
+    n_fields = (
+        len(allowed)
+        if allowed is not None
+        else len(store.meta.get("fields") or ["text"])
     )
+    if len(terms) > 1 or n_fields > 1 or staged:
+        # a block's rows must meet in one partition. One scan term in
+        # one field with nothing staged skips the exchange: every doc's
+        # posting then sits in exactly one row, so a block may be
+        # processed in pieces
+        rows = rows.repartition("block_id")
+    if facet_cols:
+        rows = _join_facet_blocks(
+            spark, store, rows, facet_cols, staged,
+            block_bounds=block_bounds, keep_bounds=keep_bounds,
+        )
+    return rows, 1
 
 
 def _overlay_bufs(buflist, kind: str, n_values: int):
@@ -1827,20 +1735,29 @@ def _sset_gather(buf, cand: np.ndarray):
 def _run_kernel(
     spark: SparkSession,
     store: IndexStore,
-    rows: DataFrame,
-    order_cols: list | None,
     idx_plans: list[tuple[int, QueryPlan]],
     top_k: int,
     prune: bool,
     avgdl: float,
     boosts: dict[int, float],
+    allowed: list[int] | None = None,
+    staged: list | None = None,
+    block_bounds: dict[str, list[tuple[float, float]]] | None = None,
     **opts,
 ) -> DataFrame:
-    """Sort ``rows`` within their partitions (``order_cols``; default
-    best block bound first) and run one :func:`_make_kernel` over them
-    → the kernel's per-partition output, which always leads with
-    ``query_id``. ``opts`` pass through to the kernel; the index's
-    block size, delete set and facet kinds/sizes are filled in here."""
+    """Build the :func:`_posting_rows` of ``idx_plans`` (with every
+    facet column the kernel options read), sort them within their
+    partitions by (shard, block_id, term, field) and run one
+    :func:`_make_kernel` over them → the kernel's per-partition
+    output, which always leads with ``query_id``. ``opts`` pass
+    through to the kernel; the index's block size, delete set and
+    facet kinds/sizes are filled in here.
+
+    A ``sort_prune`` key keeps its zone bounds and schedules blocks
+    by them instead (best key first, unknown bounds first — those can
+    never be skipped), so the key threshold tightens as early as
+    possible. Pre-v5 facet files carry no bounds; the default order
+    applies then."""
     specs: dict = store.meta.get("facets") or {}
     kinds = {name: facet_kind(spec) for name, spec in specs.items()}
     sizes = {
@@ -1848,12 +1765,41 @@ def _run_kernel(
         for name, spec in specs.items()
         if (vals := facet_values(spec)) is not None
     }
+    facet_cols = set(opts.get("emit_facets") or ())
+    for spec in (opts.get("count_facets_by_q") or {}).values():
+        for fc, (kind, b) in spec.items():
+            if kind == "geo":  # label, not a column: join its cols
+                facet_cols.update(c for c in b[2] if c is not None)
+            else:
+                facet_cols.add(fc)
+    for spec in (opts.get("facet_filters_by_q") or {}).values():
+        facet_cols.update(spec)
+    for gf in (opts.get("geo_by_q") or {}).values():
+        facet_cols |= _geo_cols(gf)
+    sort_prune = opts.get("sort_prune")
+    rows, n_shards = _posting_rows(
+        spark, store, idx_plans, allowed, sorted(facet_cols), staged,
+        block_bounds=block_bounds,
+        keep_bounds=[sort_prune[0]] if sort_prune else None,
+    )
+    order_cols = ["shard", "block_id", "term", "field"]
+    if sort_prune is not None:
+        key, direction, _need = sort_prune
+        zb_col = f"zb_{'min' if direction == 'asc' else 'max'}_{key}"
+        if zb_col in rows.columns:
+            order_cols = [
+                F.col(zb_col).asc_nulls_first()
+                if direction == "asc"
+                else F.col(zb_col).desc_nulls_first(),
+                "block_id", "term", "field",
+            ]
     kernel = _make_kernel(
         idx_plans, top_k, prune, avgdl, boosts,
         block_size=int(store.meta.get("block_size", ROARING_BLOCK_SIZE)),
         deletes=_load_delete_set(spark, store),
         facet_kinds=kinds,
         facet_sizes=sizes,
+        n_shards=n_shards,
         **opts,
     )
     if opts.get("count_facets_by_q"):
@@ -1868,10 +1814,6 @@ def _run_kernel(
             schema += f", fb_{fc} " + (
                 "double" if kinds[fc] == "numeric" else "long"
             )
-    if order_cols is None:
-        order_cols = [
-            F.col("block_bound").desc(), "block_id", "term", "field",
-        ]
     return rows.sortWithinPartitions(*order_cols).mapInPandas(
         kernel, schema=schema
     )
@@ -1928,7 +1870,7 @@ def _make_kernel(
     filter). ``sort_prune`` = (facet, "asc"|"desc", need_k) keeps each
     query's best need_k KEY values and skips a block whose zone bound
     (``zb_min_<facet>`` asc / ``zb_max_<facet>`` desc, from
-    ``_annotated_postings(keep_bounds=…)``) cannot beat the worst kept
+    ``_posting_rows(keep_bounds=…)``) cannot beat the worst kept
     key; missing keys never enter the heap, so the skip is admissible
     only under the nulls-last order ``search`` applies."""
     delete_set = deletes if deletes is not None else np.empty(0, dtype=np.int64)
@@ -2046,16 +1988,19 @@ def _make_kernel(
         )
         for qi, p in idx_plans
     ]
-    # query → shard assignment (see _search_many_fused: each shard's
+    # query → shard assignment (see _posting_rows: each shard's
     # posting-row copies drive only that shard's queries)
     qinfo_by_shard: dict[int, list] = {s: [] for s in range(n_shards)}
     for entry in qinfo:
         qinfo_by_shard[entry[0] % n_shards].append(entry)
     decode_tab = _DECODE_NP.astype(np.float32)
     avgdl32 = np.float32(avgdl)
-    # float64 upper-bound factors, identical math to the block_bound
-    # column expression in _annotated_postings (format v3+: computed
-    # at query time from current avgdl)
+    # float64 upper-bound factors (format v3+: computed at query time
+    # from the current avgdl — comp(max_tf, min_dl) bounds every doc in
+    # the block because BM25 tf-saturation is increasing in tf and
+    # decreasing in dl, reference compress_postinglist.rs:530-676; per-
+    # field rows each add boost·idf·comp_ub, an upper bound of the BM25F
+    # sum over fields, add_result.rs:1171-1426)
     dlq_tab = _DECODE_NP.astype(np.float64)
 
     def term_scores(idf: float, tfs: np.ndarray, dl_bytes: np.ndarray) -> np.ndarray:
@@ -2201,8 +2146,8 @@ def _make_kernel(
                 )
                 return 2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
             # shared per-block bound pieces: one f64 ub per posting row
-            # (gram rows also carry per-partial-term ubs for the gram
-            # bound = Σ parts' idf·comp_ub, as in _annotated_postings)
+            # (gram rows also carry per-partial-term ubs: a gram's bound
+            # is Σ parts' idf·comp_ub, each part with its own max_tf)
             row_ub: dict[str, list[tuple[int, float, float, list[float] | None]]] = {}
             raw = []
             for _, r in rows.iterrows():
@@ -2669,17 +2614,11 @@ def count_matches(
 
     boosts, allowed = _resolve_fields(store, None, field_filter)
     _n, avgdl = _effective_stats(store, staged)
-    need_facets = sorted(
-        set(filters_k) | (_geo_cols(geo_filter) if geo_filter else set())
-    )
-    rows = _annotated_postings(
-        spark, store, plan, boosts, allowed,
-        facet_cols=need_facets or None, staged=staged, avgdl=avgdl,
-        block_bounds=_block_bounds(geo_filter, filters_k),
-    )
     out = (
         _run_kernel(
-            spark, store, rows, None, [(0, plan)], 0, False, avgdl, boosts,
+            spark, store, [(0, plan)], 0, False, avgdl, boosts, allowed,
+            staged=staged,
+            block_bounds=_block_bounds(geo_filter, filters_k),
             count_only=True,
             facet_filters_by_q={0: filters_k},
             geo_by_q={0: geo_filter} if geo_filter else None,
@@ -2712,10 +2651,9 @@ def facet_counts(
     facet to the value prefix it must keep; ``length`` caps each
     facet's returned values to its top-N by (count desc, value asc).
     Both filter what RETURNS — counts per value are unchanged."""
-    out = _facet_count_run(
-        spark, store, query, default_type, staged,
-        string_facets=facets, range_facets=None,
-    )
+    out = facet_counts_many(
+        spark, store, [(query, facets)], default_type, staged
+    ).drop("query_id")
     for fc, p in (prefix or {}).items():
         out = out.filter(
             (F.col("facet") != fc) | F.col("value").startswith(p)
@@ -2753,21 +2691,10 @@ def facet_range_counts(
     search.rs:3598-3764) → DataFrame(facet, bucket_lo, n[,
     n_cumulative]). ``ranges`` maps facet → ascending LOWER bounds;
     the last bucket is open-ended."""
-    out = _facet_count_run(
-        spark, store, query, default_type, staged,
-        string_facets=None, range_facets=ranges,
-    )
-    if cumulative:
-        w = (
-            Window.partitionBy("facet")
-            .orderBy("bucket_lo")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        out = out.select(
-            "facet", "bucket_lo", "n",
-            F.sum("n").over(w).cast("long").alias("n_cumulative"),
-        )
-    return out
+    return facet_range_counts_many(
+        spark, store, [(query, ranges)], default_type, staged,
+        cumulative=cumulative,
+    ).drop("query_id")
 
 
 def geo_range_counts(
@@ -2797,35 +2724,14 @@ def geo_range_counts(
     geo filter and geo_dist sort use, so the three agree to the bit.
     → DataFrame(facet, bucket_lo, n[, n_cumulative]); bucket_lo in
     ``unit``."""
-    from seekstorm_spark.functions.geo import KM_PER_MILE
-
-    if unit not in ("km", "mi"):
-        raise ValueError(f"unit must be 'km' or 'mi', got {unit!r}")
-    specs: dict = store.meta.get("facets") or {}
-    out_bounds = [float(b) for b in sorted(ranges)]
-    scale = KM_PER_MILE if unit == "mi" else 1.0
-    bounds_km = [b * scale for b in out_bounds]
+    spec = {"base": base, "ranges": ranges, "unit": unit}
     if facet is not None:
-        kind = facet_kind(specs[facet]) if facet in specs else None
-        if kind not in ("point", "morton"):
-            raise ValueError(
-                f"{facet!r} is not an indexed Point/Morton facet"
-            )
-        label, mode, cols = facet, kind, [facet]
+        spec["facet"] = facet
     else:
-        if lat is None or lon is None:
-            raise ValueError("give facet= or both lat= and lon=")
-        for c in (lat, lon):
-            if c not in specs or facet_kind(specs[c]) != "numeric":
-                raise ValueError(f"{c!r} is not an indexed numeric facet")
-        label, mode, cols = f"{lat},{lon}", "pair", [lat, lon]
-    out = _facet_count_run(
-        spark, store, query, default_type, staged,
-        string_facets=None, range_facets=None,
-        geo_facets={
-            label: (mode, cols, base[0], base[1], bounds_km, out_bounds)
-        },
-    )
+        spec["lat"], spec["lon"] = lat, lon
+    out = geo_range_counts_many(
+        spark, store, [(query, spec)], default_type, staged
+    ).drop("query_id")
     if cumulative:
         w = (
             Window.partitionBy("facet")
@@ -2852,10 +2758,8 @@ def geo_range_counts_many(
     "facet": point_col | ("lat": .., "lon": ..), "unit": "km"|"mi"} —
     per-query bases/buckets/units may differ. Same fused scan +
     shared per-block buffer decode as :func:`facet_counts_many`;
-    per-query ≡ :func:`geo_range_counts`. ``staged`` falls back per
-    query."""
-    from functools import reduce
-
+    per-query ≡ :func:`geo_range_counts`; ``staged`` level-0 batches
+    join the same scan."""
     from seekstorm_spark.functions.geo import KM_PER_MILE
 
     staged = list(staged) if staged else None
@@ -2873,7 +2777,7 @@ def geo_range_counts_many(
         bounds_km = np.asarray(
             [b * scale for b in out_bounds], dtype=np.float64
         )
-        if "facet" in spec:
+        if spec.get("facet") is not None:
             fc = spec["facet"]
             kind = facet_kind(specs[fc]) if fc in specs else None
             if kind not in ("point", "morton"):
@@ -2882,7 +2786,9 @@ def geo_range_counts_many(
                 )
             label, mode, cols = fc, kind, (fc, None)
         else:
-            la, lo = spec["lat"], spec["lon"]
+            la, lo = spec.get("lat"), spec.get("lon")
+            if la is None or lo is None:
+                raise ValueError("give facet= or both lat= and lon=")
             for c in (la, lo):
                 if c not in specs or facet_kind(specs[c]) != "numeric":
                     raise ValueError(
@@ -2894,29 +2800,13 @@ def geo_range_counts_many(
             bounds_km, mode, cols, float(base[0]), float(base[1])
         ), out_bounds
 
-    if staged:
-        outs = []
-        for i, (qstr, spec) in enumerate(requests):
-            kwargs = (
-                {"facet": spec["facet"]}
-                if "facet" in spec
-                else {"lat": spec["lat"], "lon": spec["lon"]}
-            )
-            outs.append(
-                geo_range_counts(
-                    spark, store, qstr, spec["base"], spec["ranges"],
-                    unit=spec.get("unit", "km"),
-                    default_type=default_type, staged=staged, **kwargs,
-                ).select(F.lit(int(i)).alias("query_id"), "*")
-            )
-        return reduce(lambda a, b: a.unionByName(b), outs) if outs else empty
-
+    normed = [_norm_req(spec) for _q, spec in requests]
     plans = [
-        _plan(spark, store, qstr, default_type, None)
+        _plan(spark, store, qstr, default_type, staged)
         for qstr, _s in requests
     ]
     boosts, allowed = _resolve_fields(store, None, None)
-    _n, avgdl = _effective_stats(store, None)
+    _n, avgdl = _effective_stats(store, staged)
     fused: list[tuple[int, QueryPlan]] = []
     count_facets_by_q: dict[int, dict] = {}
     bounds_by_qf: dict[tuple[int, str], list[float]] = {}
@@ -2924,14 +2814,15 @@ def geo_range_counts_many(
         if plan.missing_required or not plan.pos_terms:
             continue
         fused.append((i, plan))
-        label, gspec, out_bounds = _norm_req(requests[i][1])
+        label, gspec, out_bounds = normed[i]
         count_facets_by_q[i] = {label: ("geo", gspec)}
         bounds_by_qf[(i, label)] = out_bounds
     if not fused:
         return empty
     agg = (
-        _search_many_fused(
-            spark, store, fused, 0, False, boosts, allowed, avgdl,
+        _run_kernel(
+            spark, store, fused, 0, False, avgdl, boosts, allowed,
+            staged=staged,
             count_only=True,
             count_facets_by_q=count_facets_by_q,
         )
@@ -2948,89 +2839,6 @@ def geo_range_counts_many(
     return agg.select(
         "query_id", "facet", decode.alias("bucket_lo"), "n"
     )
-
-
-def _facet_count_run(
-    spark: SparkSession,
-    store: IndexStore,
-    query: str,
-    default_type: str,
-    staged: list | None,
-    string_facets: list[str] | None,
-    range_facets: dict[str, list[float]] | None,
-    geo_facets: dict | None = None,
-) -> DataFrame:
-    staged = list(staged) if staged else None
-    specs: dict = store.meta.get("facets") or {}
-    # facet → the kernel's count spec (kind, bounds); bucket_lo decode
-    # bounds for numeric and geo buckets
-    count_spec: dict = {}
-    out_bounds: dict[str, np.ndarray] = {}
-    for fc in string_facets or []:
-        if fc not in specs or facet_values(specs[fc]) is None:
-            raise ValueError(f"{fc!r} is not an indexed string facet")
-        count_spec[fc] = (facet_kind(specs[fc]), None)
-    for fc, bounds in (range_facets or {}).items():
-        if fc not in specs or facet_kind(specs[fc]) != "numeric":
-            raise ValueError(f"{fc!r} is not an indexed numeric facet")
-        count_spec[fc] = ("numeric", np.asarray(sorted(bounds), dtype=np.float64))
-        out_bounds[fc] = count_spec[fc][1]
-    join_cols = sorted(count_spec)
-    # geo distance buckets: label -> (mode, cols, lat0, lon0,
-    # bounds_km, caller-unit bounds) — bucketed in km inside the
-    # kernel, decoded to the CALLER's unit bounds
-    for label, (mode, cols, lat0, lon0, bounds_km, obounds) in (
-        geo_facets or {}
-    ).items():
-        count_spec[label] = ("geo", (
-            np.asarray(bounds_km, dtype=np.float64),
-            mode,
-            (cols[0], cols[1] if len(cols) > 1 else None),
-            float(lat0),
-            float(lon0),
-        ))
-        out_bounds[label] = np.asarray(obounds, dtype=np.float64)
-        join_cols.extend(c for c in cols if c not in join_cols)
-
-    plan = _plan(spark, store, query, default_type, staged)
-    if string_facets:
-        empty = spark.createDataFrame([], "facet string, value string, n long")
-    else:
-        empty = spark.createDataFrame([], "facet string, bucket_lo double, n long")
-    if plan.missing_required or not plan.pos_terms:
-        return empty
-
-    boosts, allowed = _resolve_fields(store, None, None)
-    _n, avgdl = _effective_stats(store, staged)
-    rows = _annotated_postings(
-        spark, store, plan, boosts, allowed, facet_cols=join_cols,
-        staged=staged, avgdl=avgdl,
-    )
-    agg = (
-        _run_kernel(
-            spark, store, rows, None, [(0, plan)], 0, False, avgdl, boosts,
-            count_only=True, count_facets_by_q={0: count_spec},
-        )
-        .groupBy("facet", "code")
-        .agg(F.sum("matches").cast("long").alias("n"))
-    )
-    if string_facets:
-        decoded = _decode_string_codes(
-            spark, agg,
-            {fc: facet_values(specs[fc]) for fc in string_facets},
-            out_col="value",
-        )
-        return decoded.select("facet", "value", "n")
-    bounds_arr = None
-    for fc, bounds in out_bounds.items():
-        arr = double_array(bounds)
-        expr = F.element_at(arr, F.col("code").cast("int") + 1)
-        bounds_arr = (
-            expr
-            if bounds_arr is None
-            else F.when(F.col("facet") == fc, expr).otherwise(bounds_arr)
-        )
-    return agg.select("facet", bounds_arr.alias("bucket_lo"), "n")
 
 
 def index_facet_stats(
@@ -3218,12 +3026,9 @@ def match_docids(
         return spark.createDataFrame([], "docid long")
     boosts, allowed = _resolve_fields(store, None, None)
     _n, avgdl = _effective_stats(store, staged)
-    rows = _annotated_postings(
-        spark, store, plan, boosts, allowed, staged=staged, avgdl=avgdl
-    )
     return _run_kernel(
-        spark, store, rows, None, [(0, plan)], 0, False, avgdl, boosts,
-        emit_all=True,
+        spark, store, [(0, plan)], 0, False, avgdl, boosts, allowed,
+        staged=staged, emit_all=True,
     ).select("docid")
 
 
@@ -3286,11 +3091,11 @@ def _join_facet_blocks(
     staged: list | None = None,
     block_bounds: dict[str, list[tuple[float, float]]] | None = None,
     keep_bounds: list[str] | None = None,
-) -> tuple[DataFrame, list]:
+) -> DataFrame:
     """Left-join per-block facet arrays onto the posting rows (rows
-    are hash-partitioned by block_id already, so only the small facet
-    side exchanges). Staged batches' facet blocks union in for
-    realtime level-0. Returns (rows, extra select columns).
+    already hash-partitioned by block_id keep that partitioning, so
+    only the small facet side exchanges). Staged batches' facet blocks
+    union in for realtime level-0.
 
     ``block_bounds`` maps a numeric facet to allowed [lo, hi] value
     intervals: blocks whose stored per-block min/max (format v4 zone
@@ -3304,9 +3109,6 @@ def _join_facet_blocks(
     bounds as ``zb_min_<fc>`` / ``zb_max_<fc>`` output columns (the
     kernel's numeric sort-key block skip reads them; null = unknown).
     """
-    import os
-
-    extra = []
     for fc in facet_cols:
         fb = store.facet_blocks(spark)
         for sb in staged or []:
@@ -3356,203 +3158,9 @@ def _join_facet_blocks(
             rows = rows.withColumnRenamed(
                 "_bmin", f"zb_min_{fc}"
             ).withColumnRenamed("_bmax", f"zb_max_{fc}")
-            extra += [f"zb_min_{fc}", f"zb_max_{fc}"]
         elif has_bounds:
             rows = rows.drop("_bmin", "_bmax")
-        extra.append(f"fb_{fc}")
-    return rows, extra
-
-
-def _annotated_postings(
-    spark: SparkSession,
-    store: IndexStore,
-    plan: QueryPlan,
-    boosts: dict[int, float] | None = None,
-    allowed_fields: list[int] | None = None,
-    facet_cols: list[str] | None = None,
-    staged: list | None = None,
-    avgdl: float | None = None,
-    block_bounds: dict[str, list[tuple[float, float]]] | None = None,
-    keep_bounds: list[str] | None = None,
-) -> DataFrame:
-    """The single-query plan for :func:`_make_kernel`: the query's
-    posting rows (plus any ``staged`` batches' rows for the same
-    buckets), hash-partitioned by block_id, with the block-max columns
-    the kernel bounds blocks from, ``shard`` = 0, the optional facet
-    arrays (``_join_facet_blocks``) and ``block_bound`` — the block's
-    score bound, used to drop intersection blocks missing a required
-    term and as the best-first block schedule."""
-    if avgdl is None:
-        avgdl = store.avgdl
-    terms = sorted(_scan_terms(plan))
-    has_gram = any(NGRAM_SEP in t for t in terms)
-    n_buckets = store.n_buckets
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-    cols = [
-        "term",
-        "field",
-        "block_id",
-        "posting_count",
-        "max_tf",
-        "min_dl_byte",
-        "docids_vb",
-        "tfs_vb",
-        "dls",
-    ]
-    if has_gram:
-        cols += [
-            "tfs1_vb", "tfs2_vb", "tfs3_vb", "max_tf1", "max_tf2", "max_tf3",
-        ]
-    if plan.qtype == "phrase":
-        cols.append("positions_vb")
-    postings = _cached_postings(spark, store)
-    for sb in staged or []:
-        # only the query's bucket dirs: listing all of a 64-bucket
-        # batch (> 32 leaf dirs) is a 64-task Spark job per query. A
-        # batch with none of them staged adds no rows; the explicit
-        # schema avoids an inference job
-        dirs = [
-            d
-            for d in (
-                os.path.join(sb.postings_path, f"tbucket={b}") for b in buckets
-            )
-            if os.path.isdir(d)
-        ]
-        if dirs:
-            postings = postings.unionByName(
-                spark.read.schema(POSTINGS_DDL)
-                .option("basePath", sb.postings_path)
-                .parquet(*dirs)
-            )
-    postings = postings.filter(
-        F.col("tbucket").isin(buckets) & F.col("term").isin(terms)
-    ).select(*cols)
-    if allowed_fields is not None:
-        # field filter pushes to the scan (reference search.rs:2483-2495)
-        postings = postings.filter(
-            F.col("field").isin([int(i) for i in allowed_fields])
-        )
-    if plan.qtype == "phrase":
-        postings = postings.withColumnRenamed("positions_vb", "pos_vb")
-
-    # term metadata as LITERAL expressions (a query touches a handful
-    # of terms): no broadcast-join sub-job — a measurable chunk of the
-    # per-query latency floor
-    idf_expr = F.lit(0.0)
-    for t, v in plan.pos_terms.items():
-        idf_expr = F.when(F.col("term") == t, F.lit(float(v))).otherwise(
-            idf_expr
-        )
-    n_fields = len(store.meta.get("fields") or ["text"])
-    boost_arr = F.array(
-        *[
-            F.lit(float((boosts or {}).get(i, 1.0)))
-            for i in range(max(n_fields, 1))
-        ]
-    )
-    # one select for all annotation columns: each pyspark withColumn
-    # is ~9 ms of py4j/plan-copy on the serving floor (profiled)
-    rows = postings.select(
-        "*",
-        *(
-            []
-            if plan.qtype == "phrase"
-            else [F.lit(None).cast("binary").alias("pos_vb")]
-        ),
-        idf_expr.alias("idf"),
-        (
-            F.col("term").isin(list(plan.not_terms))
-            if plan.not_terms
-            else F.lit(False)
-        ).alias("is_not"),
-        F.element_at(boost_arr, F.col("field") + 1).alias("boost"),
-        F.lit(0).alias("shard"),
-    )
-    # format v3+: the block-max bound is computed HERE, at query time,
-    # from the current avgdl — comp(max_tf, min_dl) bounds every doc in
-    # the block because BM25 tf-saturation is increasing in tf and
-    # decreasing in dl (reference compress_postinglist.rs:530-676);
-    # valid even when avgdl drifted after the block was written. Per-
-    # field rows each contribute boost·idf·comp_ub — an upper bound of
-    # the BM25F sum over fields (add_result.rs:1171-1426).
-    # The 256-entry decode table is ONE F.expr literal: per-element
-    # F.lit cost ~2 py4j round-trips each, ~0.1 s of plan-build time
-    # on every query (profiled; identical doubles — sqlexpr docstring).
-    dlq_arr = F.expr(_DLQ_ARRAY_SQL)
-    min_dlq = F.element_at(dlq_arr, F.col("min_dl_byte") + 1)
-
-    def _comp_ub(tf_col):
-        return (tf_col * F.lit(K + 1.0)) / (
-            tf_col
-            + F.lit(K)
-            * (
-                F.lit(1.0 - B)
-                + F.lit(B) * min_dlq / F.lit(float(avgdl))
-            )
-        )
-
-    single_bound = F.col("idf") * _comp_ub(F.col("max_tf"))
-    bound_expr = single_bound
-    for gk, parts in (plan.unit_parts or {}).items():
-        # gram rows bound by the sum of their partial terms' upper
-        # bounds (each partial carries its own per-block max_tf)
-        g = F.lit(0.0)
-        for k, part in enumerate(parts):
-            g = g + F.lit(float(plan.pos_terms.get(part, 0.0))) * _comp_ub(
-                F.col(f"max_tf{k + 1}")
-            )
-        bound_expr = F.when(F.col("term") == gk, g).otherwise(bound_expr)
-    bound_contrib = F.when(F.col("is_not"), F.lit(0.0)).otherwise(
-        F.col("boost") * bound_expr
-    )
-    n_index_fields = len(store.meta.get("fields") or ["text"])
-    eff_fields = (
-        len(allowed_fields) if allowed_fields is not None else n_index_fields
-    )
-    base_cols = [
-        "shard", "term", "field", "block_id", "max_tf", "min_dl_byte",
-        "docids_vb", "tfs_vb", "dls", "pos_vb", "block_bound",
-    ]
-    if has_gram:
-        base_cols += [
-            "tfs1_vb", "tfs2_vb", "tfs3_vb", "max_tf1", "max_tf2", "max_tf3",
-        ]
-    if len(terms) == 1 and eff_fields == 1 and not staged:
-        # single posting row per block: its contribution IS the block
-        # bound — skip the per-block window (one whole exchange).
-        # Disabled when staged batches may add a second row per block.
-        rows = rows.select("*", bound_contrib.alias("block_bound"))
-        if facet_cols:
-            rows, extra = _join_facet_blocks(
-                spark, store, rows, facet_cols, staged,
-                block_bounds=block_bounds, keep_bounds=keep_bounds,
-            )
-            return rows.select(*base_cols, *extra)
-        return rows.select(*base_cols)
-    w = Window.partitionBy("block_id")
-    rows = rows.withColumn("bound_contrib", bound_contrib)
-    if plan.qtype in ("intersection", "phrase", "ngram"):
-        required = plan.required_posting_terms()
-        rows = rows.select(
-            "*",
-            F.sum("bound_contrib").over(w).alias("block_bound"),
-            F.size(
-                F.collect_set(
-                    F.when(~F.col("is_not"), F.col("term"))
-                ).over(w)
-            ).alias("pos_in_block"),
-        ).filter(F.col("pos_in_block") >= len(required))
-    else:
-        rows = rows.select(
-            "*", F.sum("bound_contrib").over(w).alias("block_bound")
-        )
-    if facet_cols:
-        rows, extra = _join_facet_blocks(
-            spark, store, rows, facet_cols, staged,
-            block_bounds=block_bounds, keep_bounds=keep_bounds,
-        )
-        return rows.select(*base_cols, *extra)
-    return rows.select(*base_cols)
+    return rows
 
 
 def _phrase_filter(

@@ -41,6 +41,59 @@ def test_jaccard_pairs(docs):
     assert (0, 3) not in pairs
 
 
+
+def test_jaccard_pairs_filters_hot_shingle_before_collect(spark):
+    """The max_docs_per_shingle guard runs BEFORE the doc lists are
+    collected: a shingle in every doc never builds an array. In the
+    optimized plan each collect_list aggregate must read the
+    df-filtered shingles, and the pairs must match a brute-force
+    computation over the same guard."""
+    from itertools import combinations
+
+    from seekstorm_spark.functions.dedup import jaccard_pairs
+
+    texts = [
+        "boiler plate text alpha beta gamma",
+        "boiler plate text alpha beta delta",
+        "boiler plate text omega psi chi",
+        "boiler plate text omega psi phi",
+        "boiler plate text kappa lambda mu",
+    ]
+    df = spark.createDataFrame(
+        pd.DataFrame(list(enumerate(texts)), columns=["doc_id", "text"])
+    )
+    out = jaccard_pairs(df, threshold=0.0, max_docs_per_shingle=2)
+
+    lines = out._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    depth = lambda ln: ln.find("+-") if "+-" in ln else 0
+    aggs = [i for i, ln in enumerate(lines) if "collect_list" in ln]
+    assert aggs
+    for i in aggs:
+        below = []
+        for ln in lines[i + 1 :]:
+            if depth(ln) <= depth(lines[i]) or "InMemoryRelation" in ln:
+                break
+            below.append(ln)
+        assert any("Filter" in ln and "<= 2" in ln for ln in below), lines[i]
+
+    sh = []
+    for t in texts:
+        w = t.split()
+        sh.append({" ".join(w[k : k + 3]) for k in range(len(w) - 2)})
+    df_of = {}
+    for doc_sh in sh:
+        for g in doc_sh:
+            df_of[g] = df_of.get(g, 0) + 1
+    want = {}
+    for a, b in combinations(range(len(texts)), 2):
+        # a shared shingle has df >= 2; the guard keeps df <= 2
+        common = sum(1 for g in sh[a] & sh[b] if df_of[g] <= 2)
+        if common:
+            want[(a, b)] = round(common / (len(sh[a]) + len(sh[b]) - common), 6)
+    got = {(r["docid_a"], r["docid_b"]): r["jaccard"] for r in out.collect()}
+    assert got == want
+    assert set(want) == {(0, 1), (2, 3)}
+
 def test_minhash_identical_docs_always_collide(docs):
     from seekstorm_spark.functions.dedup import minhash_lsh_pairs
 

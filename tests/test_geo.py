@@ -62,8 +62,8 @@ def test_geo_block_skipping_lossless(spark, tmp_path):
 
     from seekstorm_spark.index.builder import IndexBuilder
     from seekstorm_spark.query.engine import (
-        _annotated_postings,
         _plan,
+        _posting_rows,
         search,
     )
     from seekstorm_spark.sources.webtext import synth_webtext
@@ -95,12 +95,12 @@ def test_geo_block_skipping_lossless(spark, tmp_path):
           "radius_km": 500.0}
     boxes = [(47.0, 50.0)]  # lat interval containing only block 0
     plan = _plan(spark, store, "term00000", "union")
-    with_skip = _annotated_postings(
-        spark, store, plan, facet_cols=["lat", "lon"],
+    with_skip, _n = _posting_rows(
+        spark, store, [(0, plan)], None, facet_cols=["lat", "lon"],
         block_bounds={"lat": boxes},
     )
-    no_skip = _annotated_postings(
-        spark, store, plan, facet_cols=["lat", "lon"]
+    no_skip, _n = _posting_rows(
+        spark, store, [(0, plan)], None, facet_cols=["lat", "lon"]
     )
     blocks_with = {r["block_id"] for r in
                    with_skip.select("block_id").distinct().collect()}

@@ -288,18 +288,26 @@ def test_update_documents_and_delete_by_query(spark, tmp_path):
 
 
 def test_staged_counts_facets_and_sorts_match_committed(spark, tmp_path):
-    """Every single-query caller of the scoring kernel returns over a
-    staged batch exactly what it returns once the batch is committed:
-    filtered counts, string / numeric-range / geo-distance facet
-    counts, all matching docids, and a string-facet result sort. The
-    staged ids interleave with the committed ones, so every block
-    carries a committed and a staged row per (term, field)."""
+    """Every caller of the scoring kernel returns over a staged batch
+    exactly what it returns once the batch is committed: filtered
+    counts, string / numeric-range / geo-distance facet counts, all
+    matching docids, a string-facet result sort, and the batched
+    twins (search_many, count_matches_many with a df-shortcut term,
+    facet_counts_many, facet_range_counts_many,
+    geo_range_counts_many). The staged ids interleave with the
+    committed ones, so every block carries a committed and a staged
+    row per (term, field)."""
     from seekstorm_spark.index.builder import assign_docids
     from seekstorm_spark.query.engine import (
+        count_matches_many,
         facet_counts,
+        facet_counts_many,
         facet_range_counts,
+        facet_range_counts_many,
         geo_range_counts,
+        geo_range_counts_many,
         match_docids,
+        search_many,
     )
 
     docs = assign_docids(
@@ -328,6 +336,9 @@ def test_staged_counts_facets_and_sorts_match_committed(spark, tmp_path):
     assert staged is not None
 
     q = "term00000 term00001"
+    q_and = "+term00000 +term00001"
+    geo_spec = {"base": (48.5, 2.5), "ranges": [0.0, 50.0, 200.0],
+                "lat": "lat", "lon": "lon"}
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
@@ -359,11 +370,45 @@ def test_staged_counts_facets_and_sorts_match_committed(spark, tmp_path):
                     staged=batches,
                 ).collect()
             ],
+            "many": rows(
+                search_many(spark, st, [q, q_and], top_k=20, staged=batches)
+            ),
+            "counts_many": count_matches_many(
+                spark, st, [q, "term00000", q_and], staged=batches
+            ),
+            "facets_many": rows(
+                facet_counts_many(
+                    spark, st, [(q, ["lang"]), (q_and, ["lang"])],
+                    staged=batches,
+                )
+            ),
+            "ranges_many": rows(
+                facet_range_counts_many(
+                    spark, st,
+                    [(q, {"nlen": [0.0, 400.0]}),
+                     (q_and, {"nlen": [0.0, 400.0, 800.0]})],
+                    staged=batches,
+                )
+            ),
+            "geo_many": rows(
+                geo_range_counts_many(
+                    spark, st, [(q, geo_spec), (q_and, geo_spec)],
+                    staged=batches,
+                )
+            ),
         }
+
+    # staged queries fuse: ONE kernel for the whole batch
+    many_plan = search_many(
+        spark, store, [q, q_and], top_k=20, staged=[staged]
+    )._jdf.queryExecution().optimizedPlan().toString()
+    assert many_plan.count("MapInPandas") == 1
 
     before = run(store, [staged])
     after = run(commit_batch(spark, store, staged), None)
     assert before == after
+    assert before["counts_many"][1] > 0
+    assert {r[0] for r in before["many"]} == {0, 1}
     assert any(d % 4 == 3 for (d,) in before["match"])
     assert before["count"] > 0 and before["facets"] and before["geo"]
     assert len(before["sorted"]) == 40

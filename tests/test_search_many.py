@@ -1,8 +1,7 @@
 """Batched multi-query execution: ``search_many`` runs N queries in
 one Spark action (fused scan + one exchange + one kernel covering
-union/intersection/NOT/phrase/n-gram; staged level-0 queries ride as
-exact per-query fallback branches) and must be BIT-IDENTICAL per
-query to ``search``."""
+union/intersection/NOT/phrase/n-gram; staged level-0 batches join the
+same scan) and must be BIT-IDENTICAL per query to ``search``."""
 
 from __future__ import annotations
 
@@ -137,9 +136,9 @@ def test_search_many_multi_row_blocks(spark, built, tmp_path):
 
 
 def test_search_many_staged_falls_back(spark, built, tmp_path):
-    """Staged level-0 batches route every query through the exact
-    single-query plan (fallback branches) — results must include
-    staged docs."""
+    """Staged level-0 queries fuse like every other query: the batch's
+    rows join the shared scan, and each query's results — staged docs
+    included — equal its single-query run."""
     from seekstorm_spark.streaming.incremental import stage_batch
 
     docs = synth_webtext(spark, 300, seed=42)

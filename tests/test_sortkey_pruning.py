@@ -12,10 +12,10 @@ from pyspark.sql import functions as F
 
 from seekstorm_spark.index.builder import IndexBuilder, assign_docids
 from seekstorm_spark.query.engine import (
-    _annotated_postings,
     _effective_stats,
     _make_kernel,
     _plan,
+    _posting_rows,
     _resolve_fields,
     search,
 )
@@ -39,10 +39,11 @@ def _kernel_rows(spark, store, query="term00000"):
     plan = _plan(spark, store, query, "union")
     boosts, allowed = _resolve_fields(store, None, None)
     _n, avgdl = _effective_stats(store, None)
-    rows = _annotated_postings(
-        spark, store, plan, boosts, allowed, facet_cols=["price"],
-        avgdl=avgdl, keep_bounds=["price"],
-    ).toPandas()
+    rows, _n_shards = _posting_rows(
+        spark, store, [(0, plan)], allowed, facet_cols=["price"],
+        keep_bounds=["price"],
+    )
+    rows = rows.toPandas()
     assert {"zb_min_price", "zb_max_price"} <= set(rows.columns)
     return plan, avgdl, boosts, rows
 
@@ -171,10 +172,11 @@ def test_string_kernel_skips_blocks(spark, labeled_store):
     plan = _plan(spark, store, "term00000", "union")
     boosts, allowed = _resolve_fields(store, None, None)
     _n, avgdl = _effective_stats(store, None)
-    rows = _annotated_postings(
-        spark, store, plan, boosts, allowed, facet_cols=["category"],
-        avgdl=avgdl, keep_bounds=["category"],
-    ).toPandas()
+    rows, _n_shards = _posting_rows(
+        spark, store, [(0, plan)], allowed, facet_cols=["category"],
+        keep_bounds=["category"],
+    )
+    rows = rows.toPandas()
     assert {"zb_min_category", "zb_max_category"} <= set(rows.columns)
     rows = rows.sort_values(["zb_min_category", "block_id"]).reset_index(
         drop=True
