@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from seekstorm_spark.codecs import ROARING_BLOCK_SIZE
 from seekstorm_spark.index.store import IndexStore
-from seekstorm_spark.quantization import decode_lengths
+from seekstorm_spark.quantization import avgdl_f32, length_stats
 
 # Segment-row shuffle, the one build format: every map task covers
 # ascending docids, and tasks cover disjoint docid ranges
@@ -1747,16 +1747,8 @@ class IndexBuilder:
                 .agg(F.count("*").alias("cnt"))
                 .collect()
             }
-            n_docs = int(sum(c for (fid, _b), c in dl_hist.items() if fid == 0))
-            pos_sum = int(
-                sum(
-                    int(decode_lengths(np.array([b]))[0]) * c
-                    for (_f, b), c in dl_hist.items()
-                )
-            )
-            avgdl = (
-                float(np.float32(pos_sum) / np.float32(n_docs)) if n_docs else 1.0
-            )
+            n_docs, pos_sum = length_stats(dl_hist)
+            avgdl = avgdl_f32(pos_sum, n_docs)
 
         # --- term stats (list heads: df, cf, list-max metadata) ---
         term_stats = term_stats_aggregate(postings)

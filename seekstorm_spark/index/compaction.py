@@ -48,7 +48,7 @@ from seekstorm_spark.index.builder import (
     term_stats_aggregate,
 )
 from seekstorm_spark.index.store import IndexStore
-from seekstorm_spark.quantization import decode_lengths
+from seekstorm_spark.quantization import avgdl_f32, length_stats
 
 
 def _rewrite_block(
@@ -227,20 +227,12 @@ def compact(spark: SparkSession, store: IndexStore) -> IndexStore:
         .agg(F.count("*").alias("cnt"))
         .collect()
     }
-    n_docs = int(sum(c for (fid, _b), c in dl_hist.items() if fid == 0))
-    pos_sum = int(
-        sum(
-            int(decode_lengths(np.array([b]))[0]) * c
-            for (_f, b), c in dl_hist.items()
-        )
-    )
+    n_docs, pos_sum = length_stats(dl_hist)
     meta.update(
         {
             "n_docs": n_docs,
             "positions_sum_normalized": pos_sum,
-            "avgdl": float(np.float32(pos_sum) / np.float32(n_docs))
-            if n_docs
-            else 1.0,
+            "avgdl": avgdl_f32(pos_sum, n_docs),
         }
     )
     store.meta = meta

@@ -67,6 +67,24 @@ def decode_lengths(b: np.ndarray) -> np.ndarray:
     return _DECODE_NP[np.asarray(b, dtype=np.int64)]
 
 
+def length_stats(dl_hist: dict[tuple[int, int], int]) -> tuple[int, int]:
+    """(n_docs, Σ quantized dl) from a {(field, dl_byte): doc count}
+    histogram: field-0 rows count the docs, every field's decoded
+    length adds to the positions sum (reference commit.rs:318-319)."""
+    n_docs = sum(c for (fid, _b), c in dl_hist.items() if fid == 0)
+    pos_sum = sum(
+        int(decode_lengths(np.array([b]))[0]) * c
+        for (_f, b), c in dl_hist.items()
+    )
+    return int(n_docs), int(pos_sum)
+
+
+def avgdl_f32(pos_sum: int, n_docs: int) -> float:
+    """avgdl = f32(Σ quantized dl) / f32(N), the reference's f32
+    division (commit.rs:318-319); 1.0 for an empty index."""
+    return float(np.float32(pos_sum) / np.float32(n_docs)) if n_docs else 1.0
+
+
 def quantize_length(raw: int) -> int:
     """raw token count → decompressed quantized length (round trip)."""
     return DOCUMENT_LENGTH_COMPRESSION[int_to_byte4(raw)]

@@ -18,8 +18,6 @@ over 256 rows).
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -62,9 +60,7 @@ def quantization_table(spark: SparkSession) -> DataFrame:
 # ~2 MB of source bytes per tokenize task (~50 ms of regex work):
 # below that, extra tasks cost more in dispatch + Python-worker spawn
 # than they recover in parallelism
-_SPREAD_SPLIT_BYTES = int(
-    os.environ.get("SEEKSTORM_SPREAD_SPLIT_BYTES", str(2 * 1024 * 1024))
-)
+_SPREAD_SPLIT_BYTES = 2 * 1024 * 1024
 
 
 def _spread(df: DataFrame) -> DataFrame:

@@ -74,7 +74,7 @@ from seekstorm_spark.index.builder import (
     facet_values,
 )
 from seekstorm_spark.index.store import POSTINGS_DDL, IndexStore
-from seekstorm_spark.quantization import _DECODE_NP
+from seekstorm_spark.quantization import _DECODE_NP, avgdl_f32
 from seekstorm_spark.scoring import B, K, idf_f32
 from seekstorm_spark.sqlexpr import double_array
 from seekstorm_spark.tokenizer import ParsedQuery, parse_query
@@ -200,8 +200,7 @@ def _effective_stats(store: IndexStore, staged: list | None) -> tuple[int, float
     for sb in staged:
         n += sb.batch_n
         ps += sb.batch_pos_sum
-    avgdl = float(np.float32(ps) / np.float32(n)) if n else 1.0
-    return n, avgdl
+    return n, avgdl_f32(ps, n)
 
 
 @dataclass
@@ -276,6 +275,8 @@ def _plan(
     similarity: str = "bm25f",
     rewrite_options: dict | None = None,
 ) -> QueryPlan:
+    if similarity not in ("bm25f", "bm25f_proximity"):
+        raise ValueError(f"unknown similarity {similarity!r}")
     meta = store.meta
     stop_words = frozenset(meta.get("stop_words") or []) or None
     pq: ParsedQuery = parse_query(
@@ -631,6 +632,50 @@ def _empty_result(
     return spark.createDataFrame([], ", ".join(parts))
 
 
+def _cached_hit(
+    store: IndexStore,
+    plan: QueryPlan,
+    need_k: int,
+    staged: list | None,
+    fields: list[tuple[str, float]] | None,
+    field_filter: list[str] | None,
+    filters: tuple,
+) -> list[tuple[int, float]] | None:
+    """The frequent-term result cache's top-``need_k`` (docid, score)
+    rows for ``plan`` (reference search.rs:3388-3445), or None. It may
+    serve a single cacheable term with nothing staged and no fields,
+    field filter or per-query filter / sort (``filters``, None when
+    unset); an append / delete / compaction disables it until rebuilt."""
+    from seekstorm_spark.query import result_cache
+
+    if (
+        staged
+        or fields is not None
+        or field_filter is not None
+        or any(f is not None for f in filters)
+        or not result_cache.cacheable_plan(plan)
+    ):
+        return None
+    return result_cache.cached_single_term(
+        store, next(iter(plan.pos_terms)), need_k
+    )
+
+
+def _cached_values(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Cached (docid, score) or (query_id, docid, score) rows as a
+    VALUES literal — a LocalTableScan: collect() runs driver-side with
+    NO Spark job; repr(float) round-trips the f32 score exactly."""
+    with_qid = len(rows[0]) == 3
+    cols = "query_id, docid, score" if with_qid else "docid, score"
+    values = ", ".join(
+        "("
+        + (f"CAST({int(r[0])} AS INT), " if with_qid else "")
+        + f"CAST({int(r[-2])} AS BIGINT), CAST({r[-1]!r} AS FLOAT))"
+        for r in rows
+    )
+    return spark.sql(f"SELECT {cols} FROM (VALUES {values}) AS t({cols})")
+
+
 def search(
     spark: SparkSession,
     store: IndexStore,
@@ -704,8 +749,6 @@ def search(
     strict result when enabled."""
     if mode not in ("lexical", "hybrid"):
         raise ValueError(f"unknown search mode {mode!r}")
-    if similarity not in ("bm25f", "bm25f_proximity"):
-        raise ValueError(f"unknown similarity {similarity!r}")
     if mode == "hybrid":
         if vector is None:
             raise ValueError("hybrid search requires vector=")
@@ -783,47 +826,16 @@ def search(
             return _empty_result(spark, emit_facets, kinds, want_dist)
         return spark.createDataFrame([], RESULT_SCHEMA)
 
-    # frequent-term result cache (reference search.rs:3388-3445): an
-    # unfiltered single-term query whose term was precomputed serves
-    # driver-side — a LocalTableScan, zero Spark jobs. Any append /
-    # delete / compaction moves the index generation and disables the
-    # cache until it is rebuilt.
-    from seekstorm_spark.query.result_cache import (
-        cacheable_plan,
-        cached_single_term,
+    hit = _cached_hit(
+        store, plan, top_k + offset, staged, fields, field_filter,
+        (facet_filters, result_sort, geo_filter),
     )
+    if hit is not None:
+        rows = hit[offset : offset + top_k]
+        if not rows:
+            return spark.createDataFrame([], RESULT_SCHEMA)
+        return _cached_values(spark, rows)
 
-    if (
-        not staged
-        and facet_filters is None
-        and result_sort is None
-        and geo_filter is None
-        and fields is None
-        and field_filter is None
-        and cacheable_plan(plan)
-    ):
-        hit = cached_single_term(
-            store, next(iter(plan.pos_terms)), top_k + offset
-        )
-        if hit is not None:
-            rows = hit[offset : offset + top_k]
-            if not rows:
-                return spark.createDataFrame([], RESULT_SCHEMA)
-            # a VALUES literal plans as a LocalTableScan, whose
-            # collect() runs driver-side with NO Spark job — a
-            # parallelize-backed createDataFrame would schedule one.
-            # repr(float) round-trips the f32 score exactly.
-            values = ", ".join(
-                f"(CAST({int(d)} AS BIGINT), CAST({s!r} AS FLOAT))"
-                for d, s in rows
-            )
-            return spark.sql(
-                f"SELECT docid, score FROM (VALUES {values}) "
-                "AS t(docid, score)"
-            )
-
-    boosts, allowed = _resolve_fields(store, fields, field_filter)
-    n_docs, avgdl = _effective_stats(store, staged)
     need_k = top_k + offset
     emit_all = bool(result_sort)
     # numeric OR string primary sort key → v5 zone bounds drive a
@@ -858,8 +870,8 @@ def search(
     ):
         sort_prune = (result_sort[0][0], result_sort[0][1], need_k)
     candidates = _run_kernel(
-        spark, store, [(0, plan)], need_k, prune and not emit_all, avgdl,
-        boosts, allowed, staged=staged,
+        spark, store, [(0, plan)], need_k, prune and not emit_all,
+        fields=fields, field_filter=field_filter, staged=staged,
         block_bounds=_block_bounds(geo_filter, filters_k),
         facet_filters_by_q={0: filters_k},
         geo_by_q={0: geo_filter} if geo_filter else None,
@@ -1072,14 +1084,10 @@ def search_many(
                     f"query {i}: sorting by geo_dist requires a geo_filter"
                 )
             dist_sort_by_q[i] = rs[0][1]
-    if similarity not in ("bm25f", "bm25f_proximity"):
-        raise ValueError(f"unknown similarity {similarity!r}")
     plans = [
         _plan(spark, store, qstr, default_type, staged, similarity=similarity)
         for qstr in queries
     ]
-    boosts, allowed = _resolve_fields(store, fields, field_filter)
-    n_docs, avgdl = _effective_stats(store, staged)
     filters_by_q: dict[int, dict] = {}
     geo_by_q: dict[int, dict] = {}
     if facet_filters is not None:
@@ -1098,34 +1106,21 @@ def search_many(
             if unit == "mi":
                 mi_qs.append(i)
 
-    from seekstorm_spark.query.result_cache import (
-        cacheable_plan,
-        cached_single_term,
-    )
-
-    use_cache = not staged and fields is None and field_filter is None
-    cached_by_q: dict[int, list] = {}
+    cached: list[tuple[int, int, float]] = []
     fused: list[tuple[int, QueryPlan]] = []
     for i, plan in enumerate(plans):
         if plan.missing_required or not plan.pos_terms:
             continue  # no results by construction
-        if (
-            use_cache
-            and filters_by_q.get(i) is None
-            and geo_by_q.get(i) is None
-            and i not in dist_sort_by_q
-            and cacheable_plan(plan)
-        ):
-            # frequent-term result cache: this query's top-k is
-            # already precomputed — serve it as a local-relation
-            # branch and keep its terms OUT of the fused scan
-            hit = cached_single_term(
-                store, next(iter(plan.pos_terms)), top_k
-            )
-            if hit is not None:
-                cached_by_q[i] = hit[:top_k]
-                continue
-        fused.append((i, plan))
+        # a cached query's rows become a local-relation branch and its
+        # terms stay OUT of the fused scan
+        hit = _cached_hit(
+            store, plan, top_k, staged, fields, field_filter,
+            (filters_by_q.get(i), geo_by_q.get(i), dist_sort_by_q.get(i)),
+        )
+        if hit is None:
+            fused.append((i, plan))
+        else:
+            cached.extend((i, d, sc) for d, sc in hit[:top_k])
 
     with_dist = result_sorts is not None
     out_schema = "query_id int, " + RESULT_SCHEMA + (
@@ -1137,8 +1132,8 @@ def search_many(
     outs: list[DataFrame] = []
     if fused:
         partials = _run_kernel(
-            spark, store, fused, top_k, prune, avgdl, boosts, allowed,
-            staged=staged,
+            spark, store, fused, top_k, prune,
+            fields=fields, field_filter=field_filter, staged=staged,
             facet_filters_by_q=filters_by_q or None,
             geo_by_q=geo_by_q or None,
             dist_sort_by_q=dist_sort_by_q if with_dist else None,
@@ -1177,19 +1172,8 @@ def search_many(
                 .filter(F.col("rn") <= top_k)
                 .select(*out_cols)
             )
-    flat_cached = [
-        (qi, d, s) for qi, rows in cached_by_q.items() for d, s in rows
-    ]
-    if flat_cached:
-        values = ", ".join(
-            f"(CAST({int(qi)} AS INT), CAST({int(d)} AS BIGINT), "
-            f"CAST({s!r} AS FLOAT))"
-            for qi, d, s in flat_cached
-        )
-        cdf = spark.sql(
-            f"SELECT query_id, docid, score FROM (VALUES {values}) "
-            "AS t(query_id, docid, score)"
-        )
+    if cached:
+        cdf = _cached_values(spark, cached)
         if with_dist:
             cdf = cdf.withColumn(
                 "geo_dist", F.lit(float("nan")).cast("double")
@@ -1307,6 +1291,65 @@ def search_many_hybrid(
     )
 
 
+def _count_core(
+    spark: SparkSession,
+    store: IndexStore,
+    items: list[tuple[int, QueryPlan, dict, dict | None]],
+    field_filter: list[str] | None,
+    staged: list | None,
+) -> tuple[dict[int, int], DataFrame | None]:
+    """Match counts for [(query_id, plan, facet filter spec, geo
+    filter)] → ({query_id: count} answered by a df shortcut, the
+    count-mode kernel's (query_id, matches) rows for the rest, or None).
+    Queries that cannot match are in neither (count 0).
+
+    The stored df of a single positive term (reference
+    single.rs:313-323), or of a covering gram, IS the count — zero
+    Spark jobs, staged partials included. Not under NOT terms, a
+    field_filter (df counts ANY field), deletes or facet/geo filters.
+    One query alone in the kernel gets its filters' zone-bound skip."""
+    has_deletes = os.path.exists(store.deletes_path)
+    counts: dict[int, int] = {}
+    rest: list[tuple[int, QueryPlan, dict, dict | None]] = []
+    for qi, plan, filters_k, geo_filter in items:
+        if plan.missing_required or not plan.pos_terms:
+            continue
+        probe = None
+        if (
+            not plan.not_terms
+            and field_filter is None
+            and not has_deletes
+            and not filters_k
+            and geo_filter is None
+        ):
+            if len(plan.pos_terms) == 1 and plan.qtype not in (
+                "phrase", "ngram",
+            ):
+                probe = next(iter(plan.pos_terms))
+            elif plan.qtype == "ngram":
+                probe = plan.units[0][0]
+        if probe is None:
+            rest.append((qi, plan, filters_k, geo_filter))
+        else:
+            counts[qi] = int(
+                _probe_term_stats(store, [probe], staged).get(probe, 0)
+            )
+    if not rest:
+        return counts, None
+    block_bounds = None
+    if len(rest) == 1:
+        _qi, _plan1, filters_k, geo_filter = rest[0]
+        block_bounds = _block_bounds(geo_filter, filters_k)
+    out = _run_kernel(
+        spark, store, [(qi, plan) for qi, plan, _fk, _gf in rest], 0, False,
+        field_filter=field_filter, staged=staged, block_bounds=block_bounds,
+        count_only=True,
+        facet_filters_by_q={qi: fk for qi, _p, fk, _gf in rest if fk} or None,
+        geo_by_q={qi: gf for qi, _p, _fk, gf in rest if gf} or None,
+    )
+    return counts, out
+
+
 def count_matches_many(
     spark: SparkSession,
     store: IndexStore,
@@ -1317,57 +1360,73 @@ def count_matches_many(
 ) -> list[int]:
     """Exact match counts for N queries — zero or ONE Spark action.
 
-    Per-query df shortcuts answer driver-side (single terms and
-    covering grams read their stored df from the pyarrow stat probe,
-    as in :func:`count_matches`); everything else shares one fused
-    scan + kernel in count mode; ``staged`` level-0 batches join both
-    (the df probe sums their partials, the scan reads their rows)."""
+    Same count core as :func:`count_matches` (:func:`_count_core`):
+    df shortcuts answer driver-side, the other queries share one
+    fused count-mode scan, summed per ``query_id``; ``staged``
+    level-0 batches join both."""
+    staged = list(staged) if staged else None
+    items = [
+        (i, _plan(spark, store, qstr, default_type, staged), {}, None)
+        for i, qstr in enumerate(queries)
+    ]
+    counts, rest = _count_core(spark, store, items, field_filter, staged)
+    if rest is not None:
+        for r in (
+            rest.groupBy("query_id").agg(F.sum("matches").alias("m")).collect()
+        ):
+            counts[int(r["query_id"])] = int(r["m"] or 0)
+    return [counts.get(i, 0) for i in range(len(queries))]
+
+
+def _facet_tally(
+    spark: SparkSession,
+    store: IndexStore,
+    requests: list[tuple[str, dict]],
+    default_type: str,
+    staged: list | None,
+) -> tuple[DataFrame, list[int]] | None:
+    """Facet tallies for [(query, {facet label: (kind, bounds)})] in
+    ONE Spark action → ((query_id, facet, code, n) sums, the query_ids
+    that reached the kernel), or None when no query can match. The
+    matching queries share one fused scan joined with the blocks'
+    facet arrays; the count-mode kernel decodes each block's buffer
+    once for all of them (``count_facets_by_q``)."""
     staged = list(staged) if staged else None
     plans = [
-        _plan(spark, store, qstr, default_type, staged) for qstr in queries
+        _plan(spark, store, qstr, default_type, staged)
+        for qstr, _spec in requests
     ]
-    boosts, allowed = _resolve_fields(store, None, field_filter)
-    _n, avgdl = _effective_stats(store, staged)
-    import os
-
-    has_deletes = os.path.exists(store.deletes_path)
-    counts = dict.fromkeys(range(len(queries)), 0)
-    kernel_plans: list[tuple[int, QueryPlan]] = []
-    for i, plan in enumerate(plans):
-        if plan.missing_required or not plan.pos_terms:
-            continue
-        if (
-            len(plan.pos_terms) == 1
-            and not plan.not_terms
-            and plan.qtype not in ("phrase", "ngram")
-            and field_filter is None
-            and not has_deletes
-        ):
-            term = next(iter(plan.pos_terms))
-            counts[i] = int(
-                _probe_term_stats(store, [term], staged).get(term, 0)
-            )
-            continue
-        if plan.qtype == "ngram" and field_filter is None and not has_deletes:
-            gram = plan.units[0][0]
-            counts[i] = int(
-                _probe_term_stats(store, [gram], staged).get(gram, 0)
-            )
-            continue
-        kernel_plans.append((i, plan))
-    if kernel_plans:
-        out = (
-            _run_kernel(
-                spark, store, kernel_plans, 0, False, avgdl, boosts,
-                allowed, staged=staged, count_only=True,
-            )
-            .groupBy("query_id")
-            .agg(F.sum("matches").alias("m"))
-            .collect()
+    count_facets_by_q = {
+        i: spec
+        for i, ((_q, spec), plan) in enumerate(zip(requests, plans))
+        if not plan.missing_required and plan.pos_terms
+    }
+    if not count_facets_by_q:
+        return None
+    agg = (
+        _run_kernel(
+            spark, store, [(i, plans[i]) for i in count_facets_by_q], 0,
+            False, staged=staged, count_only=True,
+            count_facets_by_q=count_facets_by_q,
         )
-        for r in out:
-            counts[int(r["query_id"])] = int(r["m"] or 0)
-    return [counts[i] for i in range(len(queries))]
+        .groupBy("query_id", "facet", "code")
+        .agg(F.sum("matches").cast("long").alias("n"))
+    )
+    return agg, list(count_facets_by_q)
+
+
+def _bucket_lo(bounds_by_q: dict[int, dict[str, list[float]]]):
+    """``bucket_lo`` of a bucket tally row: the lower bound its
+    ``code`` indexes, keyed on (query_id, facet) — bound sets may
+    differ between queries."""
+    decode = F.lit(None).cast("double")
+    for qi, by_facet in bounds_by_q.items():
+        for fc, bs in by_facet.items():
+            decode = F.when(
+                (F.col("query_id") == qi) & (F.col("facet") == fc),
+                F.element_at(double_array(bs), F.col("code").cast("int") + 1),
+            ).otherwise(decode)
+    return decode.alias("bucket_lo")
 
 
 def facet_counts_many(
@@ -1381,57 +1440,38 @@ def facet_counts_many(
     DataFrame(query_id, facet, value, n).
 
     ``requests`` is a list of (query, string/string_set facet names);
-    ``query_id`` is the position in the list. Every query's matching
-    docs are found by the same fused union-of-terms scan
-    :func:`search_many` uses, the blocks' facet arrays join into that
-    single action, and one kernel decodes each block's facet buffer
-    once and tallies it against every query's candidates — per-query
-    results identical to :func:`facet_counts` (the reference counts
-    facets during result collection, add_result.rs:487-646; its server
-    amortizes concurrent queries against the same in-RAM facet columns
-    the same way). Numeric range facets have their own batched twin,
+    ``query_id`` is the position in the list. The tally core
+    (:func:`_facet_tally`) finds every query's matching docs in the
+    same fused union-of-terms scan :func:`search_many` uses and
+    tallies each block's facet buffer, decoded once, against every
+    query's candidates — per-query results identical to
+    :func:`facet_counts` (the reference counts facets during result
+    collection, add_result.rs:487-646; its server amortizes
+    concurrent queries against the same in-RAM facet columns the same
+    way). Numeric range facets have their own batched twin,
     :func:`facet_range_counts_many`. ``staged`` level-0 batches join
     the same scan."""
-    staged = list(staged) if staged else None
     specs: dict = store.meta.get("facets") or {}
-    empty = spark.createDataFrame(
-        [], "query_id int, facet string, value string, n long"
-    )
     all_facets: set[str] = set()
     for _qstr, fcs in requests:
         for fc in fcs:
             if fc not in specs or facet_values(specs[fc]) is None:
                 raise ValueError(f"{fc!r} is not an indexed string facet")
             all_facets.add(fc)
-    plans = [
-        _plan(spark, store, qstr, default_type, staged)
-        for qstr, _fcs in requests
-    ]
-    boosts, allowed = _resolve_fields(store, None, None)
-    _n, avgdl = _effective_stats(store, staged)
-    fused: list[tuple[int, QueryPlan]] = []
-    count_facets_by_q: dict[int, dict] = {}
-    for i, plan in enumerate(plans):
-        if plan.missing_required or not plan.pos_terms:
-            continue
-        fused.append((i, plan))
-        count_facets_by_q[i] = {
-            fc: (facet_kind(specs[fc]), None) for fc in requests[i][1]
-        }
-    if not fused:
-        return empty
-    agg = (
-        _run_kernel(
-            spark, store, fused, 0, False, avgdl, boosts, allowed,
-            staged=staged,
-            count_only=True,
-            count_facets_by_q=count_facets_by_q,
-        )
-        .groupBy("query_id", "facet", "code")
-        .agg(F.sum("matches").cast("long").alias("n"))
+    tally = _facet_tally(
+        spark, store,
+        [
+            (qstr, {fc: (facet_kind(specs[fc]), None) for fc in fcs})
+            for qstr, fcs in requests
+        ],
+        default_type, staged,
     )
+    if tally is None:
+        return spark.createDataFrame(
+            [], "query_id int, facet string, value string, n long"
+        )
     decoded = _decode_string_codes(
-        spark, agg, {fc: facet_values(specs[fc]) for fc in all_facets},
+        spark, tally[0], {fc: facet_values(specs[fc]) for fc in all_facets},
         out_col="value",
     )
     return decoded.select("query_id", "facet", "value", "n")
@@ -1450,64 +1490,39 @@ def facet_range_counts_many(
 
     ``requests`` is a list of (query, {facet: ascending lower
     bounds}); bucket sets may differ between queries for the same
-    facet. Same fused scan + shared per-block buffer decode as
-    :func:`facet_counts_many`; per-query semantics identical to
+    facet. Same tally core (:func:`_facet_tally`) as
+    :func:`facet_counts_many`, then the bucket decoder
+    (:func:`_bucket_lo`); per-query semantics identical to
     :func:`facet_range_counts`; ``staged`` level-0 batches join the
     same scan."""
-    staged = list(staged) if staged else None
     specs: dict = store.meta.get("facets") or {}
-    base_cols = "query_id int, facet string, bucket_lo double, n long"
-    empty = spark.createDataFrame(
-        [],
-        base_cols + (", n_cumulative long" if cumulative else ""),
-    )
     for _q, ranges in requests:
         for fc in ranges:
             if fc not in specs or facet_kind(specs[fc]) != "numeric":
                 raise ValueError(
                     f"{fc!r} is not an indexed numeric facet"
                 )
-    plans = [
-        _plan(spark, store, qstr, default_type, staged)
-        for qstr, _r in requests
+    bounds = [
+        {fc: sorted(float(b) for b in bs) for fc, bs in ranges.items()}
+        for _q, ranges in requests
     ]
-    boosts, allowed = _resolve_fields(store, None, None)
-    _n, avgdl = _effective_stats(store, staged)
-    fused: list[tuple[int, QueryPlan]] = []
-    count_facets_by_q: dict[int, dict] = {}
-    bounds_by_qf: dict[tuple[int, str], list[float]] = {}
-    for i, plan in enumerate(plans):
-        if plan.missing_required or not plan.pos_terms:
-            continue
-        fused.append((i, plan))
-        spec: dict = {}
-        for fc, bounds in requests[i][1].items():
-            bs = sorted(float(b) for b in bounds)
-            spec[fc] = ("numeric", np.asarray(bs, dtype=np.float64))
-            bounds_by_qf[(i, fc)] = bs
-        count_facets_by_q[i] = spec
-    if not fused:
-        return empty
-    agg = (
-        _run_kernel(
-            spark, store, fused, 0, False, avgdl, boosts, allowed,
-            staged=staged,
-            count_only=True,
-            count_facets_by_q=count_facets_by_q,
-        )
-        .groupBy("query_id", "facet", "code")
-        .agg(F.sum("matches").cast("long").alias("n"))
+    specs_by_q = [
+        {fc: ("numeric", np.asarray(bs, dtype=np.float64)) for fc, bs in b.items()}
+        for b in bounds
+    ]
+    tally = _facet_tally(
+        spark, store, [(q, sp) for (q, _r), sp in zip(requests, specs_by_q)],
+        default_type, staged,
     )
-    # bucket decode keys on (query_id, facet): bound sets may differ
-    decode = F.lit(None).cast("double")
-    for (qi, fc), bs in bounds_by_qf.items():
-        arr = double_array(bs)
-        decode = F.when(
-            (F.col("query_id") == qi) & (F.col("facet") == fc),
-            F.element_at(arr, F.col("code").cast("int") + 1),
-        ).otherwise(decode)
+    if tally is None:
+        return spark.createDataFrame(
+            [],
+            "query_id int, facet string, bucket_lo double, n long"
+            + (", n_cumulative long" if cumulative else ""),
+        )
+    agg, kept = tally
     out = agg.select(
-        "query_id", "facet", decode.alias("bucket_lo"), "n"
+        "query_id", "facet", _bucket_lo({qi: bounds[qi] for qi in kept}), "n"
     )
     if cumulative:
         w = (
@@ -1650,8 +1665,12 @@ def _posting_rows(
         # a block's rows must meet in one partition. One scan term in
         # one field with nothing staged skips the exchange: every doc's
         # posting then sits in exactly one row, so a block may be
-        # processed in pieces
-        rows = rows.repartition("block_id")
+        # processed in pieces. The explicit partition count keeps the
+        # blocks parallel under AQE, which coalesces a column-only
+        # repartition of a small scan into one partition
+        rows = rows.repartition(
+            int(spark.conf.get("spark.sql.shuffle.partitions")), "block_id"
+        )
     if facet_cols:
         rows = _join_facet_blocks(
             spark, store, rows, facet_cols, staged,
@@ -1738,9 +1757,8 @@ def _run_kernel(
     idx_plans: list[tuple[int, QueryPlan]],
     top_k: int,
     prune: bool,
-    avgdl: float,
-    boosts: dict[int, float],
-    allowed: list[int] | None = None,
+    fields: list[tuple[str, float]] | None = None,
+    field_filter: list[str] | None = None,
     staged: list | None = None,
     block_bounds: dict[str, list[tuple[float, float]]] | None = None,
     **opts,
@@ -1749,7 +1767,11 @@ def _run_kernel(
     facet column the kernel options read), sort them within their
     partitions by (shard, block_id, term, field) and run one
     :func:`_make_kernel` over them → the kernel's per-partition
-    output, which always leads with ``query_id``. ``opts`` pass
+    output, which always leads with ``query_id``. Every query caller
+    runs through here: ``search``, ``search_many``, ``match_docids``,
+    :func:`_count_core` and :func:`_facet_tally`. ``fields`` /
+    ``field_filter`` resolve here to boosts and allowed fields, and
+    avgdl to the index's plus any ``staged`` batches'. ``opts`` pass
     through to the kernel; the index's block size, delete set and
     facet kinds/sizes are filled in here.
 
@@ -1758,6 +1780,8 @@ def _run_kernel(
     never be skipped), so the key threshold tightens as early as
     possible. Pre-v5 facet files carry no bounds; the default order
     applies then."""
+    boosts, allowed = _resolve_fields(store, fields, field_filter)
+    _n, avgdl = _effective_stats(store, staged)
     specs: dict = store.meta.get("facets") or {}
     kinds = {name: facet_kind(spec) for name, spec in specs.items()}
     sizes = {
@@ -2575,10 +2599,12 @@ def count_matches(
     optionally restricted by the same ``facet_filters`` / ``geo_filter``
     predicates ``search`` takes (the reference counts within filters too).
 
-    Single positive term without NOT/phrase/filters short-circuits to
-    the stored df (reference single.rs:313-323) — no scan at all. The
-    df probe already sums staged partials, so the shortcut stays valid
-    for realtime level-0 counts.
+    A one-query call of the count core :func:`count_matches_many`
+    uses (:func:`_count_core`): a single positive term or a covering
+    gram without NOT/filters/``field_filter``/deletes answers from
+    its stored df (reference single.rs:313-323) — no scan at all,
+    staged partials included; anything else runs the count-mode
+    kernel with the filters' zone-bound block skip, summed globally.
     """
     staged = list(staged) if staged else None
     geo_filter, _unit = _normalize_geo(geo_filter)
@@ -2586,47 +2612,13 @@ def count_matches(
         store, facet_filters, None, geo_filter
     )
     plan = _plan(spark, store, query, default_type, staged)
-    if plan.missing_required or not plan.pos_terms:
-        return 0
-    import os
-
-    has_deletes = os.path.exists(store.deletes_path)
-    filtered = bool(filters_k) or geo_filter is not None
-    if (
-        len(plan.pos_terms) == 1
-        and not plan.not_terms
-        and plan.qtype != "phrase"
-        and plan.qtype != "ngram"
-        and field_filter is None  # stored df counts matches in ANY field
-        and not has_deletes  # stored df doesn't reflect the delete set
-        and not filtered  # predicates need the per-block facet arrays
-    ):
-        # zero Spark jobs: the stored df IS the count (single.rs:313-323)
-        term = next(iter(plan.pos_terms))
-        return int(_probe_term_stats(store, [term], staged).get(term, 0))
-    if (
-        plan.qtype == "ngram" and field_filter is None and not has_deletes
-        and not filtered
-    ):
-        # the covering gram's stored df IS the phrase match count
-        gram = plan.units[0][0]
-        return int(_probe_term_stats(store, [gram], staged).get(gram, 0))
-
-    boosts, allowed = _resolve_fields(store, None, field_filter)
-    _n, avgdl = _effective_stats(store, staged)
-    out = (
-        _run_kernel(
-            spark, store, [(0, plan)], 0, False, avgdl, boosts, allowed,
-            staged=staged,
-            block_bounds=_block_bounds(geo_filter, filters_k),
-            count_only=True,
-            facet_filters_by_q={0: filters_k},
-            geo_by_q={0: geo_filter} if geo_filter else None,
-        )
-        .agg(F.sum("matches"))
-        .collect()[0][0]
+    counts, rest = _count_core(
+        spark, store, [(0, plan, filters_k, geo_filter)], field_filter,
+        staged,
     )
-    return int(out or 0)
+    if rest is None:
+        return counts.get(0, 0)
+    return int(rest.agg(F.sum("matches")).collect()[0][0] or 0)
 
 
 def facet_counts(
@@ -2756,17 +2748,14 @@ def geo_range_counts_many(
     → DataFrame(query_id, facet, bucket_lo, n). ``requests`` =
     [(query, spec)] with spec = {"base": (lat, lon), "ranges": [...],
     "facet": point_col | ("lat": .., "lon": ..), "unit": "km"|"mi"} —
-    per-query bases/buckets/units may differ. Same fused scan +
-    shared per-block buffer decode as :func:`facet_counts_many`;
-    per-query ≡ :func:`geo_range_counts`; ``staged`` level-0 batches
-    join the same scan."""
+    per-query bases/buckets/units may differ. Same tally core
+    (:func:`_facet_tally`) and bucket decoder as
+    :func:`facet_range_counts_many`; per-query ≡
+    :func:`geo_range_counts`; ``staged`` level-0 batches join the same
+    scan."""
     from seekstorm_spark.functions.geo import KM_PER_MILE
 
-    staged = list(staged) if staged else None
     specs: dict = store.meta.get("facets") or {}
-    empty = spark.createDataFrame(
-        [], "query_id int, facet string, bucket_lo double, n long"
-    )
 
     def _norm_req(spec: dict):
         unit = spec.get("unit", "km")
@@ -2801,43 +2790,23 @@ def geo_range_counts_many(
         ), out_bounds
 
     normed = [_norm_req(spec) for _q, spec in requests]
-    plans = [
-        _plan(spark, store, qstr, default_type, staged)
-        for qstr, _s in requests
-    ]
-    boosts, allowed = _resolve_fields(store, None, None)
-    _n, avgdl = _effective_stats(store, staged)
-    fused: list[tuple[int, QueryPlan]] = []
-    count_facets_by_q: dict[int, dict] = {}
-    bounds_by_qf: dict[tuple[int, str], list[float]] = {}
-    for i, plan in enumerate(plans):
-        if plan.missing_required or not plan.pos_terms:
-            continue
-        fused.append((i, plan))
-        label, gspec, out_bounds = normed[i]
-        count_facets_by_q[i] = {label: ("geo", gspec)}
-        bounds_by_qf[(i, label)] = out_bounds
-    if not fused:
-        return empty
-    agg = (
-        _run_kernel(
-            spark, store, fused, 0, False, avgdl, boosts, allowed,
-            staged=staged,
-            count_only=True,
-            count_facets_by_q=count_facets_by_q,
-        )
-        .groupBy("query_id", "facet", "code")
-        .agg(F.sum("matches").cast("long").alias("n"))
+    tally = _facet_tally(
+        spark, store,
+        [
+            (qstr, {label: ("geo", gspec)})
+            for (qstr, _s), (label, gspec, _b) in zip(requests, normed)
+        ],
+        default_type, staged,
     )
-    decode = F.lit(None).cast("double")
-    for (qi, fc), bs in bounds_by_qf.items():
-        arr = double_array(bs)
-        decode = F.when(
-            (F.col("query_id") == qi) & (F.col("facet") == fc),
-            F.element_at(arr, F.col("code").cast("int") + 1),
-        ).otherwise(decode)
+    if tally is None:
+        return spark.createDataFrame(
+            [], "query_id int, facet string, bucket_lo double, n long"
+        )
+    agg, kept = tally
     return agg.select(
-        "query_id", "facet", decode.alias("bucket_lo"), "n"
+        "query_id", "facet",
+        _bucket_lo({qi: {normed[qi][0]: normed[qi][2]} for qi in kept}),
+        "n",
     )
 
 
@@ -3024,11 +2993,8 @@ def match_docids(
     plan = _plan(spark, store, query, default_type, staged)
     if plan.missing_required or not plan.pos_terms:
         return spark.createDataFrame([], "docid long")
-    boosts, allowed = _resolve_fields(store, None, None)
-    _n, avgdl = _effective_stats(store, staged)
     return _run_kernel(
-        spark, store, [(0, plan)], 0, False, avgdl, boosts, allowed,
-        staged=staged, emit_all=True,
+        spark, store, [(0, plan)], 0, False, staged=staged, emit_all=True,
     ).select("docid")
 
 

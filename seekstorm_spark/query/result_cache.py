@@ -19,9 +19,10 @@ cache-rebuild-per-commit semantics.
 
 Serve: `cached_single_term` memoizes the decoded parquet per
 (path, generation) and answers from a dict of numpy-backed rows.
-`search()` consults it automatically for eligible plans (single
-positive term, no NOT/phrase/facets/geo/sort/fields/staged) and
-returns a LocalTableScan DataFrame — no job, no scan.
+`search()` and `search_many()` consult it automatically for eligible
+plans (single positive term, no NOT/phrase/facets/geo/sort/fields/
+staged; one rule, `engine._cached_hit`) and serve a LocalTableScan
+DataFrame — no job, no scan.
 """
 
 from __future__ import annotations
@@ -43,11 +44,11 @@ _SERVE_CACHE: dict[str, tuple[tuple, int, dict]] = {}
 
 def cacheable_plan(plan) -> bool:
     """The ONE definition of plan-level cache eligibility, shared by
-    the build path (which keys the cache) and the serve path in
-    ``search()`` (which consults it): exactly one positive term,
-    plain union/intersection, no NOT terms, no phrase, no gram units.
-    Search-level arguments (filters, sorts, fields, staged) are the
-    serve path's own checks."""
+    the build path (which keys the cache) and the serve path
+    (``engine._cached_hit``, which consults it): exactly one positive
+    term, plain union/intersection, no NOT terms, no phrase, no gram
+    units. Search-level arguments (filters, sorts, fields, staged) are
+    the serve path's own checks."""
     return (
         plan.qtype in ("union", "intersection")
         and len(plan.pos_terms) == 1

@@ -68,10 +68,7 @@ def _warm_session(spark: SparkSession) -> None:
     reasoning bench.py applies when it warms Python workers before its
     timed build window ("measure the job, not process spawn"). A warm
     pool is standard practice for serving/ETL sessions; ~1.5 s once
-    per session, independent of any data. Disable with
-    SEEKSTORM_SESSION_WARMUP=0."""
-    if os.environ.get("SEEKSTORM_SESSION_WARMUP", "1") != "1":
-        return
+    per session, independent of any data. Runs once per SparkContext."""
     sc = spark.sparkContext
     if getattr(sc, "_seekstorm_warmed", False):
         return

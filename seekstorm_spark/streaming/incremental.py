@@ -93,7 +93,7 @@ from seekstorm_spark.index.store import (
     TERM_STATS_DDL,
     IndexStore,
 )
-from seekstorm_spark.quantization import decode_lengths
+from seekstorm_spark.quantization import avgdl_f32, length_stats
 
 
 @dataclass
@@ -642,13 +642,7 @@ def stage_batch(
     else:
         hist = _write_table(spark, meta, docs, stage, text_col)
 
-    batch_n = int(sum(c for (fid, _b), c in hist.items() if fid == 0))
-    batch_pos_sum = int(
-        sum(
-            int(decode_lengths(np.array([b]))[0]) * c
-            for (_f, b), c in hist.items()
-        )
-    )
+    batch_n, batch_pos_sum = length_stats(hist)
     if next_docid is None:
         next_docid = base_docid + batch_n
     staged = StagedBatch(
@@ -695,9 +689,7 @@ def commit_batch(
         {
             "n_docs": n_docs,
             "positions_sum_normalized": pos_sum,
-            "avgdl": float(np.float32(pos_sum) / np.float32(n_docs))
-            if n_docs
-            else 1.0,
+            "avgdl": avgdl_f32(pos_sum, n_docs),
             "next_docid": max(int(meta.get("next_docid", 0)), staged.next_docid),
             "applied_batches": applied,
             "complete": True,

@@ -35,6 +35,7 @@ PHRASES = [
     '"term00001 term00000"',
     '"term00002 term00003"',
     '"term00000 term00002"',
+    '"term00000 term00001" -term00002',  # NOT: no gram-df count shortcut
 ]
 
 

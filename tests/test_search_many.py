@@ -189,7 +189,16 @@ def test_search_many_ngram_index(spark, tmp_path):
 
 
 def test_count_matches_many_identical_to_count(spark, built):
-    from seekstorm_spark.query.engine import count_matches, count_matches_many
+    """count_matches and count_matches_many share one count core, so
+    both must also equal match_docids(...).count() — the emit-all
+    kernel, with no df shortcut and no count mode — with and without
+    field_filter=["text"] (the only field), which turns the df
+    shortcuts off."""
+    from seekstorm_spark.query.engine import (
+        count_matches,
+        count_matches_many,
+        match_docids,
+    )
 
     qs = [
         "term00000 term00001",
@@ -200,9 +209,14 @@ def test_count_matches_many_identical_to_count(spark, built):
         "+zzzmissing +term00000",         # empty
         "@@@",
     ]
-    got = count_matches_many(spark, built, qs)
-    want = [count_matches(spark, built, q) for q in qs]
-    assert got == want
+    independent = [match_docids(spark, built, q).count() for q in qs]
+    for field_filter in (None, ["text"]):
+        got = count_matches_many(spark, built, qs, field_filter=field_filter)
+        want = [
+            count_matches(spark, built, q, field_filter=field_filter)
+            for q in qs
+        ]
+        assert got == want == independent, field_filter
     assert got[5] == 0 and got[6] == 0 and got[3] > 0
 
 
