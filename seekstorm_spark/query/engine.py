@@ -264,6 +264,11 @@ def _segment_phrase(
     return units
 
 
+def _check_similarity(similarity: str) -> None:
+    if similarity not in ("bm25f", "bm25f_proximity"):
+        raise ValueError(f"unknown similarity {similarity!r}")
+
+
 def _plan(
     spark: SparkSession,
     store: IndexStore,
@@ -275,8 +280,7 @@ def _plan(
     similarity: str = "bm25f",
     rewrite_options: dict | None = None,
 ) -> QueryPlan:
-    if similarity not in ("bm25f", "bm25f_proximity"):
-        raise ValueError(f"unknown similarity {similarity!r}")
+    _check_similarity(similarity)
     meta = store.meta
     stop_words = frozenset(meta.get("stop_words") or []) or None
     pq: ParsedQuery = parse_query(
@@ -639,20 +643,21 @@ def _cached_hit(
     staged: list | None,
     fields: list[tuple[str, float]] | None,
     field_filter: list[str] | None,
-    filters: tuple,
+    filtered: bool,
 ) -> list[tuple[int, float]] | None:
     """The frequent-term result cache's top-``need_k`` (docid, score)
     rows for ``plan`` (reference search.rs:3388-3445), or None. It may
-    serve a single cacheable term with nothing staged and no fields,
-    field filter or per-query filter / sort (``filters``, None when
-    unset); an append / delete / compaction disables it until rebuilt."""
+    serve a single cacheable term with nothing staged, no fields or
+    field filter, and no per-query facet / geo filter or sort
+    (``filtered``); an append / delete / compaction disables it until
+    rebuilt."""
     from seekstorm_spark.query import result_cache
 
     if (
         staged
         or fields is not None
         or field_filter is not None
-        or any(f is not None for f in filters)
+        or filtered
         or not result_cache.cacheable_plan(plan)
     ):
         return None
@@ -661,11 +666,13 @@ def _cached_hit(
     )
 
 
-def _cached_values(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    """Cached (docid, score) or (query_id, docid, score) rows as a
-    VALUES literal — a LocalTableScan: collect() runs driver-side with
-    NO Spark job; repr(float) round-trips the f32 score exactly."""
-    with_qid = len(rows[0]) == 3
+def _cached_values(
+    spark: SparkSession, rows: list[tuple], with_qid: bool
+) -> DataFrame:
+    """Cached (docid, score) rows — (query_id, docid, score) when
+    ``with_qid`` — as a VALUES literal: a LocalTableScan, whose
+    collect() runs driver-side with NO Spark job; repr(float)
+    round-trips the f32 score exactly."""
     cols = "query_id, docid, score" if with_qid else "docid, score"
     values = ", ".join(
         "("
@@ -828,13 +835,17 @@ def search(
 
     hit = _cached_hit(
         store, plan, top_k + offset, staged, fields, field_filter,
-        (facet_filters, result_sort, geo_filter),
+        filtered=(
+            facet_filters is not None
+            or result_sort is not None
+            or geo_filter is not None
+        ),
     )
     if hit is not None:
         rows = hit[offset : offset + top_k]
         if not rows:
             return spark.createDataFrame([], RESULT_SCHEMA)
-        return _cached_values(spark, rows)
+        return _cached_values(spark, rows, with_qid=False)
 
     need_k = top_k + offset
     emit_all = bool(result_sort)
@@ -1060,6 +1071,10 @@ def search_many(
     and their rows cost no Spark work, exactly as in ``search``."""
     from functools import reduce
 
+    # reject an unknown field or similarity even when no query
+    # reaches the kernel (an empty batch, or none that can match)
+    _check_similarity(similarity)
+    _resolve_fields(store, fields, field_filter)
     if facet_filters is not None and len(facet_filters) != len(queries):
         raise ValueError("facet_filters must parallel queries")
     if geo_filters is not None and len(geo_filters) != len(queries):
@@ -1115,7 +1130,9 @@ def search_many(
         # terms stay OUT of the fused scan
         hit = _cached_hit(
             store, plan, top_k, staged, fields, field_filter,
-            (filters_by_q.get(i), geo_by_q.get(i), dist_sort_by_q.get(i)),
+            filtered=(
+                i in filters_by_q or i in geo_by_q or i in dist_sort_by_q
+            ),
         )
         if hit is None:
             fused.append((i, plan))
@@ -1173,7 +1190,7 @@ def search_many(
                 .select(*out_cols)
             )
     if cached:
-        cdf = _cached_values(spark, cached)
+        cdf = _cached_values(spark, cached, with_qid=True)
         if with_dist:
             cdf = cdf.withColumn(
                 "geo_dist", F.lit(float("nan")).cast("double")
@@ -1308,6 +1325,8 @@ def _count_core(
     Spark jobs, staged partials included. Not under NOT terms, a
     field_filter (df counts ANY field), deletes or facet/geo filters.
     One query alone in the kernel gets its filters' zone-bound skip."""
+    # reject an unknown field even when no query reaches the kernel
+    _resolve_fields(store, None, field_filter)
     has_deletes = os.path.exists(store.deletes_path)
     counts: dict[int, int] = {}
     rest: list[tuple[int, QueryPlan, dict, dict | None]] = []
@@ -1665,12 +1684,8 @@ def _posting_rows(
         # a block's rows must meet in one partition. One scan term in
         # one field with nothing staged skips the exchange: every doc's
         # posting then sits in exactly one row, so a block may be
-        # processed in pieces. The explicit partition count keeps the
-        # blocks parallel under AQE, which coalesces a column-only
-        # repartition of a small scan into one partition
-        rows = rows.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "block_id"
-        )
+        # processed in pieces
+        rows = rows.repartition("block_id")
     if facet_cols:
         rows = _join_facet_blocks(
             spark, store, rows, facet_cols, staged,

@@ -11,7 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from seekstorm_spark.index.builder import IndexBuilder
-from seekstorm_spark.query.engine import count_matches, search
+from seekstorm_spark.query.engine import (
+    count_matches,
+    count_matches_many,
+    search,
+    search_many,
+)
 
 DOCS = [
     # (title, body)
@@ -118,6 +123,15 @@ def test_phrase_within_single_field(spark, mf_store):
 def test_unknown_field_raises(spark, mf_store):
     with pytest.raises(ValueError):
         search(spark, mf_store, "fast", fields=[("nope", 2.0)])
+    # also when no query reaches the kernel (none can match)
+    with pytest.raises(ValueError):
+        search_many(spark, mf_store, ["@@@"], fields=[("nope", 2.0)])
+    with pytest.raises(ValueError):
+        search_many(spark, mf_store, ["zzz"], field_filter=["nope"])
+    with pytest.raises(ValueError):
+        count_matches_many(spark, mf_store, ["@@@", "zzz"], field_filter=["nope"])
+    with pytest.raises(ValueError):
+        count_matches(spark, mf_store, "@@@", field_filter=["nope"])
 
 
 @pytest.fixture(scope="module")

@@ -240,3 +240,5 @@ def test_unknown_similarity_raises(spark, store):
         search(spark, store, "alpha", similarity="bm42")
     with pytest.raises(ValueError, match="similarity"):
         search_many(spark, store, ["alpha"], similarity="bm42")
+    with pytest.raises(ValueError, match="similarity"):
+        search_many(spark, store, [], similarity="bm42")

@@ -105,19 +105,6 @@ def test_kernel_skips_blocks_past_key_threshold(spark, priced_store):
     assert len(blocks_of(pruned_desc)) < len(blocks_of(full))
 
 
-def test_block_exchange_stays_parallel_under_aqe(spark, priced_store):
-    """A 2-term query's block exchange must spread the 8 blocks over
-    several partitions in an AQE-on session: AQE coalesces a
-    repartition by column alone of a small scan into ONE partition,
-    and every block would then run serially in one kernel task."""
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    plan = _plan(spark, priced_store, "term00000 term00001", "union")
-    rows, _n_shards = _posting_rows(spark, priced_store, [(0, plan)], None)
-    parts = rows.select(F.spark_partition_id().alias("p")).distinct()
-    assert rows.select("block_id").distinct().count() >= 6
-    assert parts.count() > 1
-
-
 def test_sorted_search_identical_to_unpruned(spark, priced_store):
     """search(result_sort=[numeric]) with the block skip on must be
     bit-identical to prune=False (which never skips), asc and desc,
