@@ -241,60 +241,56 @@ WHERE 1=1 {nots} {phr}
 def _wand_store(spark: SparkSession, sf_dir: str):
     """Build (once per sf_dir, cached on disk) a REAL inverted index
     over the documents table; wand_* queries search through it."""
-    import json
     import os
 
-    from seekstorm_spark.index.builder import (
-        INDEX_FORMAT_VERSION,
-        IndexBuilder,
-    )
-    from seekstorm_spark.index.store import IndexStore
+    from seekstorm_spark.index.builder import load_or_build
 
     name = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"/tmp/seekstorm_wand_idx_{name}"
-    meta = os.path.join(path, "meta.json")
-    if os.path.exists(meta):
-        with open(meta) as f:
-            m = json.load(f)
-        if (
-            m.get("complete")
-            and m.get("version") == INDEX_FORMAT_VERSION
-            and "lang" in (m.get("facets") or {})
-            and "n_chars" in (m.get("facets") or {})
-        ):
-            return IndexStore.open(path)
-    return IndexBuilder(
-        spark, path, n_buckets=8, facet_cols=["lang", "n_chars"]
-    ).build(_docs(spark, sf_dir), text_col="text", id_col="doc_id")
+    return load_or_build(
+        spark,
+        lambda: _docs(spark, sf_dir),
+        f"/tmp/seekstorm_wand_idx_{name}",
+        {"n_buckets": 8, "facet_cols": ["lang", "n_chars"]},
+        {"text_col": "text", "id_col": "doc_id"},
+        reuse=lambda m: "lang" in (m.get("facets") or {})
+        and "n_chars" in (m.get("facets") or {}),
+    )
 
 
 def _wandf_store(spark: SparkSession, sf_dir: str):
     """Two-field (text, source) index — the reference's default data
     model (per-field tf/positions, add_result.rs:1171-1426)."""
-    import json
     import os
 
-    from seekstorm_spark.index.builder import (
-        INDEX_FORMAT_VERSION,
-        IndexBuilder,
-    )
-    from seekstorm_spark.index.store import IndexStore
+    from seekstorm_spark.index.builder import load_or_build
 
     name = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"/tmp/seekstorm_wandf_idx_{name}"
-    meta = os.path.join(path, "meta.json")
-    if os.path.exists(meta):
-        with open(meta) as f:
-            m = json.load(f)
-        if (
-            m.get("complete")
-            and m.get("version") == INDEX_FORMAT_VERSION
-            and m.get("fields") == ["text", "source"]
-        ):
-            return IndexStore.open(path)
-    return IndexBuilder(
-        spark, path, n_buckets=8, fields=["text", "source"]
-    ).build(_docs(spark, sf_dir), id_col="doc_id")
+    return load_or_build(
+        spark,
+        lambda: _docs(spark, sf_dir),
+        f"/tmp/seekstorm_wandf_idx_{name}",
+        {"n_buckets": 8, "fields": ["text", "source"]},
+        {"id_col": "doc_id"},
+        reuse=lambda m: m.get("fields") == ["text", "source"],
+    )
+
+
+def _wandng_store(spark: SparkSession, sf_dir: str):
+    """Bigram n-gram index (frequent terms fast, table), shared by
+    wand_phrase_ngram and wand_phrase_proximity."""
+    import os
+
+    from seekstorm_spark.index.builder import load_or_build
+
+    name = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    return load_or_build(
+        spark,
+        lambda: _docs(spark, sf_dir),
+        f"/tmp/seekstorm_wandng_idx_{name}",
+        {"n_buckets": 8, "frequent_terms": ["fast", "table"]},
+        {"text_col": "text", "id_col": "doc_id"},
+        reuse=lambda m: m.get("frequent_terms"),
+    )
 
 
 def _wandf_query(
@@ -809,30 +805,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # sf0.01, 4 at sf0.001) while both terms exist — the returned page
     # is therefore the UNION top-10, which is what the oracle scores.
     def wand_fallback(s: SparkSession, d: str) -> DataFrame:
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
+        from seekstorm_spark.index.builder import load_or_build
         from seekstorm_spark.query.engine import search
 
         name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandfb_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION:
-                store = IndexStore.open(path)
-        if store is None:
-            store = IndexBuilder(s, path, n_buckets=4).build(
-                _docs(s, d).filter(F.col("doc_id") < 40),
-                text_col="text", id_col="doc_id",
-            )
+        store = load_or_build(
+            s,
+            lambda: _docs(s, d).filter(F.col("doc_id") < 40),
+            f"/tmp/seekstorm_wandfb_idx_{name}",
+            {"n_buckets": 4},
+            {"text_col": "text", "id_col": "doc_id"},
+        )
         strict_n = search(
             s, store, "+dup +query", top_k=10, default_type="union"
         ).count()
@@ -851,30 +836,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the positional phrase — scores must be identical, reference
     # NGRAM_SEARCH.md "faithful N-gram Bm25f")
     def wand_phrase_ngram(s: SparkSession, d: str) -> DataFrame:
-        import json
-        import os
-
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
         from seekstorm_spark.query.engine import _plan, search
 
-        name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandng_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and m.get("frequent_terms"):
-                store = IndexStore.open(path)
-        if store is None:
-            store = IndexBuilder(
-                s, path, n_buckets=8, frequent_terms=["fast", "table"]
-            ).build(_docs(s, d), text_col="text", id_col="doc_id")
+        store = _wandng_store(s, d)
         assert _plan(s, store, '"fast table"', "union").qtype == "ngram"
         out = search(s, store, '"fast table"', top_k=10, default_type="union")
         return out.select(
@@ -887,33 +851,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # first rewrite; reference NgramFFF, tokenizer.rs:898-1387,
     # index.rs:1833-1872) — same oracle as the positional phrase
     def wand_phrase_ngram3(s: SparkSession, d: str) -> DataFrame:
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            NGRAM_SEP,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
+        from seekstorm_spark.index.builder import NGRAM_SEP, load_or_build
         from seekstorm_spark.query.engine import _plan, search
 
         name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandng3_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and "fff" in (m.get("ngram_patterns") or []):
-                store = IndexStore.open(path)
-        if store is None:
-            store = IndexBuilder(
-                s, path, n_buckets=8,
-                frequent_terms=["fast", "table", "scan"],
-                ngram_patterns=["ff", "fff"],
-            ).build(_docs(s, d), text_col="text", id_col="doc_id")
+        store = load_or_build(
+            s,
+            lambda: _docs(s, d),
+            f"/tmp/seekstorm_wandng3_idx_{name}",
+            {
+                "n_buckets": 8,
+                "frequent_terms": ["fast", "table", "scan"],
+                "ngram_patterns": ["ff", "fff"],
+            },
+            {"text_col": "text", "id_col": "doc_id"},
+            reuse=lambda m: "fff" in (m.get("ngram_patterns") or []),
+        )
         plan = _plan(s, store, '"fast table scan"', "union")
         assert plan.qtype == "ngram"  # trigram rewrite engaged
         if plan.units:
@@ -932,34 +887,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # must equal the full-corpus oracle BEFORE any commit (reference
     # realtime_search.rs:921-2095)
     def wand_realtime(s: SparkSession, d: str) -> DataFrame:
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
+        from seekstorm_spark.index.builder import load_or_build
         from seekstorm_spark.query.engine import search
         from seekstorm_spark.streaming.incremental import stage_batch
 
         docs = _docs(s, d)
         half = int(docs.agg(F.max("doc_id")).collect()[0][0]) // 2 + 1
         name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandrt_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and m.get("n_docs") == half and not m.get("applied_batches"):
-                store = IndexStore.open(path)
-        if store is None:
-            store = IndexBuilder(s, path, n_buckets=8).build(
-                docs.filter(F.col("doc_id") < half),
-                text_col="text", id_col="doc_id",
-            )
+        store = load_or_build(
+            s,
+            docs.filter(F.col("doc_id") < half),
+            f"/tmp/seekstorm_wandrt_idx_{name}",
+            {"n_buckets": 8},
+            {"text_col": "text", "id_col": "doc_id"},
+            reuse=lambda m: m.get("n_docs") == half
+            and not m.get("applied_batches"),
+        )
         staged = stage_batch(
             s, store, docs.filter(F.col("doc_id") >= half),
             text_col="text", batch_id=1, id_col="doc_id",
@@ -1093,32 +1038,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # numeric facet arrays, haversine applied inside the kernel
     # (reference Point facets, search.rs:2712-2724)
     def _wandgeo_store(s: SparkSession, d: str):
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
+        from seekstorm_spark.index.builder import load_or_build
 
         name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandgeo_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and "lat" in (m.get("facets") or {}):
-                return IndexStore.open(path)
-        docs = (
-            _docs(s, d)
+        return load_or_build(
+            s,
+            lambda: _docs(s, d)
             .withColumn("lat", (F.col("doc_id") * 37 % 18000) / 100.0 - 90.0)
-            .withColumn("lon", (F.col("doc_id") * 73 % 36000) / 100.0 - 180.0)
+            .withColumn("lon", (F.col("doc_id") * 73 % 36000) / 100.0 - 180.0),
+            f"/tmp/seekstorm_wandgeo_idx_{name}",
+            {"n_buckets": 8, "facet_cols": ["lat", "lon"]},
+            {"text_col": "text", "id_col": "doc_id"},
+            reuse=lambda m: "lat" in (m.get("facets") or {}),
         )
-        return IndexBuilder(
-            s, path, n_buckets=8, facet_cols=["lat", "lon"]
-        ).build(docs, text_col="text", id_col="doc_id")
 
     _GEO_FILTER = {
         "lat": "lat", "lon": "lon",
@@ -1228,106 +1162,59 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Point facet (reference Point type, search.rs:2712-2724): ONE
     # [lat, lon] facet column → one interleaved per-block buffer;
     # filter + distance sort must equal the lat/lon-pair form (same
-    # oracle SQL as wand_geo_sort)
-    def wand_geo_point(s: SparkSession, d: str) -> DataFrame:
-        import json
-        import os
+    # oracle SQL as wand_geo_sort). wand_geo_morton stores the same
+    # column PACKED: one u64 Morton code per doc (i32×10^7 coordinate
+    # quantization, reference geo_search.rs:33) — half the buffer
+    # bytes of the pair form; the oracle mirrors the quantization
+    # exactly (trunc(x·10^7)/10^7 on both sides), so distances stay
+    # float64-identical
+    def _geo_point_query(kind: str):
+        def run(s: SparkSession, d: str) -> DataFrame:
+            import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
-        from seekstorm_spark.query.engine import search
+            from seekstorm_spark.index.builder import load_or_build
+            from seekstorm_spark.query.engine import search
 
-        name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandpt_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and (m.get("facets") or {}).get("location", {}).get("type") == "point":
-                store = IndexStore.open(path)
-        if store is None:
-            docs = _docs(s, d).withColumn(
-                "location",
-                F.array(
-                    (F.col("doc_id") * 37 % 18000) / 100.0 - 90.0,
-                    (F.col("doc_id") * 73 % 36000) / 100.0 - 180.0,
+            name = os.path.basename(d.rstrip("/")) or "sf"
+            tag = {"point": "wandpt", "morton": "wandmt"}[kind]
+            store = load_or_build(
+                s,
+                lambda: _docs(s, d).withColumn(
+                    "location",
+                    F.array(
+                        (F.col("doc_id") * 37 % 18000) / 100.0 - 90.0,
+                        (F.col("doc_id") * 73 % 36000) / 100.0 - 180.0,
+                    ),
                 ),
+                f"/tmp/seekstorm_{tag}_idx_{name}",
+                {
+                    "n_buckets": 8,
+                    "facet_cols": ["location"],
+                    "facet_types": {"location": kind},
+                },
+                {"text_col": "text", "id_col": "doc_id"},
+                reuse=lambda m: (m.get("facets") or {})
+                .get("location", {})
+                .get("type")
+                == kind,
             )
-            store = IndexBuilder(
-                s, path, n_buckets=8, facet_cols=["location"]
-            ).build(docs, text_col="text", id_col="doc_id")
-        out = search(
-            s, store, "fast", top_k=10, default_type="union",
-            geo_filter={
-                "point": "location",
-                "at": _GEO_FILTER["at"],
-                "radius_km": _GEO_FILTER["radius_km"],
-            },
-            result_sort=[("geo_dist", "asc")],
-        )
-        return out.select(
-            "docid", F.round(F.col("geo_dist"), 4).alias("geo_dist")
-        )
-
-    q["wand_geo_point"] = wand_geo_point
-
-    # PACKED Point facet: one u64 Morton code per doc (i32×10^7
-    # coordinate quantization, reference geo_search.rs:33) — half the
-    # buffer bytes of the pair form; the oracle mirrors the
-    # quantization exactly (trunc(x·10^7)/10^7 on both sides), so
-    # distances stay float64-identical
-    def wand_geo_morton(s: SparkSession, d: str) -> DataFrame:
-        import json
-        import os
-
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
-        from seekstorm_spark.query.engine import search
-
-        name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandmt_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and (m.get("facets") or {}).get("location", {}).get("type") == "morton":
-                store = IndexStore.open(path)
-        if store is None:
-            docs = _docs(s, d).withColumn(
-                "location",
-                F.array(
-                    (F.col("doc_id") * 37 % 18000) / 100.0 - 90.0,
-                    (F.col("doc_id") * 73 % 36000) / 100.0 - 180.0,
-                ),
+            out = search(
+                s, store, "fast", top_k=10, default_type="union",
+                geo_filter={
+                    "point": "location",
+                    "at": _GEO_FILTER["at"],
+                    "radius_km": _GEO_FILTER["radius_km"],
+                },
+                result_sort=[("geo_dist", "asc")],
             )
-            store = IndexBuilder(
-                s, path, n_buckets=8, facet_cols=["location"],
-                facet_types={"location": "morton"},
-            ).build(docs, text_col="text", id_col="doc_id")
-        out = search(
-            s, store, "fast", top_k=10, default_type="union",
-            geo_filter={
-                "point": "location",
-                "at": _GEO_FILTER["at"],
-                "radius_km": _GEO_FILTER["radius_km"],
-            },
-            result_sort=[("geo_dist", "asc")],
-        )
-        return out.select(
-            "docid", F.round(F.col("geo_dist"), 4).alias("geo_dist")
-        )
+            return out.select(
+                "docid", F.round(F.col("geo_dist"), 4).alias("geo_dist")
+            )
 
-    q["wand_geo_morton"] = wand_geo_morton
+        return run
+
+    q["wand_geo_point"] = _geo_point_query("point")
+    q["wand_geo_morton"] = _geo_point_query("morton")
 
     # delete-by-query (reference delete_documents_by_query,
     # api_endpoints.rs): matching docids stream into the delete set as
@@ -1335,29 +1222,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (the delete set must not leak into the other wand rows); re-runs
     # re-delete the same set — idempotent results.
     def wand_delete_by_query(s: SparkSession, d: str) -> DataFrame:
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
+        from seekstorm_spark.index.builder import load_or_build
         from seekstorm_spark.query.engine import delete_by_query, search
 
         name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wanddel_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION:
-                store = IndexStore.open(path)
-        if store is None:
-            store = IndexBuilder(s, path, n_buckets=8).build(
-                _docs(s, d), text_col="text", id_col="doc_id"
-            )
+        store = load_or_build(
+            s,
+            lambda: _docs(s, d),
+            f"/tmp/seekstorm_wanddel_idx_{name}",
+            {"n_buckets": 8},
+            {"text_col": "text", "id_col": "doc_id"},
+        )
         delete_by_query(s, store, "dup", "union")
         out = search(s, store, "fast table", top_k=10, default_type="union")
         return out.select(
@@ -1371,27 +1248,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # survivors (reference level rewrite, commit.rs:203-258). The
     # oracle scores a corpus that never contained the deleted docs.
     def wand_compacted(s: SparkSession, d: str) -> DataFrame:
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
+        from seekstorm_spark.index.builder import IndexBuilder, open_current
         from seekstorm_spark.index.compaction import compact
-        from seekstorm_spark.index.store import IndexStore
         from seekstorm_spark.query.engine import delete_by_query, search
 
         name = os.path.basename(d.rstrip("/")) or "sf"
         path = f"/tmp/seekstorm_wandcmp_idx_{name}"
-        meta = os.path.join(path, "meta.json")
         marker = os.path.join(path, "COMPACTED_R3")
-        store = None
-        if os.path.exists(meta) and os.path.exists(marker):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION:
-                store = IndexStore.open(path)
+        store = open_current(path, lambda m: os.path.exists(marker))
         if store is None:
             store = IndexBuilder(s, path, n_buckets=8).build(
                 _docs(s, d), text_col="text", id_col="doc_id"
@@ -1413,27 +1279,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # corpus is documents UNION ALL the new version, results exclude
     # the old docid.
     def wand_update_doc(s: SparkSession, d: str) -> DataFrame:
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
+        from seekstorm_spark.index.builder import IndexBuilder, open_current
         from seekstorm_spark.query.engine import search
         from seekstorm_spark.streaming.incremental import update_documents
 
         name = os.path.basename(d.rstrip("/")) or "sf"
         path = f"/tmp/seekstorm_wandupd_idx_{name}"
-        meta = os.path.join(path, "meta.json")
         marker = os.path.join(path, "UPDATED_R3")
-        store = None
-        if os.path.exists(meta) and os.path.exists(marker):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION:
-                store = IndexStore.open(path)
+        store = open_current(path, lambda m: os.path.exists(marker))
         if store is None:
             store = IndexBuilder(s, path, n_buckets=8).build(
                 _docs(s, d), text_col="text", id_col="doc_id"
@@ -1509,36 +1364,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # counting = one count per (matching doc, distinct value)
     # (reference StringSet facet type, search.rs:2543-2726)
     def _wandset_store(s: SparkSession, d: str):
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
+        from seekstorm_spark.index.builder import load_or_build
 
         name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandset_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and (m.get("facets") or {}).get("tags", {}).get("type") == "string_set":
-                return IndexStore.open(path)
-        docs = _docs(s, d).withColumn(
-            "tags",
-            F.array(
-                F.concat(F.lit("t"), (F.col("doc_id") % 5).cast("string")),
-                F.concat(
-                    F.lit("t"), ((F.col("doc_id") * 7) % 5).cast("string")
+        return load_or_build(
+            s,
+            lambda: _docs(s, d).withColumn(
+                "tags",
+                F.array(
+                    F.concat(F.lit("t"), (F.col("doc_id") % 5).cast("string")),
+                    F.concat(
+                        F.lit("t"), ((F.col("doc_id") * 7) % 5).cast("string")
+                    ),
                 ),
             ),
+            f"/tmp/seekstorm_wandset_idx_{name}",
+            {"n_buckets": 8, "facet_cols": ["tags"]},
+            {"text_col": "text", "id_col": "doc_id"},
+            reuse=lambda m: (m.get("facets") or {}).get("tags", {}).get("type")
+            == "string_set",
         )
-        return IndexBuilder(
-            s, path, n_buckets=8, facet_cols=["tags"]
-        ).build(docs, text_col="text", id_col="doc_id")
 
     def wand_facet_set_filter(s: SparkSession, d: str) -> DataFrame:
         from seekstorm_spark.query.engine import search
@@ -1623,33 +1470,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # index-time synonym expansion (multi-way fast<->stream; reference
     # Synonym struct index.rs:1077-1098, expansion index.rs:5869-5897)
     def wand_synonym(s: SparkSession, d: str) -> DataFrame:
-        import json
         import os
 
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
+        from seekstorm_spark.index.builder import load_or_build
         from seekstorm_spark.query.engine import search
 
         name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandsyn_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and m.get("synonyms"):
-                store = IndexStore.open(path)
-        if store is None:
-            store = IndexBuilder(
-                s,
-                path,
-                n_buckets=8,
-                synonyms=[{"terms": ["fast", "stream"], "multiway": True}],
-            ).build(_docs(s, d), text_col="text", id_col="doc_id")
+        store = load_or_build(
+            s,
+            lambda: _docs(s, d),
+            f"/tmp/seekstorm_wandsyn_idx_{name}",
+            {
+                "n_buckets": 8,
+                "synonyms": [{"terms": ["fast", "stream"], "multiway": True}],
+            },
+            {"text_col": "text", "id_col": "doc_id"},
+            reuse=lambda m: m.get("synonyms"),
+        )
         out = search(s, store, "fast", top_k=10, default_type="union")
         return out.select(
             "docid", F.round(F.col("score").cast("double"), 4).alias("score")
@@ -2742,30 +2579,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # adjacency is honored in relevance. Query-time option — shares
     # the cached wand_phrase_ngram index (no rebuild).
     def wand_phrase_proximity(s: SparkSession, d: str) -> DataFrame:
-        import json
-        import os
-
-        from seekstorm_spark.index.builder import (
-            INDEX_FORMAT_VERSION,
-            IndexBuilder,
-        )
-        from seekstorm_spark.index.store import IndexStore
         from seekstorm_spark.query.engine import _plan, search
 
-        name = os.path.basename(d.rstrip("/")) or "sf"
-        path = f"/tmp/seekstorm_wandng_idx_{name}"
-        meta = os.path.join(path, "meta.json")
-        store = None
-        if os.path.exists(meta):
-            with open(meta) as f:
-                m = json.load(f)
-            if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION \
-                    and m.get("frequent_terms"):
-                store = IndexStore.open(path)
-        if store is None:
-            store = IndexBuilder(
-                s, path, n_buckets=8, frequent_terms=["fast", "table"]
-            ).build(_docs(s, d), text_col="text", id_col="doc_id")
+        store = _wandng_store(s, d)
         plan = _plan(
             s, store, '"fast table"', "union", similarity="bm25f_proximity"
         )

@@ -34,10 +34,9 @@ Spark-first re-expression of the reference's write path
 
 from __future__ import annotations
 
-import json
 import os
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
@@ -46,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from seekstorm_spark.codecs import ROARING_BLOCK_SIZE
-from seekstorm_spark.index.store import IndexStore
+from seekstorm_spark.index.store import DOC_META_DDL, POSTINGS_DDL, IndexStore
 from seekstorm_spark.quantization import avgdl_f32, length_stats
 
 # Segment-row shuffle, the one build format: every map task covers
@@ -74,20 +73,6 @@ TERM_SEG_SCHEMA = (
 )
 
 
-# Multi-field postings: one row per (term, field, block) with the
-# field's tf/positions/dl bytes — the reference's default data model
-# (per-field tf/positions per doc, index.rs:5332-5407,
-# add_result.rs:1171-1426). df_block is the per-block count of
-# DISTINCT docs containing the term in ANY field (so term_stats df is
-# the BM25F document frequency, not a per-field sum).
-POSTING_SCHEMA = (
-    "term string, field int, block_id int, posting_count int, "
-    "df_block int, max_tf int, min_dl_byte int, docids_vb binary, "
-    "tfs_vb binary, dls binary, positions_vb binary, "
-    "tfs1_vb binary, tfs2_vb binary, tfs3_vb binary, "
-    "max_tf1 int, max_tf2 int, max_tf3 int"
-)
-
 # format v3: blocks store (max_tf, min_dl_byte) instead of a baked
 # max-score component. BM25's tf saturation is increasing in tf and
 # decreasing in dl, so comp(max_tf, min_dl) bounds every doc in the
@@ -107,6 +92,17 @@ POSTING_SCHEMA = (
 # (block skipping for range/geo filters); readers tolerate their
 # absence, so v4 tables stay readable — the bump just retires caches.
 INDEX_FORMAT_VERSION = 5
+
+# The meta.json keys that describe the indexed documents rather than
+# the index's settings (plus ``applied_batches``, the committed batch
+# ids): an empty index holds these values, and clear_index resets
+# only these keys.
+EMPTY_CORPUS = {
+    "n_docs": 0,
+    "positions_sum_normalized": 0,
+    "avgdl": 1.0,
+    "next_docid": 0,
+}
 
 # hard ceiling on string-facet dictionary cardinality: the sorted
 # dictionary is driver-resident (embedded in meta.json, broadcast into
@@ -958,14 +954,14 @@ def build_posting_blocks(
     if width is not None:
         blocks = blocks.repartition(width, "tbucket")
     return blocks.groupBy("tbucket", "block_id").applyInPandas(
-        splice_kernel(block_size), schema=POSTING_SCHEMA + ", tbucket int"
+        splice_kernel(block_size), schema=POSTINGS_DDL
     )
 
 
 def splice_kernel(block_size: int = ROARING_BLOCK_SIZE):
     """The group kernel of :func:`build_posting_blocks`:
     ``((tbucket, block_id), segment rows as pandas)`` → posting rows
-    (POSTING_SCHEMA + ``tbucket``)."""
+    (``store.POSTINGS_DDL``)."""
 
     def _build_seg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         """Concatenate the map-encoded posting byte streams per
@@ -1500,7 +1496,7 @@ def _decode_doc_meta(
     cached tokenize output the same way.
     """
     return sentinel_postings.mapInPandas(
-        doc_meta_kernel(block_size), schema="docid long, field int, dl_byte int"
+        doc_meta_kernel(block_size), schema=DOC_META_DDL
     )
 
 
@@ -1561,6 +1557,31 @@ def term_stats_aggregate(postings: DataFrame) -> DataFrame:
     )
 
 
+def length_histogram(doc_meta: DataFrame) -> dict[tuple[int, int], int]:
+    """doc_meta rows → {(field, dl_byte): count}, in one collect.
+    :func:`~seekstorm_spark.quantization.length_stats` turns it into
+    N (field-0 rows) and the positions sum over ALL fields (avgdl =
+    Σ per-field quantized dl / doc count, commit.rs:318-319)."""
+    return {
+        (int(r["field"]), int(r["dl_byte"])): int(r["cnt"])
+        for r in doc_meta.groupBy("field", "dl_byte")
+        .agg(F.count("*").alias("cnt"))
+        .collect()
+    }
+
+
+def write_term_stats(term_stats: DataFrame, n_buckets: int, path: str) -> None:
+    """Write a whole term-stats table: one sorted file per
+    ``tbucket=`` partition."""
+    (
+        term_stats.repartition(n_buckets, "tbucket")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .partitionBy("tbucket")
+        .parquet(path)
+    )
+
+
 class IndexBuilder:
     def __init__(
         self,
@@ -1618,6 +1639,59 @@ class IndexBuilder:
         # them, not vice versa).
         self.synonyms = synonyms or []
         self.synonym_map = synonym_map_from_groups(self.synonyms)
+
+    def index_meta(
+        self,
+        fields: list[str],
+        facets: dict[str, dict] | None = None,
+        corpus: dict[str, Any] | None = None,
+        complete: bool = True,
+    ) -> dict[str, Any]:
+        """The meta.json of an index with these settings over
+        ``fields``, with the typed facet ``facets`` (build's dictionary
+        output) and the ``corpus`` state (:data:`EMPTY_CORPUS` keys;
+        default: no documents). :func:`_tokenizer_settings` decodes
+        the tokenize options back out of it."""
+        return {
+            "version": INDEX_FORMAT_VERSION,
+            "fields": fields,
+            "facets": facets or {},
+            "tokenizer": self.tokenizer,
+            "stemmer": self.stemmer,
+            "frequent_terms": sorted(self.frequent_terms)
+            if self.frequent_terms
+            else [],
+            "ngram_patterns": list(self.ngram_patterns),
+            "synonyms": self.synonyms,
+            # per-field stopword sets (reference index.rs:1238-1256):
+            # the QUERY side drops only terms that are stopwords in
+            # EVERY field — a term kept by any field can still match
+            **(
+                {
+                    "stop_words": sorted(
+                        set.intersection(
+                            *[set(v) for v in self.stop_words.values()]
+                        )
+                        if len(self.stop_words) == len(fields)
+                        else set()
+                    ),
+                    "stop_words_by_field": {
+                        f: sorted(v) for f, v in self.stop_words.items()
+                    },
+                }
+                if isinstance(self.stop_words, dict)
+                else {
+                    "stop_words": sorted(self.stop_words)
+                    if self.stop_words
+                    else []
+                }
+            ),
+            **(corpus or EMPTY_CORPUS),
+            "n_buckets": self.n_buckets,
+            "block_size": self.block_size,
+            "built_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "complete": complete,
+        }
 
     def build(
         self,
@@ -1736,28 +1810,15 @@ class IndexBuilder:
                 _decode_doc_meta(sent, self.block_size).write.mode(
                     "overwrite"
                 ).parquet(store.doc_meta_path)
-            doc_meta = store.doc_meta(spark)
-            # one collect: the per-field length histogram yields N
-            # (field-0 rows), and the positions sum over ALL fields
-            # (avgdl = Σ per-field quantized dl / doc count,
-            # commit.rs:318-319, f32 division)
-            dl_hist = {
-                (int(r["field"]), int(r["dl_byte"])): int(r["cnt"])
-                for r in doc_meta.groupBy("field", "dl_byte")
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            }
-            n_docs, pos_sum = length_stats(dl_hist)
+            n_docs, pos_sum = length_stats(
+                length_histogram(store.doc_meta(spark))
+            )
             avgdl = avgdl_f32(pos_sum, n_docs)
 
         # --- term stats (list heads: df, cf, list-max metadata) ---
-        term_stats = term_stats_aggregate(postings)
-        (
-            term_stats.repartition(self.n_buckets, "tbucket")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("tbucket")
-            .parquet(store.term_stats_path)
+        write_term_stats(
+            term_stats_aggregate(postings), self.n_buckets,
+            store.term_stats_path,
         )
 
         # --- lineage (per-bucket commit record), derived from the tiny
@@ -1784,79 +1845,112 @@ class IndexBuilder:
 
         invalidate_term_stats_cache(store.path)
 
-        store.meta = {
-            "version": INDEX_FORMAT_VERSION,
-            "fields": fields,
-            "facets": facet_dicts,
-            "tokenizer": self.tokenizer,
-            "stemmer": self.stemmer,
-            "frequent_terms": sorted(self.frequent_terms)
-            if self.frequent_terms
-            else [],
-            "ngram_patterns": list(self.ngram_patterns),
-            "synonyms": self.synonyms,
-            # per-field stopword sets (reference index.rs:1238-1256):
-            # the QUERY side drops only terms that are stopwords in
-            # EVERY field — a term kept by any field can still match
-            **(
-                {
-                    "stop_words": sorted(
-                        set.intersection(
-                            *[set(v) for v in self.stop_words.values()]
-                        )
-                        if len(self.stop_words) == len(fields)
-                        else set()
-                    ),
-                    "stop_words_by_field": {
-                        f: sorted(v) for f, v in self.stop_words.items()
-                    },
-                }
-                if isinstance(self.stop_words, dict)
-                else {
-                    "stop_words": sorted(self.stop_words)
-                    if self.stop_words
-                    else []
-                }
-            ),
-            "n_docs": n_docs,
-            "positions_sum_normalized": pos_sum,
-            "avgdl": avgdl,
-            "next_docid": n_docs,
-            "n_buckets": self.n_buckets,
-            "block_size": self.block_size,
-            "built_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "complete": only_buckets is None or resume,
-        }
+        store.meta = self.index_meta(
+            fields,
+            facet_dicts,
+            corpus={
+                "n_docs": n_docs,
+                "positions_sum_normalized": pos_sum,
+                "avgdl": avgdl,
+                "next_docid": n_docs,
+            },
+            complete=only_buckets is None or resume,
+        )
         store.write_meta()
         return store
 
 
+def _tokenizer_settings(meta: dict) -> dict[str, Any]:
+    """The tokenize options an index's meta records (the inverse of
+    :meth:`IndexBuilder.index_meta`), as keywords of
+    :func:`tokenize_to_term_rows` and :func:`segment_kernel`."""
+    by_field = meta.get("stop_words_by_field")
+    return {
+        "tokenizer": meta.get("tokenizer", "unicode_alphanumeric"),
+        "stop_words": (
+            {f: frozenset(v) for f, v in by_field.items()}
+            if by_field
+            else (frozenset(meta.get("stop_words") or []) or None)
+        ),
+        "stemmer": meta.get("stemmer"),
+        "frequent_terms": frozenset(meta.get("frequent_terms") or []) or None,
+        "synonym_map": synonym_map_from_groups(meta.get("synonyms") or [])
+        or None,
+        "ngram_patterns": meta.get("ngram_patterns"),
+        "block_size": int(meta.get("block_size", ROARING_BLOCK_SIZE)),
+    }
+
+
+def write_empty_index(path: str, meta: dict) -> IndexStore:
+    """Write an index with no documents at ``path``: empty
+    ``postings/``, ``term_stats/`` and ``doc_meta/`` dirs (plus
+    ``facets/`` when ``meta`` declares facets) and ``meta`` with its
+    corpus state reset (:data:`EMPTY_CORPUS`, no applied batches) at
+    the current format version. Every other meta key is kept
+    verbatim. Runs no Spark job: readers pass explicit schemas, so an
+    empty dir reads as an empty table, and appends grow it."""
+    store = IndexStore(
+        path=path,
+        meta={
+            **meta,
+            **EMPTY_CORPUS,
+            "version": INDEX_FORMAT_VERSION,
+            "complete": True,
+        },
+    )
+    store.meta.pop("applied_batches", None)
+    tables = [store.postings_path, store.term_stats_path, store.doc_meta_path]
+    if store.meta.get("facets"):
+        tables.append(store.facets_path)
+    for table in tables:
+        os.makedirs(table, exist_ok=True)
+    store.write_meta()
+
+    from seekstorm_spark.query.engine import invalidate_term_stats_cache
+
+    invalidate_term_stats_cache(path)
+    return store
+
+
+def open_current(
+    index_path: str, reuse: Callable[[dict], bool] | None = None
+) -> IndexStore | None:
+    """The stored index at ``index_path`` if it can be reused — its
+    meta says complete, at the current format version (stale caches
+    from an older format must rebuild), and ``reuse(meta)`` holds —
+    else None."""
+    if not os.path.exists(os.path.join(index_path, "meta.json")):
+        return None
+    store = IndexStore.open(index_path)
+    m = store.meta
+    if (
+        m.get("complete")
+        and m.get("version") == INDEX_FORMAT_VERSION
+        and (reuse is None or reuse(m))
+    ):
+        return store
+    return None
+
+
 def load_or_build(
     spark: SparkSession,
-    docs: DataFrame,
+    docs: DataFrame | Callable[[], DataFrame],
     index_path: str,
     builder_kwargs: dict[str, Any] | None = None,
     build_kwargs: dict[str, Any] | None = None,
+    reuse: Callable[[dict], bool] | None = None,
 ) -> IndexStore:
-    meta = os.path.join(index_path, "meta.json")
-    if os.path.exists(meta):
-        with open(meta) as f:
-            m = json.load(f)
-        # stale on-disk caches from an older format must rebuild
-        if m.get("complete") and m.get("version") == INDEX_FORMAT_VERSION:
-            return IndexStore.open(index_path)
+    """Open the index at ``index_path`` when :func:`open_current`
+    accepts it, else build it there from ``docs`` — a DataFrame, or a
+    zero-argument function returning one, called only to build."""
+    store = open_current(index_path, reuse)
+    if store is not None:
+        return store
+    if not isinstance(docs, DataFrame):
+        docs = docs()
     return IndexBuilder(spark, index_path, **(builder_kwargs or {})).build(
         docs, **(build_kwargs or {})
     )
-
-
-_FACET_DDL_BY_TYPE = {
-    "string": "string",
-    "string_set": "array<string>",
-    "numeric": "double",
-    "point": "array<double>",
-    "morton": "array<double>",
-}
 
 
 def clear_index(spark: SparkSession, store: IndexStore) -> IndexStore:
@@ -1865,79 +1959,20 @@ def clear_index(spark: SparkSession, store: IndexStore) -> IndexStore:
     dictionaries, completions, and doc store are dropped; the index
     settings survive).
 
-    Every data subdirectory is removed, then an empty index is rebuilt
-    at the same path from the meta-recorded configuration (tokenizer,
-    stemmer, stopwords, frequent terms + n-gram patterns, synonyms,
-    fields, facet declarations). Two pieces of non-build state are
-    carried across: the facet DICTIONARIES (byte order == value order
-    is part of the frozen schema — appends after the clear validate
-    against the same value set) and the API-key hash."""
+    Every data subdirectory is removed, then :func:`write_empty_index`
+    writes the empty tables and the same meta with only its corpus
+    state reset. Every other key survives verbatim: the tokenize
+    settings, fields, the facet DICTIONARIES (byte order == value
+    order is part of the frozen schema — appends after the clear
+    validate against the same value set) and the API key with its
+    rate limit. No Spark job runs; ``spark`` goes unused."""
     import shutil
 
-    meta = dict(store.meta)
-    path = store.path
-    facets_meta = meta.get("facets") or {}
-
-    for entry in sorted(os.listdir(path)):
-        full = os.path.join(path, entry)
+    for entry in sorted(os.listdir(store.path)):
+        full = os.path.join(store.path, entry)
         if os.path.isdir(full):
             shutil.rmtree(full)
-
-    fields = list(meta.get("fields") or ["text"])
-    facet_cols = sorted(facets_meta)
-    ddl = ", ".join(
-        ["doc_id long"]
-        + [f"`{f}` string" for f in fields]
-        + [
-            f"`{c}` {_FACET_DDL_BY_TYPE[facet_kind(facets_meta[c])]}"
-            for c in facet_cols
-        ]
-    )
-    empty = spark.createDataFrame([], ddl)
-
-    by_field = meta.get("stop_words_by_field")
-    if by_field:
-        stop_words: Any = {f: frozenset(v) for f, v in by_field.items()}
-    else:
-        stop_words = (
-            frozenset(meta["stop_words"]) if meta.get("stop_words") else None
-        )
-    builder = IndexBuilder(
-        spark,
-        path,
-        tokenizer=meta.get("tokenizer", "unicode_alphanumeric"),
-        stop_words=stop_words,
-        n_buckets=int(meta.get("n_buckets", 32)),
-        block_size=int(meta.get("block_size", ROARING_BLOCK_SIZE)),
-        fields=fields if len(fields) > 1 else None,
-        facet_cols=facet_cols or None,
-        facet_types={
-            c: facet_kind(facets_meta[c]) for c in facet_cols
-        }
-        or None,
-        stemmer=meta.get("stemmer"),
-        frequent_terms=list(meta.get("frequent_terms") or []) or None,
-        synonyms=meta.get("synonyms") or None,
-        ngram_patterns=list(meta.get("ngram_patterns") or []),
-    )
-    kwargs: dict[str, Any] = {"id_col": "doc_id"}
-    if len(fields) == 1:
-        kwargs["text_col"] = fields[0]
-    new_store = builder.build(empty, **kwargs)
-
-    if facets_meta:
-        # schema survives the clear: the frozen dictionaries (and
-        # declared types) come back verbatim, so post-clear appends
-        # accept exactly the same value universe
-        new_store.meta["facets"] = facets_meta
-    if meta.get("api_key_sha256"):
-        new_store.meta["api_key_sha256"] = meta["api_key_sha256"]
-    new_store.write_meta()
-
-    from seekstorm_spark.query.engine import invalidate_term_stats_cache
-
-    invalidate_term_stats_cache(path)
-    return new_store
+    return write_empty_index(store.path, store.meta)
 
 
 def get_synonyms(store: IndexStore) -> list[dict]:

@@ -44,10 +44,11 @@ from seekstorm_spark.codecs import (
 )
 from seekstorm_spark.index.builder import (
     NGRAM_SEP,
-    POSTING_SCHEMA,
+    length_histogram,
     term_stats_aggregate,
+    write_term_stats,
 )
-from seekstorm_spark.index.store import IndexStore
+from seekstorm_spark.index.store import POSTINGS_DDL, IndexStore
 from seekstorm_spark.quantization import avgdl_f32, length_stats
 
 
@@ -126,13 +127,7 @@ def compact_term_stats(spark: SparkSession, store: IndexStore) -> None:
     )
     tmp = store.term_stats_path + ".compact"
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        collapsed.repartition(n_buckets, "tbucket")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(tmp)
-    )
+    write_term_stats(collapsed, n_buckets, tmp)
     shutil.rmtree(store.term_stats_path)
     os.rename(tmp, store.term_stats_path)
 
@@ -178,7 +173,7 @@ def compact(spark: SparkSession, store: IndexStore) -> IndexStore:
 
     postings = store.postings(spark)
     rewritten = postings.groupBy("tbucket", "block_id").applyInPandas(
-        _rw, schema=POSTING_SCHEMA + ", tbucket int"
+        _rw, schema=POSTINGS_DDL
     )
     tmp_postings = store.postings_path + ".compact"
     shutil.rmtree(tmp_postings, ignore_errors=True)
@@ -210,24 +205,13 @@ def compact(spark: SparkSession, store: IndexStore) -> IndexStore:
 
     # term stats: full re-aggregate (compaction IS the full pass) —
     # also collapses any log-structured append partials
-    term_stats = term_stats_aggregate(store.postings(spark))
-    (
-        term_stats.repartition(n_buckets, "tbucket")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(store.term_stats_path)
+    write_term_stats(
+        term_stats_aggregate(store.postings(spark)), n_buckets,
+        store.term_stats_path,
     )
 
     # corpus stats from the surviving doc_meta (same f32 math as build)
-    dl_hist = {
-        (int(r["field"]), int(r["dl_byte"])): int(r["cnt"])
-        for r in store.doc_meta(spark)
-        .groupBy("field", "dl_byte")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    n_docs, pos_sum = length_stats(dl_hist)
+    n_docs, pos_sum = length_stats(length_histogram(store.doc_meta(spark)))
     meta.update(
         {
             "n_docs": n_docs,

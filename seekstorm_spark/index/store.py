@@ -1,24 +1,63 @@
-"""On-disk index layout + read-side access.
+"""On-disk index layout + read-side access (format v5).
 
-The index is a set of Parquet/Iceberg-style tables under one directory
-(the Spark analog of the reference's per-shard ``index.bin`` layout,
+The index is a set of Parquet tables under one directory (the Spark
+analog of the reference's per-shard ``index.bin`` layout,
 `/root/reference/seekstorm/src/commit.rs:264-331`):
 
-* ``meta.json``     — tokenizer config, N, avgdl, bucket count.
-* ``doc_meta/``     — one row per doc: docid, external id, dl_raw,
+* ``meta.json``     — the index settings (format version, fields,
+                      typed facet declarations + string dictionaries,
+                      tokenizer, stemmer, stopwords, frequent terms,
+                      n-gram patterns, synonyms, bucket count, block
+                      size, API key hash + rate limit) and the
+                      corpus state (N, the quantized length sum,
+                      avgdl, next docid, applied batch ids).
+                      ``builder.IndexBuilder.index_meta``
+                      writes it; ``builder.write_empty_index`` /
+                      ``clear_index`` reset only the corpus state.
+* ``doc_meta/``     — one row per (doc, field): docid, field,
                       dl_byte (SmallFloat, `index.rs:4232-4279`).
-* ``postings/``     — one row per (term, block); hash-partitioned by
-                      ``tbucket`` (the Spark analog of the reference's
-                      2048 term-hash segments, `index.rs:988-995`);
-                      65,536-docid blocks (`index.rs:114-115`) with
-                      delta+VB docids, VB tfs, raw dl bytes, VB
-                      positions, and the block-max tf component for
-                      WAND pruning (`compress_postinglist.rs:530-676`).
-* ``term_stats/``   — list heads: term, df, cf, list-max component.
+* ``postings/``     — one row per (term, field, block); hash-partitioned
+                      by ``tbucket`` (the Spark analog of the
+                      reference's 2048 term-hash segments,
+                      `index.rs:988-995`); 65,536-docid blocks
+                      (`index.rs:114-115`) with delta+VB docids, VB
+                      tfs, raw dl bytes, VB positions, n-gram partial
+                      tfs, and the block bound inputs (max_tf,
+                      min_dl_byte, max_tf1..3) from which the query
+                      computes the WAND bound at the current avgdl
+                      (`compress_postinglist.rs:530-676`). df_block is
+                      the block's count of distinct docs holding the
+                      term in ANY field, carried on one field row, so
+                      summed it is the BM25F df. A bulk build also
+                      writes term-'' rows with each doc's length
+                      bytes; doc_meta is decoded from them.
+* ``term_stats/``   — list heads per ``tbucket``: term, df, cf, block
+                      count, list max_tf / min_dl_byte, bytes.
+                      Log-structured: each append adds its own partial
+                      rows, readers sum df per term.
+* ``facets/``       — per-block facet arrays partitioned by ``facet``
+                      (dictionary codes, CSR string sets, float64
+                      values, point pairs or Morton codes), with
+                      vmin/vmax zone bounds on numeric rows. Only
+                      when facets are declared.
 * ``lineage/``      — per-bucket build metrics + commit timestamps;
                       resume anti-joins pending buckets against this
                       (reference resumes by truncating the incomplete
-                      last level, `commit.rs:203-258`).
+                      last level, `commit.rs:203-258`). Bulk builds
+                      only.
+* ``deletes/``      — deleted docids, filtered inside the kernel until
+                      ``compaction.compact`` rewrites them away.
+* ``result_cache/`` — top-k results of frequent one-term queries for
+                      the current index generation
+                      (``query.result_cache``).
+* ``_staging/``     — uncommitted micro-batches (realtime level-0),
+                      one ``batch_<tag>/`` dir each with its
+                      postings, term_stats, doc_meta and facets,
+                      promoted by ``commit_batch``.
+
+An empty index is the three tables' empty dirs (plus ``facets/``) and
+meta.json: readers pass the explicit schemas below, so an empty dir
+reads as an empty table and creating one needs no Spark job.
 """
 
 from __future__ import annotations
@@ -29,13 +68,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Explicit on-disk table schemas (must mirror the writer schemas in
-# builder.py — POSTING_SCHEMA / _decode_doc_meta /
-# term_stats_aggregate / encode_facet_blocks; a structural pytest
-# pins the two sides together). Passing them to every read (a) skips
-# parquet schema inference per query and (b) keeps EMPTY tables
-# readable — a zero-doc build writes no data files, and inference
-# cannot name columns that aren't there.
+# Explicit on-disk table schemas. The postings and doc_meta writers
+# (``builder.build_posting_blocks`` / ``_decode_doc_meta``) declare
+# their output with these same strings; ``term_stats_aggregate`` and
+# ``encode_facet_blocks`` must produce TERM_STATS_DDL / FACETS_DDL
+# column for column. Passing them to every read (a) skips parquet
+# schema inference per query and (b) keeps EMPTY tables readable —
+# an empty index has no data files, and inference cannot name
+# columns that aren't there.
 POSTINGS_DDL = (
     "term string, field int, block_id int, posting_count int, "
     "df_block int, max_tf int, min_dl_byte int, docids_vb binary, "

@@ -821,7 +821,7 @@ class IndexService:
         name = body.get("name") or ""
         if not re.fullmatch(r"[A-Za-z0-9_-]+", name):
             raise ValueError("index name must match [A-Za-z0-9_-]+")
-        from seekstorm_spark.index.builder import IndexBuilder
+        from seekstorm_spark.index.builder import IndexBuilder, write_empty_index
 
         with self._registry_lock:
             if name in self.stores:
@@ -829,24 +829,15 @@ class IndexService:
             opts = body.get("options") or {}
             fields = list(opts.get("fields") or ["text"])
             path = os.path.join(self.index_root, name)
-            empty = self.spark.createDataFrame(
-                [],
-                "doc_id long, "
-                + ", ".join(f"{f} string" for f in fields),
+            builder = IndexBuilder(
+                self.spark,
+                path,
+                n_buckets=int(opts.get("n_buckets", 8)),
+                stemmer=opts.get("stemmer") or None,
             )
-            kw: dict = {"n_buckets": int(opts.get("n_buckets", 8))}
-            if opts.get("stemmer"):
-                kw["stemmer"] = opts["stemmer"]
-            if len(fields) > 1:
-                kw["fields"] = fields
-                store = IndexBuilder(self.spark, path, **kw).build(
-                    empty, id_col="doc_id"
-                )
-            else:
-                store = IndexBuilder(self.spark, path, **kw).build(
-                    empty, text_col=fields[0], id_col="doc_id"
-                )
-            self.stores[name] = store
+            self.stores[name] = write_empty_index(
+                path, builder.index_meta(fields)
+            )
             self._write_locks[name] = threading.Lock()
         return {"created": name, "path": path}
 

@@ -71,8 +71,10 @@ from seekstorm_spark.codecs import ROARING_BLOCK_SIZE
 from seekstorm_spark.hashing import term_bucket
 from seekstorm_spark.index.builder import (
     TERM_SEG_SCHEMA,
+    IndexBuilder,
     _bucket_rank,
     _decode_doc_meta,
+    _tokenizer_settings,
     assign_docids,
     build_posting_blocks,
     doc_meta_kernel,
@@ -80,11 +82,12 @@ from seekstorm_spark.index.builder import (
     facet_kernel,
     facet_kind,
     facet_values,
+    length_histogram,
     segment_kernel,
     splice_kernel,
-    synonym_map_from_groups,
     term_stats_aggregate,
     tokenize_to_term_rows,
+    write_empty_index,
 )
 from seekstorm_spark.index.store import (
     DOC_META_DDL,
@@ -230,26 +233,6 @@ def _check_facets(spark: SparkSession, facet_meta: dict, batch) -> None:
             )
 
 
-def _tokenizer_settings(meta: dict) -> dict[str, Any]:
-    """The index's tokenize options, as keywords of
-    :func:`tokenize_to_term_rows` and :func:`segment_kernel`."""
-    by_field = meta.get("stop_words_by_field")
-    return {
-        "tokenizer": meta.get("tokenizer", "unicode_alphanumeric"),
-        "stop_words": (
-            {f: frozenset(v) for f, v in by_field.items()}
-            if by_field
-            else (frozenset(meta.get("stop_words") or []) or None)
-        ),
-        "stemmer": meta.get("stemmer"),
-        "frequent_terms": frozenset(meta.get("frequent_terms") or []) or None,
-        "synonym_map": synonym_map_from_groups(meta.get("synonyms") or [])
-        or None,
-        "ngram_patterns": meta.get("ngram_patterns"),
-        "block_size": int(meta.get("block_size", ROARING_BLOCK_SIZE)),
-    }
-
-
 def _frame_docs(
     batch: DataFrame,
     text_col: str,
@@ -351,15 +334,9 @@ def _write_frame(
     ).parquet(os.path.join(stage, "doc_meta"))
     term_rows.unpersist()
 
-    doc_meta = spark.read.schema(DOC_META_DDL).parquet(
-        os.path.join(stage, "doc_meta")
+    hist = length_histogram(
+        spark.read.schema(DOC_META_DDL).parquet(os.path.join(stage, "doc_meta"))
     )
-    hist = {
-        (int(r["field"]), int(r["dl_byte"])): int(r["cnt"])
-        for r in doc_meta.groupBy("field", "dl_byte")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
     # per-batch term-stats DELTA from the cached posting rows only — the
     # O(batch) replacement for re-aggregating the whole index; readers
     # sum df per term across these log-structured partials
@@ -861,28 +838,16 @@ def start_incremental_indexing(
     """Wire a streaming DataFrame into the index via foreachBatch.
 
     Returns the StreamingQuery. ``checkpoint_path`` provides
-    exactly-once batch tracking across restarts.
+    exactly-once batch tracking across restarts. Without an index at
+    ``index_path`` this first writes an empty one over ``text_col``
+    (``write_empty_index``, no Spark job), so it answers queries
+    before the first batch.
     """
-    store = IndexStore(path=index_path)
-    if os.path.exists(store.meta_path):
+    if os.path.exists(os.path.join(index_path, "meta.json")):
         store = IndexStore.open(index_path)
     else:
-        from seekstorm_spark.index.builder import INDEX_FORMAT_VERSION
-
-        os.makedirs(index_path, exist_ok=True)
-        store.meta = {
-            "version": INDEX_FORMAT_VERSION,
-            "tokenizer": "unicode_alphanumeric",
-            "stop_words": [],
-            "n_docs": 0,
-            "positions_sum_normalized": 0,
-            "avgdl": 1.0,
-            "n_buckets": n_buckets,
-            "block_size": ROARING_BLOCK_SIZE,
-            "next_docid": 0,
-            "complete": True,
-        }
-        store.write_meta()
+        builder = IndexBuilder(spark, index_path, n_buckets=n_buckets)
+        store = write_empty_index(index_path, builder.index_meta([text_col]))
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

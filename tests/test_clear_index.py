@@ -2,9 +2,9 @@
 (reference ``Index::clear_index``, index.rs:4920-4945). Gates: the
 cleared index is empty and fully searchable, every configuration key
 (tokenizer, stemmer, stopwords, frequent terms, n-gram patterns,
-synonyms, facet dictionaries, API-key hash) survives verbatim, and
-the cleared index GROWS again through the normal append path with the
-frozen facet dictionaries still enforced."""
+synonyms, facet dictionaries, API-key hash and rate limit) survives
+verbatim, and the cleared index GROWS again through the normal append
+path with the frozen facet dictionaries still enforced."""
 
 from __future__ import annotations
 
@@ -51,11 +51,12 @@ def _build(spark, path, docs):
 def test_clear_empties_but_keeps_config(spark, tmp_path, docs):
     store = _build(spark, tmp_path / "idx", docs)
     before = dict(store.meta)
-    set_api_key(store.path, "sekrit")
+    set_api_key(store.path, "sekrit", rate_limit=7)
     from seekstorm_spark.index.store import IndexStore
 
     store = IndexStore.open(store.path)
     assert store.meta.get("api_key_sha256")
+    keyed = dict(store.meta)
 
     cleared = clear_index(spark, store)
     assert cleared.meta["n_docs"] == 0
@@ -81,6 +82,14 @@ def test_clear_empties_but_keeps_config(spark, tmp_path, docs):
     # facet dictionaries (schema) survive verbatim
     assert cleared.meta["facets"] == before["facets"]
     assert cleared.meta.get("api_key_sha256") == store.meta["api_key_sha256"]
+    # the key keeps its quota
+    assert cleared.meta.get("api_key_rate_limit") == 7
+    # every key but the corpus state survives verbatim, on disk too
+    corpus = {"n_docs", "positions_sum_normalized", "avgdl", "next_docid"}
+    on_disk = IndexStore.open(cleared.path).meta
+    for key, value in keyed.items():
+        if key not in corpus:
+            assert on_disk[key] == value, key
 
 
 def test_cleared_index_grows_again(spark, tmp_path, docs):
