@@ -898,7 +898,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         name = os.path.basename(d.rstrip("/")) or "sf"
         store = load_or_build(
             s,
-            docs.filter(F.col("doc_id") < half),
+            lambda: docs.filter(F.col("doc_id") < half),
             f"/tmp/seekstorm_wandrt_idx_{name}",
             {"n_buckets": 8},
             {"text_col": "text", "id_col": "doc_id"},

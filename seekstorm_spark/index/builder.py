@@ -1882,13 +1882,22 @@ def _tokenizer_settings(meta: dict) -> dict[str, Any]:
 
 
 def write_empty_index(path: str, meta: dict) -> IndexStore:
-    """Write an index with no documents at ``path``: empty
-    ``postings/``, ``term_stats/`` and ``doc_meta/`` dirs (plus
-    ``facets/`` when ``meta`` declares facets) and ``meta`` with its
-    corpus state reset (:data:`EMPTY_CORPUS`, no applied batches) at
-    the current format version. Every other meta key is kept
+    """Write an index with no documents at ``path``: every data
+    subdirectory already there (tables, deletes, result cache, staged
+    batches, doc store) is removed, then empty ``postings/``,
+    ``term_stats/`` and ``doc_meta/`` dirs (plus ``facets/`` when
+    ``meta`` declares facets) are created and ``meta`` is written with
+    its corpus state reset (:data:`EMPTY_CORPUS`, no applied batches)
+    at the current format version. Every other meta key is kept
     verbatim. Runs no Spark job: readers pass explicit schemas, so an
     empty dir reads as an empty table, and appends grow it."""
+    import shutil
+
+    if os.path.isdir(path):
+        for entry in sorted(os.listdir(path)):
+            full = os.path.join(path, entry)
+            if os.path.isdir(full):
+                shutil.rmtree(full)
     store = IndexStore(
         path=path,
         meta={
@@ -1934,22 +1943,20 @@ def open_current(
 
 def load_or_build(
     spark: SparkSession,
-    docs: DataFrame | Callable[[], DataFrame],
+    docs: Callable[[], DataFrame],
     index_path: str,
     builder_kwargs: dict[str, Any] | None = None,
     build_kwargs: dict[str, Any] | None = None,
     reuse: Callable[[dict], bool] | None = None,
 ) -> IndexStore:
     """Open the index at ``index_path`` when :func:`open_current`
-    accepts it, else build it there from ``docs`` — a DataFrame, or a
-    zero-argument function returning one, called only to build."""
+    accepts it, else build it there from ``docs()`` — a zero-argument
+    function returning the documents, called only to build."""
     store = open_current(index_path, reuse)
     if store is not None:
         return store
-    if not isinstance(docs, DataFrame):
-        docs = docs()
     return IndexBuilder(spark, index_path, **(builder_kwargs or {})).build(
-        docs, **(build_kwargs or {})
+        docs(), **(build_kwargs or {})
     )
 
 
@@ -1959,19 +1966,13 @@ def clear_index(spark: SparkSession, store: IndexStore) -> IndexStore:
     dictionaries, completions, and doc store are dropped; the index
     settings survive).
 
-    Every data subdirectory is removed, then :func:`write_empty_index`
+    :func:`write_empty_index` removes every data subdirectory and
     writes the empty tables and the same meta with only its corpus
     state reset. Every other key survives verbatim: the tokenize
     settings, fields, the facet DICTIONARIES (byte order == value
     order is part of the frozen schema — appends after the clear
     validate against the same value set) and the API key with its
     rate limit. No Spark job runs; ``spark`` goes unused."""
-    import shutil
-
-    for entry in sorted(os.listdir(store.path)):
-        full = os.path.join(store.path, entry)
-        if os.path.isdir(full):
-            shutil.rmtree(full)
     return write_empty_index(store.path, store.meta)
 
 

@@ -839,8 +839,9 @@ def start_incremental_indexing(
 
     Returns the StreamingQuery. ``checkpoint_path`` provides
     exactly-once batch tracking across restarts. Without an index at
-    ``index_path`` this first writes an empty one over ``text_col``
-    (``write_empty_index``, no Spark job), so it answers queries
+    ``index_path`` (no meta.json) this first writes an empty one over
+    ``text_col`` (``write_empty_index``, no Spark job; leftover data
+    dirs of a crashed build are removed), so it answers queries
     before the first batch.
     """
     if os.path.exists(os.path.join(index_path, "meta.json")):

@@ -79,6 +79,35 @@ def test_create_and_clear_run_no_spark_job(spark, tmp_path):
     assert search(spark, cleared, "term00001", top_k=5).collect() == []
 
 
+def test_create_over_old_files_starts_empty(spark, tmp_path):
+    """An index closed (or never loaded) leaves its files under
+    ``index_root``; creating one with the same name must not serve
+    them, and its first append must not reuse their docids."""
+    path = str(tmp_path / "old")
+    old = IndexBuilder(spark, path, n_buckets=4).build(
+        synth_webtext(spark, 40, seed=5), text_col="text"
+    )
+    assert count_matches(spark, old, "term00001", "union") > 0
+    os.makedirs(os.path.join(path, "deletes"))
+    svc = IndexService(
+        spark, {"old": path}, writable=True, index_root=str(tmp_path)
+    )
+    svc.close_index("old")
+    _, jobs = _jobs(spark, "lifecycle-recreate", lambda: svc.create_index(
+        {"name": "old"}
+    ))
+    assert jobs == []
+    store = svc.stores["old"]
+    assert store.n_docs == 0
+    assert sorted(
+        e for e in os.listdir(path) if os.path.isdir(os.path.join(path, e))
+    ) == ["doc_meta", "postings", "term_stats"]
+    for table in ("postings", "term_stats", "doc_meta"):
+        assert os.listdir(os.path.join(path, table)) == [], table
+    assert search(spark, store, "term00001", top_k=5).collect() == []
+    assert count_matches(spark, store, "term00001", "union") == 0
+
+
 def test_stream_matches_append_batch(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
