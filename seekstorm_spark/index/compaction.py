@@ -146,7 +146,7 @@ def compact(spark: SparkSession, store: IndexStore) -> IndexStore:
         invalidate_term_stats_cache,
     )
 
-    deletes = _load_delete_set(spark, store)
+    deletes = _load_delete_set(store)
     if deletes.size == 0:
         if os.path.exists(store.deletes_path):
             shutil.rmtree(store.deletes_path)

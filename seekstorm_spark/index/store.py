@@ -94,6 +94,26 @@ FACETS_DDL = (
 )
 
 
+def arrow_schema(ddl: str, drop: str | None = None, not_null=()):
+    """Arrow schema of a flat Spark DDL string, without the ``drop``
+    (partition) column — what the driver-side pyarrow writers and
+    readers of these tables use."""
+    import pyarrow as pa
+
+    types = {
+        "string": pa.string(),
+        "int": pa.int32(),
+        "long": pa.int64(),
+        "double": pa.float64(),
+        "binary": pa.binary(),
+    }
+    return pa.schema(
+        pa.field(name, types[typ], nullable=name not in not_null)
+        for name, typ in (spec.split() for spec in ddl.split(","))
+        if name != drop
+    )
+
+
 @dataclass
 class IndexStore:
     path: str

@@ -1566,6 +1566,31 @@ def _scan_terms(plan: QueryPlan) -> set[str]:
     )
 
 
+def _scan_spec(
+    store: IndexStore, idx_plans: list[tuple[int, QueryPlan]]
+) -> tuple[list[str], list[int], list[str], bool]:
+    """(terms, tbuckets, columns, need_pos) of the posting scan for
+    ``idx_plans`` — the terms, their bucket dirs and the columns the
+    kernel reads (gram partial tfs/bounds only when a gram term is
+    scanned, positions only for a phrase). Shared by the Spark scan
+    (:func:`_posting_rows`) and the driver read
+    (:func:`_posting_table`)."""
+    terms = sorted({t for _i, p in idx_plans for t in _scan_terms(p)})
+    need_pos = any(p.qtype == "phrase" for _i, p in idx_plans)
+    buckets = sorted({term_bucket(t, store.n_buckets) for t in terms})
+    cols = [
+        "term", "field", "block_id", "max_tf", "min_dl_byte",
+        "docids_vb", "tfs_vb", "dls",
+    ]
+    if any(NGRAM_SEP in t for t in terms):
+        cols += [
+            "tfs1_vb", "tfs2_vb", "tfs3_vb", "max_tf1", "max_tf2", "max_tf3",
+        ]
+    if need_pos:
+        cols.append("positions_vb")
+    return terms, buckets, cols, need_pos
+
+
 def _posting_rows(
     spark: SparkSession,
     store: IndexStore,
@@ -1589,21 +1614,7 @@ def _posting_rows(
     by block_id — or by (block_id, shard) when the batch is sharded —
     except with one scan term in one effective field and nothing
     staged, where the scan's own partitioning serves."""
-    terms = sorted({t for _i, p in idx_plans for t in _scan_terms(p)})
-    has_gram = any(NGRAM_SEP in t for t in terms)
-    need_pos = any(p.qtype == "phrase" for _i, p in idx_plans)
-    n_buckets = store.n_buckets
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-    cols = [
-        "term", "field", "block_id", "max_tf", "min_dl_byte",
-        "docids_vb", "tfs_vb", "dls",
-    ]
-    if has_gram:
-        cols += [
-            "tfs1_vb", "tfs2_vb", "tfs3_vb", "max_tf1", "max_tf2", "max_tf3",
-        ]
-    if need_pos:
-        cols.append("positions_vb")
+    terms, buckets, cols, need_pos = _scan_spec(store, idx_plans)
     postings = _cached_postings(spark, store)
     for sb in staged or []:
         # only the queries' bucket dirs: listing all of a 64-bucket
@@ -1694,6 +1705,47 @@ def _posting_rows(
     return rows, 1
 
 
+def _posting_table(store: IndexStore, idx_plans: list[tuple[int, QueryPlan]]):
+    """The committed posting rows of ``idx_plans`` read on the driver
+    with pyarrow — no Spark job: the columns and ``term ∈`` filter of
+    :func:`_posting_rows` over only the terms' ``tbucket=`` dirs, in
+    the kernel's input layout (``pos_vb``, ``shard`` = 0) and sorted
+    by (block_id, term, field), the order :func:`_run_kernel` feeds
+    each block in. Staged batches, field filters and facet columns are
+    the Spark plan's alone."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    from seekstorm_spark.index.store import arrow_schema
+
+    terms, buckets, cols, need_pos = _scan_spec(store, idx_plans)
+    schema = arrow_schema(POSTINGS_DDL)
+    dataset = pads.dataset(
+        store.postings_path,
+        schema=schema,
+        partitioning=pads.partitioning(
+            pa.schema([schema.field("tbucket")]), flavor="hive"
+        ),
+    )
+    tbl = dataset.to_table(
+        columns=cols,
+        filter=pc.field("tbucket").isin(buckets) & pc.field("term").isin(terms),
+    )
+    if need_pos:
+        tbl = tbl.rename_columns(
+            ["pos_vb" if c == "positions_vb" else c for c in tbl.column_names]
+        )
+    else:
+        tbl = tbl.append_column("pos_vb", pa.nulls(tbl.num_rows, pa.binary()))
+    tbl = tbl.append_column(
+        "shard", pa.array(np.zeros(tbl.num_rows, dtype=np.int32))
+    )
+    return tbl.sort_by(
+        [("block_id", "ascending"), ("term", "ascending"), ("field", "ascending")]
+    )
+
+
 def _overlay_bufs(buflist, kind: str, n_values: int):
     """Merge a block's facet buffers (one per committed/staged
     slice; non-missing slots disjoint) into one structure."""
@@ -1766,6 +1818,38 @@ def _sset_gather(buf, cand: np.ndarray):
     return owner, codes[flat]
 
 
+def _kernel_args(
+    store: IndexStore,
+    fields: list[tuple[str, float]] | None = None,
+    field_filter: list[str] | None = None,
+    staged: list | None = None,
+) -> tuple[list[int] | None, dict]:
+    """(allowed field ids or None, the index-derived
+    :func:`_make_kernel` keywords): ``fields`` / ``field_filter``
+    resolve to boosts and allowed fields, avgdl is the index's plus
+    any ``staged`` batches', and the block size, delete set and facet
+    kinds/sizes come from the index. The one source of these for the
+    Spark kernel (:func:`_run_kernel`) and the driver-side result-cache
+    rebuild."""
+    boosts, allowed = _resolve_fields(store, fields, field_filter)
+    _n, avgdl = _effective_stats(store, staged)
+    specs: dict = store.meta.get("facets") or {}
+    return allowed, {
+        "avgdl": avgdl,
+        "boosts": boosts,
+        "block_size": int(store.meta.get("block_size", ROARING_BLOCK_SIZE)),
+        "deletes": _load_delete_set(store),
+        "facet_kinds": {
+            name: facet_kind(spec) for name, spec in specs.items()
+        },
+        "facet_sizes": {
+            name: len(vals)
+            for name, spec in specs.items()
+            if (vals := facet_values(spec)) is not None
+        },
+    }
+
+
 def _run_kernel(
     spark: SparkSession,
     store: IndexStore,
@@ -1784,26 +1868,17 @@ def _run_kernel(
     :func:`_make_kernel` over them → the kernel's per-partition
     output, which always leads with ``query_id``. Every query caller
     runs through here: ``search``, ``search_many``, ``match_docids``,
-    :func:`_count_core` and :func:`_facet_tally`. ``fields`` /
-    ``field_filter`` resolve here to boosts and allowed fields, and
-    avgdl to the index's plus any ``staged`` batches'. ``opts`` pass
-    through to the kernel; the index's block size, delete set and
-    facet kinds/sizes are filled in here.
+    :func:`_count_core` and :func:`_facet_tally`. ``opts`` pass
+    through to the kernel; the index-derived arguments come from
+    :func:`_kernel_args`.
 
     A ``sort_prune`` key keeps its zone bounds and schedules blocks
     by them instead (best key first, unknown bounds first — those can
     never be skipped), so the key threshold tightens as early as
     possible. Pre-v5 facet files carry no bounds; the default order
     applies then."""
-    boosts, allowed = _resolve_fields(store, fields, field_filter)
-    _n, avgdl = _effective_stats(store, staged)
-    specs: dict = store.meta.get("facets") or {}
-    kinds = {name: facet_kind(spec) for name, spec in specs.items()}
-    sizes = {
-        name: len(vals)
-        for name, spec in specs.items()
-        if (vals := facet_values(spec)) is not None
-    }
+    allowed, kargs = _kernel_args(store, fields, field_filter, staged)
+    kinds = kargs["facet_kinds"]
     facet_cols = set(opts.get("emit_facets") or ())
     for spec in (opts.get("count_facets_by_q") or {}).values():
         for fc, (kind, b) in spec.items():
@@ -1833,13 +1908,7 @@ def _run_kernel(
                 "block_id", "term", "field",
             ]
     kernel = _make_kernel(
-        idx_plans, top_k, prune, avgdl, boosts,
-        block_size=int(store.meta.get("block_size", ROARING_BLOCK_SIZE)),
-        deletes=_load_delete_set(spark, store),
-        facet_kinds=kinds,
-        facet_sizes=sizes,
-        n_shards=n_shards,
-        **opts,
+        idx_plans, top_k, prune, n_shards=n_shards, **kargs, **opts
     )
     if opts.get("count_facets_by_q"):
         schema = "query_id int, " + FACET_COUNT_SCHEMA
@@ -2081,6 +2150,14 @@ def _make_kernel(
             return float(best_s[qi].min())
 
         def merge_topk(qi: int, docids: np.ndarray, scores: np.ndarray) -> None:
+            # exact prefilter: a candidate scoring below the block's
+            # k-th best is outside the block's own top-k, so it cannot
+            # enter the merged top-k; ties at the k-th score all stay
+            # for the docid tiebreak
+            if 0 < top_k < scores.size:
+                cut = scores.size - top_k
+                keep = scores >= np.partition(scores, cut)[cut]
+                docids, scores = docids[keep], scores[keep]
             d = np.concatenate([best_d[qi], docids])
             s = np.concatenate([best_s[qi], scores])
             order = np.lexsort((d, -s.astype(np.float64)))[:top_k]
@@ -2843,7 +2920,7 @@ def index_facet_stats(
     kinds = {fc: facet_kind(specs[fc]) for fc in facets}
     sizes = {fc: len(facet_values(specs[fc])) for fc in facets}
     block_size = int(store.meta.get("block_size", ROARING_BLOCK_SIZE))
-    delete_set = _load_delete_set(spark, store)
+    delete_set = _load_delete_set(store)
 
     rows = (
         store.facet_blocks(spark)
@@ -3031,7 +3108,7 @@ def delete_by_query(
     invalidate_term_stats_cache(store.path)
 
 
-def _load_delete_set(spark: SparkSession, store: IndexStore) -> np.ndarray:
+def _load_delete_set(store: IndexStore) -> np.ndarray:
     """Delete set as a sorted array for the kernel (the reference keeps
     an in-RAM AHashSet, `index.rs:1593-1594`). Read driver-side with
     pyarrow (no Spark job) and cached per index generation; shipped to

@@ -9,13 +9,21 @@ the win is much larger than in the reference — a kernel query pays
 the ~0.5 s/action scheduling floor, a cache hit is a driver-side
 array slice.
 
-Build: ONE fused `search_many` action computes every frequent term's
-top-k (bit-identical to `search`), written as a single parquet file
-plus a meta json recording the index generation (postings /
-term_stats / deletes dir mtimes). Any append, commit, delete, or
-compaction bumps a generation mtime, which invalidates the cache
-until `build_result_cache` runs again — exactly the reference's
-cache-rebuild-per-commit semantics.
+Build: also on the driver, with no Spark job. Each frequent term is
+planned once; their committed posting rows are read with pyarrow from
+only their ``tbucket=`` dirs (``engine._posting_table``, the columns
+and term filter of the Spark scan), and the one scoring kernel
+(``engine._make_kernel``, with ``engine._kernel_args``' index-derived
+arguments) runs in-process over them block by block — the same f32
+top-k, bit for bit, as ``search_many`` with the cache bypassed. The
+rows go to a parquet file named per rebuild, then a meta json names
+that file and records the index generation (postings / term_stats /
+deletes dir mtimes); the meta is replaced last, so a reader never
+pairs one rebuild's meta with another's rows. Any append, commit,
+delete, or compaction bumps a generation mtime, which invalidates the
+cache until `build_result_cache` runs again — exactly the reference's
+cache-rebuild-per-commit semantics (``RealtimeIndexer.commit`` reruns
+it through ``rebuild_result_cache``).
 
 Serve: `cached_single_term` memoizes the decoded parquet per
 (path, generation) and answers from a dict of numpy-backed rows.
@@ -31,12 +39,13 @@ import json
 import os
 import tempfile
 
-RESULT_CACHE_VERSION = 1
+import numpy as np
+
+RESULT_CACHE_VERSION = 2
 RESULT_CACHE_K = 1000
 
 _CACHE_DIR = "result_cache"
 _META_NAME = "cache_meta.json"
-_DATA_NAME = "cache.parquet"
 
 # (store.path) → (generation tuple, k, {term: [(docid, score), ...]})
 _SERVE_CACHE: dict[str, tuple[tuple, int, dict]] = {}
@@ -75,45 +84,54 @@ def build_result_cache(
     k: int = RESULT_CACHE_K,
 ) -> list[str]:
     """Precompute top-``k`` results for ``terms`` (default: the
-    index's ``frequent_terms``) in ONE fused action; returns the list
-    of cached (analyzed) term keys. Must be re-run after any append /
-    delete / compaction — until then the stale cache is ignored."""
+    index's ``frequent_terms``) on the driver, with no Spark job;
+    returns the list of cached (analyzed) term keys. Must be re-run
+    after any append / delete / compaction — until then the stale
+    cache is ignored."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from seekstorm_spark.query.engine import _plan, search_many
+    from seekstorm_spark.query.engine import (
+        _kernel_args,
+        _make_kernel,
+        _plan,
+        _posting_table,
+    )
 
     terms = list(
         terms if terms is not None else store.meta.get("frequent_terms") or []
     )
     keys: list[str] = []
     queries: list[str] = []
+    idx_plans = []
     for t in terms:
         plan = _plan(spark, store, t, "union")
         if cacheable_plan(plan):
             key = next(iter(plan.pos_terms))
             if key not in keys:
+                idx_plans.append((len(keys), plan))
                 keys.append(key)
                 queries.append(t)
 
     gen = _generation(store)
-    out_terms: list[str] = []
-    out_docids: list[int] = []
-    out_scores: list[float] = []
-    if queries:
-        rows = search_many(spark, store, queries, top_k=k).collect()
-        by_q: dict[int, list] = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(
-                (r["docid"], r["score"])
-            )
-        for qi, key in enumerate(keys):
-            # same ordering contract as search(): score desc, docid asc
-            hits = sorted(by_q.get(qi, []), key=lambda t: (-t[1], t[0]))
-            for docid, score in hits:
-                out_terms.append(key)
-                out_docids.append(int(docid))
-                out_scores.append(float(score))
+    out_terms = np.empty(0, dtype=object)
+    out_docids = np.empty(0, dtype=np.int64)
+    out_scores = np.empty(0, dtype=np.float32)
+    if idx_plans:
+        rows = _posting_table(store, idx_plans)
+        _allowed, kargs = _kernel_args(store)
+        kernel = _make_kernel(idx_plans, k, True, **kargs)
+        # one block group at a time, in block order (the table is
+        # sorted by block_id); the kernel's top-k per query is already
+        # in the search() order: score desc, docid asc
+        bids = rows.column("block_id").to_numpy()
+        cuts = [0, *(np.flatnonzero(np.diff(bids)) + 1), len(bids)]
+        (top,) = kernel(
+            rows.slice(a, b - a).to_pandas() for a, b in zip(cuts, cuts[1:])
+        )
+        out_terms = np.asarray(keys, dtype=object)[top["query_id"].to_numpy()]
+        out_docids = top["docid"].to_numpy()
+        out_scores = top["score"].to_numpy()
 
     cache_dir = os.path.join(store.path, _CACHE_DIR)
     os.makedirs(cache_dir, exist_ok=True)
@@ -124,10 +142,13 @@ def build_result_cache(
             "score": pa.array(out_scores, pa.float32()),
         }
     )
-    fd, tmp = tempfile.mkstemp(dir=cache_dir, suffix=".parquet.tmp")
+    # a new file per rebuild: the meta below names it, so readers of
+    # the old meta keep reading the old rows until the meta moves
+    fd, data_path = tempfile.mkstemp(
+        dir=cache_dir, prefix="cache-", suffix=".parquet"
+    )
     os.close(fd)
-    pq.write_table(table, tmp)
-    os.replace(tmp, os.path.join(cache_dir, _DATA_NAME))
+    pq.write_table(table, data_path)
     meta = {
         "version": RESULT_CACHE_VERSION,
         "k": int(k),
@@ -136,11 +157,21 @@ def build_result_cache(
         # analyzed keys back through a stemmer could double-stem)
         "source_terms": queries,
         "generation": list(gen),
+        "data": os.path.basename(data_path),
     }
     fd, tmp = tempfile.mkstemp(dir=cache_dir, suffix=".json.tmp")
     with os.fdopen(fd, "w") as f:
         json.dump(meta, f)
     os.replace(tmp, os.path.join(cache_dir, _META_NAME))
+    # the meta no longer names any older rows file: remove them (a
+    # reader still holding an old meta finds its file gone and falls
+    # back to the kernel)
+    for name in os.listdir(cache_dir):
+        if name.endswith(".parquet") and name != meta["data"]:
+            try:
+                os.remove(os.path.join(cache_dir, name))
+            except FileNotFoundError:
+                pass
     _SERVE_CACHE.pop(store.path, None)
     return keys
 
@@ -181,13 +212,14 @@ def _load(store) -> tuple[tuple, int, dict] | None:
     import pyarrow.parquet as pq
 
     cache_dir = os.path.join(store.path, _CACHE_DIR)
-    meta_path = os.path.join(cache_dir, _META_NAME)
     try:
-        with open(meta_path) as f:
+        with open(os.path.join(cache_dir, _META_NAME)) as f:
             meta = json.load(f)
         if meta.get("version") != RESULT_CACHE_VERSION:
             return None
-        table = pq.read_table(os.path.join(cache_dir, _DATA_NAME))
+        # the rows file this meta names; a rebuild that lands after the
+        # meta read removes it → None, and the query runs the kernel
+        table = pq.read_table(os.path.join(cache_dir, meta["data"]))
     except (OSError, ValueError):
         return None
     terms = table.column("term").to_pylist()
@@ -195,10 +227,7 @@ def _load(store) -> tuple[tuple, int, dict] | None:
     scores = table.column("score").to_pylist()
     by_term: dict[str, list] = {t: [] for t in meta.get("terms") or []}
     for t, d, s in zip(terms, docids, scores):
-        # setdefault: a reader can race a rebuild between the parquet
-        # and meta os.replace calls — tolerate terms either side
-        # doesn't know (the generation check rejects the torn state)
-        by_term.setdefault(t, []).append((d, s))
+        by_term[t].append((d, s))
     return tuple(meta["generation"]), int(meta["k"]), by_term
 
 

@@ -34,8 +34,15 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
+        # an index read lists one leaf dir per tbucket; past this many
+        # paths Spark lists them in a job (64 tasks for 64 buckets,
+        # ~0.5 s on 4 cores) instead of on the driver (~0.05 s)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # text corpora are work-dense per byte: small scan partitions keep
         # the Python tokenize stages as wide as the cluster (the 128MB
@@ -58,6 +65,25 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _warm_session(spark)
     return spark
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: half
+    the host's memory, at most 48g. A fixed 48g heap is never the
+    limit on a small host — JVMs grow until the kernel kills one — so
+    bound it by the host, leaving room for a second session. 48g when
+    the host's memory cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1])
+                for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, ValueError, IndexError, StopIteration):
+        return "48g"
+    half_mb = kb // 2048
+    return "48g" if half_mb >= 48 * 1024 else f"{half_mb}m"
 
 
 def _warm_session(spark: SparkSession) -> None:

@@ -95,6 +95,7 @@ from seekstorm_spark.index.store import (
     POSTINGS_DDL,
     TERM_STATS_DDL,
     IndexStore,
+    arrow_schema,
 )
 from seekstorm_spark.quantization import avgdl_f32, length_stats
 
@@ -381,7 +382,7 @@ def _write_table(
     )
     segs = pa.Table.from_batches(
         list(tokenize(docs.select(["docid", *field_cols]).to_batches(max_rows))),
-        schema=_arrow_schema(TERM_SEG_SCHEMA),
+        schema=arrow_schema(TERM_SEG_SCHEMA),
     ).to_pandas()
     is_sentinel = segs["term"].values == ""
 
@@ -398,7 +399,7 @@ def _write_table(
     ]
     postings = pd.concat(blocks, ignore_index=True) if blocks else None
     _write_parts(
-        postings, "tbucket", _arrow_schema(POSTINGS_DDL, "tbucket"),
+        postings, "tbucket", arrow_schema(POSTINGS_DDL, "tbucket"),
         os.path.join(stage, "postings"),
     )
 
@@ -407,7 +408,7 @@ def _write_table(
     parts = list(dec([sentinels]))
     doc_meta = pd.concat(parts) if parts else None
     _write_parts(
-        doc_meta, None, _arrow_schema(DOC_META_DDL),
+        doc_meta, None, arrow_schema(DOC_META_DDL),
         os.path.join(stage, "doc_meta"),
     )
     hist = (
@@ -442,7 +443,7 @@ def _write_table(
     _write_parts(
         term_stats, "tbucket",
         # Spark's count(*) is non-nullable
-        _arrow_schema(TERM_STATS_DDL, "tbucket", not_null=("n_blocks",)),
+        arrow_schema(TERM_STATS_DDL, "tbucket", not_null=("n_blocks",)),
         os.path.join(stage, "term_stats"),
     )
 
@@ -457,27 +458,10 @@ def _write_table(
         ]
         _write_parts(
             pd.concat(rows) if rows else None,
-            "facet", _arrow_schema(FACETS_DDL, "facet"),
+            "facet", arrow_schema(FACETS_DDL, "facet"),
             os.path.join(stage, "facets"),
         )
     return hist
-
-
-def _arrow_schema(ddl: str, drop: str | None = None, not_null=()) -> pa.Schema:
-    """Arrow schema of a flat Spark DDL string, without the ``drop``
-    (partition) column."""
-    types = {
-        "string": pa.string(),
-        "int": pa.int32(),
-        "long": pa.int64(),
-        "double": pa.float64(),
-        "binary": pa.binary(),
-    }
-    return pa.schema(
-        pa.field(name, types[typ], nullable=name not in not_null)
-        for name, typ in (spec.split() for spec in ddl.split(","))
-        if name != drop
-    )
 
 
 # Spark's partition-dir escaping (ExternalCatalogUtils.escapePathName)

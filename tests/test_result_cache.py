@@ -5,10 +5,13 @@ generation-invalidated by appends until rebuilt."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from seekstorm_spark.index.builder import IndexBuilder, assign_docids
+from seekstorm_spark.query import result_cache
 from seekstorm_spark.query.engine import search
 from seekstorm_spark.query.result_cache import (
     build_result_cache,
@@ -173,3 +176,164 @@ def test_realtime_commit_rebuilds_cache(spark, tmp_path):
         key=lambda t: (-t[1], t[0]),
     )[:10]
     assert [(r["docid"], r["score"]) for r in hit_df.collect()] == top
+
+
+def _bypassed_kernel(spark, store, queries, k):
+    """search_many over ``queries`` with the result cache bypassed
+    → one [(docid, f32 score)] list per query, score desc, docid asc."""
+    from unittest import mock
+
+    from seekstorm_spark.query.engine import search_many
+
+    with mock.patch.object(
+        result_cache, "cached_single_term", lambda *a, **kw: None
+    ):
+        rows = search_many(spark, store, queries, top_k=k).collect()
+    out = [[] for _ in queries]
+    for r in rows:
+        out[r["query_id"]].append((r["docid"], r["score"]))
+    return [sorted(hits, key=lambda t: (-t[1], t[0])) for hits in out]
+
+
+def _assert_cache_is_kernel(spark, store):
+    """The on-disk cache, term by term, == the bypassed kernel's
+    top-k of the query string it was planned from."""
+    meta_gen, k, by_term = result_cache._load(store)
+    assert meta_gen == result_cache._generation(store)
+    with open(f"{store.path}/result_cache/cache_meta.json") as f:
+        meta = json.load(f)
+    kernel = _bypassed_kernel(spark, store, meta["source_terms"], k)
+    assert meta["terms"] and all(kernel)
+    for key, hits in zip(meta["terms"], kernel):
+        assert by_term[key] == hits, key
+
+
+def _rebuild_jobs(spark, store) -> list:
+    """Spark job ids (statusTracker, own job group) started by one
+    rebuild_result_cache call."""
+    from seekstorm_spark.query.result_cache import rebuild_result_cache
+
+    sc = spark.sparkContext
+    sc.setJobGroup("rc_rebuild", "rc_rebuild")
+    try:
+        assert rebuild_result_cache(spark, store)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return list(sc.statusTracker().getJobIdsForGroup("rc_rebuild"))
+
+
+FREQ = ["term00000", "term00001", "term00003", "Term00002", "zzzmissing"]
+
+
+def test_driver_cache_equals_kernel_after_build(spark, tmp_path):
+    """Several 64-doc blocks, so the driver kernel's pruning and
+    per-block merges run; an absent frequent term is not cached."""
+    docs = assign_docids(synth_webtext(spark, 300, seed=51), order_col="url")
+    store = IndexBuilder(
+        spark, str(tmp_path / "idx"), n_buckets=4, block_size=64,
+        frequent_terms=FREQ,
+    ).build(docs, text_col="text", id_col="docid")
+    keys = build_result_cache(spark, store, k=40)
+    assert sorted(keys) == [
+        "term00000", "term00001", "term00002", "term00003",
+    ]
+    _assert_cache_is_kernel(spark, store)
+    assert _rebuild_jobs(spark, store) == []
+    _assert_cache_is_kernel(spark, store)
+
+
+def test_driver_cache_equals_kernel_after_commit(spark, tmp_path):
+    from seekstorm_spark.streaming.incremental import RealtimeIndexer
+
+    docs = assign_docids(synth_webtext(spark, 200, seed=52), order_col="url")
+    store = IndexBuilder(
+        spark, str(tmp_path / "idx"), n_buckets=4, block_size=64,
+        frequent_terms=FREQ,
+    ).build(docs, text_col="text", id_col="docid")
+    build_result_cache(spark, store, k=30)
+    idx = RealtimeIndexer(spark, store, text_col="text", id_col="docid",
+                          commit_every=10_000)
+    more = assign_docids(
+        synth_webtext(spark, 80, seed=53), order_col="url"
+    ).withColumn("docid", F.col("docid") + 250)
+    idx.add_documents(more)
+    store = idx.commit()
+    # the commit's rebuild covers the committed docs (several rows
+    # per (term, field, block) now)
+    _assert_cache_is_kernel(spark, store)
+    assert _rebuild_jobs(spark, store) == []
+
+
+def test_driver_cache_equals_kernel_with_deletes(spark, tmp_path):
+    from seekstorm_spark.query.engine import delete_documents
+
+    docs = assign_docids(synth_webtext(spark, 300, seed=54), order_col="url")
+    store = IndexBuilder(
+        spark, str(tmp_path / "idx"), n_buckets=4, block_size=64,
+        frequent_terms=FREQ,
+    ).build(docs, text_col="text", id_col="docid")
+    top = _bypassed_kernel(spark, store, ["term00000"], 30)[0]
+    gone = [d for d, _s in top[:5]] + [d for d, _s in top[-3:]] + [1, 70]
+    delete_documents(spark, store, gone)
+    build_result_cache(spark, store, k=30)
+    _assert_cache_is_kernel(spark, store)
+    _gen, _k, by_term = result_cache._load(store)
+    assert not {d for d, _s in by_term["term00000"]} & set(gone)
+
+
+def test_driver_cache_equals_kernel_two_fields(spark, tmp_path):
+    """Two indexed fields: a term's score sums its per-field rows with
+    the index's field boosts."""
+    docs = assign_docids(
+        synth_webtext(spark, 250, seed=55), order_col="url"
+    ).select(
+        "docid",
+        F.substring_index("text", " ", 6).alias("title"),
+        F.col("text").alias("body"),
+    )
+    store = IndexBuilder(
+        spark, str(tmp_path / "idx"), n_buckets=4, block_size=64,
+        fields=["title", "body"], frequent_terms=FREQ,
+    ).build(docs, id_col="docid")
+    build_result_cache(spark, store, k=30)
+    _assert_cache_is_kernel(spark, store)
+
+
+def test_reader_whose_rows_file_is_gone_falls_back(spark, tmp_path):
+    """Each rebuild writes its own rows file and the meta names it; a
+    rebuild removes the file the old meta named. A reader that read
+    that old meta finds its file gone → no cache, and the query runs
+    the kernel."""
+    import os
+
+    docs = assign_docids(synth_webtext(spark, 150, seed=56), order_col="url")
+    store = IndexBuilder(
+        spark, str(tmp_path / "idx"), n_buckets=4,
+        frequent_terms=["term00000"],
+    ).build(docs, text_col="text", id_col="docid")
+    cache_dir = os.path.join(store.path, "result_cache")
+
+    def rows_files():
+        return sorted(f for f in os.listdir(cache_dir) if f.endswith(".parquet"))
+
+    build_result_cache(spark, store, k=20)
+    first = rows_files()
+    build_result_cache(spark, store, k=20)
+    second = rows_files()
+    assert len(first) == len(second) == 1 and first != second
+    with open(os.path.join(cache_dir, "cache_meta.json")) as f:
+        assert json.load(f)["data"] == second[0]
+
+    kernel = [
+        tuple(r)
+        for r in search(spark, store, "term00000", top_k=10, prune=False)
+        .collect()
+    ]
+    os.remove(os.path.join(cache_dir, second[0]))
+    result_cache._SERVE_CACHE.clear()
+    assert result_cache._load(store) is None
+    assert cached_single_term(store, "term00000", 10) is None
+    miss = search(spark, store, "term00000", top_k=10)
+    assert not _is_local(miss)
+    assert [tuple(r) for r in miss.collect()] == kernel
