@@ -169,12 +169,13 @@ def encode_positions(flat_positions: np.ndarray, tfs: np.ndarray) -> bytes:
     return vb_encode(d.astype(np.uint64))
 
 
-def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
-    """Inverse of :func:`encode_positions` → list of per-doc arrays."""
+def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`encode_positions` → the flat concatenation of
+    the per-doc position lists (doc i's list is ``tfs[i]`` long)."""
     tfs = np.asarray(tfs, dtype=np.int64)
     flat = vb_decode(buf).astype(np.int64)
     if flat.size == 0:
-        return [np.empty(0, dtype=np.int64) for _ in tfs]
+        return flat
     starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
     bump = np.ones_like(flat)
     bump[starts] = 0
@@ -182,5 +183,4 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     # per-doc cumulative sum: global cumsum minus offset at each start
     g = np.cumsum(flat)
     seg_off = np.repeat(g[starts] - flat[starts], tfs)
-    vals = g - seg_off
-    return np.split(vals, np.cumsum(tfs)[:-1])
+    return g - seg_off

@@ -401,22 +401,6 @@ def simhash_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="int64")
 
 
-def simhash_dup_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Exact-SimHash collision groups (Hamming-0 near-dups). At scale,
-    band the 64 bits into 4×16 prefixes for Hamming ≤3 candidates."""
-    return (
-        df.select(
-            F.col(id_col).alias("docid"),
-            simhash_udf(F.col(text_col)).alias("simhash"),
-        )
-        .groupBy("simhash")
-        .agg(F.count("*").alias("dup_count"), F.min("docid").alias("keeper_docid"))
-        .filter(F.col("dup_count") > 1)
-    )
-
-
 def contamination_pairs(
     corpus: DataFrame,
     probes: DataFrame,

@@ -70,12 +70,10 @@ def _rewrite_block(
             kept_d = d[keep]
             kept_tfs = tfs[keep]
             dls = np.frombuffer(r["dls"], dtype=np.uint8)[keep]
-            plists = decode_positions(r["positions_vb"], tfs)
-            kept_pos = (
-                np.concatenate([p for p, k in zip(plists, keep) if k])
-                if kept_tfs.size
-                else np.empty(0, dtype=np.int64)
-            )
+            # a position belongs to its doc: repeat keep per position
+            kept_pos = decode_positions(r["positions_vb"], tfs)[
+                np.repeat(keep, tfs)
+            ]
             row.update(
                 posting_count=int(kept_d.size),
                 max_tf=int(kept_tfs.max()),

@@ -47,7 +47,6 @@ is exactly ONE Spark job:
 
 from __future__ import annotations
 
-import math
 import os
 from collections.abc import Iterator
 from dataclasses import dataclass, field as dc_field
@@ -63,6 +62,12 @@ from seekstorm_spark.codecs import (
     decode_docids,
     decode_positions,
     decode_tfs,
+)
+from seekstorm_spark.functions.geo import (
+    KM_PER_MILE,
+    geo_boxes_for_radius,
+    haversine_km,
+    morton_decode,
 )
 from seekstorm_spark.hashing import term_bucket
 from seekstorm_spark.index.builder import (
@@ -82,7 +87,6 @@ from seekstorm_spark.tokenizer import ParsedQuery, parse_query
 RESULT_SCHEMA = "docid long, score float"
 COUNT_SCHEMA = "matches long"
 FACET_COUNT_SCHEMA = "facet string, code long, matches long"
-EARTH_RADIUS_KM = 6371.0
 
 # per-index probed term stats: {(path, generation): {"df": {term: df},
 # "missing": set()}}. The probe reads ONLY the query terms' tbucket
@@ -458,7 +462,6 @@ def _resolve_facets(
     store: IndexStore,
     facet_filters: dict | None,
     result_sort: list[tuple[str, str]] | None,
-    geo_filter: dict | None = None,
 ) -> tuple[dict, list[str], dict[str, list[str] | None], dict[str, str]]:
     """(facet → kernel filter spec, facets the kernel must emit,
     facet dictionaries (None for numeric), facet kinds).
@@ -508,22 +511,78 @@ def _resolve_facets(
                 f"facet {key!r} is a Point facet — sort on 'geo_dist'"
             )
         emit.append(key)
-    if geo_filter:
-        if "point" in geo_filter:
-            c = geo_filter["point"]
-            if c not in specs or kinds[c] not in ("point", "morton"):
+    return filters_k, emit, dicts, kinds
+
+
+@dataclass(eq=False)
+class GeoRead:
+    """A geo request resolved against the index's facet kinds — what
+    the kernel decodes and compares for it (:func:`_resolve_geo`)."""
+
+    form: str  # "pair" (lat, lon f64 facets) | "point" | "morton"
+    cols: tuple[str, ...]  # facet columns: (lat, lon) or (point,)
+    at: tuple[float, float]  # base point (lat, lon)
+    km: float | np.ndarray  # filter radius, or ascending bucket bounds
+    unit: str  # "km" | "mi": emitted geo_dist / bucket_lo
+    bounds: list[float] | None = None  # bucket bounds in ``unit``
+
+    @property
+    def label(self) -> str:
+        """Facet label of a distance tally: the Point column or
+        "lat,lon"."""
+        return ",".join(self.cols)
+
+
+def _resolve_geo(store: IndexStore, spec: dict) -> GeoRead:
+    """The one geo resolver: a geo filter (``{"point": col |
+    "lat"/"lon": cols, "at": (lat, lon), "radius_km" | "radius_mi":
+    r[, "unit"]}``, which a geo_dist sort also reads) or a
+    distance-bucket spec (``{"facet": col | "lat"/"lon": cols,
+    "base": (lat, lon), "ranges": [...][, "unit"]}``) → its storage
+    form, facet columns, base point and km values. Miles convert to
+    km here, on the way in; :func:`_geo_dist_out` converts emitted
+    distances back.
+
+    Storage forms: separate lat/lon f64 facets ("pair"), ONE
+    interleaved [lat, lon] f64 buffer ("point"), or ONE packed u64
+    Morton code per doc ("morton" — half the bytes)."""
+    specs: dict = store.meta.get("facets") or {}
+    kinds = {name: facet_kind(s) for name, s in specs.items()}
+    unit = spec.get("unit", "mi" if "radius_mi" in spec else "km")
+    if unit not in ("km", "mi"):
+        raise ValueError(f"geo unit must be 'km' or 'mi', got {unit!r}")
+    bounds = None
+    if "ranges" in spec:  # distance buckets
+        bounds = [float(b) for b in sorted(spec["ranges"])]
+        scale = KM_PER_MILE if unit == "mi" else 1.0
+        km = np.asarray([b * scale for b in bounds], dtype=np.float64)
+        point, at = spec.get("facet"), spec["base"]
+    else:  # radius filter
+        if "radius_mi" in spec:
+            if "radius_km" in spec:
+                raise ValueError("give radius_km OR radius_mi, not both")
+            km = float(spec["radius_mi"]) * KM_PER_MILE
+        else:
+            km = float(spec["radius_km"])
+        point, at = spec.get("point"), spec["at"]
+    if point is not None:
+        form, cols = kinds.get(point), (point,)
+        if form not in ("point", "morton"):
+            raise ValueError(
+                f"{point!r} is not an indexed Point/Morton facet; "
+                f"indexed: {list(specs)}"
+            )
+    else:
+        form, cols = "pair", (spec.get("lat"), spec.get("lon"))
+        for c in cols:
+            if kinds.get(c) != "numeric":
                 raise ValueError(
-                    f"geo filter needs a Point facet column {c!r}; "
+                    f"{c!r} is not an indexed numeric facet; "
                     f"indexed: {list(specs)}"
                 )
-        else:
-            for c in (geo_filter["lat"], geo_filter["lon"]):
-                if c not in specs or kinds[c] != "numeric":
-                    raise ValueError(
-                        f"geo filter needs numeric facet column {c!r}; "
-                        f"indexed: {list(specs)}"
-                    )
-    return filters_k, emit, dicts, kinds
+    return GeoRead(
+        form, cols, (float(at[0]), float(at[1])), km, unit, bounds
+    )
 
 
 def _fallback_union_query(query: str) -> str:
@@ -558,57 +617,44 @@ def _dict_bmp_only(
     return flag
 
 
-def _normalize_geo(gf: dict | None) -> tuple[dict | None, str]:
-    """Accept the radius in km (``radius_km``) or miles
-    (``radius_mi``, reference DistanceUnit) and an optional ``unit``
-    ("km"|"mi") for the EMITTED ``geo_dist``; internally everything
-    runs in km."""
-    if not gf:
-        return gf, "km"
-    from seekstorm_spark.functions.geo import KM_PER_MILE
-
-    gf = dict(gf)
-    unit = gf.pop("unit", "mi" if "radius_mi" in gf else "km")
-    if unit not in ("km", "mi"):
-        raise ValueError(f"geo unit must be 'km' or 'mi', got {unit!r}")
-    if "radius_mi" in gf:
-        if "radius_km" in gf:
-            raise ValueError("give radius_km OR radius_mi, not both")
-        gf["radius_km"] = float(gf.pop("radius_mi")) * KM_PER_MILE
-    return gf, unit
-
-
-def _geo_cols(gf: dict) -> set[str]:
-    """Facet columns a geo filter reads: one Point/Morton column or a
-    numeric lat/lon pair."""
-    return {gf["point"]} if "point" in gf else {gf["lat"], gf["lon"]}
+def _geo_dist_out(df: DataFrame, geo_by_q: dict[int, GeoRead]) -> DataFrame:
+    """Kernel distances are km: the emitted ``geo_dist`` of a query
+    whose geo request was in miles rescales on the way out (the
+    distance order is unit-invariant, so any sort may come before)."""
+    mi = [qi for qi, g in geo_by_q.items() if g.unit == "mi"]
+    if not mi:
+        return df
+    return df.withColumn(
+        "geo_dist",
+        F.when(
+            F.col("query_id").isin(mi),
+            F.col("geo_dist") / F.lit(KM_PER_MILE),
+        ).otherwise(F.col("geo_dist")),
+    )
 
 
 def _block_bounds(
-    geo_filter: dict | None, filters_k: dict
+    geo: GeoRead | None, filters_k: dict
 ) -> dict[str, list[tuple[float, float]]] | None:
     """Zone intervals for :func:`_join_facet_blocks`' block skip: the
     geo radius' conservative lat/lon boxes (clamped and split at the
     antimeridian, so the skip is lossless) and every numeric range
     filter's [lo, hi]; None when nothing can skip."""
     block_bounds = None
-    if geo_filter:
-        from seekstorm_spark.functions.geo import geo_boxes_for_radius
-
-        boxes = geo_boxes_for_radius(
-            float(geo_filter["at"][0]), float(geo_filter["at"][1]),
-            float(geo_filter["radius_km"]),
+    if geo is not None:
+        boxes = geo_boxes_for_radius(geo.at[0], geo.at[1], geo.km)
+        # lat intervals, then lon intervals: a Point facet's zone
+        # bounds carry latitude min/max, so its one column takes the
+        # lat intervals only
+        block_bounds = dict(
+            zip(
+                geo.cols,
+                (
+                    [(b[0], b[1]) for b in boxes],
+                    [(b[2], b[3]) for b in boxes],
+                ),
+            )
         )
-        if "point" in geo_filter:
-            # a Point facet's zone bounds carry latitude min/max
-            block_bounds = {
-                geo_filter["point"]: [(b[0], b[1]) for b in boxes],
-            }
-        else:
-            block_bounds = {
-                geo_filter["lat"]: [(b[0], b[1]) for b in boxes],
-                geo_filter["lon"]: [(b[2], b[3]) for b in boxes],
-            }
     for name, spec in filters_k.items():
         if spec[0] == "numeric":
             block_bounds = block_bounds or {}
@@ -814,14 +860,14 @@ def search(
             )
         return strict
     staged = list(staged) if staged else None
-    geo_filter, geo_unit = _normalize_geo(geo_filter)
+    geo = _resolve_geo(store, geo_filter) if geo_filter else None
     filters_k, emit_facets, dicts, kinds = _resolve_facets(
-        store, facet_filters, result_sort, geo_filter
+        store, facet_filters, result_sort
     )
     want_dist = bool(result_sort) and any(
         key == "geo_dist" for key, _d in result_sort or []
     )
-    if want_dist and not geo_filter:
+    if want_dist and geo is None:
         raise ValueError("sorting by geo_dist requires geo_filter")
     plan = _plan(
         spark, store, query, default_type, staged, rewrite,
@@ -883,22 +929,17 @@ def search(
     candidates = _run_kernel(
         spark, store, [(0, plan)], need_k, prune and not emit_all,
         fields=fields, field_filter=field_filter, staged=staged,
-        block_bounds=_block_bounds(geo_filter, filters_k),
+        block_bounds=_block_bounds(geo, filters_k),
         facet_filters_by_q={0: filters_k},
-        geo_by_q={0: geo_filter} if geo_filter else None,
+        geo_by_q={0: geo} if geo is not None else None,
         dist_sort_by_q={} if want_dist else None,
         emit_all=emit_all,
         emit_facets=emit_facets,
         sort_prune=sort_prune,
-    ).drop("query_id")
-    if want_dist and geo_unit == "mi":
-        # kernel distances are km; the requested unit only rescales
-        # the emitted column (sort order is unit-invariant)
-        from seekstorm_spark.functions.geo import KM_PER_MILE
-
-        candidates = candidates.withColumn(
-            "geo_dist", F.col("geo_dist") / F.lit(KM_PER_MILE)
-        )
+    )
+    if want_dist:
+        candidates = _geo_dist_out(candidates, {0: geo})
+    candidates = candidates.drop("query_id")
 
     if result_sort:
         # decode facet bytes → values (sorted dictionary ⇒ byte order
@@ -912,31 +953,11 @@ def search(
                         F.isnan(F.col(f"fb_{fc}")), F.lit(None).cast("double")
                     ).otherwise(F.col(f"fb_{fc}")),
                 )
-            elif len(dicts[fc]) <= _DICT_LITERAL_MAX:
-                arr = F.array(*[F.lit(v) for v in dicts[fc]])
-                missing = facet_missing_code(len(dicts[fc]))
-                candidates = candidates.withColumn(
-                    fc,
-                    F.when(
-                        F.col(f"fb_{fc}") == missing,
-                        F.lit(None).cast("string"),
-                    ).otherwise(
-                        F.element_at(arr, (F.col(f"fb_{fc}") + 1).cast("int"))
-                    ),
-                )
             else:
-                # wide dictionary: broadcast join instead of a
-                # cardinality-sized literal array (the missing
-                # sentinel ≥ len(dict) left-joins to NULL)
-                dict_df = spark.createDataFrame(
-                    list(enumerate(dicts[fc])),
-                    f"__code_{fc} long, {fc} string",
+                candidates = _decode_string_codes(
+                    spark, candidates, {fc: dicts[fc]}, out_col=fc,
+                    code_col=f"fb_{fc}", facet_col=None,
                 )
-                candidates = candidates.join(
-                    F.broadcast(dict_df),
-                    F.col(f"fb_{fc}") == F.col(f"__code_{fc}"),
-                    "left",
-                ).drop(f"__code_{fc}")
             out_cols.append(F.col(fc))
         if want_dist:
             out_cols.append(F.col("geo_dist"))
@@ -972,9 +993,11 @@ def _decode_string_codes(
     vals_by_facet: dict[str, list],
     out_col: str,
     code_col: str = "code",
-    facet_col: str = "facet",
+    facet_col: str | None = "facet",
 ) -> DataFrame:
-    """Decode (facet, code) → dictionary value as new ``out_col``.
+    """Decode (facet, code) → dictionary value as new ``out_col``;
+    ``facet_col=None`` decodes the one facet of ``vals_by_facet``. A
+    code past the dictionary (the missing sentinel) decodes to NULL.
 
     Small dictionaries decode inline with a literal array (no join, no
     exchange); past ``_DICT_LITERAL_MAX`` total values the mapping is
@@ -985,8 +1008,12 @@ def _decode_string_codes(
     if total <= _DICT_LITERAL_MAX:
         decode = None
         for fc in sorted(vals_by_facet):
-            arr = F.array(*[F.lit(v) for v in vals_by_facet[fc]])
-            expr = F.element_at(arr, F.col(code_col).cast("int") + 1)
+            vals = vals_by_facet[fc]
+            arr = F.array(*[F.lit(v) for v in vals])
+            expr = F.when(
+                F.col(code_col) < len(vals),
+                F.element_at(arr, F.col(code_col).cast("int") + 1),
+            )
             decode = (
                 expr
                 if decode is None
@@ -1001,13 +1028,11 @@ def _decode_string_codes(
         ],
         "__dict_facet string, __dict_code long, __dict_value string",
     )
+    on = F.col(code_col).cast("long") == F.col("__dict_code")
+    if facet_col is not None:
+        on = (F.col(facet_col) == F.col("__dict_facet")) & on
     return (
-        df.join(
-            F.broadcast(dict_df),
-            (F.col(facet_col) == F.col("__dict_facet"))
-            & (F.col(code_col).cast("long") == F.col("__dict_code")),
-            "left",
-        )
+        df.join(F.broadcast(dict_df), on, "left")
         .drop("__dict_facet", "__dict_code")
         .withColumnRenamed("__dict_value", out_col)
     )
@@ -1079,7 +1104,6 @@ def search_many(
         raise ValueError("facet_filters must parallel queries")
     if geo_filters is not None and len(geo_filters) != len(queries):
         raise ValueError("geo_filters must parallel queries")
-    mi_qs: list[int] = []
     dist_sort_by_q: dict[int, str] = {}
     if result_sorts is not None:
         if len(result_sorts) != len(queries):
@@ -1103,23 +1127,16 @@ def search_many(
         _plan(spark, store, qstr, default_type, staged, similarity=similarity)
         for qstr in queries
     ]
-    filters_by_q: dict[int, dict] = {}
-    geo_by_q: dict[int, dict] = {}
-    if facet_filters is not None:
-        for i, ff in enumerate(facet_filters):
-            if not ff:
-                continue
-            fk, _emit, _dicts_i, _kinds = _resolve_facets(store, ff, None)
-            filters_by_q[i] = fk
-    if geo_filters is not None:
-        for i, gf in enumerate(geo_filters):
-            if not gf:
-                continue
-            gf, unit = _normalize_geo(gf)
-            _resolve_facets(store, None, None, geo_filter=gf)  # validate
-            geo_by_q[i] = dict(gf)
-            if unit == "mi":
-                mi_qs.append(i)
+    filters_by_q = {
+        i: _resolve_facets(store, ff, None)[0]
+        for i, ff in enumerate(facet_filters or ())
+        if ff
+    }
+    geo_by_q = {
+        i: _resolve_geo(store, gf)
+        for i, gf in enumerate(geo_filters or ())
+        if gf
+    }
 
     cached: list[tuple[int, int, float]] = []
     fused: list[tuple[int, QueryPlan]] = []
@@ -1199,20 +1216,7 @@ def search_many(
     if not outs:
         return spark.createDataFrame([], out_schema)
     result = reduce(lambda a, b: a.unionByName(b), outs)
-    # kernel distances are km; a query whose filter was given in miles
-    # gets its emitted column rescaled (order is unit-invariant, so the
-    # distance sort already happened correctly)
-    if with_dist and mi_qs:
-        from seekstorm_spark.functions.geo import KM_PER_MILE
-
-        result = result.withColumn(
-            "geo_dist",
-            F.when(
-                F.col("query_id").isin([int(i) for i in mi_qs]),
-                F.col("geo_dist") / F.lit(KM_PER_MILE),
-            ).otherwise(F.col("geo_dist")),
-        )
-    return result
+    return _geo_dist_out(result, geo_by_q) if with_dist else result
 
 
 def search_many_hybrid(
@@ -1311,13 +1315,14 @@ def search_many_hybrid(
 def _count_core(
     spark: SparkSession,
     store: IndexStore,
-    items: list[tuple[int, QueryPlan, dict, dict | None]],
+    items: list[tuple[int, QueryPlan, dict, GeoRead | None]],
     field_filter: list[str] | None,
     staged: list | None,
 ) -> tuple[dict[int, int], DataFrame | None]:
     """Match counts for [(query_id, plan, facet filter spec, geo
-    filter)] → ({query_id: count} answered by a df shortcut, the
-    count-mode kernel's (query_id, matches) rows for the rest, or None).
+    filter :class:`GeoRead` | None)] → ({query_id: count} answered by a
+    df shortcut, the count-mode kernel's (query_id, matches) rows for
+    the rest, or None).
     Queries that cannot match are in neither (count 0).
 
     The stored df of a single positive term (reference
@@ -1329,8 +1334,8 @@ def _count_core(
     _resolve_fields(store, None, field_filter)
     has_deletes = os.path.exists(store.deletes_path)
     counts: dict[int, int] = {}
-    rest: list[tuple[int, QueryPlan, dict, dict | None]] = []
-    for qi, plan, filters_k, geo_filter in items:
+    rest: list[tuple[int, QueryPlan, dict, GeoRead | None]] = []
+    for qi, plan, filters_k, geo in items:
         if plan.missing_required or not plan.pos_terms:
             continue
         probe = None
@@ -1339,7 +1344,7 @@ def _count_core(
             and field_filter is None
             and not has_deletes
             and not filters_k
-            and geo_filter is None
+            and geo is None
         ):
             if len(plan.pos_terms) == 1 and plan.qtype not in (
                 "phrase", "ngram",
@@ -1348,7 +1353,7 @@ def _count_core(
             elif plan.qtype == "ngram":
                 probe = plan.units[0][0]
         if probe is None:
-            rest.append((qi, plan, filters_k, geo_filter))
+            rest.append((qi, plan, filters_k, geo))
         else:
             counts[qi] = int(
                 _probe_term_stats(store, [probe], staged).get(probe, 0)
@@ -1357,14 +1362,16 @@ def _count_core(
         return counts, None
     block_bounds = None
     if len(rest) == 1:
-        _qi, _plan1, filters_k, geo_filter = rest[0]
-        block_bounds = _block_bounds(geo_filter, filters_k)
+        _qi, _plan1, filters_k, geo = rest[0]
+        block_bounds = _block_bounds(geo, filters_k)
     out = _run_kernel(
         spark, store, [(qi, plan) for qi, plan, _fk, _gf in rest], 0, False,
         field_filter=field_filter, staged=staged, block_bounds=block_bounds,
         count_only=True,
         facet_filters_by_q={qi: fk for qi, _p, fk, _gf in rest if fk} or None,
-        geo_by_q={qi: gf for qi, _p, _fk, gf in rest if gf} or None,
+        geo_by_q={
+            qi: g for qi, _p, _fk, g in rest if g is not None
+        } or None,
     )
     return counts, out
 
@@ -1543,17 +1550,19 @@ def facet_range_counts_many(
     out = agg.select(
         "query_id", "facet", _bucket_lo({qi: bounds[qi] for qi in kept}), "n"
     )
-    if cumulative:
-        w = (
-            Window.partitionBy("query_id", "facet")
-            .orderBy("bucket_lo")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        out = out.select(
-            "query_id", "facet", "bucket_lo", "n",
-            F.sum("n").over(w).cast("long").alias("n_cumulative"),
-        )
-    return out
+    return _cumulative(out) if cumulative else out
+
+
+def _cumulative(out: DataFrame) -> DataFrame:
+    """Bucket counts (query_id, facet, bucket_lo, n) plus the
+    CountWithinRange running sum ``n_cumulative`` per (query_id,
+    facet) in bucket order (reference search.rs:3598-3764)."""
+    w = (
+        Window.partitionBy("query_id", "facet")
+        .orderBy("bucket_lo")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return out.withColumn("n_cumulative", F.sum("n").over(w).cast("long"))
 
 
 def _scan_terms(plan: QueryPlan) -> set[str]:
@@ -1818,6 +1827,92 @@ def _sset_gather(buf, cand: np.ndarray):
     return owner, codes[flat]
 
 
+def _buf_at(buf, idx: np.ndarray, kind: str, n_values: int):
+    """A decoded facet buffer's values at block-local docids ``idx``,
+    padded with the missing value (string: the code sentinel, else
+    NaN) where the buffer is shorter than the block's docid range;
+    None when the block has no buffer."""
+    if buf is None:
+        return None
+    if idx.size and int(idx.max()) >= len(buf):
+        if kind == "string":
+            pad = np.full(
+                int(idx.max()) + 1,
+                facet_missing_code(n_values),
+                dtype=facet_code_dtype(n_values),
+            )
+        else:
+            pad = np.full(int(idx.max()) + 1, np.nan)
+        pad[: len(buf)] = buf
+        buf = pad
+    return buf[idx]
+
+
+def _geo_latlon(geo: GeoRead, fbufs: dict, c: np.ndarray):
+    """(lat, lon) at block-local docids ``c`` from ``geo``'s storage
+    form in a block's decoded buffers ``fbufs``; (None, None) when the
+    block carries no buffer."""
+    bufs = [fbufs[f"fb_{col}"] for col in geo.cols]
+    if geo.form == "pair":
+        return tuple(_buf_at(b, c, "numeric", 0) for b in bufs)
+    (buf,) = bufs
+    if buf is None:
+        return None, None
+    la = np.full(c.size, np.nan)
+    lo = np.full(c.size, np.nan)
+    if geo.form == "point":  # interleaved [lat, lon] f64
+        ok = c < len(buf) // 2
+        la[ok] = buf[2 * c[ok]]
+        lo[ok] = buf[2 * c[ok] + 1]
+        return la, lo
+    # morton: code 0 = missing; distances run on the DECODED
+    # (i32×10^7-quantized) coordinates
+    codes = np.zeros(c.size, dtype=np.uint64)
+    ok = c < len(buf)
+    codes[ok] = buf[c[ok]]
+    has = codes != 0
+    if has.any():
+        la[has], lo[has] = morton_decode(codes[has])
+    return la, lo
+
+
+def _tally_block(
+    label: str, kind: str, spec, fbufs: dict, n_values: int, cand: np.ndarray
+) -> np.ndarray | None:
+    """One block's counts of the docs ``cand`` (block-local) for one
+    tally, by kind — string / string_set: per dictionary code (missing
+    excluded; a string_set doc counts once per distinct value);
+    numeric: per bucket of the ascending lower bounds ``spec``; "geo":
+    per haversine-distance bucket of the :class:`GeoRead` ``spec``.
+    None when the block has no buffer. The count-mode kernel and
+    :func:`index_facet_stats` both tally through here."""
+    if kind == "geo":
+        la, lo = _geo_latlon(spec, fbufs, cand)
+        if la is None or lo is None:
+            return None
+        vals, bounds = haversine_km(la, lo, *spec.at), spec.km
+    else:
+        buf = fbufs[f"fb_{label}"]
+        if buf is None:
+            return None
+        if kind == "string_set":
+            # codes are per-doc DEDUPED at encode
+            _owner, codes = _sset_gather(buf, cand)
+            return np.bincount(
+                codes.astype(np.int64), minlength=n_values
+            )[:n_values]
+        vals = _buf_at(buf, cand, kind, n_values)
+        if kind == "string":
+            valid = vals < n_values  # missing sentinel excluded
+            return np.bincount(
+                vals[valid].astype(np.int64), minlength=n_values
+            )[:n_values]
+        bounds = spec
+    ok = ~np.isnan(vals) & (vals >= bounds[0])
+    bins = np.searchsorted(bounds, vals[ok], side="right") - 1
+    return np.bincount(bins, minlength=len(bounds) + 1)
+
+
 def _kernel_args(
     store: IndexStore,
     fields: list[tuple[str, float]] | None = None,
@@ -1827,26 +1922,47 @@ def _kernel_args(
     """(allowed field ids or None, the index-derived
     :func:`_make_kernel` keywords): ``fields`` / ``field_filter``
     resolve to boosts and allowed fields, avgdl is the index's plus
-    any ``staged`` batches', and the block size, delete set and facet
-    kinds/sizes come from the index. The one source of these for the
-    Spark kernel (:func:`_run_kernel`) and the driver-side result-cache
-    rebuild."""
+    any ``staged`` batches', and the block size and delete set come
+    from the index. The one source of these for the Spark kernel
+    (:func:`_run_kernel`) and the driver-side result-cache rebuild."""
     boosts, allowed = _resolve_fields(store, fields, field_filter)
     _n, avgdl = _effective_stats(store, staged)
-    specs: dict = store.meta.get("facets") or {}
     return allowed, {
         "avgdl": avgdl,
         "boosts": boosts,
         "block_size": int(store.meta.get("block_size", ROARING_BLOCK_SIZE)),
         "deletes": _load_delete_set(store),
-        "facet_kinds": {
-            name: facet_kind(spec) for name, spec in specs.items()
-        },
-        "facet_sizes": {
-            name: len(vals)
-            for name, spec in specs.items()
-            if (vals := facet_values(spec)) is not None
-        },
+    }
+
+
+def _facet_bufs(
+    store: IndexStore,
+    emit_facets: list[str] | None = None,
+    count_facets_by_q: dict[int, dict] | None = None,
+    facet_filters_by_q: dict[int, dict] | None = None,
+    geo_by_q: dict[int, GeoRead] | None = None,
+    **_other_opts,
+) -> dict[str, tuple[str, int]]:
+    """The facet buffers a kernel run reads, ``{fb_col: (kind,
+    n_values)}`` (n_values = dictionary size, 0 without one): the
+    facets it emits, counts, filters on, and the columns of its geo
+    requests. A buffer's kind is always its facet's own kind.
+    :func:`_run_kernel` joins exactly these columns and
+    :func:`_make_kernel` decodes exactly these buffers."""
+    specs: dict = store.meta.get("facets") or {}
+    names = set(emit_facets or ())
+    for spec in (count_facets_by_q or {}).values():
+        for label, (kind, b) in spec.items():
+            names.update(b.cols if kind == "geo" else (label,))
+    for spec in (facet_filters_by_q or {}).values():
+        names.update(spec)
+    for geo in (geo_by_q or {}).values():
+        names.update(geo.cols)
+    return {
+        f"fb_{n}": (
+            facet_kind(specs[n]), len(facet_values(specs[n]) or ())
+        )
+        for n in sorted(names)
     }
 
 
@@ -1862,14 +1978,15 @@ def _run_kernel(
     block_bounds: dict[str, list[tuple[float, float]]] | None = None,
     **opts,
 ) -> DataFrame:
-    """Build the :func:`_posting_rows` of ``idx_plans`` (with every
-    facet column the kernel options read), sort them within their
-    partitions by (shard, block_id, term, field) and run one
-    :func:`_make_kernel` over them → the kernel's per-partition
-    output, which always leads with ``query_id``. Every query caller
-    runs through here: ``search``, ``search_many``, ``match_docids``,
-    :func:`_count_core` and :func:`_facet_tally`. ``opts`` pass
-    through to the kernel; the index-derived arguments come from
+    """Build the :func:`_posting_rows` of ``idx_plans``, joined with
+    the facet buffers :func:`_facet_bufs` resolves from the kernel
+    options, sort them within their partitions by (shard, block_id,
+    term, field) and run one :func:`_make_kernel` over them → the
+    kernel's per-partition output, which always leads with
+    ``query_id``. Every query caller runs through here: ``search``,
+    ``search_many``, ``match_docids``, :func:`_count_core` and
+    :func:`_facet_tally`. ``opts`` pass through to the kernel with
+    that buffer map; the index-derived arguments come from
     :func:`_kernel_args`.
 
     A ``sort_prune`` key keeps its zone bounds and schedules blocks
@@ -1878,21 +1995,11 @@ def _run_kernel(
     possible. Pre-v5 facet files carry no bounds; the default order
     applies then."""
     allowed, kargs = _kernel_args(store, fields, field_filter, staged)
-    kinds = kargs["facet_kinds"]
-    facet_cols = set(opts.get("emit_facets") or ())
-    for spec in (opts.get("count_facets_by_q") or {}).values():
-        for fc, (kind, b) in spec.items():
-            if kind == "geo":  # label, not a column: join its cols
-                facet_cols.update(c for c in b[2] if c is not None)
-            else:
-                facet_cols.add(fc)
-    for spec in (opts.get("facet_filters_by_q") or {}).values():
-        facet_cols.update(spec)
-    for gf in (opts.get("geo_by_q") or {}).values():
-        facet_cols |= _geo_cols(gf)
+    facet_bufs = _facet_bufs(store, **opts)
     sort_prune = opts.get("sort_prune")
     rows, n_shards = _posting_rows(
-        spark, store, idx_plans, allowed, sorted(facet_cols), staged,
+        spark, store, idx_plans, allowed,
+        [col[len("fb_"):] for col in facet_bufs], staged,
         block_bounds=block_bounds,
         keep_bounds=[sort_prune[0]] if sort_prune else None,
     )
@@ -1908,7 +2015,8 @@ def _run_kernel(
                 "block_id", "term", "field",
             ]
     kernel = _make_kernel(
-        idx_plans, top_k, prune, n_shards=n_shards, **kargs, **opts
+        idx_plans, top_k, prune, n_shards=n_shards, facet_bufs=facet_bufs,
+        **kargs, **opts,
     )
     if opts.get("count_facets_by_q"):
         schema = "query_id int, " + FACET_COUNT_SCHEMA
@@ -1920,7 +2028,7 @@ def _run_kernel(
             schema += ", geo_dist double"
         for fc in opts.get("emit_facets") or ():
             schema += f", fb_{fc} " + (
-                "double" if kinds[fc] == "numeric" else "long"
+                "double" if facet_bufs[f"fb_{fc}"][0] == "numeric" else "long"
             )
     return rows.sortWithinPartitions(*order_cols).mapInPandas(
         kernel, schema=schema
@@ -1938,9 +2046,8 @@ def _make_kernel(
     count_only: bool = False,
     count_facets_by_q: dict[int, dict] | None = None,
     facet_filters_by_q: dict[int, dict] | None = None,
-    geo_by_q: dict[int, dict] | None = None,
-    facet_kinds: dict[str, str] | None = None,
-    facet_sizes: dict[str, int] | None = None,
+    geo_by_q: dict[int, GeoRead] | None = None,
+    facet_bufs: dict[str, tuple[str, int]] | None = None,
     dist_sort_by_q: dict[int, str] | None = None,
     n_shards: int = 1,
     emit_all: bool = False,
@@ -1963,12 +2070,18 @@ def _make_kernel(
     * ``count_only`` — per-query match tallies (query_id, matches);
       ``count_facets_by_q`` maps query_id → {facet: (kind, bounds)}
       and tallies facet values instead (query_id, facet, code,
-      matches) from the blocks' facet arrays (one shared buffer decode
-      per block); kind "geo" buckets haversine distances, bounds =
-      (bounds_km, mode, (col, lon_col|None), lat0, lon0);
+      matches) from the blocks' facet arrays (:func:`_tally_block`);
+      kind "geo" buckets haversine distances, keyed by
+      :attr:`GeoRead.label` with the :class:`GeoRead` as bounds;
     * ``emit_all`` — every candidate with its score, ``fb_<facet>``
       values for ``emit_facets`` and (when ``dist_sort_by_q`` is not
       None) ``geo_dist``: the input of a multi-key result sort.
+
+    ``facet_bufs`` = {fb_col: (kind, n_values)}, the buffers the
+    options read (:func:`_facet_bufs`): each block decodes them once,
+    and every query's filters (``facet_filters_by_q``; ``geo_by_q`` =
+    query_id → :class:`GeoRead` radius filter), tallies and emitted
+    values read the same arrays.
 
     ``dist_sort_by_q`` marks queries whose per-partition top-k is kept
     by haversine distance (asc/desc, docid tiebreak) instead of score
@@ -1987,69 +2100,31 @@ def _make_kernel(
     )
     dist_sort = dist_sort_by_q or {}
     emit_dist_col = dist_sort_by_q is not None
-    kinds = facet_kinds or {}
-    cfacets_by_q = {
-        qi: dict(spec) for qi, spec in (count_facets_by_q or {}).items()
+    facet_bufs = facet_bufs or {}
+    geo_by_q = geo_by_q or {}
+    # per query: [(label, kind, bounds, n_values)]
+    tallies_by_q = {
+        qi: [
+            (fc, kind, b, facet_bufs.get(f"fb_{fc}", ("", 0))[1])
+            for fc, (kind, b) in spec.items()
+        ]
+        for qi, spec in (count_facets_by_q or {}).items()
     }
     ffilters_by_q = {
         qi: list(spec.items())
         for qi, spec in (facet_filters_by_q or {}).items()
     }
-    sizes = facet_sizes or {}
     emit_cols = [
-        (f"fb_{name}", kinds.get(name, "string")) for name in emit_facets or []
+        (f"fb_{name}", facet_bufs[f"fb_{name}"][0])
+        for name in emit_facets or []
     ]
-    # every facet buffer any query counts, filters on or emits:
-    # col → (kind, n_values)
-    facet_buf_kinds: dict[str, tuple[str, int]] = {}
-    for spec in cfacets_by_q.values():
-        for name, (kind, _b) in spec.items():
-            if kind == "geo":
-                # _b = (bounds_km, mode, (col1, col2|None), lat0, lon0)
-                _bk, gmode, gcols = _b[0], _b[1], _b[2]
-                facet_buf_kinds[f"fb_{gcols[0]}"] = (
-                    "numeric" if gmode == "pair" else gmode, 0
-                )
-                if gcols[1] is not None:
-                    facet_buf_kinds[f"fb_{gcols[1]}"] = ("numeric", 0)
-            else:
-                facet_buf_kinds[f"fb_{name}"] = (kind, sizes.get(name, 0))
-    for fspec in ffilters_by_q.values():
-        for name, fs in fspec:
-            facet_buf_kinds[f"fb_{name}"] = (fs[0], sizes.get(name, 0))
-    for name in emit_facets or []:
-        facet_buf_kinds[f"fb_{name}"] = (
-            kinds.get(name, "string"), sizes.get(name, 0)
-        )
-    # per-query geo configs: (mode, col, lon_col, lat0, lon0, radius);
-    # three storage modes: separate lat/lon f64 facets ("pair"), ONE
-    # interleaved [lat, lon] f64 buffer ("point"), or ONE packed u64
-    # Morton code per doc ("morton" — half the bytes)
-    geo_cfg_by_q: dict[int, tuple] = {}
-    for qi, gf in (geo_by_q or {}).items():
-        if "point" in gf:
-            mode = kinds.get(gf["point"], "point")
-            cols = (f"fb_{gf['point']}", None)
-        else:
-            mode = "pair"
-            cols = (f"fb_{gf['lat']}", f"fb_{gf['lon']}")
-        geo_cfg_by_q[qi] = (
-            mode, cols[0], cols[1],
-            float(gf["at"][0]), float(gf["at"][1]),
-            float(gf["radius_km"]),
-        )
-        facet_buf_kinds[cols[0]] = (
-            "numeric" if mode == "pair" else mode, 0
-        )
-        if cols[1] is not None:
-            facet_buf_kinds[cols[1]] = ("numeric", 0)
     if sort_prune is not None:
         sp_key, sp_dir, sp_need = sort_prune
         sp_col = f"fb_{sp_key}"
         sp_zb = f"zb_{'min' if sp_dir == 'asc' else 'max'}_{sp_key}"
         # string keys compare dictionary CODES; the missing sentinel
         # (dtype max) stays out of the heap — nulls last
-        sp_missing = facet_missing_code(sizes.get(sp_key, 0))
+        sp_missing = facet_missing_code(facet_bufs[sp_col][1])
 
     def _source_map(p: QueryPlan) -> dict[str, tuple[str, int | None]]:
         # scoring sources: each ORIGINAL positive term is scored from
@@ -2132,16 +2207,14 @@ def _make_kernel(
         facet_tallies: dict[int, dict[str, np.ndarray]] = {
             qi: {
                 fc: np.zeros(
-                    sizes.get(fc, 0)
+                    nv
                     if kind in ("string", "string_set")
-                    else len(bounds[0]) + 1
-                    if kind == "geo"
-                    else len(bounds) + 1,
+                    else len(bounds.km if kind == "geo" else bounds) + 1,
                     dtype=np.int64,
                 )
-                for fc, (kind, bounds) in spec.items()
+                for fc, kind, bounds, nv in tallies
             }
-            for qi, spec in cfacets_by_q.items()
+            for qi, tallies in tallies_by_q.items()
         }
 
         def threshold(qi: int) -> float:
@@ -2181,14 +2254,10 @@ def _make_kernel(
             base = block_id * block_size
             # one shared facet-buffer decode per block; every query's
             # filters, tallies and emitted values read the same arrays
-            fbufs = (
-                {
-                    col: _overlay_bufs(rows[col].iloc[0], kind, nv)
-                    for col, (kind, nv) in facet_buf_kinds.items()
-                }
-                if facet_buf_kinds
-                else {}
-            )
+            fbufs = {
+                col: _overlay_bufs(rows[col].iloc[0], kind, nv)
+                for col, (kind, nv) in facet_bufs.items()
+            }
             # the block's sort-key zone bound (None = unknown: pre-v5
             # facet files, or no slice has a value — never skipped)
             zb = None
@@ -2198,69 +2267,8 @@ def _make_kernel(
                     zb = None
 
             def fbuf_at(col: str, idx: np.ndarray):
-                """Facet values at local docids, padded with missing
-                when a buffer is shorter than the block's docid range."""
-                fv = fbufs[col]
-                if fv is None:
-                    return None
-                kind, nv = facet_buf_kinds[col]
-                if idx.size and int(idx.max()) >= len(fv):
-                    if kind == "string":
-                        pad = np.full(
-                            int(idx.max()) + 1,
-                            facet_missing_code(nv),
-                            dtype=facet_code_dtype(nv),
-                        )
-                    else:
-                        pad = np.full(int(idx.max()) + 1, np.nan)
-                    pad[: len(fv)] = fv
-                    fv = pad
-                return fv[idx]
+                return _buf_at(fbufs[col], idx, *facet_bufs[col])
 
-            def latlon_of(gmode, c1, c2, c):
-                """(lat, lon) at local docids ``c`` from pair /
-                Point / packed-Morton storage; (None, None) when the
-                block carries no buffer."""
-                if gmode == "point":
-                    buf = fbufs[c1]
-                    if buf is None:
-                        return None, None
-                    n_pts = len(buf) // 2
-                    la = np.full(c.size, np.nan)
-                    lo = np.full(c.size, np.nan)
-                    ok = c < n_pts
-                    la[ok] = buf[2 * c[ok]]
-                    lo[ok] = buf[2 * c[ok] + 1]
-                    return la, lo
-                if gmode == "morton":
-                    # code 0 = missing; distances run on the DECODED
-                    # (i32×10^7-quantized) coordinates
-                    from seekstorm_spark.functions.geo import (
-                        morton_decode,
-                    )
-
-                    buf = fbufs[c1]
-                    if buf is None:
-                        return None, None
-                    codes = np.zeros(c.size, dtype=np.uint64)
-                    ok = c < len(buf)
-                    codes[ok] = buf[c[ok]]
-                    la = np.full(c.size, np.nan)
-                    lo = np.full(c.size, np.nan)
-                    has = codes != 0
-                    if has.any():
-                        la[has], lo[has] = morton_decode(codes[has])
-                    return la, lo
-                return fbuf_at(c1, c), fbuf_at(c2, c)
-
-            def hav_km(la, lo, lat0, lon0):
-                a = (
-                    np.sin(np.radians(lat0 - la) / 2.0) ** 2
-                    + np.cos(np.radians(la))
-                    * math.cos(math.radians(lat0))
-                    * np.sin(np.radians(lon0 - lo) / 2.0) ** 2
-                )
-                return 2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
             # shared per-block bound pieces: one f64 ub per posting row
             # (gram rows also carry per-partial-term ubs: a gram's bound
             # is Σ parts' idf·comp_ub, each part with its own max_tf)
@@ -2448,13 +2456,13 @@ def _make_kernel(
                 # per-query haversine radius over the shared buffers
                 # (reference geo Point facets, search.rs:2712-2724)
                 dists = None
-                gcfg = geo_cfg_by_q.get(qi)
-                if gcfg is not None:
-                    lat, lon = latlon_of(gcfg[0], gcfg[1], gcfg[2], cand)
+                geo = geo_by_q.get(qi)
+                if geo is not None:
+                    lat, lon = _geo_latlon(geo, fbufs, cand)
                     if lat is None or lon is None:
                         continue
-                    d_km = hav_km(lat, lon, gcfg[3], gcfg[4])
-                    gkeep = ~np.isnan(d_km) & (d_km <= gcfg[5])
+                    d_km = haversine_km(lat, lon, *geo.at)
+                    gkeep = ~np.isnan(d_km) & (d_km <= geo.km)
                     cand = cand[gkeep]
                     dists = d_km[gkeep]
                     if cand.size == 0:
@@ -2468,60 +2476,10 @@ def _make_kernel(
                         continue
                 if count_only:
                     match_counts[qi] += int(cand.size)
-                    for fc, (kind, bounds) in cfacets_by_q.get(
-                        qi, {}
-                    ).items():
-                        nv = sizes.get(fc, 0)
-                        if kind == "geo":
-                            gb, gmode, gcols, glat, glon = bounds
-                            la, lo = latlon_of(
-                                gmode,
-                                f"fb_{gcols[0]}",
-                                f"fb_{gcols[1]}"
-                                if gcols[1] is not None
-                                else None,
-                                cand,
-                            )
-                            if la is None or lo is None:
-                                continue
-                            gd = hav_km(la, lo, glat, glon)
-                            gok = ~np.isnan(gd) & (gd >= gb[0])
-                            gbins = (
-                                np.searchsorted(gb, gd[gok], side="right")
-                                - 1
-                            )
-                            facet_tallies[qi][fc] += np.bincount(
-                                gbins, minlength=len(gb) + 1
-                            )
-                            continue
-                        if kind == "string_set":
-                            buf = fbufs[f"fb_{fc}"]
-                            if buf is None:
-                                continue
-                            # codes are per-doc DEDUPED at encode: one
-                            # count per (doc, distinct value)
-                            _owner, codes = _sset_gather(buf, cand)
-                            facet_tallies[qi][fc] += np.bincount(
-                                codes.astype(np.int64), minlength=nv
-                            )[:nv]
-                            continue
-                        fv = fbuf_at(f"fb_{fc}", cand)
-                        if fv is None:
-                            continue
-                        if kind == "string":
-                            valid = fv < nv  # missing sentinel excluded
-                            facet_tallies[qi][fc] += np.bincount(
-                                fv[valid].astype(np.int64), minlength=nv
-                            )[:nv]
-                        else:
-                            ok = ~np.isnan(fv) & (fv >= bounds[0])
-                            bins = (
-                                np.searchsorted(bounds, fv[ok], side="right")
-                                - 1
-                            )
-                            facet_tallies[qi][fc] += np.bincount(
-                                bins, minlength=len(bounds) + 1
-                            )
+                    for fc, kind, bounds, nv in tallies_by_q.get(qi, ()):
+                        t = _tally_block(fc, kind, bounds, fbufs, nv, cand)
+                        if t is not None:
+                            facet_tallies[qi][fc] += t
                     continue
                 # f32 accumulation in (term asc, field asc) order over
                 # ORIGINAL terms — the oracle SQL's order (gram
@@ -2580,7 +2538,7 @@ def _make_kernel(
                         elif vals is None:
                             vals = np.full(
                                 cand.size,
-                                facet_missing_code(facet_buf_kinds[colname][1]),
+                                facet_missing_code(facet_bufs[colname][1]),
                             )
                         em.setdefault(colname, []).append(vals)
                 elif qi in dist_sort:
@@ -2608,7 +2566,7 @@ def _make_kernel(
                 qinfo_by_shard.get(int(pending_key[0]), ()),
             )
 
-        if cfacets_by_q:
+        if tallies_by_q:
             out_q: list[int] = []
             out_f: list[str] = []
             out_c: list[int] = []
@@ -2699,14 +2657,11 @@ def count_matches(
     kernel with the filters' zone-bound block skip, summed globally.
     """
     staged = list(staged) if staged else None
-    geo_filter, _unit = _normalize_geo(geo_filter)
-    filters_k, _emit, _dicts, _kinds = _resolve_facets(
-        store, facet_filters, None, geo_filter
-    )
+    geo = _resolve_geo(store, geo_filter) if geo_filter else None
+    filters_k = _resolve_facets(store, facet_filters, None)[0]
     plan = _plan(spark, store, query, default_type, staged)
     counts, rest = _count_core(
-        spark, store, [(0, plan, filters_k, geo_filter)], field_filter,
-        staged,
+        spark, store, [(0, plan, filters_k, geo)], field_filter, staged,
     )
     if rest is None:
         return counts.get(0, 0)
@@ -2815,18 +2770,8 @@ def geo_range_counts(
         spec["lat"], spec["lon"] = lat, lon
     out = geo_range_counts_many(
         spark, store, [(query, spec)], default_type, staged
-    ).drop("query_id")
-    if cumulative:
-        w = (
-            Window.partitionBy("facet")
-            .orderBy("bucket_lo")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        out = out.select(
-            "facet", "bucket_lo", "n",
-            F.sum("n").over(w).cast("long").alias("n_cumulative"),
-        )
-    return out
+    )
+    return (_cumulative(out) if cumulative else out).drop("query_id")
 
 
 def geo_range_counts_many(
@@ -2845,49 +2790,10 @@ def geo_range_counts_many(
     :func:`facet_range_counts_many`; per-query ≡
     :func:`geo_range_counts`; ``staged`` level-0 batches join the same
     scan."""
-    from seekstorm_spark.functions.geo import KM_PER_MILE
-
-    specs: dict = store.meta.get("facets") or {}
-
-    def _norm_req(spec: dict):
-        unit = spec.get("unit", "km")
-        if unit not in ("km", "mi"):
-            raise ValueError(f"unit must be 'km' or 'mi', got {unit!r}")
-        out_bounds = [float(b) for b in sorted(spec["ranges"])]
-        scale = KM_PER_MILE if unit == "mi" else 1.0
-        bounds_km = np.asarray(
-            [b * scale for b in out_bounds], dtype=np.float64
-        )
-        if spec.get("facet") is not None:
-            fc = spec["facet"]
-            kind = facet_kind(specs[fc]) if fc in specs else None
-            if kind not in ("point", "morton"):
-                raise ValueError(
-                    f"{fc!r} is not an indexed Point/Morton facet"
-                )
-            label, mode, cols = fc, kind, (fc, None)
-        else:
-            la, lo = spec.get("lat"), spec.get("lon")
-            if la is None or lo is None:
-                raise ValueError("give facet= or both lat= and lon=")
-            for c in (la, lo):
-                if c not in specs or facet_kind(specs[c]) != "numeric":
-                    raise ValueError(
-                        f"{c!r} is not an indexed numeric facet"
-                    )
-            label, mode, cols = f"{la},{lo}", "pair", (la, lo)
-        base = spec["base"]
-        return label, (
-            bounds_km, mode, cols, float(base[0]), float(base[1])
-        ), out_bounds
-
-    normed = [_norm_req(spec) for _q, spec in requests]
+    geos = [_resolve_geo(store, spec) for _q, spec in requests]
     tally = _facet_tally(
         spark, store,
-        [
-            (qstr, {label: ("geo", gspec)})
-            for (qstr, _s), (label, gspec, _b) in zip(requests, normed)
-        ],
+        [(qstr, {g.label: ("geo", g)}) for (qstr, _s), g in zip(requests, geos)],
         default_type, staged,
     )
     if tally is None:
@@ -2897,7 +2803,7 @@ def geo_range_counts_many(
     agg, kept = tally
     return agg.select(
         "query_id", "facet",
-        _bucket_lo({qi: {normed[qi][0]: normed[qi][2]} for qi in kept}),
+        _bucket_lo({qi: {geos[qi].label: geos[qi].bounds} for qi in kept}),
         "n",
     )
 
@@ -2938,33 +2844,18 @@ def index_facet_stats(
                 buf = _overlay_bufs(r["bufs"], kind, sizes[fc])
                 if buf is None:
                     continue
-                base = int(r["block_id"]) * block_size
-                if kind == "string_set":
-                    offsets, codes = buf
-                    n = len(offsets) - 1
-                    keep = np.ones(n, dtype=bool)
-                    if delete_set.size:
-                        keep &= ~np.isin(
-                            base + np.arange(n), delete_set,
-                            assume_unique=True,
-                        )
-                    owner = np.repeat(
-                        np.arange(n), np.diff(offsets.astype(np.int64))
-                    )
-                    sel = codes[keep[owner]]
-                    tallies[fc] += np.bincount(
-                        sel.astype(np.int64), minlength=sizes[fc]
-                    )[: sizes[fc]]
-                else:
-                    valid = buf < sizes[fc]  # missing sentinel out
-                    if delete_set.size:
-                        valid &= ~np.isin(
-                            base + np.arange(len(buf)), delete_set,
-                            assume_unique=True,
-                        )
-                    tallies[fc] += np.bincount(
-                        buf[valid].astype(np.int64), minlength=sizes[fc]
-                    )[: sizes[fc]]
+                # every live doc the block's buffer covers
+                live = np.arange(
+                    len(buf[0]) - 1 if kind == "string_set" else len(buf)
+                )
+                if delete_set.size:
+                    base = int(r["block_id"]) * block_size
+                    live = live[
+                        ~np.isin(base + live, delete_set, assume_unique=True)
+                    ]
+                tallies[fc] += _tally_block(
+                    fc, kind, None, {f"fb_{fc}": buf}, sizes[fc], live
+                )
         out_f, out_c, out_n = [], [], []
         for fc, t in tallies.items():
             for code in np.flatnonzero(t):
@@ -3249,12 +3140,9 @@ def _phrase_filter(
             return None
         parts = []
         for rec in recs[term]:
-            d, tf, pos_vb = rec["d"], rec["tf"], rec["pos_vb"]
-            plists = decode_positions(pos_vb, tf)
-            if not len(plists):
-                continue
+            d, tf = rec["d"], rec["tf"]
+            pos_flat = decode_positions(rec["pos_vb"], tf)
             docs_rep = np.repeat(d, tf)
-            pos_flat = np.concatenate(plists)
             parts.append(
                 (
                     (

@@ -76,25 +76,3 @@ def bm25_term_scores(
         * term_idf
         * (tf * dtype(K + 1.0) / (tf + comp) + dtype(SIGMA))
     ).astype(dtype)
-
-
-def max_impact_score(
-    max_tf: int, min_dl_q: int, n_docs: int, df: int, avgdl: float
-) -> float:
-    """Upper bound of a term's score over a set of docs (block-max /
-    list-max metadata, reference compress_postinglist.rs:530-676).
-
-    BM25 tf-saturation is monotone increasing in tf and decreasing in
-    dl, so (max tf, min dl) bounds every doc in the block. The
-    reference stores the exact max by tracking the argmax doc; we keep
-    the (still admissible) bound — pruning stays lossless.
-    """
-    score = bm25_term_scores(
-        np.asarray([max_tf]),
-        np.asarray([min_dl_q]),
-        n_docs,
-        df,
-        avgdl,
-        dtype=np.float32,
-    )
-    return float(score[0])

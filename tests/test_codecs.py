@@ -63,7 +63,7 @@ def test_positions_roundtrip():
     tfs = np.array([3, 1, 2], dtype=np.int64)
     buf = encode_positions(flat, tfs)
     out = decode_positions(buf, tfs)
-    assert [a.tolist() for a in out] == [[0, 3, 4], [7], [2, 5]]
+    assert out.tolist() == [0, 3, 4, 7, 2, 5]
 
 
 def test_positions_roundtrip_random():
@@ -77,8 +77,7 @@ def test_positions_roundtrip_random():
         flat = np.concatenate(lists)
         tfs = np.array([len(x) for x in lists])
         out = decode_positions(encode_positions(flat, tfs), tfs)
-        for got, want in zip(out, lists):
-            assert got.tolist() == want.tolist()
+        assert out.tolist() == flat.tolist()
 
 
 def test_vb_encode_chunks_matches_per_chunk_encode():

@@ -356,3 +356,50 @@ def test_geo_miles_unit(spark, tmp_path):
         search(spark, store, "term00000",
                geo_filter={"lat": "lat", "lon": "lon", "at": (0, 0),
                            "radius_km": 1.0, "radius_mi": 1.0})
+
+
+def test_count_matches_geo_filter_forms(spark, tmp_path):
+    """count_matches(geo_filter=…) counts exactly the docs search
+    returns under the same filter — pair, interleaved Point and packed
+    Morton forms, radius in km and in miles."""
+    from pyspark.sql import Window, functions as F
+
+    from seekstorm_spark.functions.geo import KM_PER_MILE
+    from seekstorm_spark.index.builder import IndexBuilder
+    from seekstorm_spark.query.engine import count_matches, search
+    from seekstorm_spark.sources.webtext import synth_webtext
+
+    rn = F.row_number().over(Window.orderBy("url")) - 1
+    docs = (
+        synth_webtext(spark, 200, seed=3)
+        .withColumn("doc_id", rn.cast("long"))
+        .withColumn("lat", (F.col("doc_id") * 37 % 18000) / 100.0 - 90.0)
+        .withColumn("lon", (F.col("doc_id") * 73 % 36000) / 100.0 - 180.0)
+        .withColumn("location", F.array("lat", "lon"))
+        .withColumn("locm", F.array("lat", "lon"))
+    )
+    store = IndexBuilder(
+        spark, str(tmp_path / "geocount"), n_buckets=4,
+        facet_cols=["lat", "lon", "location", "locm"],
+        facet_types={"locm": "morton"},
+    ).build(docs, text_col="text", id_col="doc_id")
+
+    query = "term00000 term00001"
+    total = count_matches(spark, store, query)
+    at, r_km = (10.0, 20.0), 7000.0
+    forms = (
+        {"lat": "lat", "lon": "lon"},
+        {"point": "location"},
+        {"point": "locm"},
+    )
+    radii = ({"radius_km": r_km}, {"radius_mi": r_km / KM_PER_MILE})
+    for cols in forms:
+        for radius in radii:
+            gf = {**cols, "at": at, **radius}
+            n = count_matches(spark, store, query, geo_filter=gf)
+            want = len(
+                search(
+                    spark, store, query, top_k=100000, geo_filter=gf
+                ).collect()
+            )
+            assert n == want and 0 < want < total, gf

@@ -65,7 +65,7 @@ def test_kernel_skips_blocks_past_key_threshold(spark, priced_store):
         kernel = _make_kernel(
             [(0, plan)], 5, False, avgdl, boosts, block_size=64,
             emit_all=True, emit_facets=["price"],
-            facet_kinds={"price": "numeric"}, facet_sizes={},
+            facet_bufs={"fb_price": ("numeric", 0)},
             sort_prune=sort_prune,
         )
         feed = rows if block_rows is None else block_rows
@@ -187,8 +187,8 @@ def test_string_kernel_skips_blocks(spark, labeled_store):
         kernel = _make_kernel(
             [(0, plan)], 5, False, avgdl, boosts, block_size=64,
             emit_all=True, emit_facets=["category"],
-            facet_kinds={"category": "string"},
-            facet_sizes={"category": n_values}, sort_prune=sort_prune,
+            facet_bufs={"fb_category": ("string", n_values)},
+            sort_prune=sort_prune,
         )
         return pd.concat(list(kernel(iter([rows]))))
 
