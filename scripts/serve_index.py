@@ -4,10 +4,10 @@
     spark-submit --py-files seekstorm_spark.zip scripts/serve_index.py \
         --index products=/data/idx_products --port 8080
 
-Stdlib-only JSON API mirroring the reference server's query surface
-(`seekstorm_server/src/api_endpoints.rs`): /health, /indices,
-/indices/{name}/info, /indices/{name}/query (GET+POST),
-/indices/{name}/count, /indices/{name}/doc/{docid}.
+Stdlib-only JSON API mirroring the reference server
+(`seekstorm_server/src/api_endpoints.rs`); the endpoints are listed in
+``seekstorm_spark.server._ROUTES``, and its module docstring gives the
+auth and write rules.
 """
 
 from __future__ import annotations

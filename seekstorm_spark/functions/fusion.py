@@ -25,32 +25,51 @@ def rrf_fuse(
     vec_score_col: str = "cos_sim",
     top_k: int = 10,
     k: float = RRF_K,
+    partition_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Fuse two ranked result DataFrames by RRF → (docid, rrf_score).
+    """Fuse two ranked result DataFrames by RRF → (*partition_cols,
+    docid, rrf_score), the ``top_k`` best per partition.
 
     Ranks derive from each list's own score ordering (desc, id asc
-    tiebreak); docs missing from a list contribute nothing for it.
+    tiebreak) within each partition — one query when
+    ``partition_cols`` is empty, else one per value, e.g.
+    ``("query_id",)`` for a batch; docs missing from a list contribute
+    nothing for it.
     """
-    lw = Window.orderBy(F.col(lex_score_col).desc(), F.col(id_col).asc())
-    vw = Window.orderBy(F.col(vec_score_col).desc(), F.col(id_col).asc())
-    lex = lexical.select(
-        F.col(id_col).alias("docid"), F.row_number().over(lw).alias("lex_rank")
-    )
-    vec = vector.select(
-        F.col(id_col).alias("docid"), F.row_number().over(vw).alias("vec_rank")
-    )
+    parts = list(partition_cols)
+
+    def ranked(df: DataFrame, score_col: str, rank_col: str) -> DataFrame:
+        w = Window.partitionBy(*parts).orderBy(
+            F.col(score_col).desc(), F.col(id_col).asc()
+        )
+        return df.select(
+            *parts, F.col(id_col).alias("docid"),
+            F.row_number().over(w).alias(rank_col),
+        )
+
     fused = (
-        lex.join(vec, "docid", "full_outer")
-        .withColumn(
-            "rrf_score",
+        ranked(lexical, lex_score_col, "lex_rank")
+        .join(
+            ranked(vector, vec_score_col, "vec_rank"),
+            [*parts, "docid"], "full_outer",
+        )
+        .select(
+            *parts,
+            "docid",
             F.round(
                 F.coalesce(1.0 / (F.lit(k) + F.col("lex_rank")), F.lit(0.0))
                 + F.coalesce(1.0 / (F.lit(k) + F.col("vec_rank")), F.lit(0.0)),
                 6,
-            ),
+            ).alias("rrf_score"),
         )
-        .select("docid", "rrf_score")
-        .orderBy(F.col("rrf_score").desc(), F.col("docid").asc())
-        .limit(top_k)
     )
-    return fused
+    order = [*parts, F.col("rrf_score").desc(), F.col("docid").asc()]
+    if not parts:
+        return fused.orderBy(*order).limit(top_k)
+    fw = Window.partitionBy(*parts).orderBy(*order[len(parts):])
+    return (
+        fused.withColumn("rn", F.row_number().over(fw))
+        .filter(F.col("rn") <= top_k)
+        .drop("rn")
+        .orderBy(*order)
+    )

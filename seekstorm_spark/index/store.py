@@ -156,9 +156,22 @@ class IndexStore:
         return cls(path=path, meta=meta)
 
     def write_meta(self) -> None:
+        """Write meta.json atomically — it is ``commit_batch``'s commit
+        point: dump to a temp file in the index dir, then rename it
+        over meta.json, so a process crash or a failing dump leaves
+        the old file whole (no fsync: the table files it names are not
+        synced either)."""
+        import threading
+
         os.makedirs(self.path, exist_ok=True)
-        with open(self.meta_path, "w") as f:
-            json.dump(self.meta, f, indent=2)
+        tmp = f"{self.meta_path}.{os.getpid()}.{threading.get_ident()}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(self.meta, f, indent=2)
+            os.replace(tmp, self.meta_path)
+        finally:
+            if os.path.exists(tmp):  # the dump or the rename failed
+                os.remove(tmp)
 
     # --- readers ---
     def doc_meta(self, spark: SparkSession) -> DataFrame:

@@ -1245,7 +1245,7 @@ def search_many_hybrid(
     same ranks, same round(·, 6), same docid tiebreaks."""
     from functools import reduce
 
-    from seekstorm_spark.functions.fusion import RRF_K
+    from seekstorm_spark.functions.fusion import RRF_K, rrf_fuse
 
     if len(vectors) != len(queries):
         raise ValueError("vectors must parallel queries")
@@ -1272,43 +1272,10 @@ def search_many_hybrid(
                 F.col("cos_sim"),
             )
         )
-    vec = reduce(lambda a, b: a.unionByName(b), branches)
-    k = RRF_K if rrf_k is None else float(rrf_k)
-    lw = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("docid").asc()
-    )
-    vw = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("docid").asc()
-    )
-    lex_r = lex.select(
-        "query_id", "docid", F.row_number().over(lw).alias("lex_rank")
-    )
-    vec_r = vec.select(
-        "query_id", "docid", F.row_number().over(vw).alias("vec_rank")
-    )
-    fused = (
-        lex_r.join(vec_r, ["query_id", "docid"], "full_outer")
-        .withColumn(
-            "rrf_score",
-            F.round(
-                F.coalesce(1.0 / (F.lit(k) + F.col("lex_rank")), F.lit(0.0))
-                + F.coalesce(1.0 / (F.lit(k) + F.col("vec_rank")), F.lit(0.0)),
-                6,
-            ),
-        )
-    )
-    fw = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("docid").asc()
-    )
-    return (
-        fused.withColumn("rn", F.row_number().over(fw))
-        .filter(F.col("rn") <= top_k)
-        .select("query_id", "docid", "rrf_score")
-        .orderBy(
-            F.col("query_id").asc(),
-            F.col("rrf_score").desc(),
-            F.col("docid").asc(),
-        )
+    return rrf_fuse(
+        lex, reduce(lambda a, b: a.unionByName(b), branches),
+        top_k=top_k, k=RRF_K if rrf_k is None else float(rrf_k),
+        partition_cols=("query_id",),
     )
 
 

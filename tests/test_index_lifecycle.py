@@ -160,3 +160,19 @@ def test_stream_matches_append_batch(spark, tmp_path):
                 spark, ref, q, mode
             ), (q, mode)
     assert _hits(spark, store, QUERIES[0])  # the corpus matches at all
+
+
+def test_write_meta_is_atomic(tmp_path):
+    """meta.json is the commit point: a write whose dump fails midway
+    leaves the previous meta.json whole and no temp file behind."""
+    import pytest
+
+    store = IndexStore(path=str(tmp_path), meta={"n_docs": 3, "fields": ["text"]})
+    store.write_meta()
+    store.meta.update(n_docs=4, unserializable=object())
+    with pytest.raises(TypeError):
+        store.write_meta()
+    assert IndexStore.open(str(tmp_path)).meta == {
+        "n_docs": 3, "fields": ["text"]
+    }
+    assert os.listdir(tmp_path) == ["meta.json"]

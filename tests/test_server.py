@@ -5,6 +5,7 @@ doc-store reads, error paths — all against a real built index."""
 from __future__ import annotations
 
 import json
+import re
 import urllib.error
 import urllib.request
 
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 from seekstorm_spark.index.builder import IndexBuilder, assign_docids
 from seekstorm_spark.query.docstore import write_doc_store
 from seekstorm_spark.query.engine import count_matches, search
-from seekstorm_spark.server import serve_in_thread
+from seekstorm_spark.server import _ROUTES, serve_in_thread
 from seekstorm_spark.sources.webtext import synth_webtext
 
 
@@ -1024,3 +1025,193 @@ def test_post_docs_stages_like_a_dataframe_batch(spark, tmp_path):
     ):
         got = _sorted_rows(f"{served.stage_path}/{table}", keys)
         assert got and got == _sorted_rows(f"{frame.stage_path}/{table}", keys), table
+
+
+def _request(base, method, path, body=None, token=None):
+    """(status, JSON reply) of one request; error statuses included."""
+    headers = {"Authorization": f"Bearer {token}"} if token else {}
+    data = body if isinstance(body, bytes) else (
+        None if body is None else json.dumps(body).encode()
+    )
+    req = urllib.request.Request(
+        base + path, data=data, headers=headers, method=method
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=120) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+def test_vector_query_after_clear_and_recreate(spark, tmp_path):
+    """A clear, or a drop and re-create of the same name, forgets the
+    cached vector index with the rest of the index's serving state:
+    a vector query then answers 400 "no vector index", not a 500 over
+    the deleted ann/ files."""
+    import numpy as np
+
+    from seekstorm_spark.functions.simsearch import AnnIndex
+
+    root = tmp_path / "root"
+    path = str(root / "v")
+    IndexBuilder(spark, path, n_buckets=2).build(
+        synth_webtext(spark, 40, seed=7), text_col="text"
+    )
+    rng = np.random.default_rng(3)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    vector_query = {"query": "", "search_mode": "vector",
+                    "query_vector": [1.0] * 8, "top_k": 3}
+    srv, _t = serve_in_thread(
+        spark, {"v": path}, port=0, writable=True, index_root=str(root)
+    )
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        AnnIndex.build(spark, vecs, path + "/ann", n_planes=4)
+        status, resp = _request(base, "POST", "/indices/v/query", vector_query)
+        assert status == 200 and resp["results"]
+        assert _request(base, "POST", "/indices/v/clear", {})[0] == 200
+        status, resp = _request(base, "POST", "/indices/v/query", vector_query)
+        assert status == 400 and "no vector index" in resp["error"]
+
+        AnnIndex.build(spark, vecs, path + "/ann", n_planes=4)
+        assert _request(base, "POST", "/indices/v/query", vector_query)[0] == 200
+        assert _request(base, "DELETE", "/indices/v")[0] == 200
+        assert _request(base, "POST", "/indices", {"name": "v"})[0] == 200
+        status, resp = _request(base, "POST", "/indices/v/query", vector_query)
+        assert status == 400 and "no vector index" in resp["error"]
+    finally:
+        srv.shutdown()
+
+
+def test_highlights_unknown_field_without_hits(served):
+    """Highlight fields are checked before any row is read, so an
+    unknown field is a 400 even when the query matches nothing."""
+    base, _store = served
+    for query in ("term00000", "zzznohit"):
+        status, resp = _request(
+            base, "POST", "/indices/main/query",
+            {"query": query, "top_k": 2, "highlights": [{"field": "nope"}]},
+        )
+        assert status == 400 and "no field 'nope'" in resp["error"], query
+
+
+def _route_url(pattern: str, name: str) -> str:
+    """An example path for a ``_ROUTES`` pattern on index ``name``."""
+    path = pattern.strip("^$").replace("([^/]+)", name, 1)
+    return path.replace("([^/]+)", "term00000").replace(r"(\d+)", "1")
+
+
+# POST/PUT routes that change no index; every other non-GET route is a
+# write route and must be refused on a read-only server
+_NON_GET_READS = {"query", "count", "query_batch", "iterator", "close_index"}
+
+
+@pytest.fixture(scope="module")
+def gated(spark, tmp_path_factory):
+    """Read-only server with an admin key over an open index and one
+    protected by an API key."""
+    from seekstorm_spark.server import set_api_key
+
+    base = tmp_path_factory.mktemp("gated")
+    paths = {n: str(base / n) for n in ("open", "sec")}
+    for p in paths.values():
+        IndexBuilder(spark, p, n_buckets=2).build(
+            synth_webtext(spark, 30, seed=13), text_col="text"
+        )
+    set_api_key(paths["sec"], "sec-key")
+    srv, _t = serve_in_thread(spark, paths, port=0, admin_key="adm")
+    yield f"http://127.0.0.1:{srv.server_address[1]}"
+    srv.shutdown()
+
+
+@pytest.mark.parametrize(
+    "method,pattern,op",
+    [(m, p.pattern, op) for m, p, op in _ROUTES],
+    ids=[f"{m}-{p.pattern.strip('^$')}" for m, p, _op in _ROUTES],
+)
+def test_route_gates(gated, method, pattern, op):
+    """Walk every route: on a key-protected index each route that names
+    an index answers 401 without a bearer token (apikey CRUD: without
+    the admin key), and on a read-only server each write route answers
+    403 once past auth."""
+    from seekstorm_spark.sources.pdf import build_pdf
+
+    routed = [
+        o for m, p, o in _ROUTES
+        if m == method and p.match(_route_url(pattern, "sec"))
+    ]
+    assert routed[0] == op
+    body = build_pdf(["gate check"]) if op == "index_file" else {
+        "query": "term00000", "queries": ["term00000"], "name": "n",
+        "documents": [{"text": "x"}], "old_docids": [1], "docids": [1],
+        "synonyms": [], "key": "k",
+    }
+    if re.compile(pattern).groups:
+        status, resp = _request(
+            gated, method, _route_url(pattern, "sec"), body
+        )
+        assert status == 401, resp
+    if method != "GET" and op not in _NON_GET_READS:
+        status, resp = _request(
+            gated, method, _route_url(pattern, "open"), body, token="adm"
+        )
+        assert status == 403 and "writable=True" in resp["error"], resp
+
+
+def test_key_changes_wait_for_commits(spark, tmp_path):
+    """apikey set runs under the write rule, so it never interleaves
+    with a commit's meta.json rewrite: after concurrent commits and key
+    rotations the meta on disk holds every committed doc and the key
+    the service serves."""
+    import hashlib
+    import sys
+    import threading
+
+    from seekstorm_spark.index.store import IndexStore
+    from seekstorm_spark.server import IndexService
+
+    path = str(tmp_path / "idx")
+    IndexBuilder(spark, path, n_buckets=2).build(
+        synth_webtext(spark, 20, seed=3), text_col="text"
+    )
+    svc = IndexService(spark, {"i": path}, writable=True, admin_key="adm")
+    keys = [f"key{i}" for i in range(30)]
+    errors = []
+
+    def commits(worker):
+        for i in range(3):
+            svc.add_docs("i", {"documents": [{"text": f"zz{worker} {i}"}]})
+            svc.commit("i")
+
+    def rotations(worker):
+        for k in keys[worker::3]:
+            svc.set_key("i", {"key": k})
+
+    def run(fn, worker):
+        try:
+            fn(worker)
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=run, args=(fn, w))
+        for fn, n in ((commits, 2), (rotations, 3)) for w in range(n)
+    ]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    on_disk = IndexStore.open(path).meta
+    assert on_disk["n_docs"] == 20 + 2 * 3
+    served = svc.stores["i"].meta["api_key_sha256"]
+    assert on_disk["api_key_sha256"] == served
+    assert served in {hashlib.sha256(k.encode()).hexdigest() for k in keys}
