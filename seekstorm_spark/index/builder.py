@@ -244,32 +244,23 @@ def assign_docids(
     ).drop("_pid")
 
 
-def _bucket_rank(docs: DataFrame, order_col: str, n_buckets: int):
-    """(``docs`` plus ``_b``, the bucket ``repartition(n_buckets, key)``
-    puts a row in: ``pmod(murmur3(key), n_buckets)``, what ``F.hash``
-    computes; a window column with the row's 1-based rank by key in
-    its bucket, the order the bucket's ``sortWithinPartitions`` gives
-    it — stable, so equal keys keep their arrival order)."""
-    from pyspark.sql import Window
-
-    keyed = docs.withColumn(
-        "_b", F.pmod(F.hash(F.col(order_col)), F.lit(n_buckets))
-    )
-    return keyed, F.row_number().over(
-        Window.partitionBy("_b").orderBy(order_col)
-    )
-
-
 def _rank_in_buckets(
     docs: DataFrame, order_col: str, n_buckets: int
 ) -> DataFrame:
     """The docids of ``assign_docids``' ``order_col`` path without its
     ``n_buckets``-task stages: a row's docid is its rank in its bucket
-    (:func:`_bucket_rank`, one window) after all rows of lower
-    buckets, whose sizes a count collect gives."""
+    after all rows of lower buckets, whose sizes a count collect gives.
+    A row's bucket is ``pmod(murmur3(order_col), n_buckets)``, what
+    ``F.hash`` computes; its rank is a window's row number by
+    ``order_col`` — stable, so equal keys keep their arrival order."""
+    from pyspark.sql import Window
+
     from seekstorm_spark.sqlexpr import long_array
 
-    keyed, rank = _bucket_rank(docs, order_col, n_buckets)
+    keyed = docs.withColumn(
+        "_b", F.pmod(F.hash(F.col(order_col)), F.lit(n_buckets))
+    )
+    rank = F.row_number().over(Window.partitionBy("_b").orderBy(order_col))
     counts = {
         int(r["_b"]): int(r["cnt"])
         for r in keyed.groupBy("_b").agg(F.count("*").alias("cnt")).collect()
@@ -928,14 +919,16 @@ def build_posting_blocks(
     repartitions by bucket for its write).
 
     Grouping by (tbucket, block_id) — not (term, block_id) — gives a
-    small number of *large* batches, each spliced with one ``lexsort``
-    + run-length pass over all its terms, instead of millions of tiny
-    per-term UDF invocations. Group size stays bounded: ≤65,536
-    docids/block (`index.rs:114-115`) × the bucket's share of the
-    vocabulary — the Spark analog of the reference's 2048 term-hash
-    segments committed per block (`index.rs:988-995`,
+    small number of *large* batches, each spliced by one
+    :func:`splice_kernel` call over all its terms, instead of millions
+    of tiny per-term UDF invocations. Group size stays bounded:
+    ≤65,536 docids/block (`index.rs:114-115`) × the bucket's share of
+    the vocabulary — the Spark analog of the reference's 2048
+    term-hash segments committed per block (`index.rs:988-995`,
     `commit.rs:467-682`). Raise ``n_buckets`` to shrink groups at
     scale; skew from hot terms is already capped by the block bound.
+    applyInPandas for the IO: an A/B measured PySpark 4.1's
+    applyInArrow JVM path ~2.3x slower even with a trivial UDF.
 
     Sentinel segments (term='', one pair per doc carrying its dl byte)
     flow through the same shuffle and become the term-'' posting rows
@@ -953,184 +946,211 @@ def build_posting_blocks(
         )
     if width is not None:
         blocks = blocks.repartition(width, "tbucket")
+
+    def _group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        import pyarrow as pa
+
+        from seekstorm_spark.index.store import arrow_schema
+
+        segs = pa.Table.from_pandas(
+            pdf, schema=arrow_schema(TERM_SEG_SCHEMA), preserve_index=False
+        )
+        tbucket = np.full(len(pdf), int(key[0]), dtype=np.int32)
+        return splice_kernel(segs, tbucket, block_size).to_pandas()
+
     return blocks.groupBy("tbucket", "block_id").applyInPandas(
-        splice_kernel(block_size), schema=POSTINGS_DDL
+        _group, schema=POSTINGS_DDL
     )
 
 
-def splice_kernel(block_size: int = ROARING_BLOCK_SIZE):
-    """The group kernel of :func:`build_posting_blocks`:
-    ``((tbucket, block_id), segment rows as pandas)`` → posting rows
-    (``store.POSTINGS_DDL``)."""
-
-    def _build_seg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        """Concatenate the map-encoded posting byte streams per
-        (term, field) in docid order, re-encoding only each
-        segment-boundary docid varint — byte-identical to encoding the
-        whole run at once (varints are per-value independent; the
-        boundary value is the delta-1 the whole-run encode would have
-        produced). applyInPandas for the IO: an A/B measured PySpark
-        4.1's applyInArrow JVM path ~2.3x slower even with a trivial
-        UDF."""
-        from seekstorm_spark.codecs import (
-            vb_byte_lengths,
-            vb_decode,
-            vb_encode_chunk_offsets,
-        )
-
-        tbucket, block_id = int(key[0]), int(key[1])
-        term_codes, uniq_terms = pd.factorize(pdf["term"], sort=True)
-        term_codes = term_codes.astype(np.int64)
-        uniq_terms = np.asarray(uniq_terms, dtype=object)
-        fld = pdf["field"].values.astype(np.int64)
-        first = pdf["seg_first"].values.astype(np.int64)
-        last = pdf["seg_last"].values.astype(np.int64)
-        order = np.lexsort((first, fld, term_codes))
-        t = term_codes[order]
-        f = fld[order]
-        first = first[order]
-        last = last[order]
-        n_pairs = pdf["n_pairs"].values.astype(np.int64)[order]
-        s_mtf = pdf["max_tf"].values.astype(np.int64)[order]
-        s_mdl = pdf["min_dl_byte"].values.astype(np.int64)[order]
-        s_mt1 = pdf["max_tf1"].values.astype(np.int64)[order]
-        s_mt2 = pdf["max_tf2"].values.astype(np.int64)[order]
-        s_mt3 = pdf["max_tf3"].values.astype(np.int64)[order]
-        dvb = pdf["docids_vb"].values[order]
-        tvb = pdf["tfs_vb"].values[order]
-        dls = pdf["dls"].values[order]
-        pvb = pdf["positions_vb"].values[order]
-        t1 = pdf["tfs1_vb"].values[order]
-        t2 = pdf["tfs2_vb"].values[order]
-        t3 = pdf["tfs3_vb"].values[order]
-        n_seg = len(t)
-
-        new_run = np.empty(n_seg, dtype=bool)
-        new_run[0] = True
-        new_run[1:] = (t[1:] != t[:-1]) | (f[1:] != f[:-1])
-        starts = np.flatnonzero(new_run)
-        ends = np.append(starts[1:], n_seg)
-        n_runs = len(starts)
-        run_term = t[starts]
-
-        # segments of one run must be disjoint ascending docid ranges
-        # (the tokenize contract); a repeated docid that straddles two
-        # map batches of one task surfaces here
-        joins = ~new_run[1:]
-        _require_ascending(last[:-1][joins], first[1:][joins])
-
-        base = np.int64(block_id) * np.int64(block_size)
-        local_first = first - base
-        local_last = last - base
-        # boundary docid varint for every non-run-start segment: the
-        # delta-1 from the previous segment's last docid
-        bvals = np.where(
-            new_run,
-            0,
-            local_first - np.concatenate(([0], local_last[:-1])) - 1,
-        ).astype(np.uint64)
-        bbuf, boff = vb_encode_chunk_offsets(
-            bvals, np.ones(n_seg, dtype=np.int64)
-        )
-        head_lens = vb_byte_lengths(local_first.astype(np.uint64))
-
-        out_docids: list = []
-        out_tfs: list = []
-        out_dls: list = []
-        out_pos: list = []
-        out_tfs1: list = []
-        out_tfs2: list = []
-        out_tfs3: list = []
-        for s, e in zip(starts, ends):
-            if e - s == 1:
-                out_docids.append(dvb[s])
-            else:
-                parts = [dvb[s]]
-                for i in range(s + 1, e):
-                    parts.append(
-                        bytes(bbuf[boff[i] : boff[i + 1]])
-                        + dvb[i][int(head_lens[i]) :]
-                    )
-                out_docids.append(b"".join(parts))
-            out_tfs.append(b"".join(tvb[s:e]))
-            out_dls.append(b"".join(dls[s:e]))
-            out_pos.append(b"".join(pvb[s:e]))
-            if t1[s] is not None:
-                out_tfs1.append(b"".join(t1[s:e]))
-                out_tfs2.append(b"".join(t2[s:e]))
-            else:
-                out_tfs1.append(None)
-                out_tfs2.append(None)
-            out_tfs3.append(
-                b"".join(t3[s:e]) if t3[s] is not None else None
+def _run_slices(pa, col, starts, n: int):
+    """Binary column ``col`` (rows already in run order) → one value
+    per run: run ``r`` is rows ``starts[r]`` up to the next start,
+    concatenated. The runs' bytes are adjacent in the value buffer, so
+    the result shares it with new offsets (no copy); a run is null
+    when its first row is."""
+    col = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    offsets = np.frombuffer(col.buffers()[1], dtype=np.int32)[
+        col.offset : col.offset + n + 1
+    ]
+    run_off = offsets[np.append(starts, n)]
+    data = col.buffers()[2] or pa.py_buffer(b"")  # all empty: no buffer
+    validity = None
+    if col.null_count:
+        validity = pa.py_buffer(
+            np.packbits(
+                col.is_valid().to_numpy(zero_copy_only=False)[starts],
+                bitorder="little",
             )
-
-        out_count = np.add.reduceat(n_pairs, starts)
-        out_maxtf = np.maximum.reduceat(s_mtf, starts).astype(np.int32)
-        out_mindl = np.minimum.reduceat(s_mdl, starts).astype(np.int32)
-        out_maxtf1 = np.maximum.reduceat(s_mt1, starts).astype(np.int32)
-        out_maxtf2 = np.maximum.reduceat(s_mt2, starts).astype(np.int32)
-        out_maxtf3 = np.maximum.reduceat(s_mt3, starts).astype(np.int32)
-
-        # df_block: distinct docs per term ACROSS fields, placed on
-        # the term's first run. Single-field terms (the common case):
-        # segments are disjoint, every pair a distinct doc, so df =
-        # posting_count. Terms spanning >1 field decode their docid
-        # streams and count the union.
-        new_term = np.empty(n_runs, dtype=bool)
-        new_term[0] = True
-        new_term[1:] = run_term[1:] != run_term[:-1]
-        tstarts = np.flatnonzero(new_term)
-        tends = np.append(tstarts[1:], n_runs)
-        out_dfb = np.zeros(n_runs, dtype=np.int64)
-        for ts, te in zip(tstarts, tends):
-            if te - ts == 1:
-                out_dfb[ts] = out_count[ts]
-            else:
-                seen: list = []
-                for run in range(ts, te):
-                    v = vb_decode(out_docids[run])
-                    seen.append(
-                        np.cumsum(v.astype(np.int64) + 1) - 1
-                    )
-                out_dfb[ts] = len(np.unique(np.concatenate(seen)))
-
-        return pd.DataFrame(
-            {
-                "term": uniq_terms[run_term],
-                "field": pd.Series(
-                    f[starts].astype(np.int32), dtype="int32"
-                ),
-                "block_id": pd.Series(
-                    np.full(n_runs, block_id, dtype=np.int32),
-                    dtype="int32",
-                ),
-                "posting_count": pd.Series(
-                    out_count.astype(np.int32), dtype="int32"
-                ),
-                "df_block": pd.Series(
-                    out_dfb.astype(np.int32), dtype="int32"
-                ),
-                "max_tf": pd.Series(out_maxtf, dtype="int32"),
-                "min_dl_byte": pd.Series(out_mindl, dtype="int32"),
-                "docids_vb": out_docids,
-                "tfs_vb": out_tfs,
-                "dls": out_dls,
-                "positions_vb": out_pos,
-                "tfs1_vb": out_tfs1,
-                "tfs2_vb": out_tfs2,
-                "tfs3_vb": out_tfs3,
-                "max_tf1": out_maxtf1,
-                "max_tf2": out_maxtf2,
-                "max_tf3": out_maxtf3,
-                "tbucket": pd.Series(
-                    np.full(n_runs, tbucket, dtype=np.int32),
-                    dtype="int32",
-                ),
-            }
         )
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(starts),
+        [validity, pa.py_buffer(run_off), data],
+    )
 
-    return _build_seg
+
+def splice_kernel(
+    segs, tbucket: np.ndarray, block_size: int = ROARING_BLOCK_SIZE
+):
+    """TERM_SEG_SCHEMA segment rows (a ``pyarrow.Table``, any order,
+    any number of (tbucket, block_id) groups) and each row's term
+    bucket → posting rows (``store.POSTINGS_DDL`` columns, ``tbucket``
+    last), ordered by (tbucket, block_id, term, field).
+
+    One sort by (tbucket, block_id, term, field, seg_first) makes each
+    (term, field, block) run's segments adjacent and docid-ordered, so
+    the run's ``tfs_vb``, ``dls``, ``positions_vb`` and gram tf
+    streams are each one slice of the sorted value buffer. The docid
+    stream is one numpy gather that swaps each non-first segment's
+    head varint (its absolute first docid) for the boundary varint —
+    the delta-1 from the previous segment's last docid — so the result
+    is byte-identical to encoding the whole run at once (varints are
+    per-value independent). :func:`build_posting_blocks` (one group
+    per call) and the driver-side ``stage_batch`` (a whole batch per
+    call) both splice here."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from seekstorm_spark.codecs import (
+        vb_byte_lengths,
+        vb_decode,
+        vb_encode_chunk_offsets,
+    )
+    from seekstorm_spark.index.store import arrow_schema
+
+    schema = arrow_schema(POSTINGS_DDL)
+    n = segs.num_rows
+    if n == 0:
+        return schema.empty_table()
+
+    def ints(name):
+        return segs[name].to_numpy().astype(np.int64)
+
+    term = segs["term"].combine_chunks()
+    rank = pc.rank(term, tiebreaker="dense").to_numpy()  # byte order
+    tb = np.asarray(tbucket, dtype=np.int64)
+    blk, fld = ints("block_id"), ints("field")
+    first, last = ints("seg_first"), ints("seg_last")
+    order = np.lexsort((first, fld, rank, blk, tb))
+    tb, blk, fld, rank = tb[order], blk[order], fld[order], rank[order]
+    first, last = first[order], last[order]
+    take = pa.array(order)
+
+    new_group = np.ones(n, dtype=bool)
+    new_group[1:] = (tb[1:] != tb[:-1]) | (blk[1:] != blk[:-1])
+    new_term = new_group.copy()
+    new_term[1:] |= rank[1:] != rank[:-1]
+    new_run = new_term.copy()
+    new_run[1:] |= fld[1:] != fld[:-1]
+    starts = np.flatnonzero(new_run)
+    n_runs = len(starts)
+
+    # segments of one run must be disjoint ascending docid ranges
+    # (the tokenize contract); a repeated docid that straddles two
+    # map batches of one task surfaces here
+    joins = np.flatnonzero(~new_run)
+    _require_ascending(last[joins - 1], first[joins])
+
+    # docids: every non-first segment of a run drops its head varint
+    # and gets the boundary varint in its place
+    dvb = segs["docids_vb"].take(take).combine_chunks()
+    d_off = np.frombuffer(dvb.buffers()[1], dtype=np.int32)[
+        dvb.offset : dvb.offset + n + 1
+    ].astype(np.int64)
+    d_data = np.frombuffer(dvb.buffers()[2], dtype=np.uint8)
+    local_first = first[joins] - blk[joins] * block_size
+    bbuf, boff = vb_encode_chunk_offsets(
+        local_first - (last[joins - 1] - blk[joins] * block_size) - 1,
+        np.ones(len(joins), dtype=np.int64),
+    )
+    skip = np.zeros(n, dtype=np.int64)
+    skip[joins] = vb_byte_lengths(local_first.astype(np.uint64))
+    blen = np.zeros(n, dtype=np.int64)
+    blen[joins] = np.diff(boff)
+    bsrc = np.zeros(n, dtype=np.int64)
+    bsrc[joins] = len(d_data) + boff[:-1]
+    # pieces in output order: (boundary varint, rest of segment) per row
+    piece_src = np.empty(2 * n, dtype=np.int64)
+    piece_src[0::2] = bsrc
+    piece_src[1::2] = d_off[:-1] + skip
+    piece_len = np.empty(2 * n, dtype=np.int64)
+    piece_len[0::2] = blen
+    piece_len[1::2] = np.diff(d_off) - skip
+    piece_end = np.cumsum(piece_len)
+    gather = np.repeat(piece_src - (piece_end - piece_len), piece_len)
+    gather += np.arange(int(piece_end[-1]), dtype=np.int64)
+    d_bytes = np.concatenate(
+        [d_data, np.frombuffer(bbuf, dtype=np.uint8)]
+    )[gather]
+    d_run_off = np.concatenate(([0], piece_end[1::2]))[np.append(starts, n)]
+    docids = pa.Array.from_buffers(
+        pa.binary(),
+        n_runs,
+        [None, pa.py_buffer(d_run_off.astype(np.int32)), pa.py_buffer(d_bytes)],
+    )
+
+    def runs_of(reduce, name):
+        return reduce.reduceat(ints(name)[order], starts).astype(np.int32)
+
+    posting_count = runs_of(np.add, "n_pairs")
+
+    # df_block: distinct docs per term ACROSS fields, placed on the
+    # term's first run. A single-field term's segments are disjoint, so
+    # its df is its posting_count; the runs of a term spanning >1 field
+    # are decoded (all in one varint pass) and their docids counted
+    # once each.
+    df_block = np.zeros(n_runs, dtype=np.int32)
+    run_new_term = new_term[starts]
+    term_run = np.cumsum(run_new_term) - 1
+    runs_per_term = np.bincount(term_run)
+    multi = runs_per_term[term_run] > 1
+    single = run_new_term & ~multi
+    df_block[single] = posting_count[single]
+    if multi.any():
+        lo, hi = d_run_off[:-1][multi], d_run_off[1:][multi]
+        ends = np.cumsum(hi - lo)
+        pick = np.repeat(lo - (ends - (hi - lo)), hi - lo) + np.arange(
+            int(ends[-1]), dtype=np.int64
+        )
+        counts = posting_count[multi].astype(np.int64)
+        gaps = vb_decode(d_bytes[pick].tobytes()).astype(np.int64) + 1
+        run_start = np.cumsum(counts) - counts
+        # a run's first value is absolute: restart the running sum there
+        seen = np.cumsum(gaps)
+        seen -= np.repeat(seen[run_start] - gaps[run_start], counts) + 1
+        key = np.repeat(term_run[multi], counts) * np.int64(block_size) + seen
+        uniq_terms, n_docs = np.unique(
+            np.unique(key) // np.int64(block_size), return_counts=True
+        )
+        first_run = np.flatnonzero(run_new_term)
+        df_block[first_run[uniq_terms]] = n_docs
+
+    at = order[starts]
+    return pa.table(
+        {
+            "term": term.take(pa.array(at)),
+            "field": fld[starts].astype(np.int32),
+            "block_id": blk[starts].astype(np.int32),
+            "posting_count": posting_count,
+            "df_block": df_block,
+            "max_tf": runs_of(np.maximum, "max_tf"),
+            "min_dl_byte": runs_of(np.minimum, "min_dl_byte"),
+            "docids_vb": docids,
+            **{
+                c: _run_slices(pa, segs[c].take(take), starts, n)
+                for c in (
+                    "tfs_vb", "dls", "positions_vb",
+                    "tfs1_vb", "tfs2_vb", "tfs3_vb",
+                )
+            },
+            "max_tf1": runs_of(np.maximum, "max_tf1"),
+            "max_tf2": runs_of(np.maximum, "max_tf2"),
+            "max_tf3": runs_of(np.maximum, "max_tf3"),
+            "tbucket": tb[starts].astype(np.int32),
+        },
+        schema=schema,
+    )
 
 
 FACET_MISSING = 255  # u8 string-facet code for null/unknown

@@ -273,6 +273,11 @@ def _check_similarity(similarity: str) -> None:
         raise ValueError(f"unknown similarity {similarity!r}")
 
 
+def _check_rewrite(rewrite: str | None) -> None:
+    if rewrite not in (None, "spell", "suggest"):
+        raise ValueError(f"unknown rewrite {rewrite!r}")
+
+
 def _plan(
     spark: SparkSession,
     store: IndexStore,
@@ -285,6 +290,7 @@ def _plan(
     rewrite_options: dict | None = None,
 ) -> QueryPlan:
     _check_similarity(similarity)
+    _check_rewrite(rewrite)
     meta = store.meta
     stop_words = frozenset(meta.get("stop_words") or []) or None
     pq: ParsedQuery = parse_query(

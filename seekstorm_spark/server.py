@@ -987,12 +987,11 @@ class IndexService:
         the reference's close flushes level-0 the same way. The index
         can be re-served by restarting (or re-creating) the service
         with its path."""
-        with self._write_locks[name]:  # KeyError → 404
+        with self._writing(name) as store:
             idx = self._indexers.get(name)
             if idx is not None and idx.staged:
                 idx.commit()
             with self._registry_lock:
-                store = self.stores[name]
                 self._forget(name)
         # meta may be stale if the commit above promoted docs; report
         # the on-disk truth

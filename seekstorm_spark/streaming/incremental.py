@@ -27,10 +27,10 @@ same staged rows (``stage_batch``):
   50 ms per Python task on a 4-vCPU host. Streaming batches and bulk
   appends of any size take this form.
 * a ``pyarrow.Table`` already held by the driver (the REST server's
-  ``/docs``) runs the kernels in-process and writes with pyarrow: no
-  Python worker, no Spark write job, and the boundary costs that are
-  most of a small batch's Spark plan are gone. It is single-threaded,
-  so it suits micro-batches only.
+  ``/docs``) runs the kernels in-process and writes with pyarrow,
+  with no Spark job: the boundary costs that are most of a small
+  batch's Spark plan are gone. It is single-threaded, so it suits
+  micro-batches only.
 
 **Append cost is O(batch), not O(index)**: the term-stats table is
 log-structured — each commit appends the batch's own (tbucket, term)
@@ -61,18 +61,16 @@ from dataclasses import dataclass
 from typing import Any
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from seekstorm_spark.codecs import ROARING_BLOCK_SIZE
-from seekstorm_spark.hashing import term_bucket
+from seekstorm_spark.hashing import spark_hash, term_buckets
 from seekstorm_spark.index.builder import (
     TERM_SEG_SCHEMA,
     IndexBuilder,
-    _bucket_rank,
     _decode_doc_meta,
     _tokenizer_settings,
     assign_docids,
@@ -255,47 +253,37 @@ def _frame_docs(
 
 
 def _table_docs(
-    spark: SparkSession,
     batch: pa.Table,
     text_col: str,
     id_col: str | None,
     base_docid: int,
 ) -> pa.Table:
     """Number a driver-resident batch with the docids
-    :func:`_frame_docs` gives, and sort it by docid. Builder ids rank
-    the text column alone with ``_rank_in_buckets``' window, in one
-    JVM-only job (two under AQE); the bucket sizes are counted here."""
+    :func:`_frame_docs` gives, and sort it by docid, with no Spark job.
+    Builder ids mirror ``_rank_in_buckets`` on the text column: the
+    bucket is ``pmod(hash(text), 16)`` (``hashing.spark_hash``), and
+    the docids run through the buckets in order, each bucket sorted
+    by text as Spark sorts it (null first, then UTF-8 byte order,
+    equal texts in arrival order)."""
     if id_col is not None:
         ids = pc.cast(batch[id_col], pa.int64())
         if ids.null_count:
             raise ValueError(f"id_col {id_col!r} holds null ids")
         docid = ids.to_numpy()
+        order = np.argsort(docid, kind="stable")
+        docid = docid[order]
     else:
-        docid = np.empty(batch.num_rows, dtype=np.int64)
-        if batch.num_rows:
-            keyed = spark.createDataFrame(
-                pa.table(
-                    {
-                        "_row": np.arange(batch.num_rows, dtype=np.int64),
-                        # a /docs body whose texts are all null has a
-                        # null-typed column
-                        text_col: batch[text_col].cast(pa.string()),
-                    }
-                )
-            )
-            keyed, rank = _bucket_rank(keyed, text_col, 16)
-            got = keyed.select("_row", "_b", rank.alias("_rank")).toArrow()
-            b = got["_b"].to_numpy()
-            sizes = np.bincount(b, minlength=16)
-            offsets = np.cumsum(sizes) - sizes
-            docid[got["_row"].to_numpy()] = (
-                base_docid + offsets[b] + got["_rank"].to_numpy() - 1
-            )
+        # a /docs body whose texts are all null has a null-typed column
+        text = batch[text_col].cast(pa.string())
+        order = pc.sort_indices(
+            pa.table({"b": spark_hash(text) % 16, "t": text}),
+            sort_keys=[("b", "ascending"), ("t", "ascending")],
+            null_placement="at_start",
+        )
+        docid = base_docid + np.arange(batch.num_rows, dtype=np.int64)
     if "docid" in batch.column_names:  # id_col="docid", now cast to long
         batch = batch.drop_columns(["docid"])
-    return batch.append_column("docid", pa.array(docid)).take(
-        np.argsort(docid, kind="stable")
-    )
+    return batch.take(order).append_column("docid", pa.array(docid))
 
 
 def _write_frame(
@@ -383,63 +371,73 @@ def _write_table(
     segs = pa.Table.from_batches(
         list(tokenize(docs.select(["docid", *field_cols]).to_batches(max_rows))),
         schema=arrow_schema(TERM_SEG_SCHEMA),
-    ).to_pandas()
-    is_sentinel = segs["term"].values == ""
+    )
+    is_sentinel = pc.equal(segs["term"], "")
 
-    # splice per (tbucket, block_id), the groups of build_posting_blocks
-    post = segs[~is_sentinel]
-    codes, terms = pd.factorize(post["term"])
-    tbucket = np.array(
-        [term_bucket(t, n_buckets) for t in terms], dtype=np.int32
-    )[codes]
-    splice = splice_kernel(bs)
-    blocks = [
-        splice(key, group.reset_index(drop=True))
-        for key, group in post.groupby([tbucket, post["block_id"].values])
+    # the whole batch's (tbucket, block_id) groups in one splice, each
+    # distinct term hashed once
+    post = segs.filter(pc.invert(is_sentinel))
+    terms = post["term"].combine_chunks().dictionary_encode()
+    tbucket = term_buckets(terms.dictionary, n_buckets)[
+        terms.indices.to_numpy()
     ]
-    postings = pd.concat(blocks, ignore_index=True) if blocks else None
+    postings = splice_kernel(post, tbucket, bs)
     _write_parts(
         postings, "tbucket", arrow_schema(POSTINGS_DDL, "tbucket"),
         os.path.join(stage, "postings"),
     )
 
     dec = doc_meta_kernel(bs)
-    sentinels = segs[is_sentinel][["block_id", "field", "docids_vb", "dls"]]
-    parts = list(dec([sentinels]))
-    doc_meta = pd.concat(parts) if parts else None
+    sentinels = segs.filter(is_sentinel).select(
+        ["block_id", "field", "docids_vb", "dls"]
+    )
+    doc_meta = pa.Table.from_batches(
+        [
+            pa.RecordBatch.from_pandas(
+                part, schema=arrow_schema(DOC_META_DDL), preserve_index=False
+            )
+            for part in dec([sentinels.to_pandas()])
+        ],
+        schema=arrow_schema(DOC_META_DDL),
+    )
     _write_parts(
         doc_meta, None, arrow_schema(DOC_META_DDL),
         os.path.join(stage, "doc_meta"),
     )
-    hist = (
-        {}
-        if doc_meta is None
-        else {
-            (int(f), int(b)): int(c)
-            for (f, b), c in doc_meta.groupby(["field", "dl_byte"]).size().items()
-        }
+    pairs, counts = np.unique(
+        np.stack(
+            [doc_meta["field"].to_numpy(), doc_meta["dl_byte"].to_numpy()]
+        ),
+        axis=1,
+        return_counts=True,
     )
+    hist = {
+        (int(f), int(b)): int(c) for (f, b), c in zip(pairs.T, counts)
+    }
 
     # the aggregates of term_stats_aggregate
-    term_stats = None
-    if postings is not None:
-        nbytes = sum(
-            postings[c].map(len)
-            for c in ("docids_vb", "tfs_vb", "dls", "positions_vb")
+    nbytes = pc.binary_length(postings["docids_vb"]).cast(pa.int64())
+    for c in ("tfs_vb", "dls", "positions_vb"):
+        nbytes = pc.add(nbytes, pc.binary_length(postings[c]))
+    term_stats = (
+        postings.append_column("nbytes", nbytes)
+        .group_by(["tbucket", "term"], use_threads=False)
+        .aggregate(
+            [
+                ("df_block", "sum"),
+                ("posting_count", "sum"),
+                ("block_id", "count"),
+                ("max_tf", "max"),
+                ("min_dl_byte", "min"),
+                ("nbytes", "sum"),
+            ]
         )
-        term_stats = (
-            postings.assign(nbytes=nbytes)
-            .groupby(["tbucket", "term"])
-            .agg(
-                df=("df_block", "sum"),
-                cf_fields=("posting_count", "sum"),
-                n_blocks=("block_id", "size"),
-                max_tf=("max_tf", "max"),
-                min_dl_byte=("min_dl_byte", "min"),
-                bytes=("nbytes", "sum"),
-            )
-            .reset_index()
+        .rename_columns(
+            ["tbucket", "term", "df", "cf_fields", "n_blocks", "max_tf",
+             "min_dl_byte", "bytes"]
         )
+        .sort_by([("tbucket", "ascending"), ("term", "ascending")])
+    )
     _write_parts(
         term_stats, "tbucket",
         # Spark's count(*) is non-nullable
@@ -452,12 +450,19 @@ def _write_table(
         encode = facet_kernel(facet_meta, bs)
         fdocs = docs.select(["docid", *facet_meta]).to_pandas()
         fdocs["block_id"] = (fdocs["docid"] // bs).astype(np.int32)
-        rows = [
-            encode((block_id,), group.reset_index(drop=True))
-            for block_id, group in fdocs.groupby("block_id")
-        ]
+        schema = arrow_schema(FACETS_DDL)
         _write_parts(
-            pd.concat(rows) if rows else None,
+            pa.Table.from_batches(
+                [
+                    pa.RecordBatch.from_pandas(
+                        encode((block_id,), group.reset_index(drop=True)),
+                        schema=schema,
+                        preserve_index=False,
+                    )
+                    for block_id, group in fdocs.groupby("block_id")
+                ],
+                schema=schema,
+            ),
             "facet", arrow_schema(FACETS_DDL, "facet"),
             os.path.join(stage, "facets"),
         )
@@ -469,25 +474,26 @@ _HIVE_ESCAPE = frozenset('"#%\'*/:=?\\\x7f{[]^')
 
 
 def _write_parts(
-    pdf: pd.DataFrame | None, key: str | None, schema: pa.Schema, root: str
+    table: pa.Table, key: str | None, schema: pa.Schema, root: str
 ) -> None:
     """One parquet file per ``key=value`` dir under ``root`` (all rows
-    in one file when ``key`` is None). The dir exists even without
-    rows, as after an empty Spark write."""
+    in one file when ``key`` is None), holding ``schema``'s columns.
+    The dir exists even without rows, as after an empty Spark write."""
     import pyarrow.parquet as pq
 
     os.makedirs(root, exist_ok=True)
-    if pdf is None or not len(pdf):
+    if not table.num_rows:
         return
-    table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
     if key is None:
-        pq.write_table(table, os.path.join(root, "part-00000.parquet"))
+        pq.write_table(
+            table.select(schema.names).cast(schema),
+            os.path.join(root, "part-00000.parquet"),
+        )
         return
-    # one conversion, then a slice per key: converting per part costs
-    # more than the writes
-    keys = pdf[key].to_numpy()
+    keys = table[key].to_numpy()
     order = np.argsort(keys, kind="stable")
-    table, keys = table.take(order), keys[order]
+    table = table.take(order).select(schema.names).cast(schema)
+    keys = keys[order]
     starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
     for start, end in zip(starts, np.r_[starts[1:], len(keys)]):
         escaped = "".join(
@@ -524,9 +530,10 @@ def stage_batch(
 
     Same kernels as :meth:`IndexBuilder.build`: docids as in
     ``assign_docids`` → segment rows (:func:`segment_kernel`) → the
-    splice per (tbucket, block) (:func:`splice_kernel`), with doc_meta
-    decoded from the batch's term='' segments. The staged postings
-    hold no term='' rows. The input type picks where they run:
+    splice of the (tbucket, block) groups (:func:`splice_kernel`),
+    with doc_meta decoded from the batch's term='' segments. The
+    staged postings hold no term='' rows. The input type picks where
+    they run:
 
     * a Spark ``DataFrame`` runs them as a distributed plan — any
       batch size, tokenized in parallel (streaming ``foreachBatch``,
@@ -542,12 +549,14 @@ def stage_batch(
       posting rows.
     * a ``pyarrow.Table`` already on the driver (the REST server's
       ``/docs``) runs them in this process and writes with pyarrow:
-      no Python worker and no Spark write job, only the JVM-only job
-      that ranks builder docids (two under AQE; none with ``id_col``).
-      For a micro-batch the Spark plan's boundary costs — Python
-      workers, per-group pandas frames, per-file writer and commit
-      costs — are most of its time. The kernels run single-threaded
-      while holding the GIL, so bulk loads should pass a DataFrame.
+      no Spark job at all. Builder docids are ranked with numpy
+      (:func:`_table_docs`), the batch's distinct terms are hashed to
+      buckets in one call (``hashing.term_buckets``), and one splice
+      covers the whole batch. For a micro-batch the Spark plan's
+      boundary costs — Python workers, per-group pandas frames,
+      per-file writer and commit costs — are most of its time. The
+      kernels run single-threaded while holding the GIL, so bulk loads
+      should pass a DataFrame.
 
     Both forms stage the same rows in the same layout (one file per
     staged ``tbucket=`` dir).
@@ -593,7 +602,7 @@ def stage_batch(
         )
         docs = _frame_docs(batch_docs, text_col, id_col, base_docid, width)
     else:
-        docs = _table_docs(spark, batch_docs, text_col, id_col, base_docid)
+        docs = _table_docs(batch_docs, text_col, id_col, base_docid)
 
     tag = str(batch_id) if batch_id is not None else f"d{base_docid}"
     stage = os.path.join(store.path, "_staging", f"batch_{tag}")

@@ -116,6 +116,18 @@ def test_error_paths(served):
     assert ei.value.code == 400
 
 
+def test_unknown_rewrite_is_400(served):
+    """``rewrite`` accepts only "spell" and "suggest": any other value
+    answers 400, as an unknown similarity does, instead of running the
+    query unrewritten."""
+    base, _store = served
+    status, resp = _request(
+        base, "POST", "/indices/main/query",
+        {"query": "term0000", "rewrite": "correct"},
+    )
+    assert status == 400 and "unknown rewrite 'correct'" in resp["error"], resp
+
+
 def test_concurrent_queries(served):
     import concurrent.futures as cf
 
@@ -1106,7 +1118,7 @@ def _route_url(pattern: str, name: str) -> str:
 
 # POST/PUT routes that change no index; every other non-GET route is a
 # write route and must be refused on a read-only server
-_NON_GET_READS = {"query", "count", "query_batch", "iterator", "close_index"}
+_NON_GET_READS = {"query", "count", "query_batch", "iterator"}
 
 
 @pytest.fixture(scope="module")
