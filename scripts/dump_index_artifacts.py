@@ -18,14 +18,19 @@ Spark DataFrame, each with builder docids and with caller ids
 (``id_col``; the ids continue the index's own, so the batch shares
 its last block). Last it stages and commits a Table batch with
 builder ids and then a DataFrame batch with caller ids, and prints the
-committed tables.
+committed tables. On the committed index it then builds the spell and
+completion dictionaries and prints them, collapses the term-stats
+partials (``compact_term_stats``) and prints term_stats, and deletes
+the docs matching one term and compacts (``compact``), printing the
+rewritten postings.
 
 A table's digest hashes its columns in name order after sorting the
 rows by the table's key (postings: tbucket, block_id, term, field;
 term_stats: tbucket, term; doc_meta: docid, field; facets: facet,
-block_id), so it does not depend on file layout. Each partitioned
+block_id; spell: dbucket, dkey, term; completions: pbucket, prefix,
+rank), so it does not depend on file layout. Each partitioned
 table also prints its number of partition dirs and the set of
-per-dir file counts. Takes about 2–3 minutes on a 4-vCPU host;
+per-dir file counts. Takes about 3–4 minutes on a 4-vCPU host;
 WORKDIR (default: a new temp dir, removed afterwards) holds about
 65 MB.
 """
@@ -49,7 +54,10 @@ KEYS = {
     "term_stats": ("tbucket", ["tbucket", "term"]),
     "doc_meta": (None, ["docid", "field"]),
     "facets": ("facet", ["facet", "block_id"]),
+    "spell": ("dbucket", ["dbucket", "dkey", "term"]),
+    "completions": ("pbucket", ["pbucket", "prefix", "rank"]),
 }
+INDEX_TABLES = ("postings", "term_stats", "doc_meta", "facets")
 
 
 def digest(root: str, table: str) -> str:
@@ -78,8 +86,8 @@ def digest(root: str, table: str) -> str:
     return line
 
 
-def dump(label: str, root: str) -> None:
-    for table in KEYS:
+def dump(label: str, root: str, tables=INDEX_TABLES) -> None:
+    for table in tables:
         print(f"{label} {digest(root, table)}", flush=True)
 
 
@@ -88,6 +96,12 @@ def main(work: str) -> None:
 
     from seekstorm_spark import get_spark
     from seekstorm_spark.index.builder import IndexBuilder
+    from seekstorm_spark.index.compaction import compact, compact_term_stats
+    from seekstorm_spark.query.engine import delete_by_query
+    from seekstorm_spark.query.spell import (
+        build_completion_dictionary,
+        build_spell_dictionary,
+    )
     from seekstorm_spark.sources.webtext import synth_webtext
     from seekstorm_spark.streaming.incremental import commit_batch, stage_batch
 
@@ -141,6 +155,17 @@ def main(work: str) -> None:
               f"next_docid={meta['next_docid']} "
               f"pos_sum={meta['positions_sum_normalized']}")
         dump("committed", store.path)
+
+        build_spell_dictionary(spark, store)
+        build_completion_dictionary(spark, store)
+        dump("dictionaries", store.path, ("spell", "completions"))
+        compact_term_stats(spark, store)
+        dump("compact-term-stats", store.path, ("term_stats",))
+        delete_by_query(spark, store, "term00150")
+        store = compact(spark, store)
+        meta = store.meta
+        print(f"compacted n_docs={meta['n_docs']} avgdl={meta['avgdl']}")
+        dump("compacted", store.path, ("postings",))
     finally:
         spark.stop()
 

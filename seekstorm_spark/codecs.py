@@ -80,22 +80,6 @@ def vb_encode_chunk_offsets(
     return buf, offsets
 
 
-def vb_encode_chunks(
-    values: np.ndarray, chunk_lengths: np.ndarray
-) -> list[bytes]:
-    """Chunked :func:`vb_encode`: ONE vectorized whole-array encode,
-    split into per-chunk byte slices (``b""`` for empty chunks).
-    Byte-identical to encoding each chunk separately — varints are
-    per-value independent."""
-    buf, offsets = vb_encode_chunk_offsets(values, chunk_lengths)
-    view = memoryview(buf)
-    off = offsets.tolist()
-    return [
-        bytes(view[a:b]) if b > a else b""
-        for a, b in zip(off[:-1], off[1:])
-    ]
-
-
 def vb_decode(buf: bytes) -> np.ndarray:
     """Vectorized varint decode → uint64 array."""
     if not buf:

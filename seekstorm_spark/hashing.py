@@ -1,15 +1,24 @@
-"""Pure-Python XXH64 matching Spark's ``F.xxhash64`` (seed 42).
+"""The term-bucket hash, and numpy mirrors of Spark's string hashes.
 
-The postings table is hash-partitioned by term bucket; the query
-planner computes the same bucket driver-side (to prune partitions
-without launching a Spark job), so both sides need the identical hash.
-XXH64 is a public, spec-stable algorithm (https://xxhash.com); Spark
-applies it with seed 42 over the UTF-8 bytes of a string column.
+The postings, term-stats, spell and completion tables are
+hash-partitioned by the bucket ``pmod(xxhash64(key), n)``. It has two
+sides, both here and nowhere else: :func:`bucket_column`, the Spark
+Column the writers partition by, and :func:`term_buckets`, the same
+bucket computed on the driver with numpy (XXH64 seed 42 over the
+UTF-8 bytes, as Spark's ``xxhash64``), which the driver-side stage
+and every bucket probe (``index.store.read_buckets``) use to touch
+only a key's partition without a Spark job. XXH64 is a public,
+spec-stable algorithm (https://xxhash.com). :func:`spark_hash` mirrors
+Spark's ``hash()`` (Murmur3 x86_32), which ranks builder docids.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 MASK64 = (1 << 64) - 1
 P1 = 11400714785074694791
@@ -19,78 +28,11 @@ P4 = 9650029242287828579
 P5 = 2870177450012600261
 
 
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & MASK64
-
-
-def _round(acc: int, inp: int) -> int:
-    acc = (acc + inp * P2) & MASK64
-    acc = _rotl(acc, 31)
-    return (acc * P1) & MASK64
-
-
-def _merge_round(acc: int, val: int) -> int:
-    acc ^= _round(0, val)
-    return ((acc * P1) + P4) & MASK64
-
-
-def xxh64(data: bytes, seed: int = 42) -> int:
-    n = len(data)
-    if n >= 32:
-        v1 = (seed + P1 + P2) & MASK64
-        v2 = (seed + P2) & MASK64
-        v3 = seed & MASK64
-        v4 = (seed - P1) & MASK64
-        i = 0
-        while i <= n - 32:
-            v1 = _round(v1, int.from_bytes(data[i : i + 8], "little"))
-            v2 = _round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            v3 = _round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            v4 = _round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & MASK64
-        h = _merge_round(h, v1)
-        h = _merge_round(h, v2)
-        h = _merge_round(h, v3)
-        h = _merge_round(h, v4)
-    else:
-        h = (seed + P5) & MASK64
-        i = 0
-    h = (h + n) & MASK64
-    while i <= n - 8:
-        k1 = _round(0, int.from_bytes(data[i : i + 8], "little"))
-        h ^= k1
-        h = (_rotl(h, 27) * P1 + P4) & MASK64
-        i += 8
-    if i <= n - 4:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * P1) & MASK64
-        h = (_rotl(h, 23) * P2 + P3) & MASK64
-        i += 4
-    while i < n:
-        h ^= (data[i] * P5) & MASK64
-        h = (_rotl(h, 11) * P1) & MASK64
-        i += 1
-    h ^= h >> 33
-    h = (h * P2) & MASK64
-    h ^= h >> 29
-    h = (h * P3) & MASK64
-    h ^= h >> 32
-    return h
-
-
-def xxh64_signed(data: bytes, seed: int = 42) -> int:
-    """As int64 two's complement — Spark's xxhash64 returns LongType."""
-    h = xxh64(data, seed)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def term_bucket(term: str, n_buckets: int) -> int:
-    """pmod(xxhash64(term), n_buckets) — identical to the Spark-side
-    bucket expression used when writing the postings table."""
-    return xxh64_signed(term.encode("utf-8")) % n_buckets
-
-
-# --- batch forms: numpy over many strings at once --------------------
+def bucket_column(col: str | Column, n_buckets: int) -> Column:
+    """``pmod(xxhash64(col), n_buckets)`` as int: the bucket column of
+    every bucket-partitioned table written from Spark (postings
+    ``tbucket``, spell ``dbucket``, completions ``pbucket``)."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 def _utf8_rows(values):
@@ -101,7 +43,13 @@ def _utf8_rows(values):
     if isinstance(values, pa.ChunkedArray):
         values = values.combine_chunks()
     if not isinstance(values, pa.Array):
-        values = pa.array(list(values), type=pa.string())
+        # a probe's handful of keys: cheaper joined in Python than
+        # converted to Arrow
+        values = list(values)
+        enc = [b"" if v is None else v.encode("utf-8") for v in values]
+        offsets = np.array([0, *accumulate(map(len, enc))], dtype=np.int64)
+        valid = np.array([v is not None for v in values], dtype=bool)
+        return np.frombuffer(b"".join(enc), dtype=np.uint8), offsets, valid
     if not pa.types.is_large_string(values.type):
         values = values.cast(pa.large_string())
     n = len(values)
@@ -189,7 +137,8 @@ def _xxh64_rows(mat, seed: int):
 
 def spark_xxhash64(values, seed: int = 42) -> np.ndarray:
     """Spark's ``xxhash64(col)`` of every string in ``values`` as int64
-    (:func:`xxh64_signed` per string; a null keeps the seed).
+    (XXH64 of the UTF-8 bytes, two's complement; a null keeps the
+    seed).
 
     XXH64's steps depend on the byte length, so the strings hash as one
     (strings, L) byte matrix per distinct length L: the Python steps
@@ -197,15 +146,14 @@ def spark_xxhash64(values, seed: int = 42) -> np.ndarray:
     cheap for terms, whose lengths are few and short."""
     data, offsets, valid = _utf8_rows(values)
     out = np.full(len(valid), seed, dtype=_U)
-    with np.errstate(over="ignore"):
-        for idx, mat in _by_length(data, offsets, np.flatnonzero(valid)):
-            out[idx] = _xxh64_rows(mat, seed)
+    for idx, mat in _by_length(data, offsets, np.flatnonzero(valid)):
+        out[idx] = _xxh64_rows(mat, seed)
     return out.view(np.int64)
 
 
 def term_buckets(terms, n_buckets: int) -> np.ndarray:
-    """:func:`term_bucket` of every term in ``terms`` (a pyarrow string
-    array or a sequence of str) in one call, as int32."""
+    """The :func:`bucket_column` bucket of every term in ``terms`` (a
+    pyarrow string array or a sequence of str) in one call, as int32."""
     return (spark_xxhash64(terms) % n_buckets).astype(np.int32)
 
 

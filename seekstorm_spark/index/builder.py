@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from seekstorm_spark.codecs import ROARING_BLOCK_SIZE
+from seekstorm_spark.hashing import bucket_column, term_buckets
 from seekstorm_spark.index.store import DOC_META_DDL, POSTINGS_DDL, IndexStore
 from seekstorm_spark.quantization import avgdl_f32, length_stats
 
@@ -935,10 +936,7 @@ def build_posting_blocks(
     from which doc_meta is derived — the document-length table rides
     the one tokenize pass instead of needing its own.
     """
-    blocks = term_rows.withColumn(
-        "tbucket",
-        F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int"),
-    )
+    blocks = term_rows.withColumn("tbucket", bucket_column("term", n_buckets))
     if only_buckets is not None:
         # resume: skip committed buckets before the shuffle, not after
         blocks = blocks.filter(
@@ -1733,9 +1731,7 @@ class IndexBuilder:
         store = IndexStore(path=self.index_path)
         os.makedirs(self.index_path, exist_ok=True)
 
-        from seekstorm_spark.hashing import term_bucket
-
-        sentinel_bucket = term_bucket("", self.n_buckets)
+        sentinel_bucket = int(term_buckets([""], self.n_buckets)[0])
 
         fields = self.fields or [text_col]
         facet_cols = self.facet_cols or []

@@ -50,10 +50,20 @@ analog of the reference's per-shard ``index.bin`` layout,
 * ``result_cache/`` — top-k results of frequent one-term queries for
                       the current index generation
                       (``query.result_cache``).
+* ``spell/``        — SymSpell delete keys (dkey, term, df) per
+                      ``dbucket`` (``query.spell``).
+* ``completions/``  — prefix → top-k (term, df, rank) per ``pbucket``
+                      (``query.spell``).
 * ``_staging/``     — uncommitted micro-batches (realtime level-0),
                       one ``batch_<tag>/`` dir each with its
                       postings, term_stats, doc_meta and facets,
                       promoted by ``commit_batch``.
+
+postings, term_stats, spell and completions are bucket-partitioned by
+``hashing.bucket_column`` of their key (term, term, dkey, prefix).
+:func:`read_buckets` is the one driver-side read of such a table by
+key: it reads only the keys' bucket dirs, so a probe is bounded by
+the table size / bucket count, whatever the corpus size.
 
 An empty index is the three tables' empty dirs (plus ``facets/``) and
 meta.json: readers pass the explicit schemas below, so an empty dir
@@ -67,6 +77,8 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from seekstorm_spark.hashing import term_buckets
 
 # Explicit on-disk table schemas. The postings and doc_meta writers
 # (``builder.build_posting_blocks`` / ``_decode_doc_meta``) declare
@@ -92,6 +104,8 @@ FACETS_DDL = (
     "block_id int, fvalues binary, vmin double, vmax double, "
     "facet string"
 )
+SPELL_DDL = "dkey string, term string, df long, dbucket int"
+COMPLETIONS_DDL = "prefix string, term string, df long, rank int, pbucket int"
 
 
 def arrow_schema(ddl: str, drop: str | None = None, not_null=()):
@@ -111,6 +125,42 @@ def arrow_schema(ddl: str, drop: str | None = None, not_null=()):
         pa.field(name, types[typ], nullable=name not in not_null)
         for name, typ in (spec.split() for spec in ddl.split(","))
         if name != drop
+    )
+
+
+def read_buckets(
+    path: str,
+    ddl: str,
+    keys,
+    n_buckets: int,
+    columns: list[str],
+    key: str = "term",
+    bucket: str = "tbucket",
+):
+    """The ``columns`` of the rows of the bucket-partitioned table at
+    ``path`` (declared by ``ddl``) whose ``key`` is one of ``keys``,
+    as a pyarrow Table, with no Spark job. The keys hash once
+    (``hashing.term_buckets``); only their existing ``<bucket>=<b>``
+    dirs are listed and read, with the declared schema, so a missing
+    path or an empty dir reads as no rows. Files are read in path
+    order, as a pyarrow dataset over the whole table would."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    schema = arrow_schema(ddl, drop=bucket)
+    keys = sorted(set(keys))
+    files = []
+    for b in set(term_buckets(keys, n_buckets).tolist()):
+        d = os.path.join(path, f"{bucket}={b}")
+        if os.path.isdir(d):
+            files += [
+                e.path for e in os.scandir(d)
+                if e.is_file() and not e.name.startswith((".", "_"))
+            ]
+    if not files:
+        return schema.empty_table().select(columns)
+    return pads.dataset(sorted(files), schema=schema, format="parquet").to_table(
+        columns=columns, filter=pc.field(key).isin(keys)
     )
 
 

@@ -69,7 +69,7 @@ from seekstorm_spark.functions.geo import (
     haversine_km,
     morton_decode,
 )
-from seekstorm_spark.hashing import term_bucket
+from seekstorm_spark.hashing import term_buckets
 from seekstorm_spark.index.builder import (
     NGRAM_SEP,
     decode_string_set_block,
@@ -78,7 +78,12 @@ from seekstorm_spark.index.builder import (
     facet_missing_code,
     facet_values,
 )
-from seekstorm_spark.index.store import POSTINGS_DDL, IndexStore
+from seekstorm_spark.index.store import (
+    POSTINGS_DDL,
+    TERM_STATS_DDL,
+    IndexStore,
+    read_buckets,
+)
 from seekstorm_spark.quantization import _DECODE_NP, avgdl_f32
 from seekstorm_spark.scoring import B, K, idf_f32
 from seekstorm_spark.sqlexpr import double_array
@@ -136,21 +141,7 @@ def _probe_stats_dir(
 ) -> dict[str, int]:
     """Raw driver-side probe of one (possibly log-structured)
     term-stats directory: term → Σ df across partial rows."""
-    import os
-
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
-    if not terms or not os.path.exists(path):
-        return {}
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
-    dataset = pads.dataset(path, partitioning="hive")
-    if "term" not in dataset.schema.names:
-        return {}  # empty index: no data files → no columns at all
-    flt = pc.field("term").isin(terms)
-    if "tbucket" in dataset.schema.names:
-        flt = pc.field("tbucket").isin(buckets) & flt
-    tbl = dataset.to_table(columns=["term", "df"], filter=flt)
+    tbl = read_buckets(path, TERM_STATS_DDL, terms, n_buckets, ["term", "df"])
     out: dict[str, int] = {}
     for t, v in zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()):
         out[t] = out.get(t, 0) + int(v)
@@ -1549,17 +1540,17 @@ def _scan_terms(plan: QueryPlan) -> set[str]:
 
 
 def _scan_spec(
-    store: IndexStore, idx_plans: list[tuple[int, QueryPlan]]
-) -> tuple[list[str], list[int], list[str], bool]:
-    """(terms, tbuckets, columns, need_pos) of the posting scan for
-    ``idx_plans`` — the terms, their bucket dirs and the columns the
-    kernel reads (gram partial tfs/bounds only when a gram term is
-    scanned, positions only for a phrase). Shared by the Spark scan
-    (:func:`_posting_rows`) and the driver read
-    (:func:`_posting_table`)."""
+    idx_plans: list[tuple[int, QueryPlan]]
+) -> tuple[list[str], list[str], bool]:
+    """(terms, columns, need_pos) of the posting scan for
+    ``idx_plans`` — the terms and the columns the kernel reads (gram
+    partial tfs/bounds only when a gram term is scanned, positions
+    only for a phrase). Shared by the Spark scan
+    (:func:`_posting_rows`, which prunes to the terms' ``tbucket``
+    partitions) and the driver read (:func:`_posting_table`, through
+    ``store.read_buckets``)."""
     terms = sorted({t for _i, p in idx_plans for t in _scan_terms(p)})
     need_pos = any(p.qtype == "phrase" for _i, p in idx_plans)
-    buckets = sorted({term_bucket(t, store.n_buckets) for t in terms})
     cols = [
         "term", "field", "block_id", "max_tf", "min_dl_byte",
         "docids_vb", "tfs_vb", "dls",
@@ -1570,7 +1561,7 @@ def _scan_spec(
         ]
     if need_pos:
         cols.append("positions_vb")
-    return terms, buckets, cols, need_pos
+    return terms, cols, need_pos
 
 
 def _posting_rows(
@@ -1596,7 +1587,8 @@ def _posting_rows(
     by block_id — or by (block_id, shard) when the batch is sharded —
     except with one scan term in one effective field and nothing
     staged, where the scan's own partitioning serves."""
-    terms, buckets, cols, need_pos = _scan_spec(store, idx_plans)
+    terms, cols, need_pos = _scan_spec(idx_plans)
+    buckets = np.unique(term_buckets(terms, store.n_buckets)).tolist()
     postings = _cached_postings(spark, store)
     for sb in staged or []:
         # only the queries' bucket dirs: listing all of a 64-bucket
@@ -1689,30 +1681,18 @@ def _posting_rows(
 
 def _posting_table(store: IndexStore, idx_plans: list[tuple[int, QueryPlan]]):
     """The committed posting rows of ``idx_plans`` read on the driver
-    with pyarrow — no Spark job: the columns and ``term ∈`` filter of
-    :func:`_posting_rows` over only the terms' ``tbucket=`` dirs, in
+    with pyarrow (``store.read_buckets``) — no Spark job: the columns
+    and ``term ∈`` filter of :func:`_posting_rows` over only the terms'
+    ``tbucket=`` dirs, in
     the kernel's input layout (``pos_vb``, ``shard`` = 0) and sorted
     by (block_id, term, field), the order :func:`_run_kernel` feeds
     each block in. Staged batches, field filters and facet columns are
     the Spark plan's alone."""
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
 
-    from seekstorm_spark.index.store import arrow_schema
-
-    terms, buckets, cols, need_pos = _scan_spec(store, idx_plans)
-    schema = arrow_schema(POSTINGS_DDL)
-    dataset = pads.dataset(
-        store.postings_path,
-        schema=schema,
-        partitioning=pads.partitioning(
-            pa.schema([schema.field("tbucket")]), flavor="hive"
-        ),
-    )
-    tbl = dataset.to_table(
-        columns=cols,
-        filter=pc.field("tbucket").isin(buckets) & pc.field("term").isin(terms),
+    terms, cols, need_pos = _scan_spec(idx_plans)
+    tbl = read_buckets(
+        store.postings_path, POSTINGS_DDL, terms, store.n_buckets, cols
     )
     if need_pos:
         tbl = tbl.rename_columns(

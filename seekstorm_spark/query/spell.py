@@ -30,7 +30,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from seekstorm_spark.index.store import IndexStore
+from seekstorm_spark.hashing import bucket_column
+from seekstorm_spark.index.store import (
+    COMPLETIONS_DDL,
+    SPELL_DDL,
+    IndexStore,
+    read_buckets,
+)
 
 SPELL_MAX_EDITS = 2
 SPELL_MAX_TERM_LEN = 24  # deletes explode quadratically; cap like SymSpell
@@ -184,9 +190,7 @@ def build_spell_dictionary(
             )
 
     rows = ts.mapInPandas(_explode, schema="dkey string, term string, df long")
-    rows = rows.withColumn(
-        "dbucket", F.pmod(F.xxhash64("dkey"), F.lit(SPELL_BUCKETS)).cast("int")
-    )
+    rows = rows.withColumn("dbucket", bucket_column("dkey", SPELL_BUCKETS))
     (
         rows.repartition(SPELL_BUCKETS, "dbucket")
         .sortWithinPartitions("dkey")
@@ -237,24 +241,15 @@ def spell_correct(
     the result is additionally capped at the distance the dictionary
     was BUILT with — symmetric-delete lookup beyond the build depth
     would silently miss candidates."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
-    from seekstorm_spark.hashing import term_bucket
-
     max_edits = effective_edit_distance(
         word, max_edits, term_length_threshold
     )
     max_edits = min(max_edits, int(_spell_build_meta(store)["max_edits"]))
     if max_edits <= 0:
         return None
-    probes = sorted(_deletes(word.lower(), max_edits))
-    buckets = sorted({term_bucket(k, SPELL_BUCKETS) for k in probes})
-    dataset = pads.dataset(_spell_path(store), partitioning="hive")
-    tbl = dataset.to_table(
-        columns=["term", "df"],
-        filter=pc.field("dbucket").isin(buckets)
-        & pc.field("dkey").isin(probes),
+    tbl = read_buckets(
+        _spell_path(store), SPELL_DDL, _deletes(word.lower(), max_edits),
+        SPELL_BUCKETS, ["term", "df"], key="dkey", bucket="dbucket",
     )
     best: tuple[int, int, str] | None = None
     seen: set[str] = set()
@@ -345,10 +340,7 @@ def build_completion_dictionary(
     top = (
         prefixes.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_k)
-        .withColumn(
-            "pbucket",
-            F.pmod(F.xxhash64("prefix"), F.lit(SPELL_BUCKETS)).cast("int"),
-        )
+        .withColumn("pbucket", bucket_column("prefix", SPELL_BUCKETS))
     )
     (
         top.repartition(SPELL_BUCKETS, "pbucket")
@@ -364,19 +356,9 @@ def complete(
 ) -> list[tuple[str, int]]:
     """Top-k completions for ``prefix`` → [(term, df)], df desc / term
     asc. Driver-side pyarrow probe — no Spark job."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
-    from seekstorm_spark.hashing import term_bucket
-
-    p = prefix.lower()
-    dataset = pads.dataset(_qac_path(store), partitioning="hive")
-    tbl = dataset.to_table(
-        columns=["term", "df", "rank"],
-        filter=(
-            pc.field("pbucket") == term_bucket(p, SPELL_BUCKETS)
-        )
-        & (pc.field("prefix") == p),
+    tbl = read_buckets(
+        _qac_path(store), COMPLETIONS_DDL, [prefix.lower()], SPELL_BUCKETS,
+        ["term", "df", "rank"], key="prefix", bucket="pbucket",
     )
     rows = sorted(
         zip(

@@ -18,7 +18,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -47,10 +47,7 @@ def get_spark(
         # text corpora are work-dense per byte: small scan partitions keep
         # the Python tokenize stages as wide as the cluster (the 128MB
         # default collapses a 64-file corpus into ~5 tasks)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
         # local-mode shuffle goes through spark.local.dir; tmpfs keeps the
         # benchmark CPU-bound (a cluster has NVMe + network for this)
@@ -67,12 +64,22 @@ def get_spark(
     return spark
 
 
+def default_cpus() -> int:
+    """Cores of the default ``local[N]`` master (and the default
+    shuffle partitions, at least 8): ``SPARK_GRAFT_CPUS``, else the
+    CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: half
     the host's memory, at most 48g. A fixed 48g heap is never the
     limit on a small host — JVMs grow until the kernel kills one — so
-    bound it by the host, leaving room for a second session. 48g when
-    the host's memory cannot be read."""
+    bound it by the host. Half is one session's share, not two's: two
+    default sessions at once (say, a dump script run in two checkouts
+    side by side) have killed a JVM on a 15 GB host; set
+    ``SPARK_DRIVER_MEM`` (e.g. ``3g``) for each when running two. 48g
+    when the host's memory cannot be read."""
     try:
         with open(meminfo) as f:
             kb = next(

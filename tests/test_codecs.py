@@ -86,7 +86,7 @@ def test_vb_encode_chunks_matches_per_chunk_encode():
     from seekstorm_spark.codecs import (
         vb_byte_lengths,
         vb_encode,
-        vb_encode_chunks,
+        vb_encode_chunk_offsets,
     )
 
     rng = np.random.default_rng(3)
@@ -101,28 +101,24 @@ def test_vb_encode_chunks_matches_per_chunk_encode():
         lens.append(n)
         left -= n
     lens = np.array(lens, dtype=np.int64)
-    got = vb_encode_chunks(vals, lens)
+    buf, offsets = vb_encode_chunk_offsets(vals, lens)
     off = 0
-    for n, chunk in zip(lens, got):
+    for i, n in enumerate(lens):
+        chunk = bytes(buf[offsets[i] : offsets[i + 1]])
         assert chunk == vb_encode(vals[off : off + n])
         off += n
-    assert vb_encode_chunks(np.empty(0, np.uint64), np.array([0, 0])) == [
-        b"",
-        b"",
-    ]
 
 
 def test_vb_encode_chunk_offsets_matches_chunks():
-    """The zero-copy (buffer, offsets) form tiles the buffer with the
-    same per-chunk byte slices vb_encode_chunks returns — including
-    boundary byte-length values and empty chunks."""
+    """The (buffer, offsets) form tiles the buffer with each chunk's
+    own :func:`vb_encode` — including boundary byte-length values and
+    empty chunks."""
     import numpy as np
 
     from seekstorm_spark.codecs import (
         vb_byte_lengths,
         vb_encode,
         vb_encode_chunk_offsets,
-        vb_encode_chunks,
     )
 
     rng = np.random.default_rng(11)
@@ -150,7 +146,10 @@ def test_vb_encode_chunk_offsets_matches_chunks():
     sliced = [
         bytes(buf[a:b]) for a, b in zip(offsets[:-1], offsets[1:])
     ]
-    assert sliced == vb_encode_chunks(vals, lens)
+    starts = np.concatenate(([0], np.cumsum(lens)))
+    assert sliced == [
+        vb_encode(vals[a:b]) for a, b in zip(starts[:-1], starts[1:])
+    ]
     ebuf, eoff = vb_encode_chunk_offsets(
         np.empty(0, np.uint64), np.array([0, 0])
     )

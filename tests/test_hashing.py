@@ -1,11 +1,15 @@
-"""XXH64 parity with Spark's xxhash64 (the term-bucket contract)."""
+"""The term-bucket contract: the numpy XXH64 (``spark_xxhash64``,
+``term_buckets``) and the Spark bucket column (``bucket_column``) agree
+with Spark's ``xxhash64``, and ``store.read_buckets`` returns exactly
+the rows of a Spark read pruned to the keys' buckets."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from seekstorm_spark.hashing import term_bucket, xxh64, xxh64_signed
+from seekstorm_spark.hashing import bucket_column, spark_xxhash64, term_buckets
 
 KNOWN_TERMS = [
     "",
@@ -25,8 +29,10 @@ KNOWN_TERMS = [
 
 def test_xxh64_reference_vectors():
     # spec test vectors (xxhash.com, seed 0)
-    assert xxh64(b"", seed=0) == 0xEF46DB3751D8E999
-    assert xxh64(b"a", seed=0) == 0xD24EC4F1A98C6E5B
+    assert spark_xxhash64(["", "a"], seed=0).view(np.uint64).tolist() == [
+        0xEF46DB3751D8E999,
+        0xD24EC4F1A98C6E5B,
+    ]
 
 
 def test_matches_spark_xxhash64(spark):
@@ -35,9 +41,10 @@ def test_matches_spark_xxhash64(spark):
         F.xxhash64("term").alias("h"),
         F.pmod(F.xxhash64("term"), F.lit(32)).cast("int").alias("b"),
     )
-    for r in df.collect():
-        assert xxh64_signed(r["term"].encode()) == r["h"], r["term"]
-        assert term_bucket(r["term"], 32) == r["b"], r["term"]
+    rows = df.collect()
+    terms = [r["term"] for r in rows]
+    assert spark_xxhash64(terms).tolist() == [r["h"] for r in rows]
+    assert term_buckets(terms, 32).tolist() == [r["b"] for r in rows]
 
 
 # byte lengths around every branch of Murmur3's 4-byte words and tail
@@ -73,25 +80,106 @@ def test_spark_hash_matches_spark(spark):
     assert int(mine[-1]) == 42  # hash(NULL) keeps the seed
 
 
-def test_term_buckets_match_term_bucket(spark):
+def test_term_buckets_match_bucket_column(spark):
     import pyarrow as pa
-
-    from seekstorm_spark.hashing import spark_xxhash64, term_buckets
 
     lengths = {len(t.encode()) for t in EDGE_STRINGS}
     assert {0, 1, 3, 4, 7, 8, 31, 32, 33} <= lengths
-    for n_buckets in (1, 16, 64):
-        assert term_buckets(EDGE_STRINGS, n_buckets).tolist() == [
-            term_bucket(t, n_buckets) for t in EDGE_STRINGS
-        ]
-    # an Arrow array (as the driver-side stage passes) hashes the same
-    assert spark_xxhash64(pa.array(EDGE_STRINGS)).tolist() == [
-        xxh64_signed(t.encode()) for t in EDGE_STRINGS
-    ]
     df = spark.createDataFrame([(t,) for t in EDGE_STRINGS], "term string")
-    spark_b = [
-        r[0] for r in df.select(
-            F.pmod(F.xxhash64("term"), F.lit(64)).cast("int")
-        ).collect()
+    got = df.select(
+        F.xxhash64("term"),
+        *(bucket_column("term", n) for n in (1, 16, 32, 64)),
+        *(
+            F.pmod(F.xxhash64("term"), F.lit(n)).cast("int")
+            for n in (1, 16, 32, 64)
+        ),
+    ).collect()
+    assert spark_xxhash64(EDGE_STRINGS).tolist() == [r[0] for r in got]
+    for i, n in enumerate((1, 16, 32, 64)):
+        want = [r[1 + i] for r in got]
+        # the Column is the contract's pmod(xxhash64(col), n) as int
+        assert want == [r[5 + i] for r in got]
+        assert term_buckets(EDGE_STRINGS, n).tolist() == want
+        # an Arrow array (as the driver-side stage passes) hashes the same
+        assert term_buckets(pa.array(EDGE_STRINGS), n).tolist() == want
+
+
+def _rows(tbl) -> list:
+    return sorted(map(repr, tbl.to_pylist()))
+
+
+def _spark_read(spark, path, ddl, keys, n_buckets, columns, key, bucket):
+    """The Spark read the driver reader must match: the table pruned to
+    the keys' buckets (hashed by Spark itself) and filtered to the keys."""
+    buckets = [
+        r[0]
+        for r in spark.createDataFrame([(k,) for k in keys], "k string")
+        .select(bucket_column("k", n_buckets))
+        .distinct()
+        .collect()
     ]
-    assert term_buckets(EDGE_STRINGS, 64).tolist() == spark_b
+    return (
+        spark.read.schema(ddl)
+        .parquet(path)
+        .filter(F.col(bucket).isin(buckets) & F.col(key).isin(keys))
+        .select(*columns)
+        .toArrow()
+    )
+
+
+@pytest.fixture(scope="module")
+def bucketed_index(spark, tmp_path_factory):
+    from seekstorm_spark.index.builder import IndexBuilder
+    from seekstorm_spark.query.spell import build_spell_dictionary
+    from seekstorm_spark.sources.webtext import synth_webtext
+    from seekstorm_spark.streaming.incremental import stage_batch
+
+    root = tmp_path_factory.mktemp("read_buckets")
+    store = IndexBuilder(spark, str(root / "idx"), n_buckets=8).build(
+        synth_webtext(spark, 400, seed=7).select("text"), text_col="text"
+    )
+    build_spell_dictionary(spark, store)
+    sb = stage_batch(
+        spark, store,
+        synth_webtext(spark, 50, seed=8).select("text").toArrow(),
+        batch_id=1,
+    )
+    return store, sb, root
+
+
+def test_read_buckets_matches_the_spark_read(spark, bucketed_index):
+    import os
+
+    from seekstorm_spark.index.store import (
+        POSTINGS_DDL,
+        SPELL_DDL,
+        TERM_STATS_DDL,
+        read_buckets,
+    )
+    from seekstorm_spark.query.spell import SPELL_BUCKETS, _deletes
+
+    store, sb, root = bucketed_index
+    terms = ["", "term00000", "term00003", "term00017", "term00250", "zzabsent"]
+    empty = root / "empty_term_stats"
+    os.makedirs(empty)
+    cases = [
+        (store.postings_path, POSTINGS_DDL, terms, 8,
+         ["term", "field", "block_id", "docids_vb", "tfs_vb"], "term", "tbucket"),
+        (sb.term_stats_path, TERM_STATS_DDL, terms, 8, ["term", "df"],
+         "term", "tbucket"),
+        (str(empty), TERM_STATS_DDL, terms, 8, ["term", "df"], "term", "tbucket"),
+        (os.path.join(store.path, "spell"), SPELL_DDL,
+         sorted(_deletes("term00003") | _deletes("tremoo1")), SPELL_BUCKETS,
+         ["dkey", "term", "df"], "dkey", "dbucket"),
+    ]
+    for path, ddl, keys, n, cols, key, bucket in cases:
+        got = read_buckets(path, ddl, keys, n, cols, key=key, bucket=bucket)
+        want = _spark_read(spark, path, ddl, keys, n, cols, key, bucket)
+        assert got.column_names == cols, path
+        assert _rows(got) == _rows(want), path
+        if path != str(empty):
+            assert got.num_rows > 0, path
+    # a missing table reads as no rows
+    got = read_buckets(str(root / "absent"), TERM_STATS_DDL, terms, 8,
+                       ["term", "df"])
+    assert got.num_rows == 0 and got.column_names == ["term", "df"]

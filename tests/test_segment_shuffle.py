@@ -147,7 +147,7 @@ def _rows_digest(df: pd.DataFrame) -> str:
 
 def _segment_postings(name):
     import seekstorm_spark.index.builder as B
-    from seekstorm_spark.hashing import term_bucket
+    from seekstorm_spark.hashing import term_buckets
 
     tok_kwargs, block_size, mk = CONFIGS[name]
     batches = _make_batches(**mk)
@@ -162,7 +162,7 @@ def _segment_postings(name):
         if tb:
             seg_tabs += list(tok(iter(tb)))
     st = pa.Table.from_batches(seg_tabs).to_pandas()
-    st["tbucket"] = st["term"].map(lambda s: term_bucket(s, 8))
+    st["tbucket"] = term_buckets(st["term"].tolist(), 8)
     out = pd.concat(
         [
             build(

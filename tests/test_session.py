@@ -1,12 +1,13 @@
-"""``get_spark``'s default driver heap is bounded by the host: half of
-MemTotal, at most 48g (a fixed 48g let three sessions on a 15 GB
-host grow until the kernel killed a JVM)."""
+"""``get_spark``'s defaults come from the host: the driver heap is half
+of MemTotal, at most 48g (a fixed 48g let three sessions on a 15 GB
+host grow until the kernel killed a JVM), and the default master uses
+the process's CPUs."""
 
 from __future__ import annotations
 
 import pytest
 
-from seekstorm_spark.session import default_driver_memory
+from seekstorm_spark.session import default_cpus, default_driver_memory
 
 
 def _meminfo(tmp_path, kb: int) -> str:
@@ -50,3 +51,14 @@ def test_get_spark_applies_the_default_and_driver_listing(spark):
     assert int(
         spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
     ) > 64
+
+
+def test_default_cpus_is_the_process_cpu_count(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the default master is local[N] for
+    the CPUs this process may run on, not a fixed 32."""
+    import os
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
